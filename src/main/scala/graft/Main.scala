@@ -74,8 +74,7 @@ object Main {
     // GraftSession; the CLI only pins what's host-specific
     val spark = graft.core.GraftSession.builder("graft")
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.shuffle.partitions", graft.core.GraftSession.cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

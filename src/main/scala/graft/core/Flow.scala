@@ -45,6 +45,10 @@ final class Flow(
   private var lastNameVar: Option[String] = None
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[Flow])
 
+  // a caller's session may come from outside GraftSession; nested flows
+  // share the root's session
+  if (rootFlow) graft.functions.GraftFunctions.ensure(spark)
+
   /** Write targets that can still fire AFTER stage i of this flow:
     * (connection family, normalized locator prefix) of every sink/sql in
     * stages i+1..n (subtrees included), plus `inheritedWrites` — writes

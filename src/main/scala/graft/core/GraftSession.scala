@@ -20,9 +20,9 @@ import org.apache.spark.sql.SparkSession
   *  - `initialPartitionNum` is set HIGH (4× a typical executor-core
   *    count) instead of pinning `spark.sql.shuffle.partitions`: AQE
   *    coalesces down cheaply, but can never split an under-partitioned
-  *    stage that already spilled. Local test harnesses (Bench/Verify)
-  *    pin shuffle.partitions = cores instead — correct for a 32-thread
-  *    JVM, wrong for a cluster.
+  *    stage that already spilled. [[local]] sessions (Bench, Verify,
+  *    the kept tools) pin both to the worker-thread count instead —
+  *    correct for one JVM, wrong for a cluster.
   *  - 256 MiB scan partitions: at 100 TB the default 128 MiB doubles
   *    the task count for scan-heavy stages whose per-task overhead
   *    (footer reads, codegen setup) is already amortization-bound.
@@ -35,8 +35,8 @@ import org.apache.spark.sql.SparkSession
   *    64 KB limit): a whole-stage-codegen method past 8000 bytecodes
   *    never JIT-compiles and the whole stage runs INTERPRETED —
   *    measured at 20–70× on wide multi-kernel projections
-  *    (AssignCellsLab: 0.37 s at 32 fused dot loops vs 13.2 s at 64,
-  *    identical rows). With the limit at 8000, Spark falls back to
+  *    (AssignCellsLab, r16, in README "Lab record": 0.37 s at 32
+  *    fused dot loops vs 13.2 s at 64, identical rows). With the limit at 8000, Spark falls back to
   *    per-operator codegen whose expression splitting keeps every
   *    method JIT-able. The engine's own hot paths avoid the cliff
   *    structurally (native kernels, broadcast-table forms), so this is
@@ -79,8 +79,33 @@ object GraftSession {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.codegen.hugeMethodLimit" -> "8000")
 
+  /** The profile plus the engine's SQL functions, installed at session
+    * creation (so `newSession()` and foreachBatch clones inherit them).
+    * The functions ride `withExtensions`, not `spark.sql.extensions`:
+    * that conf is static, and [[applyTo]] on a live session would throw
+    * on it. */
   def builder(appName: String = "graft"): SparkSession.Builder =
-    confs.foldLeft(SparkSession.builder().appName(appName)) {
+    confs.foldLeft(SparkSession.builder().appName(appName)
+        .withExtensions(graft.functions.GraftFunctions.install)) {
+      case (b, (k, v)) => b.config(k, v)
+    }
+
+  /** Worker threads of a local session: `SPARK_GRAFT_CPUS`, else every
+    * core of the host. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The only profile confs a local session changes: shuffle and initial
+    * partitions = worker threads instead of the cluster's 1024. */
+  lazy val localSizing: Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> cpus.toString)
+
+  /** The profile on `local[cpus]` with the UI off and [[localSizing]] —
+    * the one session shape of Bench, Verify and the kept tools. */
+  def local(appName: String): SparkSession.Builder =
+    localSizing.foldLeft(builder(appName).master(s"local[$cpus]")
+        .config("spark.ui.enabled", "false")) {
       case (b, (k, v)) => b.config(k, v)
     }
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -18,7 +17,7 @@ import org.apache.spark.sql.types._
   * are bit-identical to the composed form (and to DuckDB's list_reduce —
   * the oracle contract of the similarity operators).
   *
-  * Register with [[GraftFunctions.register]]; SQL name `float_dot`.
+  * Installed by [[GraftFunctions]]; SQL name `float_dot`.
   */
 case class FloatDot(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -94,65 +93,4 @@ case class FloatDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object GraftFunctions {
-  /** Fail with a clear message (not an IndexOutOfBounds from exprs(i))
-    * when a SQL call passes the wrong argument count. */
-  private def arity(name: String, n: Int)(
-      f: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == n,
-        s"$name requires exactly $n argument(s), got ${exprs.length}")
-      f(exprs)
-    }
-
-  /** Idempotent per-session registration of the native functions. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", arity("float_dot", 2)(exprs => FloatDot(exprs(0), exprs(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_len", arity("graft_len", 1)(exprs => PolyLen(exprs.head)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", arity("word_shingles", 1)(exprs => WordShingles(exprs.head)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_ngrams", arity("word_ngrams", 2)(exprs => WordNGrams(exprs(0), exprs(1))), "built-in")
-    // legacy alias from when only the bigram case existed
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_bigrams", arity("word_bigrams", 1)(exprs => WordNGrams(exprs.head,
-        org.apache.spark.sql.catalyst.expressions.Literal(2))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_stats", arity("ngram_stats", 2)(exprs => NGramStats(exprs(0), exprs(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_entropy_stats", arity("char_entropy_stats", 1)(exprs => CharEntropyStats(exprs.head)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps", arity("winnow_fps", 3)(exprs => WinnowFps(exprs(0), exprs(1), exprs(2))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash8", arity("minhash8", 1)(exprs => MinHash8(exprs.head)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash16", arity("simhash16", 1)(exprs => SimHash16(exprs.head)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", arity("simhash64", 1)(exprs => SimHash64(exprs.head)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash128", arity("simhash128", 1)(exprs => SimHash128(exprs.head)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_buckets64", arity("hyperplane_buckets64", 1)(exprs =>
-        HyperplaneBuckets64(exprs.head)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_bands", arity("hyperplane_bands", 3)(exprs =>
-        HyperplaneBands(exprs(0), exprs(1), exprs(2))), "built-in")
-    // Spark ships these two (the runtime-filter machinery's Bloom build
-    // and probe, spark-catalyst aggregate/BloomFilterAggregate.scala)
-    // but gives them no SQL name in 4.1 — surface them for t43's
-    // Bloom-pruned decontamination. Analyzer wraps the returned
-    // AggregateFunction in an AggregateExpression as for any builtin.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_filter_agg", arity("bloom_filter_agg", 3)(exprs =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "might_contain", arity("might_contain", 2)(exprs =>
-        org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(exprs(0), exprs(1))), "built-in")
-  }
 }

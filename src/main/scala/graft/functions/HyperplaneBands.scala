@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   * (`((j·1103515245 + d·12345) mod 32768)/32768 − 0.5`, the
   * [[HyperplaneBuckets64]] lineage): plane j+1 of that family is plane
   * j plus a constant shift mod 1 per element (the r18 ADVICE's lattice
-  * caveat), and measuring it (tools/PlaneFamilyLab) showed the
+  * caveat), and measuring it (PlaneFamilyLab, r19; README "Lab record") showed the
   * correlation is not a caveat but a CEILING — same-band collision
   * pairs ran 75× / 4400× / 116000× the bands·C(N,2)/2^bits model at
   * 16/24/30 bits (fixture embeddings AND random vectors), i.e.

@@ -142,14 +142,7 @@ object Components {
     * fixpoint, then labels = star root. The O(log n) bound makes
     * `maxRounds` a loud-failure backstop, not a tuning knob. */
   def starContract(docs: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 64): DataFrame =
-    starContractCounted(docs, pairs, maxRounds)._1
-
-  /** [[starContract]] plus the round count it converged in — the count
-    * is probe/telemetry surface (ComponentsChainProbe logs it against
-    * the O(log n) bound); semantics identical. */
-  private[graft] def starContractCounted(docs: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 64): (DataFrame, Int) = {
+      maxRounds: Int = 64): DataFrame = {
     var edges = pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
@@ -174,9 +167,8 @@ object Components {
     // appear only on the dst side and label themselves via the left join
     val lab = edges.groupBy(col("src").as("doc_id"))
       .agg(min("dst").as("lab"))
-    (docs.select("doc_id").join(lab, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("lab"), col("doc_id")).as("label")), rounds)
+    docs.select("doc_id").join(lab, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("lab"), col("doc_id")).as("label"))
   }
 
   /** Propagation with the star-contraction diameter guard (see object

@@ -571,8 +571,9 @@ object Curation {
   /** t31 stage 1 — the shared index pass: ONE corpus scan computing the
     * 8-bit hyperplane LSH signature, the 8 centroid dots, and the IVF
     * cell per vector (16 native float_dot kernels per row, no shuffle).
-    * Split out (r17 verdict ask #5) so T31Lab can time the sweep's
-    * stages separately and land its 30× ratio on a measured stage. */
+    * Split out (r17 verdict ask #5) so the sweep's stages could be timed
+    * separately and its 30× ratio landed on a measured stage (T31Lab;
+    * README "Lab record"). */
   private[graft] def t31Prepared(spark: SparkSession, dir: String): DataFrame = {
     import TrainingData.planeCol
     val planeDots = (1 to 8).map { j =>

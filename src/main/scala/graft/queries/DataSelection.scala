@@ -479,7 +479,7 @@ object DataSelection {
   /** t104's IVF centroid table: k planes of the md5-mixed family
     * ("ivf|j|d" namespace — decorrelated directions, unlike the
     * lattice-correlated LCG planes t64's fixture config pins; see
-    * tools/PlaneFamilyLab). Derived independently by the oracle's SQL
+    * PlaneFamilyLab; README "Lab record"). Derived independently by the oracle's SQL
     * hex parse of the same md5. Driver-side, ≤ 8 MB at the cap. */
   private[graft] def ivfCentroids(k: Int): Array[Array[Double]] =
     Array.tabulate(k, 64) { (j0, d0) =>

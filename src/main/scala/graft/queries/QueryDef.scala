@@ -27,13 +27,18 @@ final case class QueryDef(
   /** Gate shape: the production frame plus the deterministic sort the
     * oracle-hash compare requires. This is what the driver runs. */
   def gated: (SparkSession, String) => DataFrame =
-    if (hashOrder.isEmpty) build
-    else (s, d) => build(s, d)
+    if (hashOrder.isEmpty) production
+    else (s, d) => production(s, d)
       .orderBy(hashOrder.map(org.apache.spark.sql.functions.col): _*)
 
   /** Production shape: no gate-only corpus-wide sort. Library users
-    * embedding the stage in a pipeline consume this one. */
-  def production: (SparkSession, String) => DataFrame = build
+    * embedding the stage in a pipeline consume this one. The caller's
+    * session may come from outside [[graft.core.GraftSession]], so the
+    * engine's SQL functions are ensured here, once per call. */
+  def production: (SparkSession, String) => DataFrame = { (s, d) =>
+    graft.functions.GraftFunctions.ensure(s)
+    build(s, d)
+  }
 }
 
 object Tables {
@@ -106,7 +111,6 @@ object Tables {
     SparkSession, java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]()
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark) // idempotent
     val perSession = cache.synchronized {
       cache.keySet.removeIf(s => s.sparkContext.isStopped)
       cache.computeIfAbsent(spark,

@@ -1329,7 +1329,7 @@ object TrainingData {
     // (element d of plane j = (md5int32("hp|j|d") mod 32768)/32768−0.5,
     // derived independently by the oracle below): r18's LCG family was
     // lattice-correlated (plane j+1 = plane j + a constant shift mod 1
-    // per element), and measuring it (tools/PlaneFamilyLab) showed
+    // per element), and measuring it (PlaneFamilyLab, r19; README "Lab record") showed
     // same-band chance collisions at 75×/4400×/116000× the
     // bands·C(N,2)/2^bits model at 16/24/30 bits — effective band
     // entropy CAPPED at ~12 bits no matter the configured width, i.e.
@@ -1343,8 +1343,8 @@ object TrainingData {
     // bucket ints); beyond that, compose adjacent 30-bit bands into
     // (bucket[2k], bucket[2k+1]) 60-bit join keys — 4 super-bands good
     // to ~10¹⁵. Probed at the r19 100× fixture (200k vectors,
-    // tools/T102WidthLab): 8×24 → 43.9k candidates (model 9.5k, J=4.6)
-    // at 6.5 s; 8×30 → 1.6k candidates (model 149, J=10.6) at 2.2 s —
+    // T102WidthLab; README "Lab record"): 8×24 → 43.9k candidates
+    // (model 9.5k, J=4.6) at 6.5 s; 8×30 → 1.6k candidates (model 149, J=10.6) at 2.2 s —
     // the +6 bits bought the predicted ~2⁶× candidate cut (27.8×
     // including the Jensen drift), which the replaced LCG family could
     // not deliver (measured 2.4× for the same widening). Near-dup recall

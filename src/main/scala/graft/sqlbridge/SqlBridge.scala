@@ -69,7 +69,6 @@ object SqlBridge {
   /** Full translation of a transform/internal query. */
   def translate(sql: String, names: NameRegistry,
       spark: Option[SparkSession] = None): String = {
-    spark.foreach(graft.functions.GraftFunctions.register) // graft_len etc.
     var out = FnTableMacros.expand(sql, spark)
     out = FnMacros.expand(out)
     out = rewriteStrftime(out)

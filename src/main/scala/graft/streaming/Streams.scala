@@ -316,7 +316,7 @@ object Streams {
   def streamingDecontaminate(docs: DataFrame, contentCol: String,
       evalDocs: DataFrame, evalContentCol: String): DataFrame = {
     val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
     val evalHashes = evalDocs
       .select(explode(expr(
         s"word_ngrams(split($evalContentCol, ' '), 13)")).as("g"))
@@ -344,7 +344,7 @@ object Streams {
   def evalGramIndex(evalDocs: DataFrame, evalContentCol: String,
       expectedItems: Long = 1000000L): (DataFrame, Array[Byte]) = {
     val spark = evalDocs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
     val grams = evalDocs
       .select(explode(expr(
         s"word_ngrams(split($evalContentCol, ' '), 13)")).as("g"))
@@ -373,7 +373,7 @@ object Streams {
   def decontaminateBatchBloom(batch: DataFrame, idCol: String,
       contentCol: String, evalGrams: DataFrame,
       bloom: Array[Byte]): DataFrame = {
-    graft.functions.GraftFunctions.register(batch.sparkSession)
+    graft.functions.GraftFunctions.ensure(batch.sparkSession)
     val hits = batch
       .select(col(idCol), explode(expr(
         s"transform(word_ngrams(split($contentCol, ' '), 13), " +
@@ -439,7 +439,7 @@ object Streams {
   def dedupBatchAgainstIndex(batch: DataFrame, statePath: String,
       batchId: Long, bands: Option[DataFrame] = None): DataFrame = {
     val spark = batch.sparkSession
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftFunctions.ensure(spark)
     def upTo(ix: Option[DataFrame]): Option[DataFrame] =
       ix.map(_.filter(col("batch") < batchId))
     (upTo(readIndex(spark, s"$statePath/hashes")),
@@ -498,10 +498,10 @@ object Streams {
     * parquet spelling). */
   def extendIndex(batch: DataFrame, statePath: String, batchId: Long,
       bands: Option[DataFrame] = None): Unit = {
-    // minhashBands parses graft-function SQL (minhash8); register here
+    // minhashBands parses graft-function SQL (minhash8); ensure here
     // too — this is a public API and must not depend on the probe
     // having run first on this session
-    graft.functions.GraftFunctions.register(batch.sparkSession)
+    graft.functions.GraftFunctions.ensure(batch.sparkSession)
     // the two partitions are independent dirs and both idempotent
     // batch=N overwrites, so the writes OVERLAP (r16): the scheduler
     // interleaves the two small jobs instead of paying two full job

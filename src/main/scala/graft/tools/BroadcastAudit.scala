@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
@@ -47,11 +46,7 @@ object BroadcastAudit {
     // audits the SHIPPED profile (static broadcasts off since r18 —
     // this tool found why); the exec mode then shows which broadcasts
     // AQE re-derives from measured sizes
-    val spark = graft.core.GraftSession.builder("graft-broadcastaudit")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.GraftSession.local("graft-broadcastaudit").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // AQE replaces executed subtrees with QueryStageExec references

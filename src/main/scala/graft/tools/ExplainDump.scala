@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev lab (r21): write `.explain("formatted")` of named SparkEntry
@@ -21,13 +20,7 @@ object ExplainDump {
     val dir = args(2)
     val names = if (args.length > 3) args.drop(3).toSeq
                 else graft.SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.builder("graft-explaindump")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local("graft-explaindump").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val txt = try {

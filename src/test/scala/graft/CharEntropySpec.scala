@@ -9,11 +9,7 @@ import org.apache.spark.sql.functions._
   * in t79 (the O(n²) spelling), including multi-byte text — the unit is
   * the Unicode CODE POINT in both. */
 class CharEntropySpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSuite.spark
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
+  private lazy val spark = SparkSuite.spark
 
   private def reference(text: String): (Long, Long, Long) = {
     val cps = text.codePoints().toArray.toSeq

@@ -47,7 +47,9 @@ class FixtureContractSpec extends AnyFunSuite {
     // different rows and max_by's pick would be nondeterministic (r21
     // advice). The fixture guarantees it; pin that guarantee so a future
     // fixture regeneration can't silently desync the two aggregates.
-    for (d <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
+    // sf0.1 is the scale the benchmark runs q04 at.
+    val fixtures = new java.io.File(sf).getParent
+    for (d <- Seq("sf0.001", "sf0.01", "sf0.1").map(s => s"$fixtures/$s")) {
       val dups = graft.queries.Tables.events(spark, d)
         .groupBy("user_id", "event_type", "event_id").count()
         .filter(col("count") > 1).limit(1).count()

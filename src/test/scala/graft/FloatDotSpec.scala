@@ -2,10 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 class FloatDotSpec extends AnyFunSuite {
-  private lazy val spark = { val s = SparkSuite.spark; GraftFunctions.register(s); s }
+  private lazy val spark = SparkSuite.spark
 
   test("float_dot matches the composed fold bit-for-bit (float × double)") {
     import spark.implicits._

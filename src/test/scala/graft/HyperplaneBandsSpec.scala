@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *     collision-pair counts must track the bands·C(n,2)/2^bits
   *     independence model within the finite-dimension Jensen factor —
   *     measured 1.9× at (4,16) and 4.7× at (8,24) for 64-dim uniforms
-  *     (tools/PlaneFamilyLab), so the pin allows [0.5×, 8×]. The LCG
+  *     (PlaneFamilyLab, r19; README "Lab record"), so the pin allows [0.5×, 8×]. The LCG
   *     family this one replaced read 74× and 4449× on the same vectors
   *     (effective band entropy capped at ~12 bits regardless of width);
   *     a regression to any correlated family fails this by an order of
@@ -31,8 +31,7 @@ import org.apache.spark.sql.functions._
   *     short/long vectors, and integer element types.
   */
 class HyperplaneBandsSpec extends AnyFunSuite {
-  private lazy val spark = { val s = SparkSuite.spark
-    graft.functions.GraftFunctions.register(s); s }
+  private lazy val spark = SparkSuite.spark
 
   /** The md5 plane family via the ORACLE's derivation: first 8 md5 hex
     * digits parsed as an integer (not the kernel's byte arithmetic). */

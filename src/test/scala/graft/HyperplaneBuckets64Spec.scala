@@ -17,7 +17,6 @@ class HyperplaneBuckets64Spec extends AnyFunSuite {
   })
 
   test("native buckets equal the composed 64-dot sign form on the fixture") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     def signCol(j: Int): Column =
       when(call_function("float_dot", col("embedding"), planeCol(j)) > 0, 1)
@@ -37,7 +36,6 @@ class HyperplaneBuckets64Spec extends AnyFunSuite {
   }
 
   test("native equals composed on adversarial inputs") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rng = new scala.util.Random(20260815)
     val rows: Seq[(Long, Seq[Float])] =
@@ -72,7 +70,6 @@ class HyperplaneBuckets64Spec extends AnyFunSuite {
     // numeric array, so array<int>/bigint/double/decimal must take the
     // same per-type-accessor path as float_dot — not misread 4-byte
     // slots via getDouble or ClassCastException on decimals.
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val base = (1L to 40L).map { i =>
       val rng = new scala.util.Random(i * 7919)
@@ -101,7 +98,6 @@ class HyperplaneBuckets64Spec extends AnyFunSuite {
   }
 
   test("short, long, and null embeddings") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Some(Seq.fill(64)(0.5f))),

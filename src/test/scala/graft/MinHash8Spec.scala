@@ -2,10 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 class MinHash8Spec extends AnyFunSuite {
-  private lazy val spark = { val s = SparkSuite.spark; GraftFunctions.register(s); s }
+  private lazy val spark = SparkSuite.spark
 
   /** The exploded relational twin minhash8 replaces (and the form the
     * DuckDB oracle still computes): min over salted-md5 8-hex windows. */

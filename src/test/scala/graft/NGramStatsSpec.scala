@@ -9,11 +9,7 @@ import org.apache.spark.sql.functions._
   * through the whole-stage-codegen path (file-backed read, so
   * ConvertToLocalRelation can't quietly interpret it). */
 class NGramStatsSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSuite.spark
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
+  private lazy val spark = SparkSuite.spark
 
   private def relational(words: Seq[String], n: Int): (Long, Long, Long, Long) = {
     val grams = words.sliding(n).filter(_.size == n).map(_.mkString(" ")).toSeq

@@ -317,7 +317,6 @@ class PlanSpec extends AnyFunSuite {
     import graft.queries.Curation.{assignCells, lcgCentroid,
       semdedupVerdictsFold, semdedupVerdictsJoin}
     import org.apache.spark.sql.functions.{col, expr}
-    graft.functions.GraftFunctions.register(spark)
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val cs = (1 to 8).map(c => c -> lcgCentroid(c + 100))
     val assigned = assignCells(emb, "vec_id", cs)

@@ -82,7 +82,7 @@ class QualitySketchSpec extends AnyFunSuite {
     // the POINT of t86 is the unconditional ≤4096-row broadcast bound;
     // the hashed score must still order documents like the exact LM.
     // Spearman rho measured 0.863 at sf0.001 / 0.817 at sf0.01
-    // (tools/RankCheck.scala) — floor pinned with slack below both.
+    // (RankCheck; README "Lab record") — floor pinned with slack below both.
     val a = SparkEntry.queries("t84_bigram_surprisal")(spark, sf)
       .select("doc_id", "bits_per_bigram").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -1,0 +1,41 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Structural guard over the engine sources: every session comes from
+  * the one factory, and functions are registered only by the one table. */
+class SessionGuardSpec extends AnyFunSuite {
+  private val root = Paths.get("src/main/scala")
+
+  /** (path under `root`, line number, line) of each match. */
+  private def hits(needle: String): Seq[(String, Int, String)] = {
+    assert(Files.isDirectory(root), s"$root not found from ${Paths.get("").toAbsolutePath}")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    files.flatMap { f: Path =>
+      val rel = root.relativize(f).toString.replace('\\', '/')
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains(needle) => (rel, i + 1, line.trim)
+      }
+    }
+  }
+
+  private def report(found: Seq[(String, Int, String)]): String =
+    found.map { case (f, n, l) => s"$f:$n: $l" }.mkString("\n")
+
+  test("SparkSession.builder( appears only in core/GraftSession.scala") {
+    val found = hits("SparkSession.builder(")
+    assert(found.nonEmpty, "the factory itself should match")
+    val outside = found.filterNot(_._1 == "graft/core/GraftSession.scala")
+    assert(outside.isEmpty,
+      "build sessions with GraftSession.builder / GraftSession.local:\n" + report(outside))
+  }
+
+  test("createOrReplaceTempFunction appears only under functions/") {
+    val outside = hits("createOrReplaceTempFunction").filterNot(_._1.startsWith("graft/functions/"))
+    assert(outside.isEmpty,
+      "add engine functions to GraftFunctions.table:\n" + report(outside))
+  }
+}

@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** Pins for the width-parameterized SimHash family (r17 verdict: t18's
   * fixed 16-bit fingerprint made the near-dup answer Θ(n²); simhash64
@@ -19,7 +18,7 @@ import graft.functions.GraftFunctions
   *     lossless for hamming ≤ bands−1, unlike probabilistic MinHash).
   */
 class Simhash64Spec extends AnyFunSuite {
-  private lazy val spark = { val s = SparkSuite.spark; GraftFunctions.register(s); s }
+  private lazy val spark = SparkSuite.spark
   private val sf = "/root/testdata/sf0.001"
 
   /** The exploded relational twin (the DuckDB oracle's spelling):

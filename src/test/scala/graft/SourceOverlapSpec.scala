@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * oracle's own shape), computed independently in Spark.
   */
 class SourceOverlapSpec extends AnyFunSuite {
-  private lazy val spark = { val s = SparkSuite.spark
-    graft.functions.GraftFunctions.register(s); s }
+  private lazy val spark = SparkSuite.spark
 
   test("t66 handles 70 sources (two mask words) and NULL sources") {
     import spark.implicits._

@@ -25,7 +25,6 @@ class T03RecallSpec extends AnyFunSuite {
 
   for (sf <- Seq("sf0.001", "sf0.01")) {
     test(s"capped t03 keeps full near-dup recall vs uncapped at $sf") {
-      graft.functions.GraftFunctions.register(spark)
       val docs = graft.queries.Tables.t(spark, s"/root/testdata/$sf", "documents")
       val capped = pairs(graft.queries.TrainingData.ngramJaccardPairs(docs))
       val truth =
@@ -38,7 +37,6 @@ class T03RecallSpec extends AnyFunSuite {
   }
 
   test("the cap's blind spot is exactly the mid-frequency shingle band") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val base = "alpha beta gamma delta epsilon zeta eta theta iota"
     // A/B: near-dups whose shared shingles ALSO appear in 20 filler

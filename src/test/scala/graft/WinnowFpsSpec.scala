@@ -9,11 +9,7 @@ import org.apache.spark.sql.functions._
   * window-min over md5-prefix gram hashes, truncated-window rule,
   * distinct values). */
 class WinnowFpsSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSuite.spark
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
+  private lazy val spark = SparkSuite.spark
 
   private def refHash(g: String): Long =
     java.lang.Long.parseLong(

@@ -2,10 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 class WordBigramsSpec extends AnyFunSuite {
-  private lazy val spark = { val s = SparkSuite.spark; GraftFunctions.register(s); s }
+  private lazy val spark = SparkSuite.spark
 
   // greatest(…, 0): the raw size-1 length errors on a truly empty array
   // (never produced by split(), which yields [""], but the property test

@@ -2,10 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 class WordNGramsSpec extends AnyFunSuite {
-  private lazy val spark = { val s = SparkSuite.spark; GraftFunctions.register(s); s }
+  private lazy val spark = SparkSuite.spark
 
   /** Composed HOF trigram form (non-null words only: concat nulls out). */
   private val composed3 =

@@ -2,10 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 class WordShinglesSpec extends AnyFunSuite {
-  private lazy val spark = { val s = SparkSuite.spark; GraftFunctions.register(s); s }
+  private lazy val spark = SparkSuite.spark
 
   private val composed =
     "array_distinct(transform(sequence(1, greatest(size(words) - 2, 1)), i -> concat_ws(' ', slice(words, i, 3))))"

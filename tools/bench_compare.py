@@ -17,7 +17,8 @@ is scheduler noise, not an engine change).
 
 Exit 0: the two runs agree (any recorded "regression" between them is
 host noise). Exit 1: at least one query genuinely disagrees — rerun it
-in isolation (graft.tools.QueryLab) before believing either number.
+as an interleaved same-host pair (per-query spans from
+`perfbench/run.py --trace 1`) before believing either number.
 """
 import re
 import sys
