@@ -2,7 +2,7 @@ package graft
 
 import scala.collection.mutable
 import org.apache.spark.sql.SparkSession
-import graft.connections.FlowConfig
+import graft.connections.{FileFormats, FlowConfig}
 import graft.core.Flow
 import graft.model.Stages
 
@@ -46,19 +46,17 @@ object Main {
     CliArgs(args(0), context.toMap, variables, output)
   }
 
+  /** `-o` formats: write options come from [[FileFormats]]. */
+  private val outputs = Set("parquet", "csv", "json")
+
   /** Session-independent core: run the pipeline, write the -o output,
     * return the flow (testable without owning the session lifecycle). */
   def run(spark: SparkSession, cli: CliArgs, cfg: FlowConfig): Flow = {
     val flow = new Flow(spark, Stages.loadFile(cli.yamlPath), cli.context,
       cfg, cli.variables).run()
     cli.output.foreach { case (fmt, path) =>
-      val df = flow.df()
-      fmt match {
-        case "parquet" => df.write.mode("overwrite").parquet(path)
-        case "csv" => df.write.mode("overwrite").option("header", "true").csv(path)
-        case "json" => df.write.mode("overwrite").json(path)
-        case other => sys.error(s"unknown output format: $other")
-      }
+      if (!outputs(fmt)) sys.error(s"unknown output format: $fmt")
+      FileFormats.byName(fmt).write(flow.df(), path)
       println(s"wrote ${fmt} output to $path")
     }
     flow

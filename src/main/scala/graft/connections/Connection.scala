@@ -24,10 +24,6 @@ final case class FlowConfig(
     /** Named OAuth2 providers REST auth can reference by name (the
       * reference's oauth_keyring — see [[OAuth2Provider]]). */
     oauthKeyring: Seq[OAuth2Provider] = Nil,
-    /** Materialize taps eagerly (cache + count) like the reference's
-      * CREATE TABLE AS semantics. Disable for very large pipelines where
-      * lazy evaluation + Catalyst whole-plan optimization wins. */
-    materializeTaps: Boolean = true,
     /** Cap on rows any driver-side materialization (loop control rows,
       * Variable sinks) may pull. The reference does unbounded df()
       * pulls at these spots; at cluster scale an accidental million-row
@@ -131,8 +127,9 @@ abstract class Connection(protected val ctx: ConnContext) {
   /** Introspect source schema without materializing (taps only). */
   def showSchema(): StructType = tap(None, Some(1)).schema
 
-  /** Shared tap plumbing: register the raw source as a scratch view, apply
-    * the user query (placeholder-table swap), dedup ranking, and limit. */
+  /** Shared tap plumbing: apply the user query over the raw source
+    * (placeholder-table swap onto a scratch view), dedup ranking, and
+    * limit. Scratch views last one statement ([[SqlBridge.withScratchViews]]). */
   protected def finishTap(raw: DataFrame, query: Option[String],
       limit: Option[Int]): DataFrame = {
     val base = query match {
@@ -140,19 +137,19 @@ abstract class Connection(protected val ctx: ConnContext) {
         // SQL sent as-is with short locators resolved (SURVEY §2.3)
         val rewritten = graft.sqlbridge.RawDispatch.rewrite(q, locator, path)
         graft.sqlbridge.RawDispatch.execute(spark, rewritten, ctx.names)
-      case Some(q) =>
-        val scratch = s"__tap_src_${System.nanoTime()}"
-        raw.createOrReplaceTempView(scratch)
+      case Some(q) => SqlBridge.withScratchViews(spark) { view =>
+        val scratch = view("__tap_src", raw)
         val translated = SqlBridge.translate(q, ctx.names, Some(spark))
-        val swapped = SqlBridge.swapFromTable(translated, scratch)
-        spark.sql(swapped)
+        spark.sql(SqlBridge.swapFromTable(translated, scratch))
+      }
       case None => raw
     }
     val ranked = (conn.version, conn.keys) match {
       case (Some(v), keys) if keys.nonEmpty =>
-        val scratch = s"__tap_ranked_${System.nanoTime()}"
-        base.createOrReplaceTempView(scratch)
-        spark.sql(SqlBridge.rankedQuery(s"SELECT * FROM $scratch", v, keys))
+        SqlBridge.withScratchViews(spark) { view =>
+          spark.sql(SqlBridge.rankedQuery(
+            s"SELECT * FROM ${view("__tap_ranked", base)}", v, keys))
+        }
       case _ => base
     }
     limit.map(ranked.limit).getOrElse(ranked)
@@ -186,10 +183,7 @@ object Connection {
   }
 
   private def resolveKind(ctx: ConnContext): Connection = ctx.conn.kind.toLowerCase match {
-    case "parquet" => new ParquetConnection(ctx)
-    case "orc" => new OrcConnection(ctx)
-    case "csv" => new CsvConnection(ctx)
-    case "json" => new JsonConnection(ctx)
+    case k if FileFormats.kinds.contains(k) => new FormatConnection(ctx)
     case "file" => new FileConnection(ctx)
     case "variable" => new VariableConnection(ctx)
     case "deltatable" => new DeltaConnection(ctx)

@@ -1,88 +1,31 @@
 package graft.connections
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import graft.template.Json
 
-/** Parquet source/sink (reference: ankaflow/connections/file.py:39-68).
-  * `union_by_name=true` default ≈ Spark `mergeSchema`. The reference
-  * writes a single file; Spark writes a directory — kept (scale-correct),
-  * documented in SURVEY §2.2. */
-final class ParquetConnection(ctx: ConnContext) extends Connection(ctx) {
-  override def tap(query: Option[String], limit: Option[Int]): DataFrame = {
-    val raw = spark.read
-      .option("mergeSchema", "true")
-      .options(passthroughOptions)
-      .parquet(path)
-    finishTap(raw, query, limit)
-  }
+/** Parquet, ORC, CSV and JSON sources/sinks (reference:
+  * ankaflow/connections/file.py:39-118), one class over the
+  * [[FileFormats]] table. ORC goes beyond the reference's format set
+  * (DuckDB has no ORC reader); Spark's columnar ORC reader gives it the
+  * same pushdown and pruning as parquet. Every non-engine param passes
+  * through to the reader and writer; declared `fields` set the CSV/JSON
+  * schema. JSON reads an array document (DuckDB read_json_auto) unless
+  * `format: lines`; sinks write newline-delimited JSON like the reference
+  * (models/core.py:215). The reference writes a single file; Spark
+  * writes a directory — kept (scale-correct), documented in SURVEY §2.2. */
+final class FormatConnection(ctx: ConnContext) extends Connection(ctx) {
+  private val format = FileFormats.of(conn)
+
+  override def tap(query: Option[String], limit: Option[Int]): DataFrame =
+    finishTap(format.read(spark, path, conn.fields, passthroughOptions),
+      query, limit)
 
   override def sink(from: DataFrame): Unit =
-    from.write.mode(SaveMode.Overwrite).options(passthroughOptions).parquet(path)
-}
-
-/** ORC source/sink — an extension beyond the reference's format set
-  * (DuckDB has no ORC reader): same contract as [[ParquetConnection]],
-  * backed by Spark's built-in columnar ORC reader/writer, so predicate
-  * pushdown and column pruning work exactly as for parquet. */
-final class OrcConnection(ctx: ConnContext) extends Connection(ctx) {
-  override def tap(query: Option[String], limit: Option[Int]): DataFrame = {
-    val raw = spark.read
-      .option("mergeSchema", "true")
-      .options(passthroughOptions)
-      .orc(path)
-    finishTap(raw, query, limit)
-  }
-
-  override def sink(from: DataFrame): Unit =
-    from.write.mode(SaveMode.Overwrite).options(passthroughOptions).orc(path)
-}
-
-/** CSV source/sink (file.py:96-118). `ignore_errors=true` default ≈
-  * PERMISSIVE mode; header on both directions like DuckDB COPY. */
-final class CsvConnection(ctx: ConnContext) extends Connection(ctx) {
-  override def tap(query: Option[String], limit: Option[Int]): DataFrame = {
-    // Declared `fields` skip schema inference — at scale, inference is a
-    // full extra pass over the data (the reference's `columns=` read
-    // option serves the same purpose, rest/common.py:70-79).
-    val reader = spark.read
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .options(passthroughOptions)
-    val raw =
-      if (conn.fields.nonEmpty)
-        reader.schema(SchemaUtil.toStruct(conn.fields)).csv(path)
-      else reader.option("inferSchema", "true").csv(path)
-    finishTap(raw, query, limit)
-  }
-
-  override def sink(from: DataFrame): Unit =
-    from.write.mode(SaveMode.Overwrite).option("header", "true")
-      .options(passthroughOptions).csv(path)
-}
-
-/** JSON source/sink (file.py:71-93). Default is a JSON array document
-  * (DuckDB read_json_auto); `format: lines` switches to JSONL. Sinks are
-  * newline-delimited like the reference (models/core.py:215). */
-final class JsonConnection(ctx: ConnContext) extends Connection(ctx) {
-  override def tap(query: Option[String], limit: Option[Int]): DataFrame = {
-    val lines = conn.str("format").contains("lines")
-    val reader = spark.read
-      .option("multiLine", (!lines).toString)
-      .options(passthroughOptions)
-    // declared fields skip the schema-inference pass (see CsvConnection)
-    val raw =
-      if (conn.fields.nonEmpty)
-        reader.schema(SchemaUtil.toStruct(conn.fields)).json(path)
-      else reader.json(path)
-    finishTap(raw, query, limit)
-  }
-
-  override def sink(from: DataFrame): Unit =
-    from.write.mode(SaveMode.Overwrite).options(passthroughOptions).json(path)
+    format.write(from, path, passthroughOptions)
 }
 
 /** Generic file reader (file.py:121-180): dispatch by `filetype` param or
-  * path suffix. parquet/csv/json/txt distribute through Spark readers;
+  * path suffix. The [[FileFormats]] kinds distribute through Spark readers;
   * xlsx/xml/html parse driver-side (small-ingest formats, exactly how the
   * reference's pandas readers work — see [[TabularFiles]]). Read-only. */
 final class FileConnection(ctx: ConnContext) extends Connection(ctx) {
@@ -95,13 +38,8 @@ final class FileConnection(ctx: ConnContext) extends Connection(ctx) {
       .orElse(conn.str("filetype")).getOrElse(
         file.reverse.takeWhile(_ != '.').reverse.toLowerCase)
     val raw = ftype match {
-      case "parquet" => spark.read.option("mergeSchema", "true").parquet(file)
-      case "csv" => spark.read.option("header", "true")
-        .option("inferSchema", "true").csv(file)
-      case "json" | "jsonl" => spark.read
-        .option("multiLine", (ftype == "json").toString).json(file)
-      case "txt" | "text" => spark.read.text(file)
-      case "orc" => spark.read.option("mergeSchema", "true").orc(file)
+      case f if FileFormats.byName.contains(f) =>
+        FileFormats.byName(f).read(spark, file)
       // spreadsheet/markup kinds parse driver-side like the reference's
       // pandas readers (file.py:136-147) — see TabularFiles scaladoc
       case "xlsx" => TabularFiles.readXlsx(spark, file)
@@ -133,9 +71,7 @@ final class VariableConnection(ctx: ConnContext) extends Connection(ctx) {
       case s: String => Seq(s)
       case other => Seq(Json.write(other))
     }
-    val raw = spark.read.json(
-      spark.createDataset(jsonRows)(org.apache.spark.sql.Encoders.STRING))
-    finishTap(raw, query, limit)
+    finishTap(FileFormats.jsonRows(spark, jsonRows), query, limit)
   }
 
   override def sink(from: DataFrame): Unit = {

@@ -595,26 +595,9 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
     val declared = conn.fields
     val raw = fetchAll() match {
       case Records(records) =>
-        val jsonRows = records.map(Json.write)
-        val reader = spark.read
-        val withSchema =
-          if (declared.nonEmpty) reader.schema(SchemaUtil.toStruct(declared))
-          else reader
-        if (jsonRows.isEmpty && declared.nonEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            SchemaUtil.toStruct(declared))
-        else withSchema.json(
-          spark.createDataset(jsonRows)(org.apache.spark.sql.Encoders.STRING))
-      case DataFile(p, "parquet") => spark.read.parquet(p)
-      case DataFile(p, "csv") =>
-        val rdr = spark.read.option("header", "true")
-        if (declared.nonEmpty) rdr.schema(SchemaUtil.toStruct(declared)).csv(p)
-        else rdr.option("inferSchema", "true").csv(p)
-      case DataFile(p, "jsonl") =>
-        if (declared.nonEmpty)
-          spark.read.schema(SchemaUtil.toStruct(declared)).json(p)
-        else spark.read.json(p)
-      case DataFile(_, other) => sys.error(s"unsupported content kind: $other")
+        FileFormats.jsonRows(spark, records.map(Json.write), declared)
+      case DataFile(p, kind) => FileFormats.byName.getOrElse(kind,
+        sys.error(s"unsupported content kind: $kind")).read(spark, p, declared)
     }
     finishTap(raw, query, limit)
   }

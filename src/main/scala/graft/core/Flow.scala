@@ -2,7 +2,7 @@ package graft.core
 
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.connections.{ConnContext, Connection, FlowConfig}
+import graft.connections.{ConnContext, Connection, FileFormats, FlowConfig}
 import graft.model.{ConnectionDef, Stage, Stages}
 import graft.sqlbridge.SqlBridge
 import graft.sqlbridge.SqlBridge.NameRegistry
@@ -23,8 +23,9 @@ final case class SchemaItem(
   *
   * SparkSession plays the role of the embedded database: every stage
   * materializes a named relation as a temp view, later stages reference
-  * prior stages by name in SQL, taps are eagerly cached (CREATE TABLE AS
-  * semantics, flow.py:217-221), transforms stay lazy views (flow.py:267).
+  * prior stages by name in SQL, taps whose source a later stage rewrites
+  * are snapshotted (the reference's CREATE TABLE AS, flow.py:217-221),
+  * transforms stay lazy views (flow.py:267).
   *
   * Stage kinds: tap/source, transform, sink, sql, internal/self, pipeline
   * (nested; row-driven loop when preceded by a producing stage,
@@ -194,8 +195,8 @@ final class Flow(
       // only taps whose source overlaps a still-future write target; all
       // other taps stay lazy and keep Catalyst pushdown into the scan.
       val materialized =
-        if (config.materializeTaps && Flow.sourceRewrittenLater(
-            stage.connection, future, config)) df.localCheckpoint()
+        if (Flow.sourceRewrittenLater(stage.connection, future, config))
+          df.localCheckpoint()
         else df
       materialized.createOrReplaceTempView(view)
       lastNameVar = Some(stage.name)
@@ -389,7 +390,8 @@ object Flow {
     * a Deltatable sink compacts/drops the same parquet files a Parquet tap
     * of that path reads, so all file-backed kinds form one family. */
   private def family(kind: String): String = kind.toLowerCase match {
-    case "parquet" | "deltatable" | "file" | "csv" | "json" | "orc" => "file"
+    case k if FileFormats.kinds.contains(k) => "file"
+    case "deltatable" | "file" => "file"
     case k => k
   }
 

@@ -79,17 +79,19 @@ object Curation {
     * (lead byte F0+) sorts AFTER, code-unit-wise BEFORE. A prune keyed on
     * the String order could then drop a word the global window ranks
     * ≤ k. [[graft.PlanSpec]] pins the disagreement case. */
-  /** Bounded-insertion top-k core shared by [[localVocabTopK]] and
-    * [[localSourceTopQ]]: per group, keep the k `ord`-smallest entries
+  /** Bounded-insertion top-k core shared by every partition-local top-k
+    * ([[localVocabTopK]], [[localSourceTopQ]], t23's
+    * `DataSelection.localLabelTopK`, the KMV sketches): per group, keep
+    * the k `ord`-smallest entries
     * from a stream of (group, entry) pairs — O(k) state per (group,
     * partition), no shuffle. One implementation so a fix to the
     * insertion/trim logic can never apply to one caller and not the
     * other. */
-  private[graft] def boundedTopK[E](it: Iterator[(String, E)], k: Int)(
-      implicit ord: Ordering[E]): Iterator[(String, E)] = {
+  private[graft] def boundedTopK[G, E](it: Iterator[(G, E)], k: Int)(
+      implicit ord: Ordering[E]): Iterator[(G, E)] = {
     require(k >= 1, s"boundedTopK needs k >= 1, got $k")
     val best = scala.collection.mutable.HashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[E]]
+      .empty[G, scala.collection.mutable.ArrayBuffer[E]]
     it.foreach { case (g, e) =>
       val buf = best.getOrElseUpdate(g,
         new scala.collection.mutable.ArrayBuffer[E](k + 1))

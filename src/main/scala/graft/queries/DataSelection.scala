@@ -158,9 +158,10 @@ object DataSelection {
   }
 
   /** t23's per-partition pre-top-k: reduce a (label, vec_id, dist) frame
-    * to at most k rows per (label, input partition) — a bounded insertion
-    * pass with NO shuffle — before the global per-label rank. With k ≪
-    * cores the global window's partition key skews (8 labels = 8 tasks
+    * to at most k rows per (label, input partition) —
+    * [[Curation.boundedTopK]]'s bounded insertion pass, NO shuffle —
+    * before the global per-label rank. With k ≪ cores the global
+    * window's partition key skews (8 labels = 8 tasks
     * over the whole corpus' pairs); after this pass the window ranks at
     * most k × labels × partitions rows. The global top-k per label is
     * contained in the union of partition-local top-ks, and ties break on
@@ -169,29 +170,13 @@ object DataSelection {
   private[graft] def localLabelTopK(scored: DataFrame, k: Int): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
-    val ord = implicitly[Ordering[(Double, Long)]]
     scored
       .select(col("label").cast("int"), col("vec_id").cast("long"),
         col("dist").cast("double"))
       .as[(Int, Long, Double)]
       .mapPartitions { it =>
-        val best = scala.collection.mutable.HashMap
-          .empty[Int, scala.collection.mutable.ArrayBuffer[(Double, Long)]]
-        it.foreach { case (l, id, d) =>
-          val buf = best.getOrElseUpdate(l,
-            new scala.collection.mutable.ArrayBuffer[(Double, Long)](k + 1))
-          if (buf.length < k || ord.lt((d, id), buf.last)) {
-            buf += ((d, id))
-            var i = buf.length - 1
-            while (i > 0 && ord.lt(buf(i), buf(i - 1))) {
-              val t = buf(i - 1); buf(i - 1) = buf(i); buf(i) = t; i -= 1
-            }
-            if (buf.length > k) buf.remove(k)
-          }
-        }
-        best.iterator.flatMap { case (l, buf) =>
-          buf.iterator.map { case (d, id) => (l, id, d) }
-        }
+        Curation.boundedTopK(it.map { case (l, id, d) => (l, (d, id)) }, k)
+          .map { case (l, (d, id)) => (l, id, d) }
       }
       .toDF("label", "vec_id", "dist")
   }
@@ -257,6 +242,18 @@ object DataSelection {
           " x -> x.sym2)").as("syms"))
   }
 
+  /** Free the blocks behind every `localCheckpoint()` a frame reads.
+    * `Dataset.unpersist` only drops cache-manager entries; a local
+    * checkpoint instead persists the RDD under the plan's `LogicalRDD`
+    * leaf, so that RDD is what must be unpersisted. Checkpoints already
+    * built on top of the frame keep their own blocks and still read;
+    * the frame itself can no longer be computed. */
+  private[graft] def releaseCheckpoints(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+      case _ =>
+    }
+
   /** t87's trainer loop: k merge rounds over the collapsed word
     * vocabulary. Returns (final vocab, merges learned).
     *
@@ -276,7 +273,9 @@ object DataSelection {
     * Cost: the cached frame is |vocab|·avg_len rows instead of |vocab|
     * — still vocabulary-bounded, never corpus-bounded. The final
     * round's merge is left LAZY (nothing reads the post-round-k
-    * vocabulary eagerly; callers that do pay its one plan then).
+    * vocabulary eagerly; callers that do pay its one plan then). Each
+    * superseded round's checkpoint is released; the caller owns the one
+    * the returned vocabulary reads ([[releaseCheckpoints]]).
     * Lineage still resets per round (Components' recipe), and NO round
     * after the first rescans the corpus (plan-pinned in
     * QualitySketchSpec). The per-round winner is a 1-ROW collect. */
@@ -306,7 +305,7 @@ object DataSelection {
         val merged = bpeExplode(bpeApplyMerge(ex, a, b))
         if (r < k) {
           ex = merged.localCheckpoint()
-          old.unpersist()
+          releaseCheckpoints(old)
         } else ex = merged // last round: no action reads it eagerly
         r += 1
       }
@@ -2751,7 +2750,7 @@ object DataSelection {
       (spark, dir) => {
         import spark.implicits._
         val (vocab, merges) = bpeRounds(spark, dir, 8)
-        vocab.unpersist()
+        releaseCheckpoints(vocab) // only the collected merges are kept
         merges.toDF("round", "a", "b", "n_occ")
           .select(col("round"), col("a"), col("b"),
             concat(col("a"), col("b")).as("merged"), col("n_occ"))

@@ -2,6 +2,7 @@ package graft.sqlbridge
 
 import java.util.regex.Matcher
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.connections.{FileFormat, FileFormats, Locator}
 
 /** `raw_dispatch: true` support (reference: _raw_sql_rewriter,
   * ankaflow/connections/connection.py:290-323; model
@@ -16,26 +17,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Execution on Spark: the reference hands the rewritten SQL to DuckDB,
   * whose `read_parquet`/`delta_scan` table functions do the reading. Spark
   * has no such table functions, so [[execute]] additionally swaps each
-  * call with a temp view backed by the matching `spark.read` — the rest of
-  * the statement (CTEs, joins, filters) runs unchanged through Catalyst.
+  * call with a scratch view backed by the matching `spark.read` — the
+  * rest of the statement (CTEs, joins, filters) runs unchanged through
+  * Catalyst.
   */
 object RawDispatch {
 
-  private val funcs = Seq("delta_scan", "read_parquet", "read_csv",
-    "read_json_auto", "read_json")
+  /** DuckDB table function → the format its Spark read uses. Reader
+    * kwargs after the path (e.g. `union_by_name=true`) are accepted and
+    * dropped: the table's options already match the reference's defaults
+    * (SURVEY §2.2). */
+  private val formats: Map[String, FileFormat] = Map(
+    "delta_scan" -> FileFormats.parquet, "read_parquet" -> FileFormats.parquet,
+    "read_csv" -> FileFormats.csv, "read_json_auto" -> FileFormats.json,
+    "read_json" -> FileFormats.json)
+
+  private val funcs = formats.keys
 
   private val locatorPattern =
     ("(?i)\\b(" + funcs.mkString("|") + ")\\(\\s*'([^']+)'").r
-
-  private def isAbsolute(loc: String): Boolean =
-    loc.startsWith("/") || loc.contains("://")
 
   /** Rewrite short locators to `resolved`; validate they match
     * `connLocator`. Pure text transformation (all occurrences). */
   def rewrite(sql: String, connLocator: String, resolved: String): String =
     locatorPattern.replaceAllIn(sql, m => {
       val short = m.group(2)
-      if (isAbsolute(short)) Matcher.quoteReplacement(m.group(0))
+      if (Locator.isAbsolute(short)) Matcher.quoteReplacement(m.group(0))
       else if (short != connLocator)
         throw new IllegalArgumentException(
           s"Locator '$short' does not match connection: '$connLocator'")
@@ -45,41 +52,26 @@ object RawDispatch {
   private val callPattern =
     ("(?i)\\b(" + funcs.mkString("|") + ")\\(([^()]*)\\)").r
 
-  /** Replace every reader-function call with a temp view over the
-    * equivalent `spark.read`, then run the statement. Reader kwargs after
-    * the path (e.g. `union_by_name=true`) are accepted and dropped — the
-    * Spark defaults (mergeSchema, PERMISSIVE) already match the
-    * reference's defaults (SURVEY §2.2). */
+  /** Replace every reader-function call with a scratch view over the
+    * equivalent [[FileFormats]] read, then run the statement. */
   def execute(spark: SparkSession, sql: String,
-      names: SqlBridge.NameRegistry): DataFrame = {
-    var out = sql
-    var n = 0
-    var found = true
-    while (found) {
-      callPattern.findFirstMatchIn(out) match {
-        case Some(m) =>
-          val func = m.group(1).toLowerCase
-          val args = m.group(2)
-          val path = "'([^']+)'".r.findFirstMatchIn(args)
-            .map(_.group(1))
-            .getOrElse(sys.error(s"$func: missing path argument in ($args)"))
-          val df = func match {
-            case "delta_scan" | "read_parquet" =>
-              spark.read.option("mergeSchema", "true").parquet(path)
-            case "read_csv" =>
-              spark.read.option("header", "true")
-                .option("inferSchema", "true").option("mode", "PERMISSIVE")
-                .csv(path)
-            case "read_json" | "read_json_auto" =>
-              spark.read.option("multiLine", "true").json(path)
-          }
-          val view = s"__raw_dispatch_${n}_${math.abs(path.hashCode)}"
-          df.createOrReplaceTempView(view)
-          out = out.substring(0, m.start) + view + out.substring(m.end)
-          n += 1
-        case None => found = false
+      names: SqlBridge.NameRegistry): DataFrame =
+    SqlBridge.withScratchViews(spark) { view =>
+      var out = sql
+      var found = true
+      while (found) {
+        callPattern.findFirstMatchIn(out) match {
+          case Some(m) =>
+            val func = m.group(1).toLowerCase
+            val args = m.group(2)
+            val path = "'([^']+)'".r.findFirstMatchIn(args)
+              .map(_.group(1))
+              .getOrElse(sys.error(s"$func: missing path argument in ($args)"))
+            val name = view("__raw_dispatch", formats(func).read(spark, path))
+            out = out.substring(0, m.start) + name + out.substring(m.end)
+          case None => found = false
+        }
       }
+      spark.sql(SqlBridge.translate(out, names, Some(spark)))
     }
-    spark.sql(SqlBridge.translate(out, names, Some(spark)))
-  }
 }

@@ -1,7 +1,7 @@
 package graft.sqlbridge
 
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sqlbridge.SqlText._
 
 /** DuckDB-flavored SQL → Spark SQL translation (SURVEY.md §2.9, §7.1-3).
@@ -406,6 +406,26 @@ object SqlBridge {
       case t => out.append(t.text)
     }
     out.toString
+  }
+
+  private val scratchIds = new java.util.concurrent.atomic.AtomicLong
+
+  /** Scratch temp views that live for one statement. `body` registers
+    * frames through `view(prefix, frame)`, which returns a fresh view
+    * name, and builds its frame over them; the views are dropped when it
+    * returns. `spark.sql` analyses eagerly and the analysed plan holds the
+    * views' plans, so the result never looks the names up again. Names
+    * are unique across threads, so parallel loop iterations sharing one
+    * session never drop each other's views. */
+  def withScratchViews(spark: SparkSession)(
+      body: ((String, DataFrame) => String) => DataFrame): DataFrame = {
+    val made = mutable.ArrayBuffer.empty[String]
+    try body { (prefix, frame) =>
+      val name = s"${prefix}_${scratchIds.incrementAndGet()}"
+      frame.createOrReplaceTempView(name)
+      made += name
+      name
+    } finally made.foreach(spark.catalog.dropTempView)
   }
 }
 
