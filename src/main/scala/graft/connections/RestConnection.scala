@@ -5,6 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 import scala.collection.mutable
 import org.apache.spark.sql.DataFrame
+import graft.functions.Md5
 import graft.template.{Api, Json}
 
 /** REST ingestion framework (reference: the ankaflow/connections/rest
@@ -195,10 +196,6 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
 
   private var digestNc = 0
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** Build the Authorization header for a Digest challenge. */
   private def digestAnswer(challenge: String, method: String,
       uri: String): String = {
@@ -211,14 +208,14 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
     val opaque = param("opaque")
     val user = str(auth, "username").getOrElse("")
     val pass = str(auth, "password").getOrElse("")
-    val ha1 = md5hex(s"$user:$realm:$pass")
-    val ha2 = md5hex(s"${method.toUpperCase}:$uri")
+    val ha1 = Md5.hex(s"$user:$realm:$pass")
+    val ha2 = Md5.hex(s"${method.toUpperCase}:$uri")
     digestNc += 1
     val nc = f"$digestNc%08x"
-    val cnonce = md5hex(s"$nonce$digestNc") // deterministic client nonce
+    val cnonce = Md5.hex(s"$nonce$digestNc") // deterministic client nonce
     val response = qop match {
-      case Some(q) => md5hex(s"$ha1:$nonce:$nc:$cnonce:$q:$ha2")
-      case None => md5hex(s"$ha1:$nonce:$ha2")
+      case Some(q) => Md5.hex(s"$ha1:$nonce:$nc:$cnonce:$q:$ha2")
+      case None => Md5.hex(s"$ha1:$nonce:$ha2")
     }
     val base = Seq(
       s"""username="$user"""", s"""realm="$realm"""", s"""nonce="$nonce"""",

@@ -29,9 +29,9 @@ object GraftFunctions {
     ("char_entropy_stats", 1, e => CharEntropyStats(e(0))),
     ("winnow_fps", 3, e => WinnowFps(e(0), e(1), e(2))),
     ("minhash8", 1, e => MinHash8(e(0))),
-    ("simhash16", 1, e => SimHash16(e(0))),
-    ("simhash64", 1, e => SimHash64(e(0))),
-    ("simhash128", 1, e => SimHash128(e(0))),
+    ("simhash16", 1, e => SimHash(e(0), 16)),
+    ("simhash64", 1, e => SimHash(e(0), 64)),
+    ("simhash128", 1, e => SimHash(e(0), 128)),
     ("hyperplane_buckets64", 1, e => HyperplaneBuckets64(e(0))),
     ("hyperplane_bands", 3, e => HyperplaneBands(e(0), e(1), e(2))),
     // Spark ships these two (the runtime-filter machinery's Bloom build

@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
+import graft.functions.NumericArray.{elemOf, first64, first64Code}
+
 /** Width-PARAMETERIZED banded hyperplane LSH signature —
   * `hyperplane_bands(embedding, bands, bits)` → `array<int>` of `bands`
   * bucket values of `bits` sign bits each, from `bands·bits`
@@ -23,8 +25,9 @@ import org.apache.spark.sql.types._
   *
   * PLANE FAMILY (r19): element d of plane j is
   * `(md5int32("hp|j|d") mod 32768)/32768 − 0.5` where md5int32 is the
-  * first 8 hex digits of the md5 as an integer — the repo's portable
-  * hash, so the DuckDB oracle derives the identical family in SQL.
+  * first 8 hex digits of the md5 as an integer ([[Md5.word32]]) — the
+  * repo's portable hash, so the DuckDB oracle derives the identical
+  * family in SQL.
   * Bit i of band k polls plane (k−1)·bits + i + 1, so configs are
   * prefix-consistent in ONE family (pinned in HyperplaneBandsSpec).
   * This REPLACES r18's LCG family
@@ -43,18 +46,13 @@ import org.apache.spark.sql.types._
   * keeps the LCG family untouched — it is t12's oracle-pinned
   * published-default fixture twin, not a width-schedule kernel.
   * NaN dots set the bit, matching SQL's `float_dot(...) > 0` under
-  * NaN-high ordering (the HyperplaneBuckets64 lesson). Per-type element
-  * accessors in both eval paths (the r16 FloatDot ADVICE).
+  * NaN-high ordering (the HyperplaneBuckets64 lesson). Elements are
+  * widened by [[NumericArray]].
   */
 case class HyperplaneBands(first: Expression, second: Expression, third: Expression)
   extends TernaryExpression {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  private def elemOf(dt: DataType): Option[DataType] = dt match {
-    case ArrayType(t: NumericType, _) => Some(t)
-    case _ => None
-  }
 
   override def checkInputDataTypes(): TypeCheckResult =
     (first.dataType, second.dataType, third.dataType) match {
@@ -77,51 +75,14 @@ case class HyperplaneBands(first: Expression, second: Expression, third: Express
 
   private lazy val elemType: DataType = elemOf(first.dataType).get
 
-  private def get(t: DataType, arr: ArrayData, i: Int): Double = t match {
-    case FloatType => arr.getFloat(i).toDouble
-    case DoubleType => arr.getDouble(i)
-    case IntegerType => arr.getInt(i).toDouble
-    case LongType => arr.getLong(i).toDouble
-    case ShortType => arr.getShort(i).toDouble
-    case ByteType => arr.getByte(i).toDouble
-    case d: DecimalType => arr.getDecimal(i, d.precision, d.scale).toDouble
-    case other => sys.error(s"unsupported element type $other")
-  }
-
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val n = math.min(arr.numElements(), 64)
-    val v = new Array[Double](n)
-    var i = 0
-    while (i < n) { v(i) = get(elemType, arr, i); i += 1 }
-    HyperplaneBands.buckets(v, b.asInstanceOf[Int], c.asInstanceOf[Int])
-  }
-
-  private def accessor(t: DataType, arr: String, i: String): String = t match {
-    case FloatType => s"(double)$arr.getFloat($i)"
-    case DoubleType => s"$arr.getDouble($i)"
-    case IntegerType => s"(double)$arr.getInt($i)"
-    case LongType => s"(double)$arr.getLong($i)"
-    case ShortType => s"(double)$arr.getShort($i)"
-    case ByteType => s"(double)$arr.getByte($i)"
-    case d: DecimalType =>
-      s"$arr.getDecimal($i, ${d.precision}, ${d.scale}).toDouble()"
-    case other => sys.error(s"unsupported element type $other")
-  }
+  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
+    HyperplaneBands.buckets(first64(elemType, a.asInstanceOf[ArrayData]),
+      b.asInstanceOf[Int], c.asInstanceOf[Int])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (c, b, w) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = java.lang.Math.min($c.numElements(), 64);
-         |double[] $v = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $v[$i] = ${accessor(elemType, c, i)};
-         |}
-         |${ev.value} = graft.functions.HyperplaneBands.buckets($v, $b, $w);
-       """.stripMargin
+      val (code, v) = first64Code(ctx, elemType, c)
+      s"$code\n${ev.value} = graft.functions.HyperplaneBands.buckets($v, $b, $w);"
     })
 
   override protected def withNewChildrenInternal(
@@ -137,34 +98,43 @@ object HyperplaneBands {
     * the table. */
   private val tables = new ConcurrentHashMap[Int, Array[Array[Double]]]()
 
-  /** First 8 md5 hex digits of s as an unsigned 32-bit value — the same
-    * number DuckDB's hex-digit parse of substr(md5(s), 1, 8) yields, so
-    * the oracle can derive the family independently. */
-  private def md5int32(s: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ((md(0) & 0xFFL) << 24) | ((md(1) & 0xFFL) << 16) |
-      ((md(2) & 0xFFL) << 8) | (md(3) & 0xFFL)
-  }
-
+  /** [[Md5.word32]] of "hp|j|d" is the number DuckDB's hex-digit parse
+    * of substr(md5(s), 1, 8) yields, so the oracle derives the family
+    * independently. */
   private def planes(count: Int): Array[Array[Double]] =
     tables.computeIfAbsent(count, c => Array.tabulate(c, 64) { (j0, d0) =>
-      (md5int32(s"hp|${j0 + 1}|${d0 + 1}") % 32768L).toDouble / 32768.0 - 0.5
+      (Md5.word32(s"hp|${j0 + 1}|${d0 + 1}") % 32768L).toDouble / 32768.0 - 0.5
     })
 
-  /** bands tight dot loops per band bit over the pre-widened vector. */
-  def buckets(v: Array[Double], bands: Int, bits: Int): ArrayData = {
-    val p = planes(bands * bits)
+  /** `bands` buckets of `bits` sign bits over the md5 family. */
+  def buckets(v: Array[Double], bands: Int, bits: Int): ArrayData =
+    signBuckets(v, planes(bands * bits), bands, bits)
+
+  /** `bands·bits` tight dot loops over the pre-widened vector, one per
+    * plane of either family; bit b of band k is the sign of plane
+    * k·bits + b. */
+  private[functions] def signBuckets(v: Array[Double], p: Array[Array[Double]],
+      bands: Int, bits: Int): ArrayData = {
     val n = v.length
     val out = new Array[Int](bands)
     var j = 0
-    while (j < bands * bits) {
-      val pj = p(j)
-      var acc = 0.0
-      var i = 0
-      while (i < n) { acc += v(i) * pj(i); i += 1 }
-      if (acc > 0 || java.lang.Double.isNaN(acc)) out(j / bits) |= 1 << (j % bits)
-      j += 1
+    var k = 0
+    while (k < bands) {
+      var b = 0
+      while (b < bits) {
+        val pj = p(j)
+        var acc = 0.0
+        var i = 0
+        while (i < n) { acc += v(i) * pj(i); i += 1 }
+        // Spark SQL (and DuckDB) order NaN above every value, so the
+        // composed form's `float_dot(...) > 0` is TRUE for a NaN dot;
+        // plain Java `>` would say false — match the SQL semantics
+        // (caught by the adversarial-input pin in the spec)
+        if (acc > 0 || java.lang.Double.isNaN(acc)) out(k) |= 1 << b
+        b += 1
+        j += 1
+      }
+      k += 1
     }
     new GenericArrayData(out)
   }

@@ -3,8 +3,10 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+
+import graft.functions.NumericArray.{elemOf, first64, first64Code}
 
 /** t12's banded hyperplane LSH signature — 64 deterministic LCG planes
   * → 4 bands × 16 sign bits — in ONE compiled pass, as a native
@@ -17,10 +19,8 @@ import org.apache.spark.sql.types._
   * `((j·1103515245 + d·12345) mod 32768)/32768 − 0.5` doubles (computed
   * once into a static table by the SAME Scala arithmetic that built the
   * old literals), and bit i of band k is `dot_{(k−1)·16+i+1} > 0`.
-  * The DuckDB oracle's spelling is unchanged. Like FloatDot, every
-  * numeric element type is widened to double with a per-type accessor
-  * (r16 ADVICE: the float-else-getDouble shortcut misread 4-byte int
-  * slots and ClassCastException'd on decimals).
+  * The DuckDB oracle's spelling is unchanged. Like FloatDot, elements
+  * are widened by [[NumericArray]].
   *
   * Scale note (T12BandsLab, r16): the composed form's 64-dot projection
   * cannot split inside whole-stage codegen, and past ~2 bands the
@@ -32,11 +32,6 @@ case class HyperplaneBuckets64(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  private def elemOf(dt: DataType): Option[DataType] = dt match {
-    case ArrayType(t: NumericType, _) => Some(t)
-    case _ => None
-  }
-
   override def checkInputDataTypes(): TypeCheckResult =
     if (elemOf(child.dataType).isDefined) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
@@ -44,51 +39,13 @@ case class HyperplaneBuckets64(child: Expression) extends UnaryExpression {
 
   private lazy val elemType: DataType = elemOf(child.dataType).get
 
-  private def get(t: DataType, arr: ArrayData, i: Int): Double = t match {
-    case FloatType => arr.getFloat(i).toDouble
-    case DoubleType => arr.getDouble(i)
-    case IntegerType => arr.getInt(i).toDouble
-    case LongType => arr.getLong(i).toDouble
-    case ShortType => arr.getShort(i).toDouble
-    case ByteType => arr.getByte(i).toDouble
-    case d: DecimalType => arr.getDecimal(i, d.precision, d.scale).toDouble
-    case other => sys.error(s"unsupported element type $other")
-  }
-
-  override def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val n = math.min(arr.numElements(), 64)
-    val v = new Array[Double](n)
-    var i = 0
-    while (i < n) { v(i) = get(elemType, arr, i); i += 1 }
-    HyperplaneBuckets64.bucketsFromDoubles(v)
-  }
-
-  private def accessor(t: DataType, arr: String, i: String): String = t match {
-    case FloatType => s"(double)$arr.getFloat($i)"
-    case DoubleType => s"$arr.getDouble($i)"
-    case IntegerType => s"(double)$arr.getInt($i)"
-    case LongType => s"(double)$arr.getLong($i)"
-    case ShortType => s"(double)$arr.getShort($i)"
-    case ByteType => s"(double)$arr.getByte($i)"
-    case d: DecimalType =>
-      s"$arr.getDecimal($i, ${d.precision}, ${d.scale}).toDouble()"
-    case other => sys.error(s"unsupported element type $other")
-  }
+  override def nullSafeEval(a: Any): Any =
+    HyperplaneBuckets64.bucketsFromDoubles(first64(elemType, a.asInstanceOf[ArrayData]))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = java.lang.Math.min($c.numElements(), 64);
-         |double[] $v = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $v[$i] = ${accessor(elemType, c, i)};
-         |}
-         |${ev.value} = graft.functions.HyperplaneBuckets64.bucketsFromDoubles($v);
-       """.stripMargin
+      val (code, v) = first64Code(ctx, elemType, c)
+      s"$code\n${ev.value} = graft.functions.HyperplaneBuckets64.bucketsFromDoubles($v);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -104,22 +61,6 @@ object HyperplaneBuckets64 {
   }
 
   /** 64 tight dot loops over the pre-widened vector (≤64 elements). */
-  def bucketsFromDoubles(v: Array[Double]): ArrayData = {
-    val n = v.length
-    val out = new Array[Int](4)
-    var j = 0
-    while (j < 64) {
-      val p = planes(j)
-      var acc = 0.0
-      var i = 0
-      while (i < n) { acc += v(i) * p(i); i += 1 }
-      // Spark SQL (and DuckDB) order NaN above every value, so the
-      // composed form's `float_dot(...) > 0` is TRUE for a NaN dot;
-      // plain Java `>` would say false — match the SQL semantics
-      // (caught by the adversarial-input pin in the spec)
-      if (acc > 0 || java.lang.Double.isNaN(acc)) out(j / 16) |= 1 << (j % 16)
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
+  def bucketsFromDoubles(v: Array[Double]): ArrayData =
+    HyperplaneBands.signBuckets(v, planes, 4, 16)
 }

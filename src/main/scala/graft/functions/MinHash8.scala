@@ -21,8 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale note: this removes the explode → groupBy(doc_id) leg of the
   * signature computation entirely; the remaining cost is the md5s
-  * themselves, computed with one reused MessageDigest per row batch
-  * instead of one codec call per (shingle, salt) row.
+  * themselves, computed with the thread's one [[Md5]] digest, fetched
+  * once per row, instead of one codec call per (shingle, salt) row.
   */
 case class MinHash8(child: Expression) extends UnaryExpression {
 
@@ -43,7 +43,7 @@ case class MinHash8(child: Expression) extends UnaryExpression {
   // inputs, and defineCodeGen never sets ev.isNull from the result — under
   // whole-stage codegen (any file-backed plan) the downstream
   // ArrayData.numElements() would NPE. Same explicit-null pattern as
-  // [[SimHash16]]; pinned by MinHash8Spec's codegen-path tests.
+  // [[SimHash]]; pinned by MinHash8Spec's codegen-path tests.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val v = ctx.freshName("mhSigs")
     nullSafeCodeGen(ctx, ev, c =>
@@ -61,12 +61,6 @@ case class MinHash8(child: Expression) extends UnaryExpression {
 object MinHash8 {
   private val Salt1 = "1|".getBytes("UTF-8")
   private val Salt2 = "2|".getBytes("UTF-8")
-  private val HexDigits = "0123456789abcdef".toCharArray
-
-  private val digestTL = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 
   /** Null for empty (or all-null-element) shingle arrays — matching
     * min() over zero non-null rows in the exploded form. Null elements
@@ -76,7 +70,7 @@ object MinHash8 {
   def sigs(shingles: ArrayData): ArrayData = {
     val n = shingles.numElements()
     if (n == 0) return null
-    val md = digestTL.get()
+    val md = Md5.digest()
     // mins(0..3): salt 1 windows 0..3, mins(4..7): salt 2 windows 0..3
     val mins = Array.fill(8)(0xFFFFFFFFL)
     var seen = false
@@ -87,14 +81,12 @@ object MinHash8 {
         val sh = shingles.getUTF8String(i).getBytes
         var m = 0
         while (m < 2) {
-          md.reset()
           md.update(if (m == 0) Salt1 else Salt2)
           md.update(sh)
           val d = md.digest()
           var w = 0
           while (w < 4) {
-            val v = ((d(4 * w) & 0xFFL) << 24) | ((d(4 * w + 1) & 0xFFL) << 16) |
-              ((d(4 * w + 2) & 0xFFL) << 8) | (d(4 * w + 3) & 0xFFL)
+            val v = Md5.word32(d, 4 * w)
             val k = 4 * m + w
             if (v < mins(k)) mins(k) = v
             w += 1
@@ -108,13 +100,7 @@ object MinHash8 {
     val out = new Array[AnyRef](8)
     var k = 0
     while (k < 8) {
-      val cs = new Array[Char](8)
-      var j = 0
-      while (j < 8) {
-        cs(j) = HexDigits(((mins(k) >>> (28 - 4 * j)) & 0xF).toInt)
-        j += 1
-      }
-      out(k) = UTF8String.fromString(new String(cs))
+      out(k) = UTF8String.fromString(Md5.hex32(mins(k)))
       k += 1
     }
     new GenericArrayData(out)

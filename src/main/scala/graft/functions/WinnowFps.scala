@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -63,37 +61,18 @@ case class WinnowFps(first: Expression, second: Expression, third: Expression)
 }
 
 object WinnowFps {
-  // one digest instance per executor thread (getInstance per gram would
-  // dominate the hot loop; MessageDigest is not thread-safe)
-  private val md5 = ThreadLocal.withInitial[MessageDigest](() =>
-    MessageDigest.getInstance("MD5"))
-
-  /** First 8 lowercase-hex chars of md5(bytes), parsed base-16 — the
-    * 32-bit portable hash of the t76 contract. */
-  private def h32(bytes: Array[Byte]): Long = {
-    val m = md5.get()
-    m.reset()
-    val d = m.digest(bytes)
-    // first 8 hex chars = first 4 digest bytes, big-endian nibbles
-    var v = 0L
-    var i = 0
-    while (i < 4) {
-      v = (v << 8) | (d(i) & 0xffL)
-      i += 1
-    }
-    v
-  }
-
   /** Compiled one-pass twin of posexplode(word_ngrams) → window-min →
     * DISTINCT. See class doc for the exact contract. */
   def fps(words: ArrayData, n: Int, w: Int): ArrayData = {
     val grams = WordNGrams.ngrams(words, n)
     val total = grams.numElements()
     if (total == 0) return new GenericArrayData(Array.empty[Long])
+    // first 8 hex chars of each gram's md5, parsed base-16
+    val md = Md5.digest()
     val hashes = new Array[Long](total)
     var i = 0
     while (i < total) {
-      hashes(i) = h32(grams.getUTF8String(i).getBytes)
+      hashes(i) = Md5.word32(md.digest(grams.getUTF8String(i).getBytes), 0)
       i += 1
     }
     val out = new java.util.TreeSet[java.lang.Long]()

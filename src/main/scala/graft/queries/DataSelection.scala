@@ -482,12 +482,8 @@ object DataSelection {
     * hex parse of the same md5. Driver-side, ≤ 8 MB at the cap. */
   private[graft] def ivfCentroids(k: Int): Array[Array[Double]] =
     Array.tabulate(k, 64) { (j0, d0) =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"ivf|${j0 + 1}|${d0 + 1}"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val v = ((md(0) & 0xFFL) << 24) | ((md(1) & 0xFFL) << 16) |
-        ((md(2) & 0xFFL) << 8) | (md(3) & 0xFFL)
-      (v % 32768L).toDouble / 32768.0 - 0.5
+      (graft.functions.Md5.word32(s"ivf|${j0 + 1}|${d0 + 1}") % 32768L)
+        .toDouble / 32768.0 - 0.5
     }
 
   val defs: Map[String, QueryDef] = Map(

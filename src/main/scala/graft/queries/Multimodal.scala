@@ -1,8 +1,8 @@
 package graft.queries
 
-import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Md5
 
 /** Multimodal-column plumbing: media payloads ride as opaque binary
   * columns with typed metadata, and decode / feature-extract runs as a
@@ -90,8 +90,7 @@ object Multimodal {
     val bpp = bb.getShort(28).toInt
     val frame = java.util.Arrays.copyOfRange(c, dataOffset,
       math.min(dataOffset + 32, c.length))
-    val digest = MessageDigest.getInstance("MD5").digest(frame)
-      .map("%02x".format(_)).mkString
+    val digest = Md5.hex(frame)
     MediaMeta(r.doc_id, fileSize.toLong, width, height, s"bmp$bpp", digest)
   }
 
@@ -245,14 +244,13 @@ object Multimodal {
   /** STUB feature extractor — salted-md5 hashing-trick features standing
     * in for a learned encoder; 24 high bits per salt, scaled to [0,1). */
   def featureStub(r: MediaRow): MediaFeatures = {
-    val md = MessageDigest.getInstance("MD5")
     // null payload → feature of the bare salt, matching the oracle's
     // concat('k|', NULL) which DuckDB treats as 'k|'
     val content = if (r.content == null) Array.empty[Byte] else r.content
     val feats = (1 to 8).map { k =>
-      val h = md.digest(s"$k|".getBytes("UTF-8") ++ content)
-      val hex = h.take(3).map("%02x".format(_)).mkString // 6 hex chars
-      java.lang.Long.parseLong(hex, 16).toDouble / 16777216.0
+      // the 6 leading hex digits = the word's top 24 bits
+      val h = Md5.word32(Md5.bytes(s"$k|".getBytes("UTF-8") ++ content), 0)
+      (h >>> 8).toDouble / 16777216.0
     }
     val norm = feats.foldLeft(0.0)((a, x) => a + x * x)
     MediaFeatures(r.doc_id, feats(0), feats(1), feats(2), feats(3),
@@ -268,13 +266,12 @@ object Multimodal {
   def frameSampleStub(r: MediaRow): Seq[Frame] = {
     val n = r.content.length
     val step = math.max(n / 4, 1)
-    val digest = MessageDigest.getInstance("MD5")
     (0 until 4).map { f =>
       val off = f * step
       val frame =
         if (off >= n) Array.empty[Byte]
         else r.content.slice(off, math.min(off + 16, n))
-      val sig = digest.digest(frame).map("%02x".format(_)).mkString
+      val sig = Md5.hex(frame)
       Frame(r.doc_id, f, sig, (n % 640) / 2, ((n.toLong * 7) % 480).toInt / 2)
     }
   }

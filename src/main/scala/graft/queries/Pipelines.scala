@@ -1,7 +1,9 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.util.ShutdownHookManager
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.Flow
 
@@ -17,6 +19,21 @@ object Pipelines {
 
   private def run(spark: SparkSession, yaml: String): DataFrame =
     Flow.runYaml(spark, yaml).df()
+
+  /** One root for every p* fixture and sink directory, deleted when the
+    * JVM exits — not sooner: the returned frames read these files
+    * lazily. The hook runs after SparkContext's stop (priority 50), with
+    * Spark's own temp dirs (25). */
+  private lazy val scratchRoot: Path = {
+    val root = Files.createTempDirectory("graft_pipelines")
+    ShutdownHookManager.get().addShutdownHook(
+      () => FileUtils.deleteQuietly(root.toFile), 25)
+    root
+  }
+
+  /** A fresh directory under [[scratchRoot]]. */
+  private def scratchDir(prefix: String): Path =
+    Files.createTempDirectory(scratchRoot, prefix)
 
   /** First `.parquet` part file in `dir`, closing the directory stream
     * (Files.list holds an OS handle until closed — same discipline as
@@ -126,7 +143,7 @@ object Pipelines {
     // region's nations to a Deltatable, read it back grouped.
     "p02_pipeline_loop" -> QueryDef(
       (spark, dir) => {
-        val delta = Files.createTempDirectory("graft_p02").toString + "/t"
+        val delta = scratchDir("graft_p02").toString + "/t"
         run(spark,
           s"""
              |- name: RegionsLoop
@@ -293,7 +310,7 @@ object Pipelines {
     // CSV round trip through sinks/taps with re-cast to stable types.
     "p08_pipeline_csv" -> QueryDef(
       (spark, dir) => {
-        val tmp = Files.createTempDirectory("graft_p08").toString + "/csv"
+        val tmp = scratchDir("graft_p08").toString + "/csv"
         run(spark,
           s"""
              |- name: Items
@@ -330,7 +347,7 @@ object Pipelines {
     // JSONL round trip.
     "p09_pipeline_json" -> QueryDef(
       (spark, dir) => {
-        val tmp = Files.createTempDirectory("graft_p09").toString + "/json"
+        val tmp = scratchDir("graft_p09").toString + "/json"
         run(spark,
           s"""
              |- name: Custs
@@ -382,7 +399,7 @@ object Pipelines {
     // aggregates the source table directly since DuckDB reads no ORC).
     "p11_pipeline_orc" -> QueryDef(
       (spark, dir) => {
-        val tmp = Files.createTempDirectory("graft_p11").toString + "/orc"
+        val tmp = scratchDir("graft_p11").toString + "/orc"
         run(spark,
           s"""
              |- name: Orders
@@ -620,7 +637,7 @@ object Pipelines {
     // post-mutation table) for the counts to come out right.
     "p15_pipeline_delta_optimize" -> QueryDef(
       (spark, dir) => {
-        val delta = Files.createTempDirectory("graft_p15").toString + "/t"
+        val delta = scratchDir("graft_p15").toString + "/t"
         run(spark,
           s"""
              |- name: Nations
@@ -704,7 +721,7 @@ object Pipelines {
     // driver's hash gate as well.
     "p16_pipeline_parallel_loop" -> QueryDef(
       (spark, dir) => {
-        val out = Files.createTempDirectory("graft_p16").toString + "/out"
+        val out = scratchDir("graft_p16").toString + "/out"
         run(spark,
           s"""
              |- name: Regions
@@ -755,7 +772,7 @@ object Pipelines {
     // the gate proves parser fidelity, not distribution.
     "p17_pipeline_tabular" -> QueryDef(
       (spark, dir) => {
-        val tmp = Files.createTempDirectory("graft_p17").toString
+        val tmp = scratchDir("graft_p17").toString
         val nations = Tables.t(spark, dir, "nation")
           .orderBy("n_nationkey")
           .select("n_nationkey", "n_name", "n_regionkey").collect()
@@ -828,7 +845,7 @@ object Pipelines {
     // wrong-rowed remote rank all diverge the hash.
     "p18_pipeline_jdbc" -> QueryDef(
       (spark, dir) => {
-        val tmp = Files.createTempDirectory("graft_p18").toString
+        val tmp = scratchDir("graft_p18").toString
         // keep derby.log out of the process cwd (engine-boot property;
         // first setter in the JVM wins, which is always a temp dir).
         // NOT derby.system.home: that would re-root the thrift server's
@@ -926,7 +943,7 @@ object Pipelines {
     // reconstructs from its manifest schema alone.
     "p19_pipeline_delta_timetravel" -> QueryDef(
       (spark, dir) => {
-        val delta = Files.createTempDirectory("graft_p19").toString + "/t"
+        val delta = scratchDir("graft_p19").toString + "/t"
         run(spark,
           s"""
              |- name: Nations
@@ -1055,7 +1072,7 @@ object Pipelines {
         implicit val s: SparkSession = spark
         val ev = Tables.t(spark, dir, "events")
           .select("event_id", "ts", "user_id", "event_type", "value")
-        val tmp = Files.createTempDirectory("graft_p20")
+        val tmp = scratchDir("graft_p20")
         val inDir = tmp.resolve("in"); Files.createDirectories(inDir)
         // 2 contiguous TIME-RANGE chunks from one min/max agg + a
         // map-side projection (r16 — was a global ntile window, the
@@ -1168,7 +1185,7 @@ object Pipelines {
     // rows AND layout).
     "p21_pipeline_delta_partitioned_timetravel" -> QueryDef(
       (spark, dir) => {
-        val delta = Files.createTempDirectory("graft_p21").toString + "/t"
+        val delta = scratchDir("graft_p21").toString + "/t"
         run(spark,
           s"""
              |- name: Nations
@@ -1343,7 +1360,7 @@ object Pipelines {
           .unionByName(clones.withColumn("__c", lit(3)))
           .withColumn("ts", col("doc_id").cast("timestamp"))
           .select(col("__c"), col("ts"), col("doc_id"), col("text"))
-        val tmp = Files.createTempDirectory("graft_p22")
+        val tmp = scratchDir("graft_p22")
         val inDir = tmp.resolve("in"); Files.createDirectories(inDir)
         val scratch = tmp.resolve("scratch")
         chunked.repartition(3, col("__c"))
@@ -1435,7 +1452,7 @@ object Pipelines {
         val docs = Tables.t(spark, dir, "documents")
           .withColumn("is_new",
             expr("CAST(substr(source, 4, 10) AS INT) >= 10"))
-        val tmp = Files.createTempDirectory("graft_p23")
+        val tmp = scratchDir("graft_p23")
         val inDir = tmp.resolve("in"); Files.createDirectories(inDir)
         val scratch = tmp.resolve("scratch")
         docs.withColumn("__c",
@@ -1561,7 +1578,7 @@ object Pipelines {
           // EVERY micro-batch plan; persist the |types|-row result for
           // the stream's lifetime (production publishes it as a table)
           .persist()
-        val tmp = Files.createTempDirectory("graft_p24")
+        val tmp = scratchDir("graft_p24")
         val inDir = tmp.resolve("in"); Files.createDirectories(inDir)
         val bounds = ev.agg(min("ts"), max("ts")).head
         val (minTs, maxTs) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
@@ -1648,7 +1665,7 @@ object Pipelines {
           .filter(col("doc_id") % 50 === 0).select("text")
         val chunked = docs
           .withColumn("__c", (pmod(col("doc_id"), lit(2)) + 1).cast("int"))
-        val tmp = Files.createTempDirectory("graft_p25")
+        val tmp = scratchDir("graft_p25")
         val inDir = tmp.resolve("in"); Files.createDirectories(inDir)
         val scratch = tmp.resolve("scratch")
         chunked.repartition(2, col("__c"))

@@ -253,10 +253,11 @@ object TrainingData {
   /** 16-bit SimHash per document (t04's computation, shared with t18):
     * per-token md5 bit votes, +1/-1 summed, sign → bit. */
   private[graft] def simhash16(spark: SparkSession, dir: String): DataFrame =
-    // one compiled pass per doc (native [[graft.functions.SimHash16]]);
-    // replaces explode → groupBy(doc_id) → 16 conditional sums. The
-    // oracle keeps the exploded digit-probe spelling (simhash16Duck) —
-    // bit parity proven by Simhash16Spec and the driver hash gate.
+    // one compiled pass per doc (native [[graft.functions.SimHash]] at
+    // width 16); replaces explode → groupBy(doc_id) → 16 conditional
+    // sums. The oracle keeps the exploded digit-probe spelling
+    // (simhash16Duck) — bit parity proven by Simhash16Spec and the
+    // driver hash gate.
     // isNotNull: a NULL-text doc never reaches the exploded form's agg
     // (unnest of NULL is zero rows), so it must drop here too.
     t(spark, dir, "documents")
@@ -281,7 +282,7 @@ object TrainingData {
   }
 
   /** 64-bit SimHash per document — the width-parameterized sibling of
-    * [[simhash16]] (native [[graft.functions.SimHash64]]; same
+    * [[simhash16]] (native [[graft.functions.SimHash]], width 64; same
     * digit-probe numbering over md5's 16 leading hex digits, so
     * `simhash64 & 0xFFFF == simhash16` per doc — Simhash64Spec's
     * containment pin ties t101's answers back to t18's). */
@@ -316,8 +317,8 @@ object TrainingData {
   }
 
   /** 128-bit SimHash per document as two BIGINT words — the full-md5
-    * width of the family (native [[graft.functions.SimHash128]]; same
-    * digit-probe numbering over all 32 md5 hex digits, so
+    * width of the family (native [[graft.functions.SimHash]], width 128;
+    * same digit-probe numbering over all 32 md5 hex digits, so
     * `simhash128[0] == simhash64` per doc — Simhash128Spec's containment
     * pin ties t105's answers back through t101's to t18's). */
   private[graft] def simhash128(spark: SparkSession, dir: String): DataFrame =

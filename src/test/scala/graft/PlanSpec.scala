@@ -1177,6 +1177,8 @@ class PlanSpec extends AnyFunSuite {
     // Checked on the optimized LOGICAL plan of the final frame (loops
     // checkpoint per round, so inner rounds are pinned by their own
     // operator specs; the frames here are what the bench materializes).
+    // The rule covers every query — the q and p suites too, not only the
+    // t suite the test is named after.
     import org.apache.spark.sql.catalyst.plans.logical._
     def presentationSorts(p: LogicalPlan): Seq[Sort] = p match {
       case s: Sort if s.global => Seq(s)
@@ -1210,7 +1212,8 @@ class PlanSpec extends AnyFunSuite {
     // frames already aggregated to bounded cardinality (≤ |sources|,
     // ≤ #histogram buckets, ≤ 64 log₂ classes), where one task is
     // correct at any corpus scale. Pinned by exact count so a NEW
-    // partition-less window in these queries is still caught.
+    // partition-less window in these queries is still caught. No q or p
+    // query needs an exception.
     val boundedFrameWindows = Map(
       "t41_epoch_upsample" -> 1,   // max over the ≤|langs|-row epoch table
       "t69_pair_dist_hist" -> 1,   // total over ≤ ~40 histogram buckets
@@ -1226,7 +1229,6 @@ class PlanSpec extends AnyFunSuite {
     assert(violations(canary).nonEmpty,
       "checker failed to flag a deliberately partition-less window")
     val bad = SparkEntry.queries.keys.toSeq.sorted
-      .filter(_.startsWith("t"))
       .flatMap { name =>
         val vs = violations(SparkEntry.queries(name)(spark, sf)
           .queryExecution.optimizedPlan)

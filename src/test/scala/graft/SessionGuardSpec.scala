@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structural guard over the engine sources: every session comes from
-  * the one factory, and functions are registered only by the one table. */
+  * the one factory, functions are registered only by the one table, and
+  * every md5 is computed by the one helper. */
 class SessionGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -37,5 +38,14 @@ class SessionGuardSpec extends AnyFunSuite {
     val outside = hits("createOrReplaceTempFunction").filterNot(_._1.startsWith("graft/functions/"))
     assert(outside.isEmpty,
       "add engine functions to GraftFunctions.table:\n" + report(outside))
+  }
+
+  test("MessageDigest.getInstance appears only in functions/Md5.scala") {
+    val found = hits("MessageDigest.getInstance")
+    assert(found.nonEmpty, "the helper itself should match")
+    val outside = found.filterNot(_._1 == "graft/functions/Md5.scala")
+    assert(outside.isEmpty,
+      "hash with graft.functions.Md5 (one digest per thread, one hex and " +
+        "word reading):\n" + report(outside))
   }
 }
