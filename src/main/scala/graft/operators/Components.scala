@@ -30,8 +30,9 @@ import org.apache.spark.sql.functions._
   * Inputs: `docs` with a `doc_id` column (the node set — isolated nodes
   * label themselves), `pairs` with (`doc_a`, `doc_b`) undirected candidate
   * edges. Output: (`doc_id`, `label`) where label = min doc_id of the
-  * component. Both bodies localCheckpoint per round so lineage never grows
-  * with iterations.
+  * component. Both bodies run on [[Fixpoint]]: one checkpoint job per
+  * round (lineage never grows with iterations), convergence observed on
+  * that job, superseded rounds released.
   */
 object Components {
 
@@ -40,73 +41,57 @@ object Components {
     pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
 
+  /** `f` over the pair list materialized ONCE (every round re-scans it;
+    * the star fallback must not re-run the pair pipeline), freed after:
+    * the labels `f` returns never read it. */
+  private def withPairs[T](pairs: DataFrame)(f: DataFrame => T): T = {
+    val mat = pairs.localCheckpoint()
+    try f(mat) finally Fixpoint.release(mat)
+  }
+
   /** Min-label propagation; `None` when `maxRounds` is hit before the
     * fixpoint (labels move one hop per round, so that means component
-    * diameter > maxRounds). Precondition (held by every caller — pairs
-    * are always derived from the same docs frame): pair endpoints ⊆
-    * docs.doc_id, so the union-min round never invents label rows for
-    * unknown nodes. */
+    * diameter > maxRounds). */
   def propagate(docs: DataFrame, pairs: DataFrame,
       maxRounds: Int): Option[DataFrame] =
-    propagateOn(docs, symmetric(pairs.localCheckpoint()), maxRounds)
+    withPairs(pairs)(m => propagateOn(docs, symmetric(m), maxRounds))
 
-  /** Loop body over an already-cheap `edges(u, v)` relation (r21: callers
-    * that hold a materialized pair list — [[connected]] — skip
-    * [[propagate]]'s re-checkpoint). Each round is ONE join + ONE
-    * aggregation: candidate labels (each neighbor's current label) union
-    * the current labels, min per doc — the two-join/agg/join form this
-    * replaces paid a second labels shuffle per round for the same
-    * fixpoint step. Round 1 skips the join outright: labels are the
-    * identity, so each neighbor's label IS the neighbor id (the edge
-    * list itself). Convergence is read off the label SUM: labels are
-    * doc_ids, each round takes a min of the previous round's values, so
-    * the per-doc label is monotonically non-increasing and the exact
-    * decimal sum is strictly decreasing until — and only until — the
-    * fixpoint (replaces the per-round old-vs-new filter count; decimal
-    * keeps the test exact at any doc_id magnitude × count). */
+  /** Each round is ONE join + ONE aggregation over `edges(u, v)`:
+    * neighbors' labels union the current labels, min per doc. Round 1
+    * skips the join (identity labels: a neighbor's label IS its id).
+    * Convergence is the label SUM observed on each round's checkpoint:
+    * per-doc labels only fall, so the exact decimal sum strictly falls
+    * until — and only until — the fixpoint.
+    *
+    * Precondition, checked on every call for free: docs.doc_id is unique
+    * and ⊇ the pair endpoints (every caller passes `documents.doc_id`).
+    * The union-min round INVENTS a label row for an unknown endpoint, so
+    * round 1's observed row count exceeds round 0's exactly when it
+    * fails. */
   private def propagateOn(docs: DataFrame, edges: DataFrame,
       maxRounds: Int): Option[DataFrame] = {
-    // Debug-mode guard for the comment-only precondition above (r21
-    // advice): the union-min round INVENTS a label row for any edge
-    // endpoint missing from docs (the old left-join form silently
-    // dropped it), so a caller that broke the invariant would change
-    // output rows. Off by default — the anti-join count is a real job in
-    // a loop that was tuned to shave jobs; ComponentsSpec turns it on.
-    if (sys.props.get("graft.components.checkEndpoints").contains("true")) {
-      val unknown = edges.select(col("u").as("doc_id"))
-        .join(docs.select("doc_id"), Seq("doc_id"), "left_anti")
-        .limit(1).count()
-      require(unknown == 0L,
-        "Components precondition violated: pair endpoints must be a " +
-          "subset of docs.doc_id — the union-min propagation round would " +
-          "invent label rows for unknown nodes (and the label-sum " +
-          "convergence argument assumes identity labels in round 0)")
+    val res = Fixpoint.run(
+        docs.select(col("doc_id"), col("doc_id").as("label")), maxRounds,
+        metrics = Seq(sum(col("label").cast("decimal(38,0)")), count(lit(1))),
+        converged = (prev, next) => {
+          require(next.index > 1 ||
+              next.metrics.getLong(1) <= prev.metrics.getLong(1),
+            "Components precondition violated: pair endpoints must be a " +
+              "subset of docs.doc_id — the union-min propagation round " +
+              "would invent label rows for unknown nodes (and the " +
+              "label-sum convergence argument assumes identity labels in " +
+              "round 0)")
+          next.metrics.get(0) == prev.metrics.get(0) // null: no docs
+        }) { cur =>
+      val labels = cur.df
+      val cand = if (cur.index == 0) edges.toDF("doc_id", "label")
+        else edges.join(labels, edges("v") === labels("doc_id"))
+          .select(edges("u").as("doc_id"), col("label"))
+      Some(labels.unionByName(cand)
+        .groupBy("doc_id").agg(min("label").as("label")))
     }
-    var labels = docs.select(col("doc_id"), col("doc_id").as("label"))
-      .localCheckpoint()
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head.getDecimal(0)
-    var prevSum = labelSum(labels)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val cand =
-        if (rounds == 0)
-          edges.select(col("u").as("doc_id"), col("v").as("label"))
-        else
-          edges.join(labels, edges("v") === labels("doc_id"))
-            .select(edges("u").as("doc_id"), col("label"))
-      val next = labels.unionByName(cand)
-        .groupBy("doc_id").agg(min("label").as("label"))
-        .localCheckpoint()
-      val s = labelSum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels = next
-      rounds += 1
-    }
-    if (converged) Some(labels) else None
+    if (res.converged) Some(res.state)
+    else { Fixpoint.release(res.state); None }
   }
 
   /** One large-star round: every node attaches each strictly-greater
@@ -140,32 +125,27 @@ object Components {
 
   /** Alternating large/small-star contraction to the depth-1-star
     * fixpoint, then labels = star root. The O(log n) bound makes
-    * `maxRounds` a loud-failure backstop, not a tuning knob. */
+    * `maxRounds` a loud-failure backstop, not a tuning knob. The exact
+    * set-equality probe runs only when a round's observed edge count
+    * equals the previous round's. */
   def starContract(docs: DataFrame, pairs: DataFrame,
       maxRounds: Int = 64): DataFrame = {
-    var edges = pairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
-    var n = edges.count()
-    var stable = false
-    var rounds = 0
-    while (!stable && rounds < maxRounds) {
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      val nNext = next.count()
-      // distinct sets of equal size are equal iff the one-way difference
-      // is empty — the probe is one anti-join over (src, dst) pairs
-      stable = nNext == n && next.except(edges).isEmpty
-      edges = next
-      n = nNext
-      rounds += 1
+    val res = Fixpoint.run(
+        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+          .filter(col("src") =!= col("dst")).distinct(),
+        maxRounds, metrics = Seq(count(lit(1))),
+        // equal-size distinct sets are equal iff one difference is empty
+        converged = (prev, next) =>
+          next.metrics.getLong(0) == prev.metrics.getLong(0) &&
+            next.df.except(prev.df).isEmpty) { cur =>
+      Some(smallStar(largeStar(cur.df)))
     }
-    if (!stable) sys.error(
+    if (!res.converged) sys.error(
       s"star contraction did not converge in $maxRounds rounds — " +
         "O(log n) bound exceeded, input edge list is likely unstable")
     // at the fixpoint every edge is (member, component-min root); roots
     // appear only on the dst side and label themselves via the left join
-    val lab = edges.groupBy(col("src").as("doc_id"))
+    val lab = res.state.groupBy(col("src").as("doc_id"))
       .agg(min("dst").as("lab"))
     docs.select("doc_id").join(lab, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lab"), col("doc_id")).as("label"))
@@ -173,18 +153,16 @@ object Components {
 
   /** Propagation with the star-contraction diameter guard (see object
     * doc). `propagateRounds` bounds only the cheap loop — correctness
-    * never depends on it. */
+    * never depends on it. The labels read one checkpoint, the final
+    * round's; every other round and the pair list are released. */
   def connected(docs: DataFrame, pairs: DataFrame,
-      propagateRounds: Int = 50): DataFrame = {
-    // materialize the candidate pairs ONCE: both fixpoint bodies re-scan
-    // them every round, and the fallback path must not re-execute a
-    // potentially corpus-scale pair pipeline a second time
-    val mat = pairs.localCheckpoint()
-    propagateOn(docs, symmetric(mat), propagateRounds).getOrElse {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"component diameter exceeds $propagateRounds propagation rounds; " +
-          "switching to star contraction")
-      starContract(docs, mat)
+      propagateRounds: Int = 50): DataFrame =
+    withPairs(pairs) { mat =>
+      propagateOn(docs, symmetric(mat), propagateRounds).getOrElse {
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"component diameter exceeds $propagateRounds propagation " +
+            "rounds; switching to star contraction")
+        starContract(docs, mat)
+      }
     }
-  }
 }

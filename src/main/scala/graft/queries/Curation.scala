@@ -687,11 +687,9 @@ object Curation {
     // engine-identical.
     "t89_cluster_canonical" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val docs = t(spark, dir, "documents")
         val labels = graft.operators.Components.connected(
-          docs.select("doc_id"), TrainingData.minhashPairs(spark, dir),
-          propagateRounds = 50)
+          docs.select("doc_id"), TrainingData.minhashPairs(spark, dir))
         // t80's CLAMPED recipe (both rules): NaN from a degenerate
         // 0/0 quality term orders above every number in both engines,
         // so LEAST(1.0, NaN) = 1.0 — a defined top-rank value instead
@@ -1903,7 +1901,7 @@ object Curation {
         val docs = t(spark, dir, "documents")
           .select("doc_id", "source", "n_chars")
         val labels = graft.operators.Components.connected(
-          docs.select("doc_id"), verified, propagateRounds = 50)
+          docs.select("doc_id"), verified)
         val bySrc = docs.join(labels, "doc_id")
           .groupBy("label", "source")
           .agg(count(lit(1)).as("n_src"),

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Fixpoint
+
 /** Training-data SELECTION operators: the decision layer that sits on top
   * of the measurement ops in [[TrainingData]] — which documents go into
   * the training mix, which are contaminated by evaluation data, which
@@ -242,43 +244,21 @@ object DataSelection {
           " x -> x.sym2)").as("syms"))
   }
 
-  /** Free the blocks behind every `localCheckpoint()` a frame reads.
-    * `Dataset.unpersist` only drops cache-manager entries; a local
-    * checkpoint instead persists the RDD under the plan's `LogicalRDD`
-    * leaf, so that RDD is what must be unpersisted. Checkpoints already
-    * built on top of the frame keep their own blocks and still read;
-    * the frame itself can no longer be computed. */
-  private[graft] def releaseCheckpoints(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
-      case _ =>
-    }
-
   /** t87's trainer loop: k merge rounds over the collapsed word
-    * vocabulary. Returns (final vocab, merges learned).
+    * vocabulary, on [[Fixpoint]]. Returns (final vocab, merges learned).
     *
-    * r22 round shape (same fixpoint, same merges — oracle-pinned): the
-    * localCheckpointed per-round frame is the EXPLODED symbol stream
-    * ([[bpeExplode]]'s (word, wcnt, pos, sym, nxt) rows), not the
-    * collapsed vocabulary. Both per-round actions read that frame, so
-    * the explode + lead window that the old shape re-executed in BOTH
-    * the winner count and the merge application now runs once per
-    * round — so the old shape's per-action hash(word) exchange (one
-    * under each action) collapses to [[bpeApplyMerge]]'s single
-    * explicit word exchange (AQE coalescing erases checkpoint
-    * partitioning, see the comment there); the winner count keeps its
-    * one (sym, nxt) aggregation exchange, the exact-global-argmax
-    * floor. Per round: 3 exchanges → 2, one window pass saved. Measured
-    * (OptProfile, sf0.1): jobs 45 → 35, build 5.0 → 2.8 s.
-    * Cost: the cached frame is |vocab|·avg_len rows instead of |vocab|
-    * — still vocabulary-bounded, never corpus-bounded. The final
-    * round's merge is left LAZY (nothing reads the post-round-k
-    * vocabulary eagerly; callers that do pay its one plan then). Each
-    * superseded round's checkpoint is released; the caller owns the one
-    * the returned vocabulary reads ([[releaseCheckpoints]]).
-    * Lineage still resets per round (Components' recipe), and NO round
-    * after the first rescans the corpus (plan-pinned in
-    * QualitySketchSpec). The per-round winner is a 1-ROW collect. */
+    * Each round's checkpointed frame is the EXPLODED symbol stream
+    * ([[bpeExplode]]'s (word, wcnt, pos, sym, nxt) rows), which both the
+    * winner count and the merge read, so the explode + lead window runs
+    * once per round. Per round: the winner count's one (sym, nxt)
+    * aggregation exchange (the exact-global-argmax floor) and
+    * [[bpeApplyMerge]]'s one explicit hash(word) exchange. The frame is
+    * vocabulary-bounded, never corpus-bounded: NO round after the first
+    * rescans the corpus (plan-pinned in QualitySketchSpec). The per-round
+    * winner is a 1-ROW collect — data the next round needs, not a probe.
+    * The final round's merge is left LAZY (nothing reads it eagerly);
+    * the caller owns the checkpoint the returned vocabulary reads
+    * ([[Fixpoint.release]]). */
   private[graft] def bpeRounds(spark: SparkSession, dir: String,
       k: Int): (DataFrame, Seq[(Int, String, String, Long)]) = {
     val vocab0 = withWords(t(spark, dir, "documents"))
@@ -287,29 +267,18 @@ object DataSelection {
       .groupBy("word").agg(count(lit(1)).as("wcnt"))
       .withColumn("syms", expr(
         "transform(sequence(1, length(word)), i -> substr(word, i, 1))"))
-    var ex = bpeExplode(vocab0).localCheckpoint()
     val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var r = 1
-    var done = false
-    while (r <= k && !done) {
-      val top = ex.filter(col("nxt").isNotNull)
+    val ex = Fixpoint.run(bpeExplode(vocab0), k) { cur =>
+      val top = cur.df.filter(col("nxt").isNotNull)
         .groupBy("sym", "nxt").agg(sum("wcnt").as("n_occ"))
         .orderBy(col("n_occ").desc, col("sym"), col("nxt"))
         .limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val (a, b, n) = (top(0).getString(0), top(0).getString(1),
-          top(0).getLong(2))
-        merges += ((r, a, b, n))
-        val old = ex
-        val merged = bpeExplode(bpeApplyMerge(ex, a, b))
-        if (r < k) {
-          ex = merged.localCheckpoint()
-          releaseCheckpoints(old)
-        } else ex = merged // last round: no action reads it eagerly
-        r += 1
+      top.headOption.map { w =>
+        val (a, b) = (w.getString(0), w.getString(1))
+        merges += ((cur.index + 1, a, b, w.getLong(2)))
+        bpeExplode(bpeApplyMerge(cur.df, a, b))
       }
-    }
+    }.state
     (ex.groupBy("word").agg(max("wcnt").as("wcnt"),
       expr("transform(array_sort(collect_list(struct(pos, sym)))," +
         " x -> x.sym)").as("syms")), merges.result())
@@ -2737,7 +2706,7 @@ object DataSelection {
     // every round's explode touches |vocab|·avg_len rows, its windows
     // partition by word (vocabulary-keyed, skew-free), and the round's
     // winner is a 1-ROW collect. The vocabulary localCheckpoints per
-    // round (Components' recipe), so per-round exchanges stay on the
+    // round ([[Fixpoint]]), so per-round exchanges stay on the
     // vocabulary, never the corpus — pinned in QualitySketchSpec by the
     // later rounds' plans containing no file scan. Measured (QTime,
     // sf0.1 warm): Spark 2.7-3.1 s vs the oracle's 8-round chained-CTE
@@ -2746,7 +2715,7 @@ object DataSelection {
       (spark, dir) => {
         import spark.implicits._
         val (vocab, merges) = bpeRounds(spark, dir, 8)
-        releaseCheckpoints(vocab) // only the collected merges are kept
+        Fixpoint.release(vocab) // only the collected merges are kept
         merges.toDF("round", "a", "b", "n_occ")
           .select(col("round"), col("a"), col("b"),
             concat(col("a"), col("b")).as("merged"), col("n_occ"))
@@ -2824,7 +2793,7 @@ object DataSelection {
       (spark, dir) => {
         val docs = t(spark, dir, "documents").select("doc_id")
         val labels = graft.operators.Components.connected(
-          docs, TrainingData.minhashPairs(spark, dir), propagateRounds = 50)
+          docs, TrainingData.minhashPairs(spark, dir))
         labels
           .select(col("doc_id"), col("label").as("cluster_id"))
           .withColumn("bucket", expr(

@@ -1338,8 +1338,6 @@ object Pipelines {
     "p22_pipeline_streaming_dedup_decon" -> QueryDef(
       (spark, dir) => {
         import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.expressions.Window
-        import spark.implicits._
         val docs = Tables.t(spark, dir, "documents")
           .filter(col("doc_id") % 50 =!= 0) // eval docs never ingest
           .select(col("doc_id"), col("text"))

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DecimalType
 
 /** Core relational operator coverage (SURVEY.md §2.3–2.5): projection,
   * filter pushdown, joins (broadcast + shuffle), aggregation, windows,
@@ -35,8 +34,6 @@ object Relational {
   /** The matching DuckDB-side text for [[fx]] sums. */
   private def fxSql(expr: String): String =
     s"CAST(SUM(CAST(FLOOR(($expr) * 1e4 + 0.5) AS BIGINT)) AS DOUBLE) / 1e4"
-
-  private def dec(c: Column, s: Int = 4): Column = c.cast(DecimalType(38, s))
 
   /** q21's sessionization core, shared with t93: the 30-min event-time
     * gap rule over (us, event_id)-ordered per-user streams. ONE

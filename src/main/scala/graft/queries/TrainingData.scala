@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Fixpoint
+
 /** Training-data pipeline operators over `documents` / `embeddings`
   * (north-star extensions; graded alongside SURVEY.md §2).
   *
@@ -59,29 +61,19 @@ object TrainingData {
   private[queries] def planeSql(j: Int, d: String): String =
     s"(((CAST($j AS BIGINT) * 1103515245 + CAST($d AS BIGINT) * 12345) % 32768) / 32768.0 - 0.5)"
 
-  /** The same hyperplane as a literal SQL double array.
+  /** The same hyperplane as ONE Column literal, evaluated driver-side.
     *
     * `transform(sequence(1,64), d -> lcg)` is a higher-order function —
     * not foldable, CodegenFallback — so Catalyst re-builds the plane for
-    * EVERY row (t12: 64 planes × 64 dims = 4096 interpreted evals/row,
-    * the dominant cost of round 2's bench). The LCG is deterministic, so
-    * we evaluate it driver-side instead. m/32768 has an exact binary
-    * representation (2^15 divisor) and DuckDB's decimal division yields
-    * DOUBLE, so these literals are bit-identical to what the oracle's
-    * list_transform computes — `Double.toString` round-trips exactly.
-    * `array(<literals>)` IS foldable → one Literal array, zero per-row
+    * EVERY row (t12: 64 planes × 64 dims = 4096 interpreted evals/row).
+    * m/32768 has an exact binary representation (2^15 divisor) and
+    * DuckDB's decimal division yields DOUBLE, so these doubles are
+    * bit-identical to what the oracle's list_transform computes. An
+    * `array(<literals>)` SQL string would parse to a 64-child CreateArray
+    * per plane — t12's 64 planes made a ~4600-node tree that cost 0.41 s
+    * of Catalyst planning per run (PlanCostLab); `typedlit` emits a
+    * single Literal: same values, same ArrayType(double), zero per-row
     * work, and float_dot stays inside whole-stage codegen. */
-  private def planeLit(j: Int): String =
-    (1 to 64).map { d =>
-      val m = (j.toLong * 1103515245L + d.toLong * 12345L) % 32768L
-      s"${m.toDouble / 32768.0 - 0.5}D"
-    }.mkString("array(", ", ", ")")
-
-  /** [[planeLit]] as ONE Column literal node. The SQL-string form parses
-    * to a 64-child CreateArray per plane — t12's 64 planes made a ~4600-
-    * node tree that cost 0.41 s of Catalyst planning per run (PlanCostLab).
-    * `typedlit` emits a single Literal holding the whole array: same
-    * values, same ArrayType(double), tree 64× smaller. */
   private[queries] def planeCol(j: Int): Column = typedlit((1 to 64).map { d =>
     val m = (j.toLong * 1103515245L + d.toLong * 12345L) % 32768L
     m.toDouble / 32768.0 - 0.5
@@ -925,16 +917,12 @@ object TrainingData {
     // into dedup decisions (keep one canonical doc per component).
     //
     // Spark side: [[graft.operators.Components]] — min-label propagation
-    // (one shuffle-on-key join + agg per round, labels/edges
-    // localCheckpointed so lineage doesn't grow, O(diameter) rounds; LSH
-    // components are near-cliques so a handful suffice) with the
-    // alternating large-star/small-star contraction as the automatic
-    // fallback when the round cap is hit: contraction converges in
-    // O(log n) rounds regardless of diameter, so a pathological
-    // long-chain component degrades to the heavier loop instead of
-    // aborting. (A 2-hop-per-checkpoint propagation variant measured
-    // SLOWER at sf0.1 — the deeper per-round plan outweighed the halved
-    // round count.)
+    // (O(diameter) rounds; LSH components are near-cliques so a handful
+    // suffice) with the O(log n) star contraction as the automatic
+    // fallback when the round cap is hit, so a pathological long-chain
+    // component degrades to the heavier loop instead of aborting. (A
+    // 2-hop-per-checkpoint propagation variant measured SLOWER at sf0.1 —
+    // the deeper per-round plan outweighed the halved round count.)
     //
     // Oracle: transitive closure by recursive CTE, component id =
     // min(reachable ∪ self) — tractable at oracle scale, identical
@@ -943,7 +931,7 @@ object TrainingData {
       (spark, dir) => {
         val docs = t(spark, dir, "documents").select("doc_id")
         val labels = graft.operators.Components.connected(
-          docs, minhashPairs(spark, dir), propagateRounds = 50)
+          docs, minhashPairs(spark, dir))
         labels
           .select(col("doc_id"), col("label").as("cluster_id"))
           .withColumn("is_canonical", col("doc_id") === col("cluster_id"))
@@ -1790,7 +1778,6 @@ object TrainingData {
     // sketch is judged against.
     "t82_kmv_distinct" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
         import spark.implicits._
         val sh = withWords(t(spark, dir, "documents"))
           .select(col("lang"), explode(expr(shingleExpr)).as("shingle"))
@@ -1857,7 +1844,6 @@ object TrainingData {
     // both provably tiny frames (the repo's global-window law).
     "t94_kmv_merge" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
         import spark.implicits._
         // checkpoint the distinct (source, h) table: five consumers
         // below (per-source sketch, per-source exact, union distinct,
@@ -2294,6 +2280,7 @@ object TrainingData {
         val S = pagerankScale(nodes)
         requirePagerankHeadroom(nodes, S)
         val withDeg = edges.join(deg, "src").localCheckpoint()
+        Fixpoint.release(edges) // only deg and withDeg are read below
         var ranks = deg.select(col("src").as("doc_id"),
           lit(S).as("rank"))
         // NO per-round checkpoint, unlike Components: K is a fixed 4 (no

@@ -74,18 +74,34 @@ class ComponentsSpec extends AnyFunSuite {
   test("debug guard catches an edge endpoint missing from docs") {
     // the union-min propagation round invents a label row for an unknown
     // endpoint (r21 advice); callers hold the precondition by
-    // construction, and this guard (debug-only: it costs an anti-join
-    // job per call) is how a future caller that breaks it fails loudly
-    System.setProperty("graft.components.checkEndpoints", "true")
-    try {
-      val d = docs(Seq(0L, 1L, 2L))
-      intercept[IllegalArgumentException] {
-        Components.propagate(d, pairs(Seq((1L, 7L))), maxRounds = 5)
-      }
-      // and a contract-respecting input still passes with the guard on
-      val ok = labelMap(Components.propagate(
-        d, pairs(Seq((1L, 2L))), maxRounds = 5).get)
-      assert(ok == Map(0L -> 0L, 1L -> 1L, 2L -> 1L))
-    } finally System.clearProperty("graft.components.checkEndpoints")
+    // construction, and this guard (always on: it reads the row counts
+    // the rounds already observe) is how a future caller that breaks it
+    // fails loudly
+    val d = docs(Seq(0L, 1L, 2L))
+    intercept[IllegalArgumentException] {
+      Components.propagate(d, pairs(Seq((1L, 7L))), maxRounds = 5)
+    }
+    // and a contract-respecting input still passes with the guard on
+    val ok = labelMap(Components.propagate(
+      d, pairs(Seq((1L, 2L))), maxRounds = 5).get)
+    assert(ok == Map(0L -> 0L, 1L -> 1L, 2L -> 1L))
+  }
+
+  // an observed sum over zero rows is null, not 0: the convergence test
+  // must still hold on the first round
+  private def convergesAtOnce(ids: Seq[Long]): Unit = {
+    val (d, p) = (docs(ids), pairs(Seq.empty))
+    val identity = ids.map(i => i -> i).toMap
+    assert(labelMap(Components.propagate(d, p, maxRounds = 1).get) == identity)
+    assert(labelMap(Components.starContract(d, p, maxRounds = 1)) == identity)
+    assert(labelMap(Components.connected(d, p, propagateRounds = 1)) == identity)
+  }
+
+  test("empty docs, empty pairs: one round, no labels") {
+    convergesAtOnce(Seq.empty)
+  }
+
+  test("docs without pairs: one round, identity labels") {
+    convergesAtOnce(Seq(3L, 1L, 2L))
   }
 }

@@ -144,7 +144,7 @@ class QualitySketchSpec extends AnyFunSuite {
       val plan = vocab.queryExecution.optimizedPlan.toString
       assert(!plan.toLowerCase.contains("parquet"),
         s"round-2 vocab must build on the checkpointed round-1 vocab:\n$plan")
-    } finally { vocab.unpersist(); () }
+    } finally graft.operators.Fixpoint.release(vocab)
   }
 
   test("t76: every winnow pair is ordered, bounded, and self-consistent") {

@@ -6,7 +6,8 @@ import graft.core.Flow
 
 /** Nothing a tap or a loop builds for its own use outlives it: scratch
   * temp views leave the session catalog once their statement is
-  * analysed, and t87's per-round checkpoints are unpersisted. */
+  * analysed, and the iterative loops' superseded checkpoints (t87's
+  * rounds, t15's rounds and pair list) are unpersisted. */
 class ScratchReleaseSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
   private val sf = "/root/testdata/sf0.001"
@@ -75,5 +76,16 @@ class ScratchReleaseSpec extends AnyFunSuite {
     assert(sc.getPersistentRDDs.size <= before,
       s"persistent RDDs: $before before, ${sc.getPersistentRDDs.size} after")
     assert(df.collect().map(_.getAs[Int]("round")).toSeq == (1 to 8))
+  }
+
+  test("t15: building the components keeps only the final labels round") {
+    // new ids, not a size: the context holds persisted RDDs weakly
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    val df = SparkEntry.queries("t15_dedup_components")(spark, sf)
+    val added = persisted -- before
+    assert(added.size <= 1, s"new persistent RDDs: ${added.toSeq.sorted}")
+    assert(df.count() ==
+      graft.queries.Tables.t(spark, sf, "documents").count())
   }
 }

@@ -20,4 +20,22 @@ object SparkSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Jobs `body` runs, counted by job group through the public status
+    * tracker. The tracker fills from the listener bus after the action
+    * returns, so the count is read once it has held still for 5 polls. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    def count = sc.statusTracker.getJobIdsForGroup(group).length
+    var (last, still) = (count, 0)
+    while (still < 5) {
+      Thread.sleep(50)
+      val n = count
+      if (n == last) still += 1 else { last = n; still = 0 }
+    }
+    last
+  }
 }
