@@ -74,7 +74,7 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
       val resp: HttpResponse[String] =
         try http.send(req, HttpResponse.BodyHandlers.ofString())
         catch {
-          case e: java.io.IOException if attempt < maxRetries =>
+          case _: java.io.IOException if attempt < maxRetries =>
             Thread.sleep((initialBackoff * math.pow(2, attempt) * 1000).toLong)
             attempt += 1
             null

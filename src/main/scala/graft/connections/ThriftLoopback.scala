@@ -54,7 +54,7 @@ object ThriftLoopback {
               c.close()
               ok = true
             } catch {
-              case e: Exception if System.nanoTime() < deadline =>
+              case _: Exception if System.nanoTime() < deadline =>
                 Thread.sleep(200)
               case e: Exception => throw new IllegalStateException(
                 s"loopback thrift handshake timed out on port $port", e)

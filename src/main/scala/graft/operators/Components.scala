@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over candidate-pair edges — the
@@ -25,7 +27,15 @@ import org.apache.spark.sql.functions._
   * [[connected]] composes them: propagate up to a round cap, and only if
   * the cap is hit (diameter > cap) switch to star contraction — so the
   * common case pays the cheap loop and the pathological case still
-  * terminates with correct labels instead of aborting.
+  * terminates with correct labels instead of aborting. Before either
+  * loop it shrinks the pair list with a partition-local union-find
+  * ([[localStars]]): every component a partition holds becomes a star
+  * on its minimum id, so a component that lives in one partition is
+  * labelled by propagation's first round and confirmed by its second.
+  * The components are unchanged, so the labels are identical by
+  * construction. Across partitions a star can lengthen an entry→exit
+  * hop from 1 to 2 (two neighbours now meet through their local root);
+  * the star fallback still bounds that worst case.
   *
   * Inputs: `docs` with a `doc_id` column (the node set — isolated nodes
   * label themselves), `pairs` with (`doc_a`, `doc_b`) undirected candidate
@@ -40,6 +50,46 @@ object Components {
   private def symmetric(pairs: DataFrame): DataFrame =
     pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
+
+  /** Partition-local union-find over the pair list (root = min id): a
+    * partition's edges become one (node, local root) star edge per node
+    * it touches, the root's own (root, root) included, so the endpoint
+    * set — which the precondition guard checks — is unchanged. An edge
+    * with a null endpoint passes through untouched, so the guard, not a
+    * NullPointerException, reports it. Ids are integral: they go through
+    * `long` and are cast back to each input column's type. A partition's
+    * node set is held in one hash map. */
+  private def localStars(pairs: DataFrame): DataFrame = {
+    val types = Seq("doc_a", "doc_b").map(pairs.schema(_).dataType)
+    pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+      .mapPartitions { rows =>
+        val parent = mutable.HashMap.empty[Long, Long]
+        def find(x: Long): Long = {
+          var (n, r) = (x, parent.getOrElseUpdate(x, x))
+          while (r != n) { // path splitting: each node on the path skips a level
+            val g = parent(r)
+            parent(n) = g
+            n = r
+            r = g
+          }
+          r
+        }
+        val passed = Vector.newBuilder[(java.lang.Long, java.lang.Long)]
+        rows.foreach { r =>
+          if (r.isNullAt(0) || r.isNullAt(1))
+            passed += ((r.get(0).asInstanceOf[java.lang.Long],
+              r.get(1).asInstanceOf[java.lang.Long]))
+          else {
+            val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
+            if (a < b) parent(b) = a else if (b < a) parent(a) = b
+          }
+        }
+        passed.result().iterator ++ parent.keys.toVector.map(n =>
+          (Long.box(n), Long.box(find(n))))
+      }(Encoders.tuple(Encoders.LONG, Encoders.LONG))
+      .toDF("doc_a", "doc_b")
+      .select(col("doc_a").cast(types(0)), col("doc_b").cast(types(1)))
+  }
 
   /** `f` over the pair list materialized ONCE (every round re-scans it;
     * the star fallback must not re-run the pair pipeline), freed after:
@@ -151,13 +201,14 @@ object Components {
       .select(col("doc_id"), coalesce(col("lab"), col("doc_id")).as("label"))
   }
 
-  /** Propagation with the star-contraction diameter guard (see object
-    * doc). `propagateRounds` bounds only the cheap loop — correctness
-    * never depends on it. The labels read one checkpoint, the final
-    * round's; every other round and the pair list are released. */
+  /** Propagation with the star-contraction diameter guard over the
+    * [[localStars]] pair list (see object doc). `propagateRounds` bounds
+    * only the cheap loop — correctness never depends on it. The labels
+    * read one checkpoint, the final round's; every other round and the
+    * pair list are released. */
   def connected(docs: DataFrame, pairs: DataFrame,
       propagateRounds: Int = 50): DataFrame =
-    withPairs(pairs) { mat =>
+    withPairs(localStars(pairs)) { mat =>
       propagateOn(docs, symmetric(mat), propagateRounds).getOrElse {
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"component diameter exceeds $propagateRounds propagation " +

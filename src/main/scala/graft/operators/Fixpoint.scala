@@ -6,11 +6,10 @@ import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** The one checkpointed loop behind every iterative operator
-  * ([[Components]]' two bodies, t87's BPE rounds). A caller supplies its
-  * round body and stopping test; the loop owns the round state, the cap,
-  * the per-round `localCheckpoint` (lineage never grows) and the release
-  * of every superseded round.
+/** The one checkpointed loop, behind [[Components]]' two bodies. A
+  * caller supplies its round body and stopping test; the loop owns the
+  * round state, the cap, the per-round `localCheckpoint` (lineage never
+  * grows) and the release of every superseded round.
   *
   * Convergence is read from the round's own job: the caller's aggregate
   * `metrics` are attached with `Dataset.observe` (a fresh [[Observation]]

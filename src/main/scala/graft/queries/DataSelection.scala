@@ -3,8 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Fixpoint
-
 /** Training-data SELECTION operators: the decision layer that sits on top
   * of the measurement ops in [[TrainingData]] — which documents go into
   * the training mix, which are contaminated by evaluation data, which
@@ -183,112 +181,84 @@ object DataSelection {
       .toDF("label", "vec_id", "dist")
   }
 
-  /** t87's per-round explode: one row per (word, pos, sym) with the NEXT
-    * symbol alongside — the frame both the pair count and the merge
-    * application read. Exchanges key on the word vocabulary. */
-  private[graft] def bpeExplode(vocab: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    vocab
-      .select(col("word"), col("wcnt"),
-        posexplode(col("syms")).as(Seq("pos", "sym")))
-      .withColumn("nxt",
-        lead("sym", 1).over(Window.partitionBy("word").orderBy("pos")))
+  /** Apply ONE BPE merge (a, b) to a word's symbol list, LEFT-TO-RIGHT
+    * and NON-OVERLAPPING — real BPE's application rule: scanning from
+    * the left, each (a, b) occurrence becomes a·b and its two symbols are
+    * consumed. For a ≠ b matches can never overlap, so every one merges;
+    * for a = b, a run of k candidates merges at the odd ranks only
+    * ("aaaa" → [aa, aa], "aaa" → [aa, a]). */
+  private[graft] def bpeMerge(syms: Seq[String], a: String,
+      b: String): Vector[String] = {
+    val out = Vector.newBuilder[String]
+    var i = 0
+    while (i < syms.length) {
+      if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
+        out += a + b; i += 2
+      } else { out += syms(i); i += 1 }
+    }
+    out.result()
   }
 
-  /** Apply ONE BPE merge (a, b) to every word's symbol list,
-    * LEFT-TO-RIGHT and NON-OVERLAPPING — real BPE's application rule.
-    * For a ≠ b, matches can never be adjacent and each is a merge; for
-    * a = b, a run of k candidates merges at the odd ranks only
-    * ("aaaa" → [aa, aa], "aaa" → [aa, a]). Spelled with windows so the
-    * EXACT same dataflow exists in the DuckDB oracle: candidate flag →
-    * gaps-and-islands grouping of consecutive candidate positions →
-    * odd-rank-in-island = merge start → drop positions covered by the
-    * previous row's start → rebuild the list ordered by pos. */
-  private[graft] def bpeApplyMerge(ex: DataFrame, a: String,
-      b: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byWord = Window.partitionBy("word").orderBy("pos")
-    // ONE explicit word exchange up front (r22): the input is a fresh
-    // localCheckpoint whose partitioning AQE's coalescing erased
-    // (UnknownPartitioning), so EnsureRequirements would otherwise
-    // insert an exchange per distinct window key — hash(word, cand),
-    // hash(word, grp), hash(word): three shuffles of the symbol stream
-    // per round. hash(word) clusters every one of those specs (each
-    // prefixes on word), so after this single exchange the whole round
-    // — three windows, the word groupBy, the re-explode and the lead
-    // window — runs shuffle-free (plans/r22/t87_round2_after.txt).
-    ex.repartition(col("word"))
-      .withColumn("cand",
-        (col("sym") === a && col("nxt") === b).cast("int"))
-      .withColumn("grp", when(col("cand") === 1,
-        col("pos") - row_number().over(
-          Window.partitionBy("word", "cand").orderBy("pos"))))
-      .withColumn("strt", when(col("cand") === 1 &&
-        row_number().over(
-          Window.partitionBy("word", "grp").orderBy("pos")) % 2 === 1,
-        1).otherwise(0))
-      .withColumn("sym2", when(col("strt") === 1,
-        concat(col("sym"), col("nxt"))).otherwise(col("sym")))
-      .withColumn("prevs",
-        coalesce(lag("strt", 1).over(byWord), lit(0)))
-      .filter(col("prevs") === 0)
-      // group on word ALONE (wcnt is functionally dependent — one count
-      // per vocabulary word — so max(wcnt) is the value itself): the
-      // grouping then requires exactly the hash(word) clustering the
-      // round's explicit exchange above established, keeping the whole
-      // round on one partitioning by construction rather than by the
-      // planner's subset-satisfaction rule (r22)
-      .groupBy("word")
-      .agg(max("wcnt").as("wcnt"),
-        expr("transform(array_sort(collect_list(struct(pos, sym2)))," +
-          " x -> x.sym2)").as("syms"))
-  }
-
-  /** t87's trainer loop: k merge rounds over the collapsed word
-    * vocabulary, on [[Fixpoint]]. Returns (final vocab, merges learned).
+  /** t87's trainer: k merge rounds over the collapsed word vocabulary.
+    * Returns (final vocab as a local frame, merges learned).
     *
-    * Each round's checkpointed frame is the EXPLODED symbol stream
-    * ([[bpeExplode]]'s (word, wcnt, pos, sym, nxt) rows), which both the
-    * winner count and the merge read, so the explode + lead window runs
-    * once per round. Per round: the winner count's one (sym, nxt)
-    * aggregation exchange (the exact-global-argmax floor) and
-    * [[bpeApplyMerge]]'s one explicit hash(word) exchange. The frame is
-    * vocabulary-bounded, never corpus-bounded: NO round after the first
-    * rescans the corpus (plan-pinned in QualitySketchSpec). The per-round
-    * winner is a 1-ROW collect — data the next round needs, not a probe.
-    * The final round's merge is left LAZY (nothing reads it eagerly);
-    * the caller owns the checkpoint the returned vocabulary reads
-    * ([[Fixpoint.release]]). */
+    * ONE distributed step: the corpus scan → (word, wcnt, syms)
+    * vocabulary aggregation, symbols split by Spark's `substr` (code
+    * points). The vocabulary is collected and every round runs on the
+    * driver: pair counts are exact `Long` sums of `wcnt` over every
+    * adjacent (sym, nxt) position, the winner is the first pair in
+    * (n_occ DESC, a, b) order with strings compared as UTF-8 bytes
+    * (`UTF8String.compareTo`, the order Spark's `orderBy` and DuckDB
+    * use — not `String.compareTo`'s UTF-16 order), and [[bpeMerge]]
+    * applies it to every word. Fewer than k merges when no pair is left.
+    *
+    * Precondition: the distinct-word vocabulary fits in driver memory —
+    * the precondition of every single-machine BPE trainer. */
   private[graft] def bpeRounds(spark: SparkSession, dir: String,
       k: Int): (DataFrame, Seq[(Int, String, String, Long)]) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.unsafe.types.UTF8String
     val vocab0 = withWords(t(spark, dir, "documents"))
       .select(explode(col("words")).as("word"))
       .filter(length(col("word")) >= 2)
       .groupBy("word").agg(count(lit(1)).as("wcnt"))
       .withColumn("syms", expr(
         "transform(sequence(1, length(word)), i -> substr(word, i, 1))"))
+    val words = vocab0.collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2).toVector))
+    val rank = Ordering.by[((String, String), Long),
+        (Long, UTF8String, UTF8String)] { case ((a, b), n) =>
+      (-n, UTF8String.fromString(a), UTF8String.fromString(b))
+    }
     val merges = Seq.newBuilder[(Int, String, String, Long)]
-    val ex = Fixpoint.run(bpeExplode(vocab0), k) { cur =>
-      val top = cur.df.filter(col("nxt").isNotNull)
-        .groupBy("sym", "nxt").agg(sum("wcnt").as("n_occ"))
-        .orderBy(col("n_occ").desc, col("sym"), col("nxt"))
-        .limit(1).collect()
-      top.headOption.map { w =>
-        val (a, b) = (w.getString(0), w.getString(1))
-        merges += ((cur.index + 1, a, b, w.getLong(2)))
-        bpeExplode(bpeApplyMerge(cur.df, a, b))
+    @annotation.tailrec
+    def round(r: Int, cur: Array[(String, Long, Vector[String])])
+        : Array[(String, Long, Vector[String])] =
+      if (r > k) cur
+      else {
+        val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+        for ((_, wcnt, syms) <- cur; (a, b) <- syms.zip(syms.tail))
+          counts((a, b)) = counts.getOrElse((a, b), 0L) + wcnt
+        if (counts.isEmpty) cur
+        else {
+          val ((a, b), n) = counts.min(rank)
+          merges += ((r, a, b, n))
+          round(r + 1, cur.map { case (w, c, s) => (w, c, bpeMerge(s, a, b)) })
+        }
       }
-    }.state
-    (ex.groupBy("word").agg(max("wcnt").as("wcnt"),
-      expr("transform(array_sort(collect_list(struct(pos, sym)))," +
-        " x -> x.sym)").as("syms")), merges.result())
+    val vocab = round(1, words).toSeq
+      .map { case (w, c, s) => org.apache.spark.sql.Row(w, c, s) }
+    (spark.createDataFrame(vocab.asJava, vocab0.schema), merges.result())
   }
 
-  /** DuckDB twin of [[bpeRounds]]: k chained CTE blocks, each the exact
-    * window spelling of one count + merge round ([[bpeApplyMerge]]'s
-    * scaladoc); the parallel unnests zip positionally (DuckDB's lockstep
-    * unnest). Generated programmatically — the dataflow is identical in
-    * every round. */
+  /** DuckDB twin of [[bpeRounds]]: k chained CTE blocks, each one count
+    * + merge round. The merge is [[bpeMerge]]'s left-to-right
+    * non-overlapping rule spelled as windows: candidate flag →
+    * gaps-and-islands grouping of consecutive candidate positions →
+    * odd rank in island = merge start → drop positions covered by the
+    * previous row's start → rebuild the list ordered by pos. The parallel
+    * unnests zip positionally (DuckDB's lockstep unnest). Generated
+    * programmatically — the dataflow is identical in every round. */
   private def bpeOracle(k: Int): String = {
     val init = """v0 AS (
       |  SELECT word, CAST(COUNT(*) AS BIGINT) AS wcnt,
@@ -2695,27 +2665,20 @@ object DataSelection {
     // → merge-everywhere over the collapsed word vocabulary, producing a
     // real merges list (the actual artifact a BPE tokenizer trainer
     // emits; t53 is exactly round 1's count step). Merge application is
-    // real BPE's left-to-right non-overlapping rule, spelled as windows
-    // (see [[bpeApplyMerge]]) so the DuckDB oracle runs the IDENTICAL
-    // dataflow as 8 chained CTE blocks. Ties break (count DESC, pair
-    // ASC) — binary string order in both engines; counts are exact
-    // BIGINTs.
+    // real BPE's left-to-right non-overlapping rule ([[bpeMerge]]); the
+    // DuckDB oracle spells each round as windows in 8 chained CTE blocks.
+    // Ties break (count DESC, pair ASC) in UTF-8 byte order in both
+    // engines; counts are exact BIGINTs.
     //
     // Scale shape: the corpus is scanned ONCE (t53's vocabulary
     // collapse — the only corpus-sized exchange, carrying bare words);
-    // every round's explode touches |vocab|·avg_len rows, its windows
-    // partition by word (vocabulary-keyed, skew-free), and the round's
-    // winner is a 1-ROW collect. The vocabulary localCheckpoints per
-    // round ([[Fixpoint]]), so per-round exchanges stay on the
-    // vocabulary, never the corpus — pinned in QualitySketchSpec by the
-    // later rounds' plans containing no file scan. Measured (QTime,
-    // sf0.1 warm): Spark 2.7-3.1 s vs the oracle's 8-round chained-CTE
-    // re-derivation at 12.7-13.5 s — the checkpointed loop wins 4-5x.
+    // the collected vocabulary runs all 8 rounds on the driver
+    // ([[bpeRounds]]), so no round costs a Spark job. Precondition: the
+    // distinct-word vocabulary fits in driver memory.
     "t87_bpe_trainer" -> QueryDef(
       (spark, dir) => {
         import spark.implicits._
-        val (vocab, merges) = bpeRounds(spark, dir, 8)
-        Fixpoint.release(vocab) // only the collected merges are kept
+        val (_, merges) = bpeRounds(spark, dir, 8)
         merges.toDF("round", "a", "b", "n_occ")
           .select(col("round"), col("a"), col("b"),
             concat(col("a"), col("b")).as("merged"), col("n_occ"))

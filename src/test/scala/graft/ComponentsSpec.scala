@@ -7,7 +7,8 @@ import graft.operators.Components
 /** Pins the connected-components operator: the star-contraction fallback
   * must produce exactly the labels propagation produces, including on a
   * chain fixture whose diameter exceeds the propagation round cap (the
-  * case that previously aborted t15). */
+  * case that previously aborted t15), and `connected`'s partition-local
+  * union-find pre-pass must keep every label whatever the partitioning. */
 class ComponentsSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
 
@@ -103,5 +104,85 @@ class ComponentsSpec extends AnyFunSuite {
 
   test("docs without pairs: one round, identity labels") {
     convergesAtOnce(Seq(3L, 1L, 2L))
+  }
+
+  private def randomPairs(seed: Int, n: Int, m: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+  }
+
+  test("pre-pass: random graphs in 1 and 4 partitions keep starContract's labels") {
+    val n = 200
+    val d = docs(0L until n.toLong)
+    for (seed <- Seq(1, 2, 3); m <- Seq(60, 150, 400)) {
+      val p = pairs(randomPairs(seed, n, m))
+      val star = labelMap(Components.starContract(d, p))
+      for (parts <- Seq(1, 4)) assert(
+        labelMap(Components.connected(d, p.repartition(parts))) == star,
+        s"seed $seed, $m edges, $parts partitions")
+    }
+  }
+
+  test("pre-pass: dup, self-loop and reversed edges in 1 and 4 partitions") {
+    val d = docs(0L to 12L)
+    val p = pairs(Seq(
+      (3L, 2L), (2L, 3L), (3L, 2L), (1L, 3L), // {1,2,3}: dups, reversed
+      (2L, 2L), (5L, 5L), (5L, 5L),          // self loops; 5 stays alone
+      (8L, 7L), (7L, 6L), (6L, 8L), (6L, 6L), // reversed triangle {6,7,8}
+      (12L, 11L), (11L, 12L), (12L, 10L)))   // {10,11,12} reversed
+    val expect = Map(
+      0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L,
+      6L -> 6L, 7L -> 6L, 8L -> 6L, 9L -> 9L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L)
+    for (parts <- Seq(1, 4))
+      assert(labelMap(Components.connected(d, p.repartition(parts))) == expect)
+    // int ids come back as int labels
+    val pi = p.select(p("doc_a").cast("int").as("doc_a"),
+      p("doc_b").cast("int").as("doc_b"))
+    val di = d.select(d("doc_id").cast("int").as("doc_id"))
+    val li = Components.connected(di, pi.repartition(4))
+    assert(li.schema("label").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(li.collect().map(r => r.getInt(0).toLong -> r.getInt(1).toLong)
+      .toMap == expect)
+  }
+
+  test("pre-pass: a null endpoint fails the precondition, not with an NPE") {
+    import spark.implicits._
+    val d = docs(Seq(0L, 1L, 2L))
+    for (parts <- Seq(1, 4); (a, b) <- Seq((Some(1L), None), (None, Some(2L)))) {
+      val p = Seq((Some(0L), Some(1L)), (a, b)).toDF("doc_a", "doc_b")
+        .repartition(parts)
+      val e = intercept[IllegalArgumentException] {
+        Components.connected(d, p)
+      }
+      assert(e.getMessage.contains("Components precondition violated"),
+        e.getMessage)
+    }
+  }
+
+  test("pre-pass: one-partition near-cliques converge in at most 2 propagation rounds") {
+    // six 5-cliques chained by one edge each: diameter 11, so plain
+    // propagation needs more than 2 rounds; after the pre-pass the one
+    // partition's component is a star, labelled in round 1 and
+    // confirmed in round 2 — the job count of a star input over the
+    // same nodes, which converges in exactly those 2 rounds
+    val cliques = (0 until 6).map(c => (0 until 5).map(i => (c * 5 + i).toLong))
+    val es = cliques.flatMap(q => for (x <- q; y <- q if x < y) yield (x, y)) ++
+      cliques.sliding(2).map(w => (w(0).last, w(1).head))
+    val d = docs(0L until 30L)
+    val chain = pairs(es).repartition(1)
+    val star = pairs((1L until 30L).map(i => (i, 0L))).repartition(1)
+    assert(Components.propagate(d, chain, maxRounds = 2).isEmpty,
+      "the raw chain of cliques needs more than 2 rounds")
+    val all0 = (0L until 30L).map(_ -> 0L).toMap
+    var labels: DataFrame = null
+    val chainJobs = SparkSuite.jobsOf {
+      labels = Components.connected(d, chain, propagateRounds = 2)
+    }
+    val starJobs = SparkSuite.jobsOf {
+      Components.connected(d, star, propagateRounds = 2)
+    }
+    assert(labelMap(labels) == all0)
+    assert(chainJobs <= starJobs, s"chain $chainJobs jobs, star $starJobs")
   }
 }

@@ -15,7 +15,7 @@ class JobBudgetSpec extends AnyFunSuite {
     "t15_dedup_components" -> 15,
     "t42_neardup_funnel" -> 22,
     "t81_cluster_safe_split" -> 14,
-    "t87_bpe_trainer" -> 35,
+    "t87_bpe_trainer" -> 5,
     "t89_cluster_canonical" -> 16,
     "t92_dup_pagerank" -> 22)
 

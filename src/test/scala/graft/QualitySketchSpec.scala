@@ -109,20 +109,12 @@ class QualitySketchSpec extends AnyFunSuite {
   }
 
   test("t87: merge application is left-to-right non-overlapping (real BPE)") {
-    // the run-parity window rule must reproduce the classic scan:
-    // same-symbol runs merge at odd offsets ("aaaa" → [aa,aa],
-    // "aaa" → [aa,a]) and a≠b matches all merge ("abab" → [ab,ab])
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr}
-    val vocab = Seq("aaaa", "aaa", "abab").toDF("word")
-      .withColumn("wcnt", org.apache.spark.sql.functions.lit(1L))
-      .withColumn("syms", expr(
-        "transform(sequence(1, length(word)), i -> substr(word, i, 1))"))
+    // the driver-side scan must follow real BPE's rule: same-symbol runs
+    // merge at odd offsets ("aaaa" → [aa,aa], "aaa" → [aa,a]) and a≠b
+    // matches all merge ("abab" → [ab,ab])
     def merged(a: String, b: String): Map[String, Seq[String]] =
-      graft.queries.DataSelection
-        .bpeApplyMerge(graft.queries.DataSelection.bpeExplode(vocab), a, b)
-        .select("word", "syms").collect()
-        .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+      Seq("aaaa", "aaa", "abab").map(w => w ->
+        graft.queries.DataSelection.bpeMerge(w.map(_.toString), a, b)).toMap
     val aa = merged("a", "a")
     assert(aa("aaaa") == Seq("aa", "aa"))
     assert(aa("aaa") == Seq("aa", "a"))
@@ -145,6 +137,53 @@ class QualitySketchSpec extends AnyFunSuite {
       assert(!plan.toLowerCase.contains("parquet"),
         s"round-2 vocab must build on the checkpointed round-1 vocab:\n$plan")
     } finally graft.operators.Fixpoint.release(vocab)
+  }
+
+  // a documents table holding only `text`, all t87 reads
+  private def withDocuments[T](texts: Seq[String])(f: String => T): T = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("t87_docs")
+    try {
+      texts.toDF("text").write.parquet(s"$dir/documents.parquet")
+      f(dir.toString)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("t87: merges equal DuckDB's bpeOracle(8) at sf0.001") {
+    // literals from DuckDB 1.0.0 running the query's oracle SQL over
+    // sf0.001 documents.parquet
+    val expected = Seq(
+      (1, "e", "r", "er", 4650L), (2, "o", "r", "or", 2880L),
+      (3, "i", "n", "in", 2858L), (4, "o", "w", "ow", 2763L),
+      (5, "s", "t", "st", 2721L), (6, "l", "u", "lu", 1928L),
+      (7, "a", "r", "ar", 1873L), (8, "p", "ar", "par", 1873L))
+    val got = SparkEntry.queries("t87_bpe_trainer")(spark, sf).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3),
+        r.getLong(4))).toSeq
+    assert(got == expected)
+  }
+
+  test("t87: ties break in UTF-8 byte order, not UTF-16 order") {
+    // U+FF5A sorts before U+1D538 as UTF-8 bytes (EF.. < F0..) but after
+    // it as UTF-16 units (FF5A > D835); every pair below occurs once, so
+    // each round is a tie. Order taken from DuckDB 1.0.0 over the same
+    // two documents; only 4 pairs exist, so a 5th round merges nothing.
+    val (z, a) = ("\uFF5A", "\uD835\uDD38")
+    assert(a.compareTo(z) < 0, "UTF-16 order must disagree for this case")
+    withDocuments(Seq(s"x$a x$z", s"${a}x ${z}x")) { dir =>
+      val (_, merges) = graft.queries.DataSelection.bpeRounds(spark, dir, 5)
+      assert(merges == Seq((1, "x", z, 1L), (2, "x", a, 1L),
+        (3, z, "x", 1L), (4, a, "x", 1L)))
+    }
+  }
+
+  test("t87: empty documents give 0 merges with the same schema") {
+    val schema = SparkEntry.queries("t87_bpe_trainer")(spark, sf).schema
+    withDocuments(Seq.empty) { dir =>
+      val df = SparkEntry.queries("t87_bpe_trainer")(spark, dir)
+      assert(df.schema == schema)
+      assert(df.collect().isEmpty)
+    }
   }
 
   test("t76: every winnow pair is ordered, bounded, and self-consistent") {

@@ -69,22 +69,29 @@ class ScratchReleaseSpec extends AnyFunSuite {
     assert(got == (asia ++ latest ++ raw).toSet)
   }
 
+  // new ids, not a size: the context holds persisted RDDs weakly
+  private def persisted: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   test("t87: building the trainer leaves no checkpoint persisted") {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.size
+    val before = persisted
     val df = SparkEntry.queries("t87_bpe_trainer")(spark, sf)
-    assert(sc.getPersistentRDDs.size <= before,
-      s"persistent RDDs: $before before, ${sc.getPersistentRDDs.size} after")
+    val added = persisted -- before
+    assert(added.isEmpty, s"new persistent RDDs: ${added.toSeq.sorted}")
     assert(df.collect().map(_.getAs[Int]("round")).toSeq == (1 to 8))
   }
 
   test("t15: building the components keeps only the final labels round") {
-    // new ids, not a size: the context holds persisted RDDs weakly
-    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val before = persisted
     val df = SparkEntry.queries("t15_dedup_components")(spark, sf)
     val added = persisted -- before
     assert(added.size <= 1, s"new persistent RDDs: ${added.toSeq.sorted}")
+    // the one kept is what the labels read: the contracted pair list
+    // and every earlier round are released
+    val read = df.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    assert(added.subsetOf(read), s"kept ${added.toSeq.sorted}, read $read")
     assert(df.count() ==
       graft.queries.Tables.t(spark, sf, "documents").count())
   }
