@@ -44,6 +44,8 @@ final class Flow(
     rootFlow: Boolean = true) {
 
   private var lastNameVar: Option[String] = None
+  /** Whether any stage of this flow ran a Spark action (see [[runStage]]). */
+  private var ranAction = false
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[Flow])
 
   // a caller's session may come from outside GraftSession; nested flows
@@ -152,8 +154,14 @@ final class Flow(
         log.info(s"stage '${stage.name}' skipped (skip_if)")
         return
       }
-      execute(stage, future)
-      log.info(f"stage '${stage.name}' done in ${(System.nanoTime() - t0) / 1e9}%.2fs")
+      // a transform, an internal stage or a tap that is not checkpointed
+      // only registers a lazy view; its work runs at the first action
+      // that reads it, so only a stage that ran an action reports "done"
+      val ran = execute(stage, future)
+      ranAction ||= ran
+      val secs = (System.nanoTime() - t0) / 1e9
+      if (ran) log.info(f"stage '${stage.name}' done in $secs%.2fs")
+      else log.info(f"stage '${stage.name}' registered in $secs%.2fs (lazy, no action ran)")
     } catch {
       case e: Exception =>
         if (stage.onError == "continue" || flowOnError == "continue") {
@@ -172,7 +180,10 @@ final class Flow(
     ConnContext(spark, rendered, config, variables, names, context)
   }
 
-  private def execute(stage: Stage, future: List[(String, String)]): Unit =
+  /** Run one stage; true when it ran a Spark action: a sink, a sql
+    * statement, a checkpointed tap, a loop, a `show`, or a sub-pipeline
+    * one of whose stages did. */
+  private def execute(stage: Stage, future: List[(String, String)]): Boolean =
       stage.kind.toLowerCase match {
     case "tap" | "source" =>
       val view = names.register(stage.name)
@@ -194,13 +205,11 @@ final class Flow(
       // invalidated and recomputed on rewrite — exactly the wrong behavior)
       // only taps whose source overlaps a still-future write target; all
       // other taps stay lazy and keep Catalyst pushdown into the scan.
-      val materialized =
-        if (Flow.sourceRewrittenLater(stage.connection, future, config))
-          df.localCheckpoint()
-        else df
+      val checkpointed = Flow.sourceRewrittenLater(stage.connection, future, config)
+      val materialized = if (checkpointed) df.localCheckpoint() else df
       materialized.createOrReplaceTempView(view)
       lastNameVar = Some(stage.name)
-      postActions(stage, Some(materialized))
+      postActions(stage, Some(materialized)) || checkpointed
 
     case "transform" =>
       val q = renderStr(stage.query.getOrElse(
@@ -230,6 +239,7 @@ final class Flow(
       df.createOrReplaceTempView(alias)
       lastNameVar = Some(stage.name)
       postActions(stage, Some(df))
+      true
 
     case "sql" =>
       val conn = Connection.resolve(connCtx(stage))
@@ -237,6 +247,7 @@ final class Flow(
         sys.error(s"sql '${stage.name}' requires a query")))
       val res = conn.sqlStmt(q)
       postActions(stage, res)
+      true
 
     case "internal" | "self" =>
       val q = renderStr(stage.query.getOrElse(
@@ -249,14 +260,14 @@ final class Flow(
 
     // documentation-only stage, skipped by the runner (flow.py:591-592,
     // enums.py:48)
-    case "header" => ()
+    case "header" => false
 
     case "pipeline" =>
       // a looped body re-runs: iteration k+1's writes land after iteration
       // k's taps, so the body's own writes join the sub-flow's future set
       val subFuture = future ++ (if (stagesBefore(stage))
         Flow.collectWrites(stage.stages, config) else Nil)
-      lastNameVar match {
+      val ran = lastNameVar match {
         case Some(prev) if stagesBefore(stage) && stage.parallel =>
           // opt-in PARALLEL loop (100 TB extension beyond the reference's
           // sequential semantics, SURVEY §7.4): iterations run
@@ -296,6 +307,7 @@ final class Flow(
             pool.awaitTermination(24, java.util.concurrent.TimeUnit.HOURS)
           } finally pool.shutdownNow()
           if (!failures.isEmpty) throw failures.peek
+          true
 
         case Some(prev) if stagesBefore(stage) =>
           // row-driven loop (flow.py:126-173): one sub-flow per row of the
@@ -323,16 +335,17 @@ final class Flow(
             case Some(v) => variables.put("loop_control", v)
             case None => variables.remove("loop_control")
           }
+          true
         case _ =>
           new Flow(spark, Stages(stage.stages), context, config, variables,
-            names, flowOnError, subFuture, rootFlow = false).run()
+            names, flowOnError, subFuture, rootFlow = false).run().ranAction
       }
-      // lastname propagates to the final stage of the sub-pipeline
       // lastname propagates to the sub-pipeline's final stage — except for
       // parallel loops, whose per-iteration views are namespace-isolated
       // (their results live in the sinks each iteration wrote)
       if (!(stage.parallel && stagesBefore(stage)))
         stage.stages.lastOption.foreach(s => lastNameVar = Some(s.name))
+      ran
 
     case other => sys.error(s"unknown stage kind: $other")
   }
@@ -343,19 +356,20 @@ final class Flow(
     * `show` previews a RANDOM sample like the reference's
     * `USING SAMPLE n ROWS / p%` (flow.py:60-74): a fraction in (0,1)
     * samples that share, an integer n ≥ 1 draws n random rows, and -1
-    * prints everything. */
-  private def postActions(stage: Stage, df: Option[DataFrame]): Unit = df.foreach { d =>
-    stage.show.foreach {
+    * prints everything. True when a `show` ran. */
+  private def postActions(stage: Stage, df: Option[DataFrame]): Boolean =
+      df.exists { d =>
+    val shown = stage.show.collect {
       case -1 => d.show(Int.MaxValue, truncate = false)
       case f if f > 0 && f < 1 =>
         d.sample(f).show(Int.MaxValue, truncate = false)
       case n if n >= 1 =>
         d.orderBy(org.apache.spark.sql.functions.rand())
           .show(n.toInt, truncate = false)
-      case _ =>
-    }
+    }.isDefined
     if (stage.showSchema) log.info(s"schema of '${stage.name}':\n" + d.schema.treeString)
     if (stage.explain) d.explain("formatted")
+    shown
   }
 }
 

@@ -754,4 +754,52 @@ class FlowSpec extends AnyFunSuite {
     val n = flow.df().collect()(0).getLong(0)
     assert(n > 1800 && n < 1830) // ~5 years of days
   }
+
+  /** Messages the `graft.core.Flow` logger writes at INFO while `body` runs. */
+  private def flowLog(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val app = new AbstractAppender("flow-log", null, null, true, Array.empty) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val logger = LoggerContext.getContext(false).getLogger(classOf[Flow].getName)
+    val level = logger.getLevel
+    logger.addAppender(app)
+    logger.setLevel(Level.INFO)
+    try body finally {
+      logger.removeAppender(app)
+      logger.setLevel(level)
+      app.stop()
+    }
+    lines.toArray(Array.empty[String]).toSeq
+  }
+
+  test("stage log: only a stage that ran an action reports done") {
+    val out = tmpDir() + "/out"
+    val yaml =
+      s"""
+         |- name: Taps
+         |  kind: pipeline
+         |  stages:
+         |    - name: Lineitem
+         |      kind: tap
+         |      connection: {kind: Parquet, locator: $sf/lineitem.parquet}
+         |- name: Totals
+         |  kind: transform
+         |  query: select l_returnflag, count(*) as totals from Lineitem group by 1
+         |- name: WriteOut
+         |  kind: sink
+         |  connection: {kind: Parquet, locator: $out}
+         |""".stripMargin
+    val log = flowLog(Flow.runYaml(spark, yaml))
+    def line(stage: String) = log.filter(_.startsWith(s"stage '$stage' "))
+    for (lazyStage <- Seq("Lineitem", "Taps", "Totals"))
+      assert(line(lazyStage).map(_.split(" ")(2)) == Seq("registered"),
+        log.mkString("\n"))
+    assert(line("WriteOut").map(_.split(" ")(2)) == Seq("done"), log.mkString("\n"))
+  }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.Multimodal
 import graft.queries.Multimodal.{MediaRow, syntheticBmp, decodeBmp}
 
 /** The BMP decoder must be a real parser, not the generator's inverse:

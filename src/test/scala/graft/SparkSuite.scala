@@ -1,15 +1,19 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Shared session for all suites (one JVM-wide session, cheap getOrCreate).
   * Test-sized confs, not the shipped profile, but the same function table
   * as [[graft.core.GraftSession]]: installed at creation, so no suite
-  * registers functions itself. */
+  * registers functions itself. It also takes the profile's static confs:
+  * the codegen cache is sized by the first session that compiles, and
+  * that is this one, so the specs run with the shipped size. */
 object SparkSuite {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .withExtensions(graft.functions.GraftFunctions.install)
+      .config(GraftSession.staticConfs.toMap)
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")

@@ -324,7 +324,6 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming length sketch equals the batch t97 sketch bit-for-bit") {
     // counter addition is the merge law — two micro-batches must land on
     // exactly the histogram a single batch pass builds
-    implicit val s = spark
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
@@ -384,7 +383,6 @@ class StreamingSpec extends AnyFunSuite {
     // same 2σ rule, same arithmetic: the streamed hourly windows flagged
     // against batch-derived thresholds must reproduce exactly the batch
     // anomaly set (window.start ≡ date_trunc('hour') for tumbling 1h).
-    implicit val s = spark
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
