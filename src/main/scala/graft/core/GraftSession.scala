@@ -44,6 +44,27 @@ import org.apache.spark.sql.SparkSession
   *  - A generated-class cache that holds the engine's working set, so a
   *    plan that runs again reuses its compiled classes. It is a static
   *    conf, set by [[builder]] only; see [[staticConfs]].
+  *  - JVM case mapping for `lower`/`upper`/`initcap` on UTF8_BINARY
+  *    strings (`spark.sql.icu.caseMappings.enabled=false`, a runtime conf
+  *    in [[confs]]). Spark 4.1's default routes them through ICU's
+  *    `CollationAwareUTF8String`, whose static initializer builds a
+  *    title-case table over every code point: 1.2–1.4 s for
+  *    `Class.forName` on a cold JVM (3 runs, 4-vCPU host).
+  *    The cost fell on whichever query lowercased text first (t89's
+  *    quality scan, the simhash and stop-word queries); t89's first run
+  *    in a perfbench `iterative` JVM (seed 7, traced, median of 3) fell
+  *    from 3.60 to 2.22 s. Both paths share the ASCII fast path; they
+  *    differ on a few non-ASCII strings, listed in README §2.9 dialect
+  *    gaps and pinned by `CaseMappingSpec`.
+  *  - One executor class loader per SparkContext
+  *    (`spark.sql.artifact.isolation.enabled=false`), set by [[builder]]
+  *    only; see [[staticConfs]].
+  *    PRECONDITION: the engine adds no session artifacts — no
+  *    `addArtifact`, `addJar`, `addFile` or `addArchive` anywhere in
+  *    `src/main/scala` (`SessionGuardSpec` fails the build otherwise).
+  *    With isolation off such an artifact would reach every session of the
+  *    context. Drop-in JDBC driver jars go on the classpath, not into
+  *    session artifacts, so they are unaffected.
   */
 object GraftSession {
 
@@ -80,13 +101,16 @@ object GraftSession {
       (10L * 1024 * 1024).toString,
     "spark.sql.files.maxPartitionBytes" -> (256L * 1024 * 1024).toString,
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.codegen.hugeMethodLimit" -> "8000")
+    "spark.sql.codegen.hugeMethodLimit" -> "8000",
+    // JVM case mapping, not ICU: see the class scaladoc
+    "spark.sql.icu.caseMappings.enabled" -> "false")
 
-  /** Static confs of the profile: read once per JVM or per context, so
-    * they can only be set on a builder, never by [[applyTo]] (setting a
-    * static conf on a live session throws). Kept out of [[confs]] for
-    * that reason; the test session applies them too, so the specs run
-    * with the sizes that ship.
+  /** Confs of the profile that only a builder can set: read once per JVM,
+    * per context or when a session is created, so [[applyTo]] cannot set
+    * them on a live session (a static conf throws there; the isolation
+    * key would be a silent no-op). Kept out of [[confs]] for that reason;
+    * the test session applies them too, so the specs run with the values
+    * that ship.
     *
     * `spark.sql.codegen.cache.maxEntries` sizes Spark's generated-class
     * cache (`CodeGenerator`'s LRU, keyed by context classloader and code
@@ -101,9 +125,23 @@ object GraftSession {
     * queries) with an unbounded cache compiles 2,070 entries (1,217
     * distinct code texts, under the driver's loader and each session's
     * executor loader), and Metaspace reads 258 MB at the end (244 MB at
-    * the default size). 4096 is 2,070 rounded up to a power of two. */
+    * the default size). 4096 is 2,070 rounded up to a power of two.
+    *
+    * `spark.sql.artifact.isolation.enabled=false` is read once, when a
+    * session's `ArtifactManager` is built. With Spark's default of `true`,
+    * each session id (every `newSession()` and every `foreachBatch` clone)
+    * gets its own executor `ExecutorClassLoader`; since the cache key
+    * holds the loader, each fresh session compiled its classes again,
+    * under a loader whose misses fall back to the driver's class server.
+    * A repeated p25 run recompiled 15 already-cached classes; with
+    * isolation off every session of a context shares the executor's
+    * default loader, and the second pass of a perfbench `pipeline` run
+    * compiles none (`CodegenCacheSpec` pins the same on a small stream).
+    * It relies on the engine adding no session artifacts (see the class
+    * scaladoc). */
   val staticConfs: Seq[(String, String)] = Seq(
-    "spark.sql.codegen.cache.maxEntries" -> "4096")
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** The profile plus the engine's SQL functions, installed at session
     * creation (so `newSession()` and foreachBatch clones inherit them).
