@@ -62,19 +62,20 @@ object Main {
     flow
   }
 
+  /** The CLI session: [[graft.core.GraftSession.local]], on
+    * `SPARK_MASTER` when that deployment setting is given. */
+  private[graft] def session(): SparkSession.Builder = {
+    val local = graft.core.GraftSession.local("graft")
+    sys.env.get("SPARK_MASTER").fold(local)(local.master)
+  }
+
   def main(args: Array[String]): Unit = {
     val cli =
       try parseArgs(args)
       catch {
         case e: Exception => System.err.println(e.getMessage); sys.exit(2)
       }
-    // production defaults (AQE + skew join + scan sizing) from
-    // GraftSession; the CLI only pins what's host-specific
-    val spark = graft.core.GraftSession.builder("graft")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions", graft.core.GraftSession.cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val cfg = FlowConfig(
       bucket = sys.env.get("GRAFT_BUCKET"),

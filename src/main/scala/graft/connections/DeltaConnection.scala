@@ -219,18 +219,12 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
     v
   }
 
-  /** Total row count of staged parquet files, from their FOOTERS — a
-    * driver-side metadata read bounded by the files THIS commit just
-    * wrote (not a table scan), the same way DuckDB answers COUNT(*). */
-  private def stagedRowCount(staged: Seq[java.nio.file.Path]): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    staged.filter(_.toString.endsWith(".parquet")).map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
+  /** Total row count of staged parquet files, from their footers —
+    * bounded by the files THIS commit just wrote (not a table scan). */
+  private def stagedRowCount(staged: Seq[java.nio.file.Path]): Long =
+    FileFormats.parquetFooterRows(spark.sessionState.newHadoopConf(),
+      staged.filter(_.toString.endsWith(".parquet"))
+        .map(f => new org.apache.hadoop.fs.Path(f.toUri)))
 
   /** Heal a commit crashed at any point. A leftover tmp dir is the
     * crash marker (deleteTree(tmp) is a healthy commit's last act). For
@@ -288,18 +282,16 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
         org.apache.spark.sql.types.StructType.fromDDL(
           m.getOrElse("schema", "").toString))
     else if (!m.get("partitioned").contains(true))
-      spark.read.option("mergeSchema", "true").parquet(
-        (liveRels.map(root.resolve(_).toString) ++
-          retiredRels.map(retainedDir.resolve(_).toString) ++
-          stagedRels.map(commitTmp.resolve(_).toString)): _*)
+      readParquet(liveRels.map(root.resolve(_).toString) ++
+        retiredRels.map(retainedDir.resolve(_).toString) ++
+        stagedRels.map(commitTmp.resolve(_).toString))
     else {
       // partitioned: `basePath` makes Spark reconstruct partition values
       // from the dirs between the base and each listed file — the
       // by-file analogue of delta's per-file partition metadata
       def readAt(base: java.nio.file.Path, rels: Seq[String]) =
-        spark.read.option("mergeSchema", "true")
-          .option("basePath", base.toString)
-          .parquet(rels.map(base.resolve(_).toString): _*)
+        readParquet(rels.map(base.resolve(_).toString),
+          Map("basePath" -> base.toString))
       val frames =
         (if (liveRels.nonEmpty) Seq(readAt(root, liveRels)) else Nil) ++
           (if (retiredRels.nonEmpty) Seq(readAt(retainedDir, retiredRels)) else Nil) ++
@@ -307,6 +299,12 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
       frames.reduce(_.unionByName(_, allowMissingColumns = true))
     }
   }
+
+  /** Every read of the table's data files: [[FileFormats.parquet]], so
+    * the schema merges across the files of every version. */
+  private def readParquet(paths: Seq[String],
+      passthrough: Map[String, String] = Map.empty): DataFrame =
+    FileFormats.parquet.reader(spark, passthrough = passthrough).load(paths: _*)
 
   /** Split `VERSION AS OF n` out of the tap's pseudo-SQL (the one
     * time-travel clause the emulation supports). */
@@ -336,8 +334,7 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
     val raw = version match {
       case Some(v) => readVersion(v)
       case None =>
-        if (exists) spark.read.option("mergeSchema", "true").parquet(path)
-        else emptyWithSchema
+        if (exists) readParquet(Seq(path)) else emptyWithSchema
     }
     finishTap(raw, stripped, limit)
   }
@@ -396,7 +393,7 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
 
   override def showSchema(): org.apache.spark.sql.types.StructType = {
     recoverStash(); recoverCommit()
-    if (exists) spark.read.parquet(path).schema
+    if (exists) readParquet(Seq(path)).schema
     else SchemaUtil.toStruct(conn.fields)
   }
 
@@ -408,9 +405,7 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
       None
     } else if (s.startsWith("TRUNCATE DELTATABLE")) {
       // keep schema: re-create the empty table from current schema
-      val schema = if (exists)
-        Some(spark.read.option("mergeSchema", "true").parquet(path).schema)
-      else None
+      val schema = if (exists) Some(readParquet(Seq(path)).schema) else None
       schema match {
         case Some(sch) =>
           // pre-truncate versions stay travelable: stagedCommit retires
@@ -432,7 +427,7 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
         // partitioned table keeps its layout: re-written under the same
         // partitionBy, hash-clustered on the partition columns so each
         // hive partition lands in ~1 file
-        val df = spark.read.option("mergeSchema", "true").parquet(path)
+        val df = readParquet(Seq(path))
         val parts = latestPartitionCols
         val n = math.max(1, (df.count() / 5000000L).toInt)
         val clustered =

@@ -66,6 +66,16 @@ object FileFormats {
     case k => kinds(k)
   }
 
+  /** Total row count of parquet `files` from their footers: a
+    * driver-side metadata read, the way DuckDB answers COUNT(*). */
+  private[graft] def parquetFooterRows(conf: org.apache.hadoop.conf.Configuration,
+      files: Seq[org.apache.hadoop.fs.Path]): Long =
+    files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+
   /** JSON documents held on the driver (REST records, Variable values)
     * → a frame; declared `fields` set the schema. */
   def jsonRows(spark: SparkSession, rows: Seq[String],

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 import org.apache.commons.io.FileUtils
 import org.apache.hadoop.util.ShutdownHookManager
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 import graft.core.Flow
 
 /** Engine-level coverage: each query runs a full YAML pipeline through
@@ -35,26 +36,112 @@ object Pipelines {
   private def scratchDir(prefix: String): Path =
     Files.createTempDirectory(scratchRoot, prefix)
 
-  /** First `.parquet` part file in `dir`, closing the directory stream
-    * (Files.list holds an OS handle until closed — same discipline as
-    * DeltaConnection's walk/list sites). Shared by the p20/p22/p23
-    * fixture preps that relabel shuffle output into replayable chunks. */
-  private def firstParquetPart(dir: java.nio.file.Path): java.nio.file.Path = {
-    // A chunk partition dir that was never written (skewed timestamps
-    // collapsing a time-range chunk to zero rows, or all-equal ts under
-    // the spanMs=1 clamp) must fail with a diagnostic naming the chunk,
-    // not a raw NoSuchFileException from the listing (r16 ADVICE).
-    require(Files.isDirectory(dir),
-      s"fixture chunk $dir is empty (never written) — the time-range " +
-        "chunking produced a zero-row chunk; the fixture's timestamps " +
-        "are too skewed to split into this many replay batches")
-    val s = Files.list(dir)
-    try s.iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no parquet part in fixture chunk $dir"))
-    finally s.close()
+  /** Runs `body` at 4 shuffle (so state-store) partitions and restores
+    * the caller's `spark.sql.shuffle.partitions` after, even when `body`
+    * throws. A stateful operator commits one state-store delta file per
+    * partition per micro-batch (9 batches × 32 partitions was ~300 state
+    * commits for a fixture-sized key space), and the gates' semantics
+    * (per-key state crossing batches) do not depend on the partition
+    * count; a production cluster sizes it to cores through GraftSession.
+    * The count is baked into a stream's checkpoint at its first batch,
+    * so it only needs to hold while the gate's streams run. */
+  private[graft] def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
+    val caller = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", caller)
   }
 
+  /** A streaming gate's fixture replay (p20, p22–p25). `chunked` is a
+    * batch fixture whose `__c` column numbers each row's chunk, 1 to
+    * `chunks`; one partitioned write splits it into chunk files. [[land]]
+    * moves a chunk into `in/`, and [[stream]] reads `in/` one file per
+    * trigger, so the landed chunks replay as ordered micro-batches.
+    * Precondition: every chunk holds at least one row. `out` and `ckpt`
+    * are the gate's sink and checkpoint paths. */
+  private final class Replay(prefix: String, chunked: DataFrame, chunks: Int) {
+    private val spark = chunked.sparkSession
+    val tmp: Path = scratchDir(prefix)
+    val out: String = tmp.resolve("out").toString
+    val ckpt: String = tmp.resolve("ckpt").toString
+    private val inDir = Files.createDirectories(tmp.resolve("in"))
+    private val scratch = tmp.resolve("scratch")
+    chunked.repartition(chunks, org.apache.spark.sql.functions.col("__c"))
+      .write.partitionBy("__c").mode("overwrite")
+      // scratch chunks are written once and replayed once: snappy
+      // encodes ~5x faster than the profile's zstd and the replay
+      // decodes faster too (guide §6: pick the codec per write purpose;
+      // the profile default stays zstd for real outputs)
+      .option("compression", "snappy")
+      .parquet(scratch.toString)
+
+    /** Moves chunk `c` to `in/chunk-c.parquet`. Modification time is the
+      * file source's replay order, so chunks replay in `c` order however
+      * they are landed (p23 lands its last chunk after a compaction). */
+    def land(c: Int): Unit = {
+      val dst = inDir.resolve(f"chunk-$c%02d.parquet")
+      Files.move(firstParquetPart(scratch.resolve(s"__c=$c")), dst)
+      dst.toFile.setLastModified(1700000000000L + c * 60000L)
+    }
+
+    def landAll(): Unit = (1 to chunks).foreach(land)
+
+    /** The landed chunks as a stream, one chunk per micro-batch
+      * (`partitionBy` keeps `__c` out of the files). */
+    def stream: DataFrame = spark.readStream
+      .schema(chunked.drop("__c").schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(inDir.toString)
+
+    /** Lands every chunk, drains `op(stream)` into a parquet sink at
+      * [[out]] at the replay's state partitions, and reads the sink. */
+    def toParquet(op: DataFrame => Dataset[_]): DataFrame = {
+      withStatePartitions(spark) {
+        landAll()
+        op(stream).writeStream.format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", ckpt)
+          .outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+      }
+      spark.read.parquet(out)
+    }
+
+    /** First `.parquet` part file of a chunk directory, closing the
+      * listing (Files.list holds an OS handle until closed). */
+    private def firstParquetPart(dir: Path): Path = {
+      // A chunk with no rows is never written (skewed timestamps
+      // collapsing a time-range chunk to zero rows, all-equal ts under
+      // the spanMs=1 clamp, or a fixture too small for its split): fail
+      // with a diagnostic naming the chunk, not a raw
+      // NoSuchFileException from the listing (r16 ADVICE).
+      require(Files.isDirectory(dir),
+        s"fixture chunk $dir is empty (never written) — the chunking " +
+          "produced a zero-row chunk; the fixture is too skewed or too " +
+          "small to split into this many replay batches")
+      val s = Files.list(dir)
+      try s.iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet"))
+        .getOrElse(sys.error(s"no parquet part in fixture chunk $dir"))
+      finally s.close()
+    }
+  }
+
+  /** `ev` with `__c` = 1 or 2: two contiguous time-range chunks from one
+    * min/max agg and a map-side projection (no global ntile window, a
+    * single-task full-corpus sort), plus the latest `ts`. Chunk
+    * membership is a function of ts alone, so equal-ts events share a
+    * chunk and cross-chunk order is strict by ts. */
+  private def timeChunks(ev: DataFrame): (DataFrame, java.sql.Timestamp) = {
+    import org.apache.spark.sql.functions._
+    val bounds = ev.agg(min("ts"), max("ts")).head()
+    val (minTs, maxTs) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
+    val spanMs = math.max(1L, maxTs.getTime - minTs.getTime)
+    (ev.withColumn("__c", least(lit(2),
+      (floor((unix_millis(col("ts")) - lit(minTs.getTime))
+        * 2.0 / spanMs) + 1).cast("int"))), maxTs)
+  }
 
   /** p17 fixture writers — the same wire formats any producer emits
     * (and TabularFilesSpec hand-builds): a minimal SpreadsheetML zip
@@ -1072,21 +1159,9 @@ object Pipelines {
         implicit val s: SparkSession = spark
         val ev = Tables.t(spark, dir, "events")
           .select("event_id", "ts", "user_id", "event_type", "value")
-        val tmp = scratchDir("graft_p20")
-        val inDir = tmp.resolve("in"); Files.createDirectories(inDir)
-        // 2 contiguous TIME-RANGE chunks from one min/max agg + a
-        // map-side projection (r16 — was a global ntile window, the
-        // single-task full-corpus sort p22's prep already dropped).
-        // The per-key in-order cross-batch contract holds: chunk
-        // membership is a function of ts alone, so equal-ts events land
-        // in the same chunk and cross-batch order is strict by ts;
-        // in-batch order stays free (sessionizeSeq sorts each batch).
-        val bounds = ev.agg(min("ts"), max("ts")).head
-        val (minTs, maxTs) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
-        val spanMs = math.max(1L, maxTs.getTime - minTs.getTime)
-        val chunked = ev.withColumn("__c", least(lit(2),
-          (floor((unix_millis(col("ts")) - lit(minTs.getTime))
-            * 2.0 / spanMs) + 1).cast("int")))
+        // time-range chunks keep per-key order across batches; order
+        // inside a batch is free (sessionizeSeq sorts each batch)
+        val (chunked, maxTs) = timeChunks(ev)
         val sentinels = ev.select(col("user_id")).distinct()
           .withColumn("event_id",
             -row_number().over(Window.orderBy("user_id")).cast("long"))
@@ -1095,56 +1170,12 @@ object Pipelines {
           .withColumn("event_type", lit("flush"))
           .withColumn("value", lit(0.0))
           .select("event_id", "ts", "user_id", "event_type", "value")
-        // ONE partitioned write emits all three chunk files (the old
-        // per-chunk coalesce(1) loop paid separate job floors for
-        // fixture prep that is not the measured operator); partitionBy
-        // drops __c from the data files, so every chunk carries the
-        // plain event schema.
-        val scratch = tmp.resolve("scratch")
-        chunked.unionByName(sentinels.withColumn("__c", lit(3)))
-          .repartition(3, col("__c"))
-          .write.partitionBy("__c").mode("overwrite")
-          // scratch chunks are written once and replayed once: snappy
-          // encodes ~5x faster than the profile's zstd and the replay
-          // decodes faster too (guide §6: pick the codec per write purpose;
-          // the profile default stays zstd for real outputs)
-          .option("compression", "snappy")
-          .parquet(scratch.toString)
-        (1 to 3).foreach { i =>
-          val part = firstParquetPart(scratch.resolve(s"__c=$i"))
-          val dst = inDir.resolve(f"chunk-$i%02d.parquet")
-          Files.move(part, dst)
-          // modification time is the file source's replay order
-          dst.toFile.setLastModified(maxTs.getTime + i * 60000L)
-        }
-        val outDir = tmp.resolve("out").toString
-        // Stateful-operator cost per micro-batch scales with the number
-        // of state-store partitions (one delta file committed per
-        // partition per batch — 9 batches × 32 partitions was ~300
-        // state commits for a fixture-sized key space). The gate's semantics
-        // (per-key state crossing batches) are partition-count-invariant,
-        // so the stream runs at 4 state partitions; a production cluster
-        // sizes this to cores via GraftSession, not the test harness
-        // default. The conf is restored after the run: the state
-        // partition count is baked into the checkpoint at first batch,
-        // not the session.
-        val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
-          val q = graft.streaming.Streams.sessionizeSeq(
-              spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(inDir.toString).as[graft.streaming.Streams.Event])
-            .writeStream.format("parquet")
-            .option("path", outDir)
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+        val sessions = new Replay("graft_p20",
+          chunked.unionByName(sentinels.withColumn("__c", lit(3))), 3)
+          .toParquet(in => graft.streaming.Streams.sessionizeSeq(
+            in.as[graft.streaming.Streams.Event]))
         val wn = Window.partitionBy("user_id").orderBy("started", "ended")
-        spark.read.parquet(outDir)
+        sessions
           .withColumn("session_seq", row_number().over(wn).cast("long"))
           .select(col("user_id"), col("session_seq"),
             col("n_events").cast("long").as("n_events"),
@@ -1358,49 +1389,16 @@ object Pipelines {
           .unionByName(clones.withColumn("__c", lit(3)))
           .withColumn("ts", col("doc_id").cast("timestamp"))
           .select(col("__c"), col("ts"), col("doc_id"), col("text"))
-        val tmp = scratchDir("graft_p22")
-        val inDir = tmp.resolve("in"); Files.createDirectories(inDir)
-        val scratch = tmp.resolve("scratch")
-        chunked.repartition(3, col("__c"))
-          .write.partitionBy("__c").mode("overwrite")
-          // scratch chunks are written once and replayed once: snappy
-          // encodes ~5x faster than the profile's zstd and the replay
-          // decodes faster too (guide §6: pick the codec per write purpose;
-          // the profile default stays zstd for real outputs)
-          .option("compression", "snappy")
-          .parquet(scratch.toString)
-        (1 to 3).foreach { i =>
-          val part = firstParquetPart(scratch.resolve(s"__c=$i"))
-          val dst = inDir.resolve(f"chunk-$i%02d.parquet")
-          Files.move(part, dst)
-          dst.toFile.setLastModified(1700000000000L + i * 60000L)
+        // watermark delay far past the fixture's event-time span at any
+        // SF: digest state must survive the whole replay — eager
+        // eviction would itself leak duplicates through the gate
+        val kept = new Replay("graft_p22", chunked, 3).toParquet { in =>
+          graft.streaming.Streams.streamingDecontaminate(
+            graft.streaming.Streams.streamingDedup(
+              in, "ts", "text", watermark = "3650 days"),
+            "text", evalDocs, "text")
         }
-        val outDir = tmp.resolve("out").toString
-        // same state-partition sizing rationale as p20 (conf restored)
-        val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
-          val stream = spark.readStream
-            .schema(chunked.drop("__c").schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(inDir.toString)
-          // watermark delay far past the fixture's event-time span at
-          // any SF: digest state must survive the whole replay — eager
-          // eviction would itself leak duplicates through the gate
-          val deduped = graft.streaming.Streams.streamingDedup(
-            stream, "ts", "text", watermark = "3650 days")
-          val clean = graft.streaming.Streams.streamingDecontaminate(
-            deduped, "text", evalDocs, "text")
-          val q = clean.writeStream.format("parquet")
-            .option("path", outDir)
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        spark.read.parquet(outDir)
-          .groupBy(md5(col("text").cast("binary")).as("content_hash"))
+        kept.groupBy(md5(col("text").cast("binary")).as("content_hash"))
           .agg(count(lit(1)).as("n_kept"))
           .orderBy("content_hash")
       },
@@ -1450,52 +1448,26 @@ object Pipelines {
         val docs = Tables.t(spark, dir, "documents")
           .withColumn("is_new",
             expr("CAST(substr(source, 4, 10) AS INT) >= 10"))
-        val tmp = scratchDir("graft_p23")
-        val inDir = tmp.resolve("in"); Files.createDirectories(inDir)
-        val scratch = tmp.resolve("scratch")
-        docs.withColumn("__c",
+        val replay = new Replay("graft_p23", docs.withColumn("__c",
             when(!col("is_new"), (pmod(col("doc_id"), lit(2)) + 1).cast("int"))
               .otherwise(lit(3)))
-          .select(col("__c"), col("doc_id"), col("text"))
-          .repartition(3, col("__c"))
-          .write.partitionBy("__c").mode("overwrite")
-          // scratch chunks are written once and replayed once: snappy
-          // encodes ~5x faster than the profile's zstd and the replay
-          // decodes faster too (guide §6: pick the codec per write purpose;
-          // the profile default stays zstd for real outputs)
-          .option("compression", "snappy")
-          .parquet(scratch.toString)
-        def land(c: Int): Unit = {
-          val part = firstParquetPart(scratch.resolve(s"__c=$c"))
-          val dst = inDir.resolve(f"chunk-$c%02d.parquet")
-          Files.move(part, dst)
-          dst.toFile.setLastModified(1700000000000L + c * 60000L)
-        }
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id BIGINT, text STRING")
-        val statePath = tmp.resolve("state").toString
-        val outPath = tmp.resolve("out").toString
-        val ckpt = tmp.resolve("ckpt").toString
+          .select(col("__c"), col("doc_id"), col("text")), 3)
+        val statePath = replay.tmp.resolve("state").toString
         def runAvailable(): Unit = {
-          val q = graft.streaming.Streams.incrementalDedup(
-            spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(inDir.toString),
-            statePath, outPath, ckpt,
-            org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          val q = graft.streaming.Streams.incrementalDedup(replay.stream,
+            statePath, replay.out, replay.ckpt, Trigger.AvailableNow())
           try q.awaitTermination() finally q.stop()
         }
-        val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
-          land(1); land(2)
+        withStatePartitions(spark) {
+          replay.land(1); replay.land(2)
           runAvailable() // phase A: old docs as batches 0 and 1
           // stream stopped at the commit frontier (last committed 1):
           // fold both index partitions into batch=1
           graft.streaming.Streams.compactIndex(spark, statePath, 2L)
-          land(3)
+          replay.land(3)
           runAvailable() // phase B: resume; new docs probe as batch 2
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        spark.read.parquet(s"$outPath/batch=2")
+        }
+        spark.read.parquet(s"${replay.out}/batch=2")
           .select(col("doc_id")).orderBy("doc_id")
       },
       // t36's oracle restricted to its keep verdict: the docs phase B
@@ -1576,57 +1548,17 @@ object Pipelines {
           // EVERY micro-batch plan; persist the |types|-row result for
           // the stream's lifetime (production publishes it as a table)
           .persist()
-        val tmp = scratchDir("graft_p24")
-        val inDir = tmp.resolve("in"); Files.createDirectories(inDir)
-        val bounds = ev.agg(min("ts"), max("ts")).head
-        val (minTs, maxTs) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
-        val spanMs = math.max(1L, maxTs.getTime - minTs.getTime)
-        val chunked = ev.withColumn("__c", least(lit(2),
-          (floor((unix_millis(col("ts")) - lit(minTs.getTime))
-            * 2.0 / spanMs) + 1).cast("int")))
+        val (chunked, maxTs) = timeChunks(ev)
         val sentinel = spark.range(1)
           .select(lit(-1L).as("event_id"),
             lit(new java.sql.Timestamp(maxTs.getTime + 86400000L)).as("ts"),
             lit(0L).as("user_id"), lit("flush").as("event_type"),
             lit(0.0).as("value"), lit(3).as("__c"))
-        val scratch = tmp.resolve("scratch")
-        chunked.unionByName(sentinel)
-          .repartition(3, col("__c"))
-          .write.partitionBy("__c").mode("overwrite")
-          // scratch chunks are written once and replayed once: snappy
-          // encodes ~5x faster than the profile's zstd and the replay
-          // decodes faster too (guide §6: pick the codec per write purpose;
-          // the profile default stays zstd for real outputs)
-          .option("compression", "snappy")
-          .parquet(scratch.toString)
-        (1 to 3).foreach { i =>
-          val part = firstParquetPart(scratch.resolve(s"__c=$i"))
-          val dst = inDir.resolve(f"chunk-$i%02d.parquet")
-          Files.move(part, dst)
-          // modification time is the file source's replay order
-          dst.toFile.setLastModified(maxTs.getTime + i * 60000L)
-        }
-        val outDir = tmp.resolve("out").toString
-        // same state-partition sizing rationale as p20 (conf restored)
-        val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
-          val q = graft.streaming.Streams.rateAnomaly(
-              spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(inDir.toString), thresholds)
-            .writeStream.format("parquet")
-            .option("path", outDir)
-            .option("checkpointLocation", tmp.resolve("ckpt").toString)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-          thresholds.unpersist()
-        }
-        spark.read.parquet(outDir)
+        val alerts =
+          try new Replay("graft_p24", chunked.unionByName(sentinel), 3)
+            .toParquet(graft.streaming.Streams.rateAnomaly(_, thresholds))
+          finally thresholds.unpersist()
+        alerts
           .select(col("event_type"), col("window.start").as("hour"),
             col("n").as("c"), col("mean"), col("std"), col("z"))
           .orderBy("event_type", "hour")
@@ -1661,35 +1593,11 @@ object Pipelines {
           .select(col("doc_id"), col("text"))
         val evalDocs = Tables.t(spark, dir, "documents")
           .filter(col("doc_id") % 50 === 0).select("text")
-        val chunked = docs
-          .withColumn("__c", (pmod(col("doc_id"), lit(2)) + 1).cast("int"))
-        val tmp = scratchDir("graft_p25")
-        val inDir = tmp.resolve("in"); Files.createDirectories(inDir)
-        val scratch = tmp.resolve("scratch")
-        chunked.repartition(2, col("__c"))
-          .write.partitionBy("__c").mode("overwrite")
-          // scratch chunks are written once and replayed once: snappy
-          // encodes ~5x faster than the profile's zstd and the replay
-          // decodes faster too (guide §6: pick the codec per write purpose;
-          // the profile default stays zstd for real outputs)
-          .option("compression", "snappy")
-          .parquet(scratch.toString)
-        (1 to 2).foreach { i =>
-          val part = firstParquetPart(scratch.resolve(s"__c=$i"))
-          val dst = inDir.resolve(f"chunk-$i%02d.parquet")
-          Files.move(part, dst)
-          dst.toFile.setLastModified(1700000000000L + i * 60000L)
-        }
-        val outDir = tmp.resolve("out").toString
-        // same state-partition sizing rationale as p20 (conf restored):
+        val replay = new Replay("graft_p25", docs
+          .withColumn("__c", (pmod(col("doc_id"), lit(2)) + 1).cast("int")), 2)
         // the per-batch verify/anti joins shuffle a fixture-sized batch
-        val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
-          val stream = spark.readStream
-            .schema(chunked.drop("__c").schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(inDir.toString)
+        withStatePartitions(spark) {
+          replay.landAll()
           // capacity for the eval side's distinct 13-grams at ~8 bits
           // per item (t43's sizing: ~2% FP — FPs cost verify rows only)
           // the op starts a CONTINUOUS stream (its deployment shape —
@@ -1697,12 +1605,11 @@ object Pipelines {
           // two staged batches and stops, the same way StreamingSpec
           // drives the other continuous ops
           val q = graft.streaming.Streams.streamingDecontaminateBloom(
-            stream, "doc_id", "text", evalDocs, "text",
-            outDir, tmp.resolve("ckpt").toString,
-            expectedItems = 100000L)
+            replay.stream, "doc_id", "text", evalDocs, "text",
+            replay.out, replay.ckpt, expectedItems = 100000L)
           try q.processAllAvailable() finally q.stop()
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        spark.read.parquet(outDir)
+        }
+        spark.read.parquet(replay.out)
           .select(col("doc_id"),
             md5(col("text").cast("binary")).as("content_hash"))
           .orderBy("doc_id")

@@ -46,15 +46,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Exact row count of a parquet table from its file FOOTERS — a
-    * driver-side metadata read, the way DuckDB answers COUNT(*) —
-    * replacing a whole Spark job when a query needs only N (t26's k
-    * choice). Returns None when the listing exceeds `maxFiles`: a
-    * 100 TB table has thousands of part files and a serial driver loop
-    * over remote footers would take longer than the distributed
-    * count() it replaces, so past the threshold the caller falls back
-    * to the job. Footer record counts are exact (parquet metadata is
-    * authoritative), so either path yields the same N. */
+  /** Exact row count of a parquet table from its file FOOTERS
+    * ([[graft.connections.FileFormats.parquetFooterRows]]), replacing a
+    * whole Spark job when a query needs only N (t26's k choice). Returns
+    * None when the listing exceeds `maxFiles`: a 100 TB table has
+    * thousands of part files and a serial driver loop over remote
+    * footers would take longer than the distributed count() it
+    * replaces, so past the threshold the caller falls back to the job.
+    * Footer record counts are exact (parquet metadata is authoritative),
+    * so either path yields the same N. */
   def parquetRowCount(spark: SparkSession, path: String,
       maxFiles: Int = 64): Option[Long] = {
     val conf = spark.sessionState.newHadoopConf()
@@ -94,11 +94,7 @@ object Tables {
         if (files.size > maxFiles) return None
       }
     }
-    Some(files.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum)
+    Some(graft.connections.FileFormats.parquetFooterRows(conf, files.toSeq))
   }
 
   /** Memoized per (session, dir, table): `spark.read.parquet` re-lists the

@@ -54,14 +54,6 @@ object Streams {
       .groupBy("source", "idx")
       .agg(count(lit(1)).as("c"))
 
-  /** Sliding-window per-user activity rate. */
-  def slidingActivity(events: DataFrame, window_ : String = "1 hour",
-      slide: String = "15 minutes", watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_, slide), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-
   /** One event of a session's capped leading sequence (t93's corpus
     * unit), kept orderable by the batch twin's (us, event_id) total
     * order. */

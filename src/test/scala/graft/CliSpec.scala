@@ -1,8 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.connections.FlowConfig
+import graft.core.GraftSession
 
 /** CLI surface (reference: ankaflow/cli.py): -c context, -v variables,
   * -o output, env-based connection config. */
@@ -43,5 +45,18 @@ class CliSpec extends AnyFunSuite {
     val flow = Main.run(spark, cli, FlowConfig())
     assert(flow.df().count() == 3)
     assert(spark.read.parquet(s"$dir/out").count() == 3)
+  }
+
+  test("the CLI session runs the shipped profile with its local sizing") {
+    val shared = spark
+    val cli =
+      try Main.session().create()
+      finally {
+        SparkSession.setDefaultSession(shared)
+        SparkSession.setActiveSession(shared)
+      }
+    // both local values, so no AQE shuffle starts at the cluster's 1024
+    val want = GraftSession.confs.toMap ++ GraftSession.localSizing
+    want.foreach { case (k, v) => assert(cli.conf.get(k) == v, k) }
   }
 }

@@ -520,6 +520,36 @@ class FlowSpec extends AnyFunSuite {
     assert(Flow.runYaml(spark, tapBack).df().collect()(0).getLong(0) > 0)
   }
 
+  test("delta showSchema lists the merged schema the tap reads") {
+    val delta = tmpDir() + "/delta_evolve"
+    // three appends, three schemas: no single file holds both b and c
+    Seq("1 AS a", "2 AS a, 'x' AS b", "3 AS a, 'y' AS c").foreach { cols =>
+      Flow.runYaml(spark,
+        s"""
+           |- name: Rows
+           |  kind: transform
+           |  query: SELECT $cols
+           |- name: W
+           |  kind: sink
+           |  connection: {kind: Deltatable, locator: $delta, data_mode: append}
+           |""".stripMargin)
+    }
+    val yaml =
+      s"""
+         |- name: T
+         |  kind: tap
+         |  connection: {kind: Deltatable, locator: $delta}
+         |  query: select * from Deltatable
+         |""".stripMargin
+    val tapped = Flow.runYaml(spark, yaml).df().schema
+    assert(tapped.fieldNames.sorted.toSeq == Seq("a", "b", "c"))
+    val shown = new Flow(spark, graft.model.Stages.load(yaml)).showSchema()
+    assert(shown.map(_.table) == List("T"))
+    def fields(s: org.apache.spark.sql.types.StructType) =
+      s.fields.toSeq.map(f => f.name -> f.dataType)
+    assert(fields(shown.head.fields) == fields(tapped))
+  }
+
   test("variable sink and tap round trip") {
     val yaml =
       s"""
