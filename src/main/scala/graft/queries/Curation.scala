@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  import Tables.{t, parquetRowCount}
+  import Tables.{t, rowCount}
   import TrainingData.{withWords, shingleExpr, shingleSqlDuck, sigSqlDuck,
     minhashPairs, minhashPairsDuck, dotCol, dotSql, dotDuck}
   import DataSelection.{tokenShardBuckets, tokenEstExpr, tokenEstDuck}
@@ -667,6 +667,72 @@ object Curation {
       .orderBy("method", "param")
   }
 
+  /** t36's DuckDB verdict CTEs: `flag` (new or old source), `exact`
+    * (new docs whose md5 is in the old corpus) and `near` (new docs
+    * sharing a MinHash band bucket with an old doc). p23's gate reads
+    * the same chain for its keep rule. */
+  private[queries] val incrementalDedupDuck: String =
+    s"""WITH ${TrainingData.minhashBandsDuck},
+       |flag AS (
+       |  SELECT doc_id, CAST(substr(source, 4) AS INT) >= 10 AS is_new
+       |  FROM documents),
+       |h AS (SELECT doc_id, md5(text) AS h FROM documents),
+       |oldh AS (
+       |  SELECT DISTINCT h.h FROM h JOIN flag USING (doc_id)
+       |  WHERE NOT is_new),
+       |exact AS (
+       |  SELECT DISTINCT h.doc_id FROM h
+       |  JOIN flag USING (doc_id) JOIN oldh ON oldh.h = h.h
+       |  WHERE flag.is_new),
+       |oldb AS (
+       |  SELECT DISTINCT band, bucket FROM bands
+       |  JOIN flag USING (doc_id) WHERE NOT is_new),
+       |near AS (
+       |  SELECT DISTINCT b.doc_id FROM bands b
+       |  JOIN flag USING (doc_id)
+       |  JOIN oldb USING (band, bucket)
+       |  WHERE flag.is_new)""".stripMargin
+
+  /** Dedup-method agreement of t02's MinHash pairs and one SimHash
+    * near-dup query's pairs (t40, t103, t106): candidate counts, overlap
+    * and Jaccard agreement from a full outer join of the two id-pair
+    * lists. `simhash` names the [[TrainingData]] query that is the SimHash
+    * leg, the one thing the members differ in. */
+  private def dedupAgreement(simhash: String): QueryDef = QueryDef(
+    (spark, dir) => {
+      val mh = minhashPairs(spark, dir)
+        .select(col("doc_a"), col("doc_b"), lit(1L).as("in_m"))
+      val sh = TrainingData.defs(simhash).build(spark, dir)
+        .select(col("doc_a"), col("doc_b"), lit(1L).as("in_s"))
+      mh.join(sh, Seq("doc_a", "doc_b"), "full")
+        .select(coalesce(col("in_m"), lit(0L)).as("in_m"),
+          coalesce(col("in_s"), lit(0L)).as("in_s"))
+        .agg(sum("in_m").as("n_minhash"), sum("in_s").as("n_simhash"),
+          sum(expr("in_m * in_s")).as("n_both"))
+        .withColumn("agreement",
+          col("n_both").cast("double") /
+            (col("n_minhash") + col("n_simhash") - col("n_both")).cast("double"))
+        .select("n_minhash", "n_simhash", "n_both", "agreement")
+    },
+    Some {
+      val shSql = TrainingData.defs(simhash).oracle.get
+      s"""WITH $minhashPairsDuck,
+         |s AS (SELECT doc_a, doc_b FROM ($shSql)),
+         |u AS (
+         |  SELECT
+         |    CASE WHEN m.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_m,
+         |    CASE WHEN s.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_s
+         |  FROM pairs m FULL OUTER JOIN s
+         |    ON m.doc_a = s.doc_a AND m.doc_b = s.doc_b)
+         |SELECT CAST(SUM(in_m) AS BIGINT) AS n_minhash,
+         |  CAST(SUM(in_s) AS BIGINT) AS n_simhash,
+         |  CAST(SUM(in_m * in_s) AS BIGINT) AS n_both,
+         |  CAST(SUM(in_m * in_s) AS DOUBLE)
+         |    / CAST(SUM(in_m) + SUM(in_s) - SUM(in_m * in_s) AS DOUBLE)
+         |    AS agreement
+         |FROM u""".stripMargin
+    })
+
   val defs: Map[String, QueryDef] = Map(
 
     // ----------------------------------------------------------------- t89
@@ -765,8 +831,7 @@ object Curation {
     "t26_semdedup" -> QueryDef(
       (spark, dir) => {
         val emb = t(spark, dir, "embeddings")
-        val n = parquetRowCount(spark, s"$dir/embeddings.parquet")
-          .getOrElse(emb.count())
+        val n = rowCount(spark, dir, "embeddings")
         val kCells = semdedupK(n)
         // min-distance assignment; first-min tie-break == lowest cell,
         // matching the oracle's ROW_NUMBER ... ORDER BY dist, cell.
@@ -1447,26 +1512,7 @@ object Curation {
               coalesce(col("near_dup"), lit(false))).unary_!.as("keep"))
           .orderBy("doc_id")
       },
-      Some(s"""WITH ${TrainingData.minhashBandsDuck},
-              |flag AS (
-              |  SELECT doc_id, CAST(substr(source, 4) AS INT) >= 10 AS is_new
-              |  FROM documents),
-              |h AS (SELECT doc_id, md5(text) AS h FROM documents),
-              |oldh AS (
-              |  SELECT DISTINCT h.h FROM h JOIN flag USING (doc_id)
-              |  WHERE NOT is_new),
-              |exact AS (
-              |  SELECT DISTINCT h.doc_id FROM h
-              |  JOIN flag USING (doc_id) JOIN oldh ON oldh.h = h.h
-              |  WHERE flag.is_new),
-              |oldb AS (
-              |  SELECT DISTINCT band, bucket FROM bands
-              |  JOIN flag USING (doc_id) WHERE NOT is_new),
-              |near AS (
-              |  SELECT DISTINCT b.doc_id FROM bands b
-              |  JOIN flag USING (doc_id)
-              |  JOIN oldb USING (band, bucket)
-              |  WHERE flag.is_new)
+      Some(s"""$incrementalDedupDuck
               |SELECT f.doc_id,
               |  e.doc_id IS NOT NULL AS exact_dup,
               |  n.doc_id IS NOT NULL AS near_dup,
@@ -1676,40 +1722,7 @@ object Curation {
     // corpus-scale face is [[t103_dedup_agreement_wide]] below: the
     // identical report over t101's 64-bit leg, whose answer — and so
     // this op's full-outer-join input — is LINEAR in true near-dups.
-    "t40_dedup_agreement" -> QueryDef(
-      (spark, dir) => {
-        val mh = minhashPairs(spark, dir)
-          .select(col("doc_a"), col("doc_b"), lit(1L).as("in_m"))
-        val sh = TrainingData.defs("t18_simhash_neardup").build(spark, dir)
-          .select(col("doc_a"), col("doc_b"), lit(1L).as("in_s"))
-        mh.join(sh, Seq("doc_a", "doc_b"), "full")
-          .select(coalesce(col("in_m"), lit(0L)).as("in_m"),
-            coalesce(col("in_s"), lit(0L)).as("in_s"))
-          .agg(sum("in_m").as("n_minhash"), sum("in_s").as("n_simhash"),
-            sum(expr("in_m * in_s")).as("n_both"))
-          .withColumn("agreement",
-            col("n_both").cast("double") /
-              (col("n_minhash") + col("n_simhash") - col("n_both")).cast("double"))
-          .select("n_minhash", "n_simhash", "n_both", "agreement")
-      },
-      Some {
-        val shSql = TrainingData.defs("t18_simhash_neardup").oracle.get
-        s"""WITH $minhashPairsDuck,
-           |s AS (SELECT doc_a, doc_b FROM ($shSql)),
-           |u AS (
-           |  SELECT
-           |    CASE WHEN m.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_m,
-           |    CASE WHEN s.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_s
-           |  FROM pairs m FULL OUTER JOIN s
-           |    ON m.doc_a = s.doc_a AND m.doc_b = s.doc_b)
-           |SELECT CAST(SUM(in_m) AS BIGINT) AS n_minhash,
-           |  CAST(SUM(in_s) AS BIGINT) AS n_simhash,
-           |  CAST(SUM(in_m * in_s) AS BIGINT) AS n_both,
-           |  CAST(SUM(in_m * in_s) AS DOUBLE)
-           |    / CAST(SUM(in_m) + SUM(in_s) - SUM(in_m * in_s) AS DOUBLE)
-           |    AS agreement
-           |FROM u""".stripMargin
-      }),
+    "t40_dedup_agreement" -> dedupAgreement("t18_simhash_neardup"),
 
     // ---------------------------------------------------------------- t103
     // Dedup-method agreement at CORPUS-SCALABLE width — t40's face,
@@ -1736,40 +1749,7 @@ object Curation {
     // stream (4·2⁻¹⁶·C(n,2) — linear answer, quadratic verify) becomes
     // the bottleneck; this entry stays pinned on t101 as the
     // oracle-gated 64-bit link.
-    "t103_dedup_agreement_wide" -> QueryDef(
-      (spark, dir) => {
-        val mh = minhashPairs(spark, dir)
-          .select(col("doc_a"), col("doc_b"), lit(1L).as("in_m"))
-        val sh = TrainingData.defs("t101_simhash64_neardup").build(spark, dir)
-          .select(col("doc_a"), col("doc_b"), lit(1L).as("in_s"))
-        mh.join(sh, Seq("doc_a", "doc_b"), "full")
-          .select(coalesce(col("in_m"), lit(0L)).as("in_m"),
-            coalesce(col("in_s"), lit(0L)).as("in_s"))
-          .agg(sum("in_m").as("n_minhash"), sum("in_s").as("n_simhash"),
-            sum(expr("in_m * in_s")).as("n_both"))
-          .withColumn("agreement",
-            col("n_both").cast("double") /
-              (col("n_minhash") + col("n_simhash") - col("n_both")).cast("double"))
-          .select("n_minhash", "n_simhash", "n_both", "agreement")
-      },
-      Some {
-        val shSql = TrainingData.defs("t101_simhash64_neardup").oracle.get
-        s"""WITH $minhashPairsDuck,
-           |s AS (SELECT doc_a, doc_b FROM ($shSql)),
-           |u AS (
-           |  SELECT
-           |    CASE WHEN m.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_m,
-           |    CASE WHEN s.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_s
-           |  FROM pairs m FULL OUTER JOIN s
-           |    ON m.doc_a = s.doc_a AND m.doc_b = s.doc_b)
-           |SELECT CAST(SUM(in_m) AS BIGINT) AS n_minhash,
-           |  CAST(SUM(in_s) AS BIGINT) AS n_simhash,
-           |  CAST(SUM(in_m * in_s) AS BIGINT) AS n_both,
-           |  CAST(SUM(in_m * in_s) AS DOUBLE)
-           |    / CAST(SUM(in_m) + SUM(in_s) - SUM(in_m * in_s) AS DOUBLE)
-           |    AS agreement
-           |FROM u""".stripMargin
-      }),
+    "t103_dedup_agreement_wide" -> dedupAgreement("t101_simhash64_neardup"),
 
     // ---------------------------------------------------------------- t106
     // Dedup-method agreement over the WIDTH-SCHEDULED SimHash face —
@@ -1787,40 +1767,7 @@ object Curation {
     // near-dup criterion than ≤ 3 of 64, so the SimHash leg keeps
     // only the tightest near-dups (the intersection loses the pairs
     // only the looser 64-bit radius admitted).
-    "t106_dedup_agreement_128" -> QueryDef(
-      (spark, dir) => {
-        val mh = minhashPairs(spark, dir)
-          .select(col("doc_a"), col("doc_b"), lit(1L).as("in_m"))
-        val sh = TrainingData.defs("t105_simhash128_neardup").build(spark, dir)
-          .select(col("doc_a"), col("doc_b"), lit(1L).as("in_s"))
-        mh.join(sh, Seq("doc_a", "doc_b"), "full")
-          .select(coalesce(col("in_m"), lit(0L)).as("in_m"),
-            coalesce(col("in_s"), lit(0L)).as("in_s"))
-          .agg(sum("in_m").as("n_minhash"), sum("in_s").as("n_simhash"),
-            sum(expr("in_m * in_s")).as("n_both"))
-          .withColumn("agreement",
-            col("n_both").cast("double") /
-              (col("n_minhash") + col("n_simhash") - col("n_both")).cast("double"))
-          .select("n_minhash", "n_simhash", "n_both", "agreement")
-      },
-      Some {
-        val shSql = TrainingData.defs("t105_simhash128_neardup").oracle.get
-        s"""WITH $minhashPairsDuck,
-           |s AS (SELECT doc_a, doc_b FROM ($shSql)),
-           |u AS (
-           |  SELECT
-           |    CASE WHEN m.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_m,
-           |    CASE WHEN s.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_s
-           |  FROM pairs m FULL OUTER JOIN s
-           |    ON m.doc_a = s.doc_a AND m.doc_b = s.doc_b)
-           |SELECT CAST(SUM(in_m) AS BIGINT) AS n_minhash,
-           |  CAST(SUM(in_s) AS BIGINT) AS n_simhash,
-           |  CAST(SUM(in_m * in_s) AS BIGINT) AS n_both,
-           |  CAST(SUM(in_m * in_s) AS DOUBLE)
-           |    / CAST(SUM(in_m) + SUM(in_s) - SUM(in_m * in_s) AS DOUBLE)
-           |    AS agreement
-           |FROM u""".stripMargin
-      }),
+    "t106_dedup_agreement_128" -> dedupAgreement("t105_simhash128_neardup"),
 
     // ----------------------------------------------------------------- t41
     // Multi-EPOCH UPSAMPLING: the complement of t28's temperature

@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
 object DataSelection {
 
   import Tables.t
-  import TrainingData.{shingleExpr, shingleSqlDuck, withWords, dotCol, dotSql, dotDuck}
+  import TrainingData.{shingleExpr, shingleSqlDuck, withWords, dotCol, dotSql, dotDuck,
+    ivf8Cells, ivf8Second, ivf8CdotsDuck, ivf8BestDuck, ivf8SecondDuck}
 
   /** t09's BPE token estimate over a `documents` row — one definition
     * shared by t24's shards and t41's epoch budget (plus its DuckDB
@@ -124,8 +125,7 @@ object DataSelection {
         expr(tokenEstExpr).as("tok")) // t09's BPE estimate
     // N from parquet footers (t26's recipe) — a driver-side metadata
     // read instead of a corpus count() job (r21)
-    val n = Tables.parquetRowCount(spark, s"$dir/documents.parquet")
-      .getOrElse(docs.count())
+    val n = Tables.rowCount(spark, dir, "documents")
     val buckets = tokenShardBuckets(docs.rdd.getNumPartitions)
     val bucketWidth = math.max(1L, (n + buckets - 1) / buckets)
     val bucketed = docs
@@ -180,6 +180,58 @@ object DataSelection {
       }
       .toDF("label", "vec_id", "dist")
   }
+
+  /** Hard negatives' shared tail (t57, t64, t104). `pairs` holds the
+    * (anchor, candidate) rows: the anchor's aid, albl, aemb and anrm (its
+    * hoisted self-norm) next to the candidate's vec_id, label, embedding
+    * and nrm. Per anchor, the top-3 most-similar same-label candidates
+    * (`pos`) and other-label ones (`neg`) by cosine, ties on vec_id.
+    * The packed int key (aid/100)*2 + kind bit is collision-free because
+    * anchors are multiples of 100, and fits [[localLabelTopK]]'s (label,
+    * vec_id, dist) contract. dist = −cosine (sign-flip is exact IEEE), so
+    * its (dist, id) ASC order is the window's (cosine DESC, vec_id ASC),
+    * and each partition keeps ≤3 rows per (anchor, kind) before anything
+    * shuffles: the window ranks ≤ 3·keys·partitions survivors. */
+  private def hardNegativeTopK(pairs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val keyed = pairs.filter(col("vec_id") =!= col("aid"))
+      .select(
+        (expr("CAST(aid div 100 AS INT)") * 2
+          + when(col("label") === col("albl"), 0).otherwise(1))
+          .as("label"),
+        col("vec_id"),
+        (-(expr(dotSql("embedding", "aemb")).cast("double") /
+          (sqrt(col("anrm").cast("double"))
+            * sqrt(col("nrm").cast("double"))))).as("dist"))
+    val reduced = localLabelTopK(keyed, 3)
+      .select(expr("CAST((label div 2) * 100 AS BIGINT)").as("aid"),
+        when(col("label") % 2 === 0, "pos").otherwise("neg").as("kind"),
+        col("vec_id"), (-col("dist")).as("cosine"))
+    val w = Window.partitionBy("aid", "kind")
+      .orderBy(col("cosine").desc, col("vec_id"))
+    reduced.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= 3)
+      .select("aid", "kind", "rnk", "vec_id", "cosine")
+      .orderBy("aid", "kind", "rnk")
+  }
+
+  /** [[hardNegativeTopK]]'s DuckDB twin: the CTEs from `p` on, where
+    * `pairs` is p's FROM/JOIN clause over anchors `a` and candidates `n`. */
+  private def hardNegativeTopKDuck(pairs: String): String =
+    s"""p AS (
+       |  SELECT a.aid,
+       |    CASE WHEN n.label = a.albl THEN 'pos' ELSE 'neg' END AS kind,
+       |    n.vec_id,
+       |    ${dotDuck("n.embedding", "a.aemb")}
+       |      / (sqrt(a.anrm) * sqrt(n.nrm)) AS cosine
+       |  $pairs),
+       |r AS (
+       |  SELECT aid, kind, vec_id, cosine,
+       |    ROW_NUMBER() OVER (PARTITION BY aid, kind
+       |      ORDER BY cosine DESC, vec_id) AS rnk
+       |  FROM p)
+       |SELECT aid, kind, rnk, vec_id, cosine
+       |FROM r WHERE rnk <= 3 ORDER BY aid, kind, rnk""".stripMargin
 
   /** Apply ONE BPE merge (a, b) to a word's symbol list, LEFT-TO-RIGHT
     * and NON-OVERLAPPING — real BPE's application rule: scanning from
@@ -865,46 +917,20 @@ object DataSelection {
     // t64 is the corpus-scale face whose probe join carries no forced
     // broadcast. Fixture shape: anchors broadcast with hoisted
     // norms (one float_dot per vector, not per pair), candidates score
-    // in one codegen'd map pass, and [[localLabelTopK]] pre-reduces each
-    // partition to ≤3 rows per (anchor, kind) BEFORE anything shuffles —
-    // the global window then ranks ≤ 3·keys·partitions survivors, so the
-    // quadratic scored stream never enters an exchange. (anchor, kind)
-    // keys scale linearly with N, so window parallelism holds at 100×.
-    // Ties break (cosine DESC, vec_id ASC) ≡ localLabelTopK's
-    // (dist, id) ASC order on dist = -cosine — sign-flip is exact IEEE,
-    // so containment of the global top-3 in the local survivors is
-    // airtight.
+    // in one codegen'd map pass, and [[hardNegativeTopK]]'s
+    // [[localLabelTopK]] pre-reduces each partition before anything
+    // shuffles, so the quadratic scored stream never enters an exchange.
+    // (anchor, kind) keys scale linearly with N, so window parallelism
+    // holds at 100×. Ties break (cosine DESC, vec_id ASC), which keeps
+    // the global top-3 inside the local survivors.
     "t57_hard_negatives" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val emb = t(spark, dir, "embeddings")
           .withColumn("nrm", expr(dotSql("embedding", "embedding")))
         val anchors = emb.filter(col("vec_id") % 100 === 0)
           .select(col("vec_id").as("aid"), col("embedding").as("aemb"),
             col("label").as("albl"), col("nrm").as("anrm"))
-        // packed int key: (aid/100)*2 + kind bit — anchors are multiples
-        // of 100, so the key is collision-free and fits localLabelTopK's
-        // (label, vec_id, dist) contract
-        val keyed = emb.crossJoin(broadcast(anchors))
-          .filter(col("vec_id") =!= col("aid"))
-          .select(
-            (expr("CAST(aid div 100 AS INT)") * 2
-              + when(col("label") === col("albl"), 0).otherwise(1))
-              .as("label"),
-            col("vec_id"),
-            (-(expr(dotSql("embedding", "aemb")).cast("double") /
-              (sqrt(col("anrm").cast("double"))
-                * sqrt(col("nrm").cast("double"))))).as("dist"))
-        val reduced = localLabelTopK(keyed, 3)
-          .select(expr("CAST((label div 2) * 100 AS BIGINT)").as("aid"),
-            when(col("label") % 2 === 0, "pos").otherwise("neg").as("kind"),
-            col("vec_id"), (-col("dist")).as("cosine"))
-        val w = Window.partitionBy("aid", "kind")
-          .orderBy(col("cosine").desc, col("vec_id"))
-        reduced.withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 3)
-          .select("aid", "kind", "rnk", "vec_id", "cosine")
-          .orderBy("aid", "kind", "rnk")
+        hardNegativeTopK(emb.crossJoin(broadcast(anchors)))
       },
       Some(s"""WITH n AS (
              |  SELECT vec_id, embedding, label,
@@ -914,20 +940,7 @@ object DataSelection {
              |  SELECT vec_id AS aid, embedding AS aemb, label AS albl,
              |         nrm AS anrm
              |  FROM n WHERE vec_id % 100 = 0),
-             |p AS (
-             |  SELECT a.aid,
-             |    CASE WHEN n.label = a.albl THEN 'pos' ELSE 'neg' END AS kind,
-             |    n.vec_id,
-             |    ${dotDuck("n.embedding", "a.aemb")}
-             |      / (sqrt(a.anrm) * sqrt(n.nrm)) AS cosine
-             |  FROM n, a WHERE n.vec_id <> a.aid),
-             |r AS (
-             |  SELECT aid, kind, vec_id, cosine,
-             |    ROW_NUMBER() OVER (PARTITION BY aid, kind
-             |      ORDER BY cosine DESC, vec_id) AS rnk
-             |  FROM p)
-             |SELECT aid, kind, rnk, vec_id, cosine
-             |FROM r WHERE rnk <= 3 ORDER BY aid, kind, rnk""".stripMargin)),
+             |${hardNegativeTopKDuck("FROM n, a WHERE n.vec_id <> a.aid")}""".stripMargin)),
 
     // ----------------------------------------------------------------- t59
     // TOKENIZER FERTILITY per language — the multilingual-pretraining
@@ -1194,89 +1207,42 @@ object DataSelection {
     // the corpus (t26's ⌈√N⌉ lesson; 8 cells is this op's pinned
     // fixture config, interpolated into the oracle, so scaling it is
     // a config change like t102's width, not a plan change). The tail
-    // is t57's localLabelTopK pre-reduce + anchor-keyed window
-    // verbatim. HardNegativeSpec measures the recall this buys against
+    // is t57's, [[hardNegativeTopK]]. HardNegativeSpec measures the recall this buys against
     // t57's exact answer — the t31 discipline: approximate paths ship
     // with their measured recall, not a hope.
     "t64_hard_negatives_ivf" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        import TrainingData.planeCol
-        val cdots = array((1 to 8)
-          .map(k => dotCol(col("embedding"), planeCol(k + 100))): _*)
-        val assigned = t(spark, dir, "embeddings")
-          .withColumn("cdots", cdots)
-          .withColumn("cell",
-            expr("array_position(cdots, array_max(cdots))").cast("int"))
+        val assigned = ivf8Cells(t(spark, dir, "embeddings"))
           .withColumn("nrm", expr(dotSql("embedding", "embedding")))
         val anchors = assigned.filter(col("vec_id") % 100 === 0)
           .select(col("vec_id").as("aid"), col("embedding").as("aemb"),
             col("label").as("albl"), col("nrm").as("anrm"),
-            col("cell").as("p1"),
-            expr("array_position(cdots, element_at(array_sort(cdots), 7))")
-              .cast("int").as("p2"))
+            col("cell").as("p1"), ivf8Second.as("p2"))
         // array_distinct: on centroid-dot ties p2 resolves to p1's index
         // and a plain two-row explode would duplicate the (anchor,
         // candidate) pair — the OR-join this replaces emitted it once
         val probes = anchors.select(col("aid"), col("aemb"), col("albl"),
           col("anrm"),
           explode(array_distinct(array(col("p1"), col("p2")))).as("cell"))
-        val keyed = assigned.join(probes, Seq("cell"))
-          .filter(col("vec_id") =!= col("aid"))
-          .select(
-            (expr("CAST(aid div 100 AS INT)") * 2
-              + when(col("label") === col("albl"), 0).otherwise(1))
-              .as("label"),
-            col("vec_id"),
-            (-(expr(dotSql("embedding", "aemb")).cast("double") /
-              (sqrt(col("anrm").cast("double"))
-                * sqrt(col("nrm").cast("double"))))).as("dist"))
-        val reduced = localLabelTopK(keyed, 3)
-          .select(expr("CAST((label div 2) * 100 AS BIGINT)").as("aid"),
-            when(col("label") % 2 === 0, "pos").otherwise("neg").as("kind"),
-            col("vec_id"), (-col("dist")).as("cosine"))
-        val w = Window.partitionBy("aid", "kind")
-          .orderBy(col("cosine").desc, col("vec_id"))
-        reduced.withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 3)
-          .select("aid", "kind", "rnk", "vec_id", "cosine")
-          .orderBy("aid", "kind", "rnk")
+        hardNegativeTopK(assigned.join(probes, Seq("cell")))
       },
       Some {
-        import TrainingData.planeSql
-        def centList(k: Int): String =
-          s"list_transform(range(1, 65), d -> ${planeSql(k + 100, "d")})"
-        val cdots = (1 to 8)
-          .map(k => dotDuck("embedding", s"(${centList(k)})"))
-          .mkString("[", ", ", "]")
+        val pairs = """FROM assigned n JOIN a
+                      |    ON n.cell IN (a.p1, a.p2) AND n.vec_id <> a.aid""".stripMargin
         s"""WITH assigned AS (
            |  SELECT vec_id, label, embedding, cdots,
-           |    CAST(list_position(cdots, list_max(cdots)) AS INTEGER)
+           |    $ivf8BestDuck
            |      AS cell,
            |    ${dotDuck("embedding", "embedding")} AS nrm
-           |  FROM (SELECT vec_id, label, embedding, $cdots AS cdots
+           |  FROM (SELECT vec_id, label, embedding, $ivf8CdotsDuck AS cdots
            |        FROM embeddings)),
            |a AS (
            |  SELECT vec_id AS aid, embedding AS aemb, label AS albl,
            |    nrm AS anrm, cell AS p1,
-           |    CAST(list_position(cdots, list_sort(cdots)[7]) AS INTEGER)
+           |    $ivf8SecondDuck
            |      AS p2
            |  FROM assigned WHERE vec_id % 100 = 0),
-           |p AS (
-           |  SELECT a.aid,
-           |    CASE WHEN n.label = a.albl THEN 'pos' ELSE 'neg' END AS kind,
-           |    n.vec_id,
-           |    ${dotDuck("n.embedding", "a.aemb")}
-           |      / (sqrt(a.anrm) * sqrt(n.nrm)) AS cosine
-           |  FROM assigned n JOIN a
-           |    ON n.cell IN (a.p1, a.p2) AND n.vec_id <> a.aid),
-           |r AS (
-           |  SELECT aid, kind, vec_id, cosine,
-           |    ROW_NUMBER() OVER (PARTITION BY aid, kind
-           |      ORDER BY cosine DESC, vec_id) AS rnk
-           |  FROM p)
-           |SELECT aid, kind, rnk, vec_id, cosine
-           |FROM r WHERE rnk <= 3 ORDER BY aid, kind, rnk""".stripMargin
+           |${hardNegativeTopKDuck(pairs)}""".stripMargin
       }),
 
     // ---------------------------------------------------------------- t104
@@ -1321,16 +1287,14 @@ object DataSelection {
     // distinct probe cells, plain cell equi-join, planner-strategized
     // (AQE broadcasts the measured-small probe side; past 10 MiB it
     // shuffles on cell, where k ≈ √N keys keep reducers busy — the
-    // skew t64's 8 fixed cells would hit). Tail = t57's localLabelTopK
-    // pre-reduce + anchor-keyed window verbatim. HardNegativeSpec
+    // skew t64's 8 fixed cells would hit). Tail = t57's,
+    // [[hardNegativeTopK]]. HardNegativeSpec
     // measures recall vs t57's exact answer (the t31 discipline).
     "t104_hard_negatives_ivf_scaled" -> QueryDef(
       (spark, dir) => {
-        import org.apache.spark.sql.expressions.Window
         import spark.implicits._
         val emb = t(spark, dir, "embeddings")
-        val n = Tables.parquetRowCount(spark, s"$dir/embeddings.parquet")
-          .getOrElse(emb.count())
+        val n = Tables.rowCount(spark, dir, "embeddings")
         val k = ivfCellCount(n)
         val cents = ivfCentroids(k)
         // centroid self-norms via the same in-order double sum the
@@ -1387,30 +1351,14 @@ object DataSelection {
           .select(col("vec_id").as("aid"), col("label").as("albl"),
             col("embedding").as("aemb"), col("nrm").as("anrm"),
             explode(array(col("c1"), col("c2"))).as("cell"))
-        val keyed = cands.join(probes, Seq("cell"))
-          .filter(col("vec_id") =!= col("aid"))
-          .select(
-            (expr("CAST(aid div 100 AS INT)") * 2
-              + when(col("label") === col("albl"), 0).otherwise(1))
-              .as("label"),
-            col("vec_id"),
-            (-(expr(dotSql("embedding", "aemb")).cast("double") /
-              (sqrt(col("anrm")) * sqrt(col("nrm"))))).as("dist"))
-        val reduced = localLabelTopK(keyed, 3)
-          .select(expr("CAST((label div 2) * 100 AS BIGINT)").as("aid"),
-            when(col("label") % 2 === 0, "pos").otherwise("neg").as("kind"),
-            col("vec_id"), (-col("dist")).as("cosine"))
-        val w = Window.partitionBy("aid", "kind")
-          .orderBy(col("cosine").desc, col("vec_id"))
-        reduced.withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 3)
-          .select("aid", "kind", "rnk", "vec_id", "cosine")
-          .orderBy("aid", "kind", "rnk")
+        hardNegativeTopK(cands.join(probes, Seq("cell")))
       },
       Some {
         val hex8 = (1 to 8).map { i =>
           s"(instr('0123456789abcdef', substr(h, $i, 1)) - 1) * ${1L << (4 * (8 - i))}"
         }.mkString(" + ")
+        val pairs = """FROM cand n JOIN anch a
+                      |    ON n.cell = a.cell AND n.vec_id <> a.aid""".stripMargin
         s"""WITH nk AS (
            |  SELECT GREATEST(8, LEAST(16384,
            |    CAST(CEIL(SQRT(COUNT(*))) AS INT))) AS k
@@ -1445,21 +1393,7 @@ object DataSelection {
            |  SELECT vec_id AS aid, label AS albl, embedding AS aemb,
            |    nrm AS anrm, cell
            |  FROM rk WHERE vec_id % 100 = 0 AND rnk <= 2),
-           |p AS (
-           |  SELECT a.aid,
-           |    CASE WHEN n.label = a.albl THEN 'pos' ELSE 'neg' END AS kind,
-           |    n.vec_id,
-           |    ${dotDuck("n.embedding", "a.aemb")}
-           |      / (sqrt(a.anrm) * sqrt(n.nrm)) AS cosine
-           |  FROM cand n JOIN anch a
-           |    ON n.cell = a.cell AND n.vec_id <> a.aid),
-           |r AS (
-           |  SELECT aid, kind, vec_id, cosine,
-           |    ROW_NUMBER() OVER (PARTITION BY aid, kind
-           |      ORDER BY cosine DESC, vec_id) AS rnk
-           |  FROM p)
-           |SELECT aid, kind, rnk, vec_id, cosine
-           |FROM r WHERE rnk <= 3 ORDER BY aid, kind, rnk""".stripMargin
+           |${hardNegativeTopKDuck(pairs)}""".stripMargin
       }),
 
     // ----------------------------------------------------------------- t47
@@ -2079,8 +2013,7 @@ object DataSelection {
         import org.apache.spark.sql.expressions.Window
         val docs = t(spark, dir, "documents")
         // N from parquet footers (t26's recipe), not a count() job (r21)
-        val nDocs = Tables.parquetRowCount(spark, s"$dir/documents.parquet")
-          .getOrElse(docs.count())
+        val nDocs = Tables.rowCount(spark, dir, "documents")
         val winT = Window.partitionBy("term")
         val winD = Window.partitionBy("doc_id")
           .orderBy(col("score").desc, col("term"))

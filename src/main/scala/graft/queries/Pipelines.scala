@@ -195,6 +195,25 @@ object Pipelines {
         .getBytes("UTF-8"))
   }
 
+  /** p22's and p25's DuckDB CTEs for t54's eval split and ANY-hit
+    * 13-gram rule: `d` (documents with their words) and `dirty` (the
+    * training docs sharing a 13-gram with an eval doc). */
+  private val evalGramsDirtyDuck: String =
+    """WITH d AS (
+      |  SELECT doc_id, text, string_split(text, ' ') AS words,
+      |         len(string_split(text, ' ')) AS n_words
+      |  FROM documents),
+      |pos AS (
+      |  SELECT doc_id, words, unnest(range(1, n_words - 11)) AS p
+      |  FROM d WHERE n_words >= 13),
+      |ng AS (
+      |  SELECT doc_id, array_to_string(words[p:p+12], ' ') AS g
+      |  FROM pos),
+      |ev AS (SELECT DISTINCT g FROM ng WHERE doc_id % 50 = 0),
+      |dirty AS (
+      |  SELECT DISTINCT n.doc_id FROM ng n JOIN ev USING (g)
+      |  WHERE n.doc_id % 50 <> 0)""".stripMargin
+
   val defs: Map[String, QueryDef] = Map(
 
     // ----------------------------------------------------------------- p01
@@ -1185,18 +1204,7 @@ object Pipelines {
           .orderBy("user_id", "session_seq")
       },
       // batch t93's oracle VERBATIM — the whole point of the gate
-      Some(s"""WITH ${graft.queries.Relational.sessionizedDuck(Seq("event_type"))},
-             |n AS (
-             |  SELECT *, ROW_NUMBER() OVER (
-             |      PARTITION BY user_id, session_seq
-             |      ORDER BY us, event_id) AS wn
-             |  FROM s)
-             |SELECT user_id, session_seq, COUNT(*) AS n_events,
-             |  CAST(MAX(us) - MIN(us) AS BIGINT) AS dur_us,
-             |  COALESCE(string_agg(event_type, '>' ORDER BY us, event_id)
-             |    FILTER (WHERE wn <= 50), '') AS seq
-             |FROM n GROUP BY user_id, session_seq
-             |ORDER BY user_id, session_seq""".stripMargin)),
+      DataSelection.defs("t93_session_sequences").oracle),
 
     // ----------------------------------------------------------------- p21
     // PARTITIONED-TABLE TIME TRAVEL — closes the last documented
@@ -1405,20 +1413,7 @@ object Pipelines {
       // t01's digest + t54's eval split and ANY-hit gram rule, fused:
       // the expected kept set is one row per distinct clean training
       // digest — n_kept hard-codes 1 because that IS the contract
-      Some("""WITH d AS (
-             |  SELECT doc_id, text, string_split(text, ' ') AS words,
-             |         len(string_split(text, ' ')) AS n_words
-             |  FROM documents),
-             |pos AS (
-             |  SELECT doc_id, words, unnest(range(1, n_words - 11)) AS p
-             |  FROM d WHERE n_words >= 13),
-             |ng AS (
-             |  SELECT doc_id, array_to_string(words[p:p+12], ' ') AS g
-             |  FROM pos),
-             |ev AS (SELECT DISTINCT g FROM ng WHERE doc_id % 50 = 0),
-             |dirty AS (
-             |  SELECT DISTINCT n.doc_id FROM ng n JOIN ev USING (g)
-             |  WHERE n.doc_id % 50 <> 0)
+      Some(s"""$evalGramsDirtyDuck
              |SELECT DISTINCT md5(text) AS content_hash,
              |  CAST(1 AS BIGINT) AS n_kept
              |FROM d
@@ -1473,26 +1468,7 @@ object Pipelines {
       // t36's oracle restricted to its keep verdict: the docs phase B
       // must emit are exactly the new docs with no exact- or band-hit
       // against the old corpus
-      Some(s"""WITH ${TrainingData.minhashBandsDuck},
-              |flag AS (
-              |  SELECT doc_id, CAST(substr(source, 4) AS INT) >= 10 AS is_new
-              |  FROM documents),
-              |h AS (SELECT doc_id, md5(text) AS h FROM documents),
-              |oldh AS (
-              |  SELECT DISTINCT h.h FROM h JOIN flag USING (doc_id)
-              |  WHERE NOT is_new),
-              |exact AS (
-              |  SELECT DISTINCT h.doc_id FROM h
-              |  JOIN flag USING (doc_id) JOIN oldh ON oldh.h = h.h
-              |  WHERE flag.is_new),
-              |oldb AS (
-              |  SELECT DISTINCT band, bucket FROM bands
-              |  JOIN flag USING (doc_id) WHERE NOT is_new),
-              |near AS (
-              |  SELECT DISTINCT b.doc_id FROM bands b
-              |  JOIN flag USING (doc_id)
-              |  JOIN oldb USING (band, bucket)
-              |  WHERE flag.is_new)
+      Some(s"""${Curation.incrementalDedupDuck}
               |SELECT f.doc_id FROM flag f
               |LEFT JOIN exact e ON e.doc_id = f.doc_id
               |LEFT JOIN near n ON n.doc_id = f.doc_id
@@ -1616,20 +1592,7 @@ object Pipelines {
       },
       // p22's ANY-hit 13-gram rule, minus the dedup leg (no clones in
       // this fixture): kept = clean training docs, keyed by doc_id
-      Some("""WITH d AS (
-             |  SELECT doc_id, text, string_split(text, ' ') AS words,
-             |         len(string_split(text, ' ')) AS n_words
-             |  FROM documents),
-             |pos AS (
-             |  SELECT doc_id, words, unnest(range(1, n_words - 11)) AS p
-             |  FROM d WHERE n_words >= 13),
-             |ng AS (
-             |  SELECT doc_id, array_to_string(words[p:p+12], ' ') AS g
-             |  FROM pos),
-             |ev AS (SELECT DISTINCT g FROM ng WHERE doc_id % 50 = 0),
-             |dirty AS (
-             |  SELECT DISTINCT n.doc_id FROM ng n JOIN ev USING (g)
-             |  WHERE n.doc_id % 50 <> 0)
+      Some(s"""$evalGramsDirtyDuck
              |SELECT doc_id, md5(text) AS content_hash
              |FROM d
              |WHERE doc_id % 50 <> 0

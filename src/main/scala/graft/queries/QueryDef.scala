@@ -97,6 +97,13 @@ object Tables {
     Some(graft.connections.FileFormats.parquetFooterRows(conf, files.toSeq))
   }
 
+  /** Row count of fixture table `table` under `dir`: the footer count
+    * ([[parquetRowCount]]), else a count job over [[t]]'s frame. */
+  private[queries] def rowCount(spark: SparkSession, dir: String,
+      table: String): Long =
+    parquetRowCount(spark, s"$dir/$table.parquet")
+      .getOrElse(t(spark, dir, table).count())
+
   /** Memoized per (session, dir, table): `spark.read.parquet` re-lists the
     * directory and re-reads footers on every call, which across 40+ bench
     * queries is pure fixed overhead. DataFrames are immutable plans, so

@@ -453,6 +453,166 @@ object TrainingData {
     (1 to e).foldLeft(1L)((a, _) => a * 10)
   }
 
+  /** t13's 8 IVF cells, shared with t64 and t100: `cdots` holds the
+    * vector's dots with 8 literal centroids (the LCG plane family salted
+    * by k+100 — no materialized centroid table, so assignment stays in
+    * codegen) and `cell` is the best of them, 1-based. */
+  private[queries] def ivf8Cells(emb: DataFrame): DataFrame = emb
+    .withColumn("cdots", array((1 to 8)
+      .map(k => dotCol(col("embedding"), planeCol(k + 100))): _*))
+    .withColumn("cell", ivf8Best)
+
+  private def ivf8Best: Column =
+    expr("array_position(cdots, array_max(cdots))").cast("int")
+
+  /** The second-best cell over [[ivf8Cells]]' `cdots` (the 2-probe): the
+    * 7th of the 8 sorted dots. On a dot tie it resolves to the best
+    * cell's index. */
+  private[queries] def ivf8Second: Column =
+    expr("array_position(cdots, element_at(array_sort(cdots), 7))").cast("int")
+
+  /** DuckDB twins of [[ivf8Cells]]' `cdots` list and of the best and
+    * second-best cell over it. */
+  private[queries] def ivf8CdotsDuck: String = {
+    def centList(k: Int): String =
+      s"list_transform(range(1, 65), d -> ${planeSql(k + 100, "d")})"
+    (1 to 8)
+      .map(k => dotDuck("embedding", s"(${centList(k)})"))
+      .mkString("[", ", ", "]")
+  }
+  private[queries] def ivf8BestDuck: String =
+    "CAST(list_position(cdots, list_max(cdots)) AS INTEGER)"
+  private[queries] def ivf8SecondDuck: String =
+    "CAST(list_position(cdots, list_sort(cdots)[7]) AS INTEGER)"
+
+  /** SimHash near-dup pairs by exact pigeonhole banding (t18, t101,
+    * t105). `sims` carries doc_id and the fingerprint columns `fp`;
+    * band b's value is `bands(b)`. Pairs meeting in a (band, value)
+    * bucket are verified by `hamming` (over the `a.`/`b.` fingerprint
+    * columns) ≤ `r` and deduped as bare id pairs. */
+  private def simhashPairs(sims: DataFrame, fp: Seq[String],
+      bands: Seq[Column], hamming: Column, r: Int): DataFrame = {
+    val keep = ("doc_id" +: fp).map(col)
+    val banded = sims.select(keep :+ explode(array(bands.zipWithIndex.map {
+        case (v, b) => struct(lit(b).as("band"), v.as("value")) }: _*))
+        .as("bv"): _*)
+      .select(keep ++ Seq(col("bv.band"), col("bv.value")): _*)
+    banded.as("a").join(banded.as("b"),
+        col("a.band") === col("b.band") &&
+          col("a.value") === col("b.value") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        hamming.as("hamming"))
+      .filter(col("hamming") <= r)
+      .distinct()
+      .orderBy("doc_a", "doc_b")
+  }
+
+  /** [[simhashPairs]]' DuckDB twin over a `bands(doc_id, band, value)`
+    * relation, selecting `hamming` as `shown`. */
+  private def simhashPairsDuck(hamming: String, r: Int,
+      shown: String): String =
+    s"""SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       |  $shown AS hamming
+       |FROM bands a JOIN bands b
+       |  ON a.band = b.band AND a.value = b.value AND a.doc_id < b.doc_id
+       |WHERE $hamming <= $r
+       |ORDER BY doc_a, doc_b""".stripMargin
+
+  /** Embedding-cosine near-dup pairs from hyperplane band buckets (t12,
+    * t102): `signature` is the native expression giving one bucket per
+    * band. Pairs meeting in a (band, bucket) are re-ranked by exact
+    * cosine and kept at ≥ 0.2. */
+  private def cosinePairs(emb: DataFrame, signature: String): DataFrame = {
+    val bands = emb.select(col("vec_id"), posexplode(expr(signature)))
+      .select(col("vec_id"), (col("pos") + 1).cast("int").as("band"),
+        col("col").cast("int").as("bucket"))
+      // cache (tiny: one (id,band,bucket) row per band and vector) —
+      // recomputing the signature on both self-join sides measured 1.5×
+      // slower than materializing once (R3Lab)
+      .cache()
+    // candidates dedupe as bare id pairs (2 longs, never embeddings)
+    val cands = bands.as("a").join(bands.as("b"),
+        col("a.band") === col("b.band") &&
+          col("a.bucket") === col("b.bucket") &&
+          col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
+      .distinct()
+    // self-norms hoisted to the embedding scan (t26's discipline):
+    // one float_dot per VECTOR per side instead of two per PAIR —
+    // the candidate set is the quadratic regime, the corpus is the
+    // linear one. Same doubles, relocated by the join.
+    val ea = emb.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
+      expr(dotSql("embedding", "embedding")).as("na"))
+    val eb = emb.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
+      expr(dotSql("embedding", "embedding")).as("nb"))
+    cands.join(ea, "vec_a").join(eb, "vec_b")
+      .withColumn("dot", expr(dotSql("ea", "eb")))
+      .select(col("vec_a"), col("vec_b"),
+        (col("dot").cast("double") /
+          (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
+          .as("cosine"))
+      .filter(col("cosine") >= 0.2)
+      .orderBy("vec_a", "vec_b")
+  }
+
+  /** [[cosinePairs]]' DuckDB twin after `bands`, the CTE text (from
+    * WITH) that defines `bands(vec_id, band, bucket)`. */
+  private def cosinePairsDuck(bands: String): String = {
+    val cosine =
+      s"""${dotDuck("ea.embedding", "eb.embedding")}
+         |  / (sqrt(${dotDuck("ea.embedding", "ea.embedding")})
+         |     * sqrt(${dotDuck("eb.embedding", "eb.embedding")}))""".stripMargin
+    s"""$bands,
+       |cands AS (
+       |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+       |  FROM bands a JOIN bands b
+       |    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
+       |SELECT vec_a, vec_b, $cosine AS cosine
+       |FROM cands
+       |JOIN embeddings ea ON ea.vec_id = vec_a
+       |JOIN embeddings eb ON eb.vec_id = vec_b
+       |WHERE $cosine >= 0.2
+       |ORDER BY vec_a, vec_b""".stripMargin
+  }
+
+  /** Semantic decontamination's verdict (t98, t100) over (corpus, eval)
+    * rows — vec_id and embedding of the corpus vector, ev of the eval
+    * vector: per corpus vector, its eval hits at cosine ≥ 0.2, its max
+    * cosine and drop/keep. A corpus row paired with no eval (ev NULL)
+    * keeps NULL max_cos. */
+  private def decontaminateVerdict(paired: DataFrame): DataFrame =
+    paired
+      .withColumn("cos",
+        dotCol(col("embedding"), col("ev")).cast("double") /
+          (sqrt(dotCol(col("embedding"), col("embedding")).cast("double")) *
+            sqrt(dotCol(col("ev"), col("ev")).cast("double"))))
+      .groupBy("vec_id")
+      .agg(sum(when(col("cos") >= 0.2, 1L).otherwise(0L)).as("n_hits"),
+        max("cos").as("max_cos"))
+      .withColumn("verdict",
+        when(col("n_hits") > 0, "drop").otherwise("keep"))
+      .select(col("vec_id"), col("n_hits"), col("max_cos"), col("verdict"))
+
+  /** [[decontaminateVerdict]]'s DuckDB twin after `ctes` (from WITH),
+    * which define the corpus `c(vec_id, embedding)` and the eval side
+    * `e(ev)`; `pairs` follows the cosine column verbatim and pairs them
+    * (its FROM/JOIN clause, leading whitespace included). */
+  private def decontaminateVerdictDuck(ctes: String, pairs: String): String = {
+    val cos =
+      s"""(${dotDuck("c.embedding", "e.ev")}
+         |  / (sqrt(${dotDuck("c.embedding", "c.embedding")})
+         |     * sqrt(${dotDuck("e.ev", "e.ev")})))""".stripMargin
+    s"""$ctes,
+       |sc AS (SELECT c.vec_id, $cos AS cos$pairs)
+       |SELECT vec_id,
+       |  CAST(SUM(CASE WHEN cos >= 0.2 THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
+       |  MAX(cos) AS max_cos,
+       |  CASE WHEN SUM(CASE WHEN cos >= 0.2 THEN 1 ELSE 0 END) > 0
+       |    THEN 'drop' ELSE 'keep' END AS verdict
+       |FROM sc GROUP BY vec_id ORDER BY vec_id""".stripMargin
+  }
+
   val defs: Map[String, QueryDef] = Map(
 
     // ----------------------------------------------------------------- t01
@@ -774,48 +934,16 @@ object TrainingData {
     // non-density wall instead: the signature is one native expression
     // (see below) and the re-rank carries one dot per pair.
     "t12_cosine_neardup" -> QueryDef(
-      (spark, dir) => {
-        val emb = t(spark, dir, "embeddings")
-        // the full 4×16-bit signature is ONE native expression
-        // ([[graft.functions.HyperplaneBuckets64]]) — the composed 64×
-        // float_dot sign projection couldn't split inside whole-stage
-        // codegen and crossed the JVM huge-method JIT limit, running as
-        // interpreted bytecode (T12BandsLab: 13.6 s for 60k rows; the
-        // native pass is a tight compiled loop). Same planes, same
-        // ascending-index dot fold, same sign/bit packing — bit-identical
-        // buckets, pinned in HyperplaneBuckets64Spec.
-        val bands = emb.select(col("vec_id"),
-            posexplode(expr("hyperplane_buckets64(embedding)")))
-          .select(col("vec_id"), (col("pos") + 1).cast("int").as("band"),
-            col("col").cast("int").as("bucket"))
-          // cache (tiny: 4 (id,band,bucket) rows/vector) — recomputing the
-          // signature on both self-join sides measured 1.5× slower than
-          // materializing once (R3Lab)
-          .cache()
-
-        val cands = bands.as("a").join(bands.as("b"),
-            col("a.band") === col("b.band") &&
-              col("a.bucket") === col("b.bucket") &&
-              col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-          .distinct()
-        // self-norms hoisted to the embedding scan (t26's discipline):
-        // one float_dot per VECTOR per side instead of two per PAIR —
-        // the candidate set is the quadratic regime, the corpus is the
-        // linear one. Same doubles, relocated by the join.
-        val ea = emb.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-          expr(dotSql("embedding", "embedding")).as("na"))
-        val eb = emb.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-          expr(dotSql("embedding", "embedding")).as("nb"))
-        cands.join(ea, "vec_a").join(eb, "vec_b")
-          .withColumn("dot", expr(dotSql("ea", "eb")))
-          .select(col("vec_a"), col("vec_b"),
-            (col("dot").cast("double") /
-              (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-              .as("cosine"))
-          .filter(col("cosine") >= 0.2)
-          .orderBy("vec_a", "vec_b")
-      },
+      // the full 4×16-bit signature is ONE native expression
+      // ([[graft.functions.HyperplaneBuckets64]]) — the composed 64×
+      // float_dot sign projection couldn't split inside whole-stage
+      // codegen and crossed the JVM huge-method JIT limit, running as
+      // interpreted bytecode (T12BandsLab: 13.6 s for 60k rows; the
+      // native pass is a tight compiled loop). Same planes, same
+      // ascending-index dot fold, same sign/bit packing — bit-identical
+      // buckets, pinned in HyperplaneBuckets64Spec.
+      (spark, dir) => cosinePairs(t(spark, dir, "embeddings"),
+        "hyperplane_buckets64(embedding)"),
       Some({
         val planeList = (j: Int) =>
           s"list_transform(range(1, 65), d -> ${planeSql(j, "d")})"
@@ -826,11 +954,7 @@ object TrainingData {
           .mkString("(", " + ", ")")
         val bandCols = (1 to 4)
           .map(k => s"CAST(${bucketDuck(k)} AS INTEGER) AS b$k").mkString(",\n    ")
-        val cosine =
-          s"""${dotDuck("ea.embedding", "eb.embedding")}
-             |  / (sqrt(${dotDuck("ea.embedding", "ea.embedding")})
-             |     * sqrt(${dotDuck("eb.embedding", "eb.embedding")}))""".stripMargin
-        s"""WITH sig AS (
+        cosinePairsDuck(s"""WITH sig AS (
            |  SELECT vec_id,
            |    $bandCols
            |  FROM embeddings),
@@ -838,17 +962,7 @@ object TrainingData {
            |  SELECT vec_id, 1 AS band, b1 AS bucket FROM sig
            |  UNION ALL SELECT vec_id, 2, b2 FROM sig
            |  UNION ALL SELECT vec_id, 3, b3 FROM sig
-           |  UNION ALL SELECT vec_id, 4, b4 FROM sig),
-           |cands AS (
-           |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-           |  FROM bands a JOIN bands b
-           |    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
-           |SELECT vec_a, vec_b, $cosine AS cosine
-           |FROM cands
-           |JOIN embeddings ea ON ea.vec_id = vec_a
-           |JOIN embeddings eb ON eb.vec_id = vec_b
-           |WHERE $cosine >= 0.2
-           |ORDER BY vec_a, vec_b""".stripMargin
+           |  UNION ALL SELECT vec_id, 4, b4 FROM sig)""".stripMargin)
       })),
 
     // ----------------------------------------------------------------- t13
@@ -859,21 +973,12 @@ object TrainingData {
     // narrow shuffle-free map pass and the probe touches ~2/8 of the data.
     "t13_ann_ivf" -> QueryDef(
       (spark, dir) => {
-        val emb = t(spark, dir, "embeddings")
-        // centroid k: same LCG family as the LSH planes, salted by k+100
-        val cdots = array((1 to 8)
-          .map(k => dotCol(col("embedding"), planeCol(k + 100))): _*)
         // no materialization (see t06): literal centroids keep the whole
         // assignment in codegen; the q side prunes to one row at the scan
-        val assigned = emb
-          .withColumn("cdots", cdots)
-          .withColumn("cell",
-            expr("array_position(cdots, array_max(cdots))").cast("int"))
+        val assigned = ivf8Cells(t(spark, dir, "embeddings"))
         val q = assigned.filter(col("vec_id") === 0)
-          .select(col("embedding").as("q_emb"),
-            expr("array_position(cdots, array_max(cdots))").cast("int").as("p1"),
-            expr("array_position(cdots, element_at(array_sort(cdots), 7))")
-              .cast("int").as("p2"))
+          .select(col("embedding").as("q_emb"), ivf8Best.as("p1"),
+            ivf8Second.as("p2"))
         assigned.join(broadcast(q),
             col("cell") === col("p1") || col("cell") === col("p2"))
           .filter(col("vec_id") =!= 0)
@@ -887,29 +992,22 @@ object TrainingData {
           .orderBy(col("cosine").desc, col("vec_id"))
           .limit(10)
       },
-      Some({
-        def centList(k: Int): String =
-          s"list_transform(range(1, 65), d -> ${planeSql(k + 100, "d")})"
-        val cdots = (1 to 8)
-          .map(k => dotDuck("embedding", s"(${centList(k)})"))
-          .mkString("[", ", ", "]")
-        s"""WITH assigned AS (
-           |  SELECT vec_id, label, embedding, cdots,
-           |    CAST(list_position(cdots, list_max(cdots)) AS INTEGER) AS cell
-           |  FROM (SELECT vec_id, label, embedding, $cdots AS cdots FROM embeddings)),
-           |q AS (
-           |  SELECT embedding AS q_emb,
-           |    CAST(list_position(cdots, list_max(cdots)) AS INTEGER) AS p1,
-           |    CAST(list_position(cdots, list_sort(cdots)[7]) AS INTEGER) AS p2
-           |  FROM assigned WHERE vec_id = 0)
-           |SELECT a.vec_id, a.label, a.cell,
-           |  ${dotDuck("a.embedding", "q.q_emb")}
-           |  / (sqrt(${dotDuck("a.embedding", "a.embedding")})
-           |     * sqrt(${dotDuck("q.q_emb", "q.q_emb")})) AS cosine
-           |FROM assigned a JOIN q ON a.cell IN (q.p1, q.p2)
-           |WHERE a.vec_id <> 0
-           |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
-      })),
+      Some(s"""WITH assigned AS (
+             |  SELECT vec_id, label, embedding, cdots,
+             |    $ivf8BestDuck AS cell
+             |  FROM (SELECT vec_id, label, embedding, $ivf8CdotsDuck AS cdots FROM embeddings)),
+             |q AS (
+             |  SELECT embedding AS q_emb,
+             |    $ivf8BestDuck AS p1,
+             |    $ivf8SecondDuck AS p2
+             |  FROM assigned WHERE vec_id = 0)
+             |SELECT a.vec_id, a.label, a.cell,
+             |  ${dotDuck("a.embedding", "q.q_emb")}
+             |  / (sqrt(${dotDuck("a.embedding", "a.embedding")})
+             |     * sqrt(${dotDuck("q.q_emb", "q.q_emb")})) AS cosine
+             |FROM assigned a JOIN q ON a.cell IN (q.p1, q.p2)
+             |WHERE a.vec_id <> 0
+             |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin)),
 
     // ----------------------------------------------------------------- t15
     // Near-dup CLUSTERING: connected components over the MinHash+LSH
@@ -1144,35 +1242,19 @@ object TrainingData {
     // means widening the fingerprint with the corpus, which changes
     // the answer — a config, not a plan fix.
     "t18_simhash_neardup" -> QueryDef(
-      (spark, dir) => {
-        val sims = simhash16(spark, dir)
-        val bands = sims.select(col("doc_id"), col("simhash16"),
-          explode(array((0 until 2).map(b => struct(lit(b).as("band"),
-            ((col("simhash16") divide lit(1 << (8 * b))).cast("int") % 256)
-              .as("value"))): _*)).as("bv"))
-          .select(col("doc_id"), col("simhash16"),
-            col("bv.band"), col("bv.value"))
-        bands.as("a").join(bands.as("b"),
-            col("a.band") === col("b.band") &&
-              col("a.value") === col("b.value") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-            expr("bit_count(a.simhash16 ^ b.simhash16)").as("hamming"))
-          .filter(col("hamming") <= 1)
-          .distinct()
-          .orderBy("doc_a", "doc_b")
-      },
-      Some(s"""WITH $simhash16Duck,
-              |bands AS (
-              |  SELECT doc_id, simhash16, g.band AS band,
-              |    (simhash16 // CAST(pow(256, g.band) AS INTEGER)) % 256 AS value
-              |  FROM sims, generate_series(0, 1) AS g(band))
-              |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-              |  bit_count(CAST(xor(a.simhash16, b.simhash16) AS BIGINT)) AS hamming
-              |FROM bands a JOIN bands b
-              |  ON a.band = b.band AND a.value = b.value AND a.doc_id < b.doc_id
-              |WHERE bit_count(CAST(xor(a.simhash16, b.simhash16) AS BIGINT)) <= 1
-              |ORDER BY doc_a, doc_b""".stripMargin)),
+      (spark, dir) => simhashPairs(simhash16(spark, dir), Seq("simhash16"),
+        (0 until 2).map(b =>
+          (col("simhash16") divide lit(1 << (8 * b))).cast("int") % 256),
+        expr("bit_count(a.simhash16 ^ b.simhash16)"), 1),
+      Some {
+        val hamming = "bit_count(CAST(xor(a.simhash16, b.simhash16) AS BIGINT))"
+        s"""WITH $simhash16Duck,
+           |bands AS (
+           |  SELECT doc_id, simhash16, g.band AS band,
+           |    (simhash16 // CAST(pow(256, g.band) AS INTEGER)) % 256 AS value
+           |  FROM sims, generate_series(0, 1) AS g(band))
+           |${simhashPairsDuck(hamming, 1, hamming)}""".stripMargin
+      }),
 
     // ---------------------------------------------------------------- t101
     // SimHash near-dup pairs at CORPUS-SCALABLE width — the r17
@@ -1202,35 +1284,19 @@ object TrainingData {
     // ⌈log₂N⌉+4), the same surgery t102 gave t12; this entry stays
     // the oracle-pinned 64-bit family link.
     "t101_simhash64_neardup" -> QueryDef(
-      (spark, dir) => {
-        val sims = simhash64(spark, dir)
-        val bands = sims.select(col("doc_id"), col("simhash64"),
-          explode(array((0 until 4).map(b => struct(lit(b).as("band"),
-            expr(s"cast(shiftright(simhash64, ${16 * b}) & 65535 as int)")
-              .as("value"))): _*)).as("bv"))
-          .select(col("doc_id"), col("simhash64"),
-            col("bv.band"), col("bv.value"))
-        bands.as("a").join(bands.as("b"),
-            col("a.band") === col("b.band") &&
-              col("a.value") === col("b.value") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-            expr("bit_count(a.simhash64 ^ b.simhash64)").as("hamming"))
-          .filter(col("hamming") <= 3)
-          .distinct()
-          .orderBy("doc_a", "doc_b")
-      },
-      Some(s"""WITH $simhash64Duck,
-              |bands AS (
-              |  SELECT doc_id, simhash64, g.band AS band,
-              |    (simhash64 >> (16 * g.band)) & 65535 AS value
-              |  FROM sims64, generate_series(0, 3) AS g(band))
-              |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-              |  bit_count(xor(a.simhash64, b.simhash64)) AS hamming
-              |FROM bands a JOIN bands b
-              |  ON a.band = b.band AND a.value = b.value AND a.doc_id < b.doc_id
-              |WHERE bit_count(xor(a.simhash64, b.simhash64)) <= 3
-              |ORDER BY doc_a, doc_b""".stripMargin)),
+      (spark, dir) => simhashPairs(simhash64(spark, dir), Seq("simhash64"),
+        (0 until 4).map(b =>
+          expr(s"cast(shiftright(simhash64, ${16 * b}) & 65535 as int)")),
+        expr("bit_count(a.simhash64 ^ b.simhash64)"), 3),
+      Some {
+        val hamming = "bit_count(xor(a.simhash64, b.simhash64))"
+        s"""WITH $simhash64Duck,
+           |bands AS (
+           |  SELECT doc_id, simhash64, g.band AS band,
+           |    (simhash64 >> (16 * g.band)) & 65535 AS value
+           |  FROM sims64, generate_series(0, 3) AS g(band))
+           |${simhashPairsDuck(hamming, 3, hamming)}""".stripMargin
+      }),
 
     // ---------------------------------------------------------------- t105
     // SimHash near-dup pairs with the BAND width scheduled to the
@@ -1262,43 +1328,28 @@ object TrainingData {
     "t105_simhash128_neardup" -> QueryDef(
       (spark, dir) => {
         val sims = simhash128(spark, dir)
-        val n = Tables.parquetRowCount(spark, s"$dir/documents.parquet")
-          .getOrElse(t(spark, dir, "documents").count())
-        val w = simhash128BandBits(n)
+        val w = simhash128BandBits(Tables.rowCount(spark, dir, "documents"))
         val mask = (1L << w) - 1
-        val bands = sims.select(col("doc_id"), col("w0"), col("w1"),
-          explode(array((0 until 4).map(b => struct(lit(b).as("band"),
+        simhashPairs(sims, Seq("w0", "w1"),
+          (0 until 4).map(b =>
             expr(s"shiftright(${if (b < 2) "w0" else "w1"}, ${32 * (b % 2)})"
-              + s" & ${mask}L").as("value"))): _*)).as("bv"))
-          .select(col("doc_id"), col("w0"), col("w1"),
-            col("bv.band"), col("bv.value"))
-        bands.as("a").join(bands.as("b"),
-            col("a.band") === col("b.band") &&
-              col("a.value") === col("b.value") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-            expr("bit_count(a.w0 ^ b.w0) + bit_count(a.w1 ^ b.w1)")
-              .cast("int").as("hamming"))
-          .filter(col("hamming") <= 3)
-          .distinct()
-          .orderBy("doc_a", "doc_b")
+              + s" & ${mask}L")),
+          expr("bit_count(a.w0 ^ b.w0) + bit_count(a.w1 ^ b.w1)").cast("int"), 3)
       },
-      Some(s"""WITH $simhash128Duck,
-              |wcfg AS (
-              |  SELECT GREATEST(16, LEAST(32, LENGTH(bin(COUNT(*) - 1)) + 4)) AS w
-              |  FROM documents),
-              |bands AS (
-              |  SELECT doc_id, w0, w1, g.band AS band,
-              |    (CASE WHEN g.band < 2 THEN w0 ELSE w1 END >> (32 * (g.band % 2)))
-              |      & ((CAST(1 AS BIGINT) << w) - 1) AS value
-              |  FROM sims128, wcfg, generate_series(0, 3) AS g(band))
-              |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-              |  CAST(bit_count(xor(a.w0, b.w0)) + bit_count(xor(a.w1, b.w1))
-              |    AS INTEGER) AS hamming
-              |FROM bands a JOIN bands b
-              |  ON a.band = b.band AND a.value = b.value AND a.doc_id < b.doc_id
-              |WHERE bit_count(xor(a.w0, b.w0)) + bit_count(xor(a.w1, b.w1)) <= 3
-              |ORDER BY doc_a, doc_b""".stripMargin)),
+      Some {
+        val hamming = "bit_count(xor(a.w0, b.w0)) + bit_count(xor(a.w1, b.w1))"
+        val shown = s"CAST($hamming\n    AS INTEGER)"
+        s"""WITH $simhash128Duck,
+           |wcfg AS (
+           |  SELECT GREATEST(16, LEAST(32, LENGTH(bin(COUNT(*) - 1)) + 4)) AS w
+           |  FROM documents),
+           |bands AS (
+           |  SELECT doc_id, w0, w1, g.band AS band,
+           |    (CASE WHEN g.band < 2 THEN w0 ELSE w1 END >> (32 * (g.band % 2)))
+           |      & ((CAST(1 AS BIGINT) << w) - 1) AS value
+           |  FROM sims128, wcfg, generate_series(0, 3) AS g(band))
+           |${simhashPairsDuck(hamming, 3, shown)}""".stripMargin
+      }),
 
     // ---------------------------------------------------------------- t102
     // Embedding-cosine near-dup pairs at CORPUS-SCALABLE band width —
@@ -1345,41 +1396,17 @@ object TrainingData {
     // the 100 TB face.
     "t102_cosine_neardup_wide" -> QueryDef(
       (spark, dir) => {
-        val emb = t(spark, dir, "embeddings")
         // r20: the WIDTH SCHEDULE above is COMPUTED here (and derived
         // independently by the oracle's wcfg CTE) instead of pinning
         // 8×24 and documenting the schedule — the t104 treatment
         // ([[hyperplaneBandBits]]): both fixture SFs derive the pinned
         // 8×24, so the oracle point is unchanged; a 10⁷-vector corpus
         // derives 8×28 without anyone editing a constant. N is a
-        // parquet-footer metadata read (Tables.parquetRowCount), not a
+        // parquet-footer metadata read (Tables.rowCount), not a
         // Spark job, on any sanely-filed table.
-        val nVec = Tables.parquetRowCount(spark, s"$dir/embeddings.parquet")
-          .getOrElse(emb.count())
-        val bits = hyperplaneBandBits(nVec)
-        val bands = emb.select(col("vec_id"),
-            posexplode(expr(s"hyperplane_bands(embedding, 8, $bits)")))
-          .select(col("vec_id"), (col("pos") + 1).cast("int").as("band"),
-            col("col").cast("int").as("bucket"))
-          .cache()
-        val cands = bands.as("a").join(bands.as("b"),
-            col("a.band") === col("b.band") &&
-              col("a.bucket") === col("b.bucket") &&
-              col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-          .distinct()
-        val ea = emb.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-          expr(dotSql("embedding", "embedding")).as("na"))
-        val eb = emb.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-          expr(dotSql("embedding", "embedding")).as("nb"))
-        cands.join(ea, "vec_a").join(eb, "vec_b")
-          .withColumn("dot", expr(dotSql("ea", "eb")))
-          .select(col("vec_a"), col("vec_b"),
-            (col("dot").cast("double") /
-              (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-              .as("cosine"))
-          .filter(col("cosine") >= 0.2)
-          .orderBy("vec_a", "vec_b")
+        val bits = hyperplaneBandBits(Tables.rowCount(spark, dir, "embeddings"))
+        cosinePairs(t(spark, dir, "embeddings"),
+          s"hyperplane_bands(embedding, 8, $bits)")
       },
       Some({
         // the md5 plane family derived IN SQL (same 8-hex-digit parse
@@ -1388,11 +1415,7 @@ object TrainingData {
         val hex8 = (1 to 8).map { i =>
           s"(instr('0123456789abcdef', substr(h, $i, 1)) - 1) * ${1L << (4 * (8 - i))}"
         }.mkString(" + ")
-        val cosine =
-          s"""${dotDuck("ea.embedding", "eb.embedding")}
-             |  / (sqrt(${dotDuck("ea.embedding", "ea.embedding")})
-             |     * sqrt(${dotDuck("eb.embedding", "eb.embedding")}))""".stripMargin
-        s"""WITH wcfg AS (
+        cosinePairsDuck(s"""WITH wcfg AS (
            |  SELECT GREATEST(24, LEAST(30, LENGTH(bin(COUNT(*) - 1)) + 4)) AS bits
            |  FROM embeddings),
            |ph AS (
@@ -1408,17 +1431,7 @@ object TrainingData {
            |                  THEN CAST(1 AS BIGINT) << CAST((p.j - 1) % w.bits AS INTEGER)
            |                  ELSE 0 END) AS INTEGER) AS bucket
            |  FROM embeddings e, planes p, wcfg w
-           |  GROUP BY e.vec_id, (p.j - 1) // w.bits),
-           |cands AS (
-           |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-           |  FROM bands a JOIN bands b
-           |    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
-           |SELECT vec_a, vec_b, $cosine AS cosine
-           |FROM cands
-           |JOIN embeddings ea ON ea.vec_id = vec_a
-           |JOIN embeddings eb ON eb.vec_id = vec_b
-           |WHERE $cosine >= 0.2
-           |ORDER BY vec_a, vec_b""".stripMargin
+           |  GROUP BY e.vec_id, (p.j - 1) // w.bits)""".stripMargin)
       })),
 
     // ----------------------------------------------------------------- t69
@@ -2447,36 +2460,15 @@ object TrainingData {
         val evalSet = emb.filter(pmod(col("vec_id"), lit(20)) === 0)
           .select(col("vec_id").as("eval_id"), col("embedding").as("ev"))
         val corpus = emb.filter(pmod(col("vec_id"), lit(20)) =!= 0)
-        corpus.crossJoin(broadcast(evalSet))
-          .withColumn("cos",
-            dotCol(col("embedding"), col("ev")).cast("double") /
-              (sqrt(dotCol(col("embedding"), col("embedding")).cast("double")) *
-                sqrt(dotCol(col("ev"), col("ev")).cast("double"))))
-          .groupBy("vec_id")
-          .agg(sum(when(col("cos") >= 0.2, 1L).otherwise(0L)).as("n_hits"),
-            max("cos").as("max_cos"))
-          .withColumn("verdict",
-            when(col("n_hits") > 0, "drop").otherwise("keep"))
-          .select(col("vec_id"), col("n_hits"), col("max_cos"), col("verdict"))
+        decontaminateVerdict(corpus.crossJoin(broadcast(evalSet)))
       },
-      Some {
-        val cos =
-          s"""(${dotDuck("c.embedding", "e.ev")}
-             |  / (sqrt(${dotDuck("c.embedding", "c.embedding")})
-             |     * sqrt(${dotDuck("e.ev", "e.ev")})))""".stripMargin
-        s"""WITH e AS (
-           |  SELECT vec_id AS eval_id, embedding AS ev FROM embeddings
-           |  WHERE vec_id % 20 = 0),
-           |c AS (
-           |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0),
-           |sc AS (SELECT c.vec_id, $cos AS cos FROM c, e)
-           |SELECT vec_id,
-           |  CAST(SUM(CASE WHEN cos >= 0.2 THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           |  MAX(cos) AS max_cos,
-           |  CASE WHEN SUM(CASE WHEN cos >= 0.2 THEN 1 ELSE 0 END) > 0
-           |    THEN 'drop' ELSE 'keep' END AS verdict
-           |FROM sc GROUP BY vec_id ORDER BY vec_id""".stripMargin
-      },
+      Some(decontaminateVerdictDuck(
+        """WITH e AS (
+          |  SELECT vec_id AS eval_id, embedding AS ev FROM embeddings
+          |  WHERE vec_id % 20 = 0),
+          |c AS (
+          |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 20 <> 0)""".stripMargin,
+        " FROM c, e")),
       hashOrder = Seq("vec_id")),
 
     // ----------------------------------------------------------------- t99
@@ -2608,67 +2600,33 @@ object TrainingData {
     // keep NULL max_cos in both engines.
     "t100_semantic_decontaminate_ivf" -> QueryDef(
       (spark, dir) => {
-        val emb = t(spark, dir, "embeddings")
-        val cdots = array((1 to 8)
-          .map(k => dotCol(col("embedding"), planeCol(k + 100))): _*)
-        val assigned = emb
-          .withColumn("cdots", cdots)
-          .withColumn("cell",
-            expr("array_position(cdots, array_max(cdots))").cast("int"))
+        val assigned = ivf8Cells(t(spark, dir, "embeddings"))
         val corpus = assigned.filter(pmod(col("vec_id"), lit(20)) =!= 0)
           .select(col("vec_id"), col("embedding"), col("cell"))
         val evalCells = assigned.filter(pmod(col("vec_id"), lit(20)) === 0)
-          .withColumn("p2",
-            expr("array_position(cdots, element_at(array_sort(cdots), 7))")
-              .cast("int"))
+          .withColumn("p2", ivf8Second)
           .select(col("vec_id").as("eval_id"), col("embedding").as("ev"),
             explode(array(col("cell"), col("p2"))).as("cell"))
           .distinct() // a centroid-dot tie could make p1 = p2
-        corpus.join(broadcast(evalCells), Seq("cell"), "left")
-          .withColumn("cos",
-            dotCol(col("embedding"), col("ev")).cast("double") /
-              (sqrt(dotCol(col("embedding"), col("embedding")).cast("double")) *
-                sqrt(dotCol(col("ev"), col("ev")).cast("double"))))
-          .groupBy("vec_id")
-          .agg(sum(when(col("cos") >= 0.2, 1L).otherwise(0L)).as("n_hits"),
-            max("cos").as("max_cos"))
-          .withColumn("verdict",
-            when(col("n_hits") > 0, "drop").otherwise("keep"))
-          .select(col("vec_id"), col("n_hits"), col("max_cos"), col("verdict"))
+        decontaminateVerdict(
+          corpus.join(broadcast(evalCells), Seq("cell"), "left"))
       },
-      Some {
-        def centList(k: Int): String =
-          s"list_transform(range(1, 65), d -> ${planeSql(k + 100, "d")})"
-        val cdots = (1 to 8)
-          .map(k => dotDuck("embedding", s"(${centList(k)})"))
-          .mkString("[", ", ", "]")
-        val cos =
-          s"""(${dotDuck("c.embedding", "e.ev")}
-             |  / (sqrt(${dotDuck("c.embedding", "c.embedding")})
-             |     * sqrt(${dotDuck("e.ev", "e.ev")})))""".stripMargin
+      Some(decontaminateVerdictDuck(
         s"""WITH a AS (
            |  SELECT vec_id, embedding, cdots,
-           |    CAST(list_position(cdots, list_max(cdots)) AS INTEGER) AS cell
-           |  FROM (SELECT vec_id, embedding, $cdots AS cdots FROM embeddings)),
+           |    $ivf8BestDuck AS cell
+           |  FROM (SELECT vec_id, embedding, $ivf8CdotsDuck AS cdots FROM embeddings)),
            |c AS (
            |  SELECT vec_id, embedding, cell FROM a WHERE vec_id % 20 <> 0),
            |e0 AS (
            |  SELECT vec_id AS eval_id, embedding AS ev, cell AS p1,
-           |    CAST(list_position(cdots, list_sort(cdots)[7]) AS INTEGER) AS p2
+           |    $ivf8SecondDuck AS p2
            |  FROM a WHERE vec_id % 20 = 0),
            |e AS (
            |  SELECT DISTINCT eval_id, ev, cell FROM (
            |    SELECT eval_id, ev, p1 AS cell FROM e0
-           |    UNION ALL SELECT eval_id, ev, p2 FROM e0)),
-           |sc AS (SELECT c.vec_id, $cos AS cos
-           |       FROM c LEFT JOIN e ON c.cell = e.cell)
-           |SELECT vec_id,
-           |  CAST(SUM(CASE WHEN cos >= 0.2 THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           |  MAX(cos) AS max_cos,
-           |  CASE WHEN SUM(CASE WHEN cos >= 0.2 THEN 1 ELSE 0 END) > 0
-           |    THEN 'drop' ELSE 'keep' END AS verdict
-           |FROM sc GROUP BY vec_id ORDER BY vec_id""".stripMargin
-      },
+           |    UNION ALL SELECT eval_id, ev, p2 FROM e0))""".stripMargin,
+        "\n       FROM c LEFT JOIN e ON c.cell = e.cell")),
       hashOrder = Seq("vec_id"))
   )
 }

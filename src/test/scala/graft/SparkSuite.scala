@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MapType
 import graft.core.GraftSession
 
 /** Shared session for all suites (one JVM-wide session, cheap getOrCreate).
@@ -41,5 +43,25 @@ object SparkSuite {
       if (n == last) still += 1 else { last = n; still = 0 }
     }
     last
+  }
+
+  /** `rows:lo:hi:schema`, the order-insensitive digest perfbench records
+    * in `perfbench/goldens.json`: the row count, the sums of the low and
+    * high 32 bits of each row's xxhash64, and the hash of the schema. */
+  def digest(df: DataFrame): String = {
+    val cols = df.schema.fields.toSeq.map { f =>
+      val c = col("`" + f.name.replace("`", "``") + "`")
+      f.dataType match {
+        case _: MapType => array_sort(map_entries(c))
+        case _ => c
+      }
+    }
+    val h = xxhash64(cols: _*)
+    val r = df.agg(count(lit(1)),
+      coalesce(sum(h.bitwiseAND(lit(0xFFFFFFFFL))), lit(0L)),
+      coalesce(sum(shiftrightunsigned(h, 32)), lit(0L))).head()
+    val schema = df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}")
+      .mkString(",")
+    f"${r.getLong(0)}%d:${r.getLong(1)}%d:${r.getLong(2)}%d:${schema.hashCode}%08x"
   }
 }

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.MapType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The five streaming gates (p20, p22–p25) at sf0.001 on the shared
@@ -18,26 +15,6 @@ class StreamingGatesSpec extends AnyFunSuite {
   // not the shared session's 4, which is also the replay's state
   // partition count: a scope that never restored would still read 4
   private val callerValue = "6"
-
-  /** `rows:lo:hi:schema`, the order-insensitive digest perfbench records
-    * in `perfbench/goldens.json`: the row count, the sums of the low and
-    * high 32 bits of each row's xxhash64, and the hash of the schema. */
-  private def digest(df: DataFrame): String = {
-    val cols = df.schema.fields.toSeq.map { f =>
-      val c = col("`" + f.name.replace("`", "``") + "`")
-      f.dataType match {
-        case _: MapType => array_sort(map_entries(c))
-        case _ => c
-      }
-    }
-    val h = xxhash64(cols: _*)
-    val r = df.agg(count(lit(1)),
-      coalesce(sum(h.bitwiseAND(lit(0xFFFFFFFFL))), lit(0L)),
-      coalesce(sum(shiftrightunsigned(h, 32)), lit(0L))).head()
-    val schema = df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}")
-      .mkString(",")
-    f"${r.getLong(0)}%d:${r.getLong(1)}%d:${r.getLong(2)}%d:${schema.hashCode}%08x"
-  }
 
   /** Runs `body` with the caller's shuffle partitions at [[callerValue]],
     * then puts the shared session's value back. */
@@ -66,7 +43,7 @@ class StreamingGatesSpec extends AnyFunSuite {
   pinned.foreach { case (name, want) =>
     test(s"$name: rows and digest at sf0.001; the caller's shuffle partitions survive") {
       asCaller {
-        val got = digest(SparkEntry.queries(name)(spark, sf))
+        val got = SparkSuite.digest(SparkEntry.queries(name)(spark, sf))
         assert(spark.conf.get(key) == callerValue)
         assert(got == want)
       }
