@@ -146,6 +146,8 @@ abstract class Connection(protected val ctx: ConnContext) {
     }
     val ranked = (conn.version, conn.keys) match {
       case (Some(v), keys) if keys.nonEmpty =>
+        // the wrapper below sees only a scratch view: check the tap's query
+        query.foreach(SqlBridge.requireRankable)
         SqlBridge.withScratchViews(spark) { view =>
           spark.sql(SqlBridge.rankedQuery(
             s"SELECT * FROM ${view("__tap_ranked", base)}", v, keys))

@@ -1,7 +1,6 @@
 package graft.connections
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Deltatable semantics emulated over a parquet directory table.
@@ -56,6 +55,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   * boundary too. Legacy log stashes from the pre-r14 protocol
   * (`<table>__graft_log_stash`) are detected and restored on open.
   *
+  * FILESYSTEM: every file operation goes through the Hadoop
+  * `FileSystem` the table path's scheme names (`file:`, `s3a:`, `gs:` …),
+  * built from the session's Hadoop conf — the conf Spark's own reads
+  * use, so [[CloudSecrets]]' injected keys apply. Which files under a
+  * root are data is [[FileFormats.parquetFiles]]' rule, shared with
+  * every footer count: the log, the stage's markers and a checksummed
+  * FS's `.crc` sidecars (which rename carries along) are hidden.
+  *
   * The interface matches the Connection trait, so a real delta-spark
   * implementation can drop in when the jar is available.
   */
@@ -63,68 +70,73 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
 
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[DeltaConnection])
 
-  private def root: java.nio.file.Path = Paths.get(path)
-  private def logDir: java.nio.file.Path = root.resolve("_graft_log")
-  private def retainedDir: java.nio.file.Path = logDir.resolve("retained")
+  private lazy val conf = spark.sessionState.newHadoopConf()
+  private lazy val fs: FileSystem = new Path(path).getFileSystem(conf)
+  private lazy val root: Path = fs.makeQualified(new Path(path))
+  private def logDir = new Path(root, "_graft_log")
+  private def retainedDir = new Path(logDir, "retained")
+  private def commitTmp = new Path(root.getParent, root.getName + "__graft_commit_tmp")
+
+  /** `f`'s path below `base` (both qualified): the manifest's file key. */
+  private def rel(base: Path, f: Path): String =
+    f.toUri.getPath.stripPrefix(base.toUri.getPath + "/")
 
   /** Data files of the CURRENT table state, relative to the table root —
-    * excludes the log (its retired files are history, not state). */
+    * the log is hidden (its retired files are history, not state). */
   private def liveFiles: Seq[String] =
-    if (!Files.isDirectory(root)) Nil
-    else {
-      val stream = Files.walk(root)
-      try stream.iterator().asScala
-        .filter(f => f.toString.endsWith(".parquet"))
-        .map(f => root.relativize(f).toString)
-        .filterNot(_.startsWith("_graft_log"))
-        .toSeq
-      finally stream.close()
-    }
+    FileFormats.parquetFiles(fs, root).map(rel(root, _))
 
-  private def exists: Boolean = liveFiles.nonEmpty
+  private def exists: Boolean = FileFormats.parquetFiles(fs, root, 1).nonEmpty
+
+  /** Rename `src` to `dst`, creating `dst`'s parent first. */
+  private def move(src: Path, dst: Path): Unit = {
+    fs.mkdirs(dst.getParent)
+    if (!fs.rename(src, dst)) throw new java.io.IOException(s"cannot move $src to $dst")
+  }
 
   // ---- version log ----
 
   private def manifestVersions: Seq[Long] =
-    if (!Files.isDirectory(logDir)) Nil
-    else {
-      val stream = Files.list(logDir)
-      try stream.iterator().asScala
-        .flatMap(f => "^(\\d+)\\.json$".r
-          .findFirstMatchIn(f.getFileName.toString).map(_.group(1).toLong))
-        .toSeq.sorted
-      finally stream.close()
-    }
+    if (!fs.exists(logDir)) Nil
+    else fs.listStatus(logDir).toSeq
+      .flatMap(f => "^(\\d+)\\.json$".r
+        .findFirstMatchIn(f.getPath.getName).map(_.group(1).toLong))
+      .sorted
 
   private def readManifest(v: Long): Map[String, Any] = {
-    val f = logDir.resolve(s"$v.json")
-    if (!Files.exists(f)) sys.error(
+    val f = new Path(logDir, s"$v.json")
+    if (!fs.exists(f)) sys.error(
       s"Deltatable at $path has no version $v " +
         s"(known: ${manifestVersions.mkString(", ")})")
-    graft.template.Json.parse(Files.readString(f))
+    val in = fs.open(f)
+    try graft.template.Json.parse(new String(in.readAllBytes(), "UTF-8"))
       .asInstanceOf[Map[String, Any]]
+    finally in.close()
   }
+
+  private def manifestFiles(m: Map[String, Any]): List[String] =
+    m.getOrElse("files", Nil).asInstanceOf[List[Any]].map(_.toString)
 
   /** Append the next manifest: the commit's FINAL file snapshot (passed
     * explicitly — at manifest time the staged files haven't moved into
     * the table root yet), plus the partition columns the snapshot is
     * laid out by (empty = unpartitioned) — the metadata a versioned
     * read needs to reconstruct hive-style partition values. Written via
-    * temp-file + atomic move so a concurrent reader never sees a torn
+    * temp-file + rename so a concurrent reader never sees a torn
     * manifest. */
   private def commitManifest(action: String, schemaDdl: String,
       partitionCols: Seq[String], files: Seq[String]): Long = {
-    Files.createDirectories(logDir)
+    fs.mkdirs(logDir)
     val v = manifestVersions.lastOption.map(_ + 1).getOrElse(0L)
     val body = graft.template.Json.write(scala.collection.immutable.ListMap(
       "version" -> v, "action" -> action,
       "partitioned" -> partitionCols.nonEmpty,
       "partition_cols" -> partitionCols.toList,
       "schema" -> schemaDdl, "files" -> files.sorted.toList))
-    val tmp = logDir.resolve(s".$v.json.tmp")
-    Files.writeString(tmp, body)
-    Files.move(tmp, logDir.resolve(s"$v.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val tmp = new Path(logDir, s".$v.json.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+    move(tmp, new Path(logDir, s"$v.json"))
     v
   }
 
@@ -142,23 +154,16 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
     * deleting them, so older manifests stay readable. Relative paths are
     * preserved (part-file names carry a write-job UUID, so retirements
     * from different commits never collide). */
-  private def retireLiveFiles(): Unit = liveFiles.foreach { rel =>
-    val dst = retainedDir.resolve(rel)
-    Files.createDirectories(dst.getParent)
-    Files.move(root.resolve(rel), dst)
-  }
-
-  private def commitTmp: java.nio.file.Path =
-    root.resolveSibling(root.getFileName.toString + "__graft_commit_tmp")
+  private def retireLiveFiles(): Unit =
+    for (r <- liveFiles) move(new Path(root, r), new Path(retainedDir, r))
 
   /** Restore a version log stranded by a crash inside the pre-r14
     * stash-and-restore write protocol (the stash dir hid the whole
     * history until manual recovery — now healed on every open). */
   private def recoverStash(): Unit = {
-    val stash = root.resolveSibling(root.getFileName.toString + "__graft_log_stash")
-    if (Files.isDirectory(stash) && !Files.isDirectory(logDir)) {
-      Files.createDirectories(root)
-      Files.move(stash, logDir)
+    val stash = new Path(root.getParent, root.getName + "__graft_log_stash")
+    if (fs.exists(stash) && !fs.exists(logDir)) {
+      move(stash, logDir)
       log.warn(s"restored stranded version log for $path from $stash")
     }
   }
@@ -181,53 +186,32 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
       stageWrite(write))
 
   /** First half of a staged commit: run `write` against the tmp dir and
-    * return the staged data files (markers excluded). The caller may
-    * still abandon the commit (deleteTree the tmp) — nothing visible
-    * has changed yet. */
-  private def stageWrite(write: String => Unit): Seq[java.nio.file.Path] = {
-    val tmp = commitTmp
-    deleteTree(tmp) // leftover from a crashed commit: superseded
-    write(tmp.toString)
-    val stream = Files.walk(tmp)
-    try stream.iterator().asScala.filter(Files.isRegularFile(_))
-      .filterNot { f =>
-        val n = f.getFileName.toString
-        n.startsWith("_") || n.startsWith(".") // _SUCCESS, .crc markers
-      }.toSeq
-    finally stream.close()
+    * return the staged data files (markers hidden). The caller may
+    * still abandon the commit (delete the tmp) — nothing visible has
+    * changed yet. */
+  private def stageWrite(write: String => Unit): Seq[Path] = {
+    fs.delete(commitTmp, true) // leftover from a crashed commit: superseded
+    write(commitTmp.toString)
+    FileFormats.parquetFiles(fs, commitTmp)
   }
 
   /** Second half: retire, manifest (with the commit's final file list),
     * move the staged files in, drop the stage. */
   private def commitStaged(action: String, schemaDdl: String,
       partitionCols: Seq[String], retireFirst: Boolean,
-      staged: Seq[java.nio.file.Path]): Long = {
-    val tmp = commitTmp
+      staged: Seq[Path]): Long = {
     val survivors = if (retireFirst) Nil else liveFiles
     if (retireFirst) retireLiveFiles()
-    val stagedRels = staged.map(f => tmp.relativize(f).toString)
-    val v = commitManifest(action, schemaDdl, partitionCols,
-      survivors ++ stagedRels.filter(_.endsWith(".parquet")))
-    Files.createDirectories(root)
-    staged.foreach { f =>
-      val dst = root.resolve(tmp.relativize(f))
-      Files.createDirectories(dst.getParent)
-      Files.move(f, dst,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    deleteTree(tmp)
+    val stagedRels = staged.map(rel(commitTmp, _))
+    val v = commitManifest(action, schemaDdl, partitionCols, survivors ++ stagedRels)
+    fs.mkdirs(root)
+    stagedRels.foreach(r => move(new Path(commitTmp, r), new Path(root, r)))
+    fs.delete(commitTmp, true)
     v
   }
 
-  /** Total row count of staged parquet files, from their footers —
-    * bounded by the files THIS commit just wrote (not a table scan). */
-  private def stagedRowCount(staged: Seq[java.nio.file.Path]): Long =
-    FileFormats.parquetFooterRows(spark.sessionState.newHadoopConf(),
-      staged.filter(_.toString.endsWith(".parquet"))
-        .map(f => new org.apache.hadoop.fs.Path(f.toUri)))
-
   /** Heal a commit crashed at any point. A leftover tmp dir is the
-    * crash marker (deleteTree(tmp) is a healthy commit's last act). For
+    * crash marker (deleting it is a healthy commit's last act). For
     * every file of the LATEST manifest missing from the table root,
     * pull it back in from wherever it sits — the stage (crash after
     * manifest, before move-in → the commit COMPLETES) or the retention
@@ -236,43 +220,37 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
     * commit ROLLS BACK) — then discard the tmp dir. Either way the
     * table root lands exactly on a manifested version boundary. */
   private def recoverCommit(): Unit = {
-    val tmp = commitTmp
-    if (!Files.isDirectory(tmp)) return
+    if (!fs.exists(commitTmp)) return
     manifestVersions.lastOption.foreach { last =>
-      val files = readManifest(last).getOrElse("files", Nil)
-        .asInstanceOf[List[Any]].map(_.toString)
       var healed = 0
-      files.foreach { rel =>
-        val dst = root.resolve(rel)
-        if (!Files.exists(dst))
-          Seq(tmp.resolve(rel), retainedDir.resolve(rel))
-            .find(Files.exists(_)).foreach { src =>
-              Files.createDirectories(dst.getParent)
-              Files.move(src, dst)
+      manifestFiles(readManifest(last)).foreach { r =>
+        val dst = new Path(root, r)
+        if (!fs.exists(dst))
+          Seq(commitTmp, retainedDir).map(new Path(_, r))
+            .find(fs.exists).foreach { src =>
+              move(src, dst)
               healed += 1
             }
       }
       if (healed > 0)
         log.warn(s"recovered $healed file(s) of a crashed commit for $path")
     }
-    deleteTree(tmp)
+    fs.delete(commitTmp, true)
   }
 
   /** Resolve a manifest's file list against live + retained locations
     * and build the version's DataFrame. */
   private def readVersion(v: Long): DataFrame = {
     val m = readManifest(v)
-    val files = m.getOrElse("files", Nil).asInstanceOf[List[Any]].map(_.toString)
+    val files = manifestFiles(m)
     // resolve each manifest file to where it lives NOW — still in the
     // table (live), moved to the retention area by a later commit, or
     // sitting in the stage of a crashed post-manifest commit — keeping
     // the classes separate: partition discovery needs one basePath per
     // class (retire and stage both preserve the `col=value/` layout)
-    val (liveRels, rest) = files.partition(rel => Files.exists(root.resolve(rel)))
-    val (retiredRels, rest2) =
-      rest.partition(rel => Files.exists(retainedDir.resolve(rel)))
-    val (stagedRels, gone) =
-      rest2.partition(rel => Files.exists(commitTmp.resolve(rel)))
+    val (liveRels, rest) = files.partition(r => fs.exists(new Path(root, r)))
+    val (retiredRels, rest2) = rest.partition(r => fs.exists(new Path(retainedDir, r)))
+    val (stagedRels, gone) = rest2.partition(r => fs.exists(new Path(commitTmp, r)))
     if (gone.nonEmpty) sys.error(
       s"Deltatable at $path: version $v file '${gone.head}' was vacuumed; " +
         "time travel to this version is no longer possible")
@@ -282,15 +260,15 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
         org.apache.spark.sql.types.StructType.fromDDL(
           m.getOrElse("schema", "").toString))
     else if (!m.get("partitioned").contains(true))
-      readParquet(liveRels.map(root.resolve(_).toString) ++
-        retiredRels.map(retainedDir.resolve(_).toString) ++
-        stagedRels.map(commitTmp.resolve(_).toString))
+      readParquet(liveRels.map(new Path(root, _).toString) ++
+        retiredRels.map(new Path(retainedDir, _).toString) ++
+        stagedRels.map(new Path(commitTmp, _).toString))
     else {
       // partitioned: `basePath` makes Spark reconstruct partition values
       // from the dirs between the base and each listed file — the
       // by-file analogue of delta's per-file partition metadata
-      def readAt(base: java.nio.file.Path, rels: Seq[String]) =
-        readParquet(rels.map(base.resolve(_).toString),
+      def readAt(base: Path, rels: Seq[String]) =
+        readParquet(rels.map(new Path(base, _).toString),
           Map("basePath" -> base.toString))
       val frames =
         (if (liveRels.nonEmpty) Seq(readAt(root, liveRels)) else Nil) ++
@@ -372,14 +350,16 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
       val w2 = if (partitions.nonEmpty) writer.partitionBy(partitions: _*) else writer
       w2.parquet(tmp)
     }
-    if (stagedRowCount(staged) > 0) {
+    // row count from the footers of the files THIS commit just wrote
+    // (not a table scan)
+    if (FileFormats.parquetFooterRows(conf, staged) > 0) {
       // overwrite logically REMOVES the current files: retire them (so
       // older versions stay travelable) only now that the staged write
       // succeeded — a failed write must leave the table intact
       commitStaged(dataMode, from.schema.toDDL, partitions,
         retireFirst = mode == SaveMode.Overwrite, staged)
     } else {
-      deleteTree(commitTmp) // abandon the empty stage
+      fs.delete(commitTmp, true) // abandon the empty stage
       if (declared.nonEmpty && !exists) {
         // CREATE: empty table materialized from the declared schema
         val schema = SchemaUtil.toStruct(declared)
@@ -401,7 +381,7 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
     recoverStash(); recoverCommit()
     val s = stmt.trim.toUpperCase.replaceAll("\\s+", " ")
     if (s.startsWith("DROP DELTATABLE")) {
-      deleteRecursively(path) // table AND history die together
+      fs.delete(root, true) // table AND history die together
       None
     } else if (s.startsWith("TRUNCATE DELTATABLE")) {
       // keep schema: re-create the empty table from current schema
@@ -415,7 +395,7 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
               .write.mode(SaveMode.Overwrite).parquet(tmp)
           }
-        case None => deleteRecursively(path)
+        case None => fs.delete(root, true)
       }
       None
     } else if (s.startsWith("OPTIMIZE DELTATABLE")) {
@@ -450,29 +430,21 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
     } else sys.error(s"unsupported Deltatable statement: $stmt")
   }
 
+  /** Delete retired files whose modification time is past the
+    * retention age. On `file:` the retiring rename keeps the original
+    * write's time; on object stores (`s3a:`, `gs:`) a rename is copy +
+    * delete, so there the clock starts at retirement. */
   private def vacuumRetained(retentionHours: Int): Unit =
-    if (Files.isDirectory(retainedDir)) {
+    if (fs.exists(retainedDir)) {
       val cutoff = System.currentTimeMillis() - retentionHours * 3600L * 1000L
-      val stream = Files.walk(retainedDir)
-      val files =
-        try stream.iterator().asScala.filter(Files.isRegularFile(_)).toSeq
-        finally stream.close()
-      files.filter(f => Files.getLastModifiedTime(f).toMillis <= cutoff)
-        .foreach(Files.delete)
+      val expired = scala.collection.mutable.ArrayBuffer.empty[Path]
+      val it = fs.listFiles(retainedDir, true)
+      while (it.hasNext) {
+        val f = it.next()
+        if (f.getModificationTime <= cutoff) expired += f.getPath
+      }
+      expired.foreach(fs.delete(_, false))
     }
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val stream = Files.walk(p)
-      val all =
-        try stream.sorted(java.util.Comparator.reverseOrder())
-          .collect(java.util.stream.Collectors.toList[java.nio.file.Path])
-        finally stream.close()
-      all.forEach(f => Files.delete(f))
-    }
-
-  // collect before deleting — the walk stream holds directory handles
-  private def deleteRecursively(p: String): Unit = deleteTree(Paths.get(p))
 }
 
 object DeltaConnection {

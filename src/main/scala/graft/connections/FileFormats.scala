@@ -1,5 +1,6 @@
 package graft.connections
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, DataFrameReader, Encoders, SaveMode, SparkSession}
 import graft.model.{ColumnDef, ConnectionDef}
 
@@ -66,10 +67,52 @@ object FileFormats {
     case k => kinds(k)
   }
 
+  /** The visible parquet files under `root`, qualified, at most `limit`
+    * of them (none when `root` does not exist). This is the one rule for
+    * which files of a table directory are data. It is Spark's
+    * hidden-path filter (HadoopFSUtils.shouldFilterOutPathName): skip
+    * any file under a '.'-prefixed segment (a .crc sidecar) or a
+    * '_'-prefixed one without '=' (a leftover _temporary dir from an
+    * interrupted write, a version log); a hive partition dir on a
+    * '_'-prefixed column, `_d=1`, stays visible. Spark's reader never sees
+    * those rows, so listing them would diverge a footer count from
+    * `count()` — and silently shift t26's kCells vs the DuckDB oracle
+    * (r16 ADVICE). Only segments BELOW the root count: a dotted dir in
+    * the base path itself, e.g. /home/u/.cache/tbl, must not hide the
+    * table. The root is compared as a QUALIFIED Path (r17 ADVICE):
+    * listFiles returns fully-qualified paths, so a relative or
+    * scheme-less root would never match, the upward walk would escape
+    * the table root, and a dotted ANCESTOR (e.g. a hidden cwd) would
+    * silently hide every part file. Listing stops at `limit`, so a
+    * caller with a file budget never walks a 100 TB table's thousands
+    * of part files. */
+  private[graft] def parquetFiles(fs: FileSystem, root: Path,
+      limit: Int = Int.MaxValue): Seq[Path] = {
+    if (!fs.exists(root)) return Nil
+    val qualifiedRoot = fs.makeQualified(root)
+    def hidden(f: Path): Boolean = {
+      var cur = f
+      var h = false
+      while (cur != null && cur != qualifiedRoot && !h) {
+        val n = cur.getName
+        if (n.startsWith(".") || (n.startsWith("_") && !n.contains("="))) h = true
+        cur = cur.getParent
+      }
+      h
+    }
+    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
+    val it = fs.listFiles(qualifiedRoot, true)
+    while (it.hasNext && files.size < limit) {
+      val f = it.next().getPath
+      if (f.getName.endsWith(".parquet") && !hidden(f)) files += f
+    }
+    files.toSeq
+  }
+
   /** Total row count of parquet `files` from their footers: a
     * driver-side metadata read, the way DuckDB answers COUNT(*). */
   private[graft] def parquetFooterRows(conf: org.apache.hadoop.conf.Configuration,
-      files: Seq[org.apache.hadoop.fs.Path]): Long =
+      files: Seq[Path]): Long =
     files.map { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))

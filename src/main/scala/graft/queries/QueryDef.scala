@@ -47,11 +47,12 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Exact row count of a parquet table from its file FOOTERS
-    * ([[graft.connections.FileFormats.parquetFooterRows]]), replacing a
-    * whole Spark job when a query needs only N (t26's k choice). Returns
-    * None when the listing exceeds `maxFiles`: a 100 TB table has
-    * thousands of part files and a serial driver loop over remote
-    * footers would take longer than the distributed count() it
+    * ([[graft.connections.FileFormats.parquetFooterRows]]) over the
+    * files a read sees ([[graft.connections.FileFormats.parquetFiles]]),
+    * replacing a whole Spark job when a query needs only N (t26's k
+    * choice). Returns None when the listing exceeds `maxFiles`: a 100 TB
+    * table has thousands of part files and a serial driver loop over
+    * remote footers would take longer than the distributed count() it
     * replaces, so past the threshold the caller falls back to the job.
     * Footer record counts are exact (parquet metadata is authoritative),
     * so either path yields the same N. */
@@ -61,40 +62,9 @@ object Tables {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return None
-    // Mirror Spark's InMemoryFileIndex hidden-path filter: skip any file
-    // under a '_'- or '.'-prefixed segment (e.g. a leftover _temporary
-    // dir from an interrupted write). Spark's reader never sees those
-    // rows, so counting them here would diverge N from emb.count() —
-    // and silently shift t26's kCells vs the DuckDB oracle (r16 ADVICE).
-    // (segments BELOW the table root only — a dotted dir in the base
-    // path itself, e.g. /home/u/.cache/tbl, must not hide the table).
-    // The root is compared as a QUALIFIED Path (r17 ADVICE): listFiles
-    // returns fully-qualified paths, so a relative or scheme-less
-    // caller path would never string-match, the upward walk would
-    // escape the table root, and a dotted ANCESTOR (e.g. a hidden cwd)
-    // would silently hide every part file → Some(0) instead of the
-    // real count.
-    val qualifiedRoot = fs.makeQualified(p)
-    def hidden(f: org.apache.hadoop.fs.Path): Boolean = {
-      var cur = f
-      var h = false
-      while (cur != null && cur != qualifiedRoot && !h) {
-        val n = cur.getName
-        if (n.startsWith("_") || n.startsWith(".")) h = true
-        cur = cur.getParent
-      }
-      h
-    }
-    val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet") && !hidden(f.getPath)) {
-        files += f.getPath
-        if (files.size > maxFiles) return None
-      }
-    }
-    Some(graft.connections.FileFormats.parquetFooterRows(conf, files.toSeq))
+    val files = graft.connections.FileFormats.parquetFiles(fs, p, maxFiles + 1)
+    if (files.size > maxFiles) None
+    else Some(graft.connections.FileFormats.parquetFooterRows(conf, files))
   }
 
   /** Row count of fixture table `table` under `dir`: the footer count

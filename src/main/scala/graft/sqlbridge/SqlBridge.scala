@@ -364,22 +364,21 @@ object SqlBridge {
     }
   }
 
+  /** Dedup ranking keeps one row per key of the query's OWN rows, so a
+    * query that aggregates cannot be ranked (util.py:419-424). */
+  private[graft] def requireRankable(sql: String): Unit =
+    if (hasAggregation(sql))
+      sys.error("Cannot combine ranking (version/key) with aggregation in a tap query")
+
   /** Ranked-dedup wrapper (ankaflow/common/util.py:336-383): keep the
     * newest row per key by `version`. */
   def rankedQuery(innerSql: String, version: String, keys: Seq[String]): String = {
-    if (hasAggregation(innerSql))
-      sys.error("Cannot combine ranking (version/key) with aggregation in a tap query")
+    requireRankable(innerSql)
     val partition = keys.map(k => s"`$k`").mkString(", ")
     s"""SELECT * EXCEPT (__rank__) FROM (
        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY $partition ORDER BY `$version` DESC) AS __rank__
        |  FROM ($innerSql) __base
        |) __ranked WHERE __rank__ = 1""".stripMargin
-  }
-
-  /** Limit wrap (connection.py:277-284). */
-  def limitWrap(sql: String, limit: Option[Int]): String = limit match {
-    case Some(n) => s"SELECT * FROM ($sql) __limited LIMIT $n"
-    case None => sql
   }
 
   /** Swap the single FROM-table of a validated tap query with a
@@ -459,24 +458,43 @@ object FnTableMacros {
        |                              interval '1' day)) AS d))""".stripMargin
   }
 
+  /** Expand on the token stream, as [[FnMacros]] does: a macro name
+    * inside a string literal is text, not a call. */
   def expand(sql: String, spark: Option[SparkSession]): String = {
-    var out = sql
-    if (out.contains("Fn.calendar"))
-      out = "(?i)Fn\\.calendar\\(\\s*\\)".r
-        .replaceAllIn(out, java.util.regex.Matcher.quoteReplacement(calendarSql))
-    if (out.contains("Fn.columns")) {
-      val re = "(?i)Fn\\.columns\\(\\s*'([^']+)'\\s*\\)".r
-      out = re.replaceAllIn(out, mm => {
-        val table = mm.group(1)
-        val session = spark.getOrElse(
-          sys.error("Fn.columns requires an active SparkSession"))
-        val cols = session.table(table).schema.fields
-        val values = cols.map(f =>
-          s"('${f.name}', '${f.dataType.sql}')").mkString(", ")
-        java.util.regex.Matcher.quoteReplacement(
-          s"(SELECT column_name, data_type FROM (VALUES $values) AS __cols(column_name, data_type))")
-      })
+    if (!sql.contains("Fn.calendar") && !sql.contains("Fn.columns")) return sql
+    val toks = tokenize(sql)
+    val out = new StringBuilder
+    var i = 0
+    while (i < toks.length) {
+      val open = if (isWord(toks(i), "Fn")) nextNonBlank(toks, i + 3) else toks.length
+      val name =
+        if (open < toks.length && toks(i + 1) == Sym(".") && toks(open) == Sym("("))
+          toks(i + 2).text.toLowerCase
+        else ""
+      val expanded = name match {
+        case "calendar" | "columns" =>
+          val close = matchParen(toks, open)
+          (name, trimTok(toks.slice(open + 1, close))) match {
+            case ("calendar", Vector()) => Some((calendarSql, close))
+            case ("columns", Vector(Str(lit))) if lit.length > 2 =>
+              Some((columnsSql(lit.substring(1, lit.length - 1), spark), close))
+            case _ => None
+          }
+        case _ => None
+      }
+      expanded match {
+        case Some((text, close)) => out.append(text); i = close + 1
+        case None => out.append(toks(i).text); i += 1
+      }
     }
-    out
+    out.toString
+  }
+
+  private def columnsSql(table: String, spark: Option[SparkSession]): String = {
+    val session = spark.getOrElse(
+      sys.error("Fn.columns requires an active SparkSession"))
+    val values = session.table(table).schema.fields.map(f =>
+      s"('${f.name}', '${f.dataType.sql}')").mkString(", ")
+    s"(SELECT column_name, data_type FROM (VALUES $values) AS __cols(column_name, data_type))"
   }
 }

@@ -245,13 +245,6 @@ object Streams {
         })
   }
 
-  /** File-source stream over a parquet directory — the deployment shape
-    * for incremental ingest (new files land, Spark picks them up). The
-    * schema must be known up front (streaming requirement). */
-  def fromParquetDir(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(dir)
-
   /** Streaming RATE-ANOMALY flagging — the live twin of the batch
     * `t68_event_rate_anomaly`: hourly windowed counts per event type,
     * flagged when they sit more than 2σ from the type's reference rate.
@@ -708,13 +701,13 @@ object Streams {
     * mid-extendIndex can leave batch=N holding only the hidden
     * _temporary dir, and spark.read.parquet on a dir with zero visible
     * footers fails schema inference on every retry — a permanently
-    * stuck stream. Globbing for committed part files makes the torn
-    * first write read as "no index yet" instead. */
+    * stuck stream. Asking the table lister for one visible data file
+    * (the _temporary dir is hidden) makes the torn first write read as
+    * "no index yet" instead. */
   private def readIndex(spark: SparkSession, path: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = fs.exists(p) &&
-      fs.globStatus(new org.apache.hadoop.fs.Path(p, "batch=*/part-*")).nonEmpty
+    val committed = graft.connections.FileFormats.parquetFiles(fs, p, 1).nonEmpty
     if (committed) Some(spark.read.parquet(path)) else None
   }
 }

@@ -58,4 +58,12 @@ class FamilyOutputsSpec extends AnyFunSuite {
       assert(SparkSuite.digest(SparkEntry.queries(name)(spark, sf)) == want)
     }
   }
+
+  // t102 answers 0 rows at sf0.001 and at sf0.01, so its pin above
+  // checks only the schema; sf0.1 has 2 pairs to pin (recorded the same
+  // way, with `Verify` + `tools/check_oracle.py` at sf0.1)
+  test("t102_cosine_neardup_wide: rows and digest at sf0.1") {
+    assert(SparkSuite.digest(SparkEntry.queries("t102_cosine_neardup_wide")(
+      spark, "/root/testdata/sf0.1")) == "2:5140112601:3847507413:13fe8771")
+  }
 }

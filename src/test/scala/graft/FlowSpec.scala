@@ -75,6 +75,24 @@ class FlowSpec extends AnyFunSuite {
       .filter("count > 1").count() == 0)
   }
 
+  test("a ranked tap rejects an aggregating query (util.py:419-424)") {
+    val dir = tmpDir()
+    spark.range(10).selectExpr("id % 3 AS id", "id AS v").write.parquet(s"$dir/in")
+    val err = intercept[Exception](Flow.runYaml(spark,
+      s"""
+         |- name: Ranked
+         |  kind: tap
+         |  connection:
+         |    kind: Parquet
+         |    locator: $dir/in
+         |    version: v
+         |    key: [id]
+         |  query: SELECT id, max(v) AS v FROM Parquet GROUP BY id
+         |""".stripMargin).df().collect())
+    assert(err.getMessage.contains(
+      "Cannot combine ranking (version/key) with aggregation in a tap query"))
+  }
+
   test("csv + json round trip via sinks and taps") {
     val dir = tmpDir()
     val yaml =
@@ -518,6 +536,36 @@ class FlowSpec extends AnyFunSuite {
          |  query: select count(*) as n from Deltatable where o_orderstatus = 'O'
          |""".stripMargin
     assert(Flow.runYaml(spark, tapBack).df().collect()(0).getLong(0) > 0)
+  }
+
+  test("delta partitioned on a '_'-prefixed column keeps and retires its rows") {
+    // `_r=0` holds '=', so it is a partition dir, not a hidden one
+    val dir = tmpDir()
+    def sink(mode: String, where: String) = Flow.runYaml(spark,
+      s"""
+         |- name: Nations
+         |  kind: tap
+         |  connection: {kind: Parquet, locator: $sf/nation.parquet}
+         |  query: SELECT n_nationkey, n_regionkey AS _r FROM Parquet WHERE $where
+         |- name: W
+         |  kind: sink
+         |  connection: {kind: Deltatable, locator: $dir/t, data_mode: $mode, partition: [_r]}
+         |""".stripMargin)
+    def read(version: String = "") = Flow.runYaml(spark,
+      s"""
+         |- name: R
+         |  kind: tap
+         |  connection: {kind: Deltatable, locator: $dir/t}
+         |  query: SELECT CAST(_r AS INT), count(*) AS n FROM Deltatable $version GROUP BY _r
+         |""".stripMargin).df().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    sink("append", "true")
+    assert(new java.io.File(s"$dir/t/_r=0").isDirectory)
+    val all = (0 to 4).map(_ -> 5L).toMap
+    assert(read() == all)
+    sink("overwrite", "n_regionkey = 0")
+    assert(read() == Map(0 -> 5L))
+    assert(read("VERSION AS OF 0") == all)
+    assert(read("VERSION AS OF 1") == Map(0 -> 5L))
   }
 
   test("delta showSchema lists the merged schema the tap reads") {

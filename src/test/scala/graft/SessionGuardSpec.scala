@@ -9,7 +9,8 @@ import graft.core.GraftSession
 
 /** Structural guard over the engine sources: every session comes from
   * the one factory, functions are registered only by the one table, every
-  * md5 is computed by the one helper, and no session artifact is added.
+  * md5 is computed by the one helper, no session artifact is added, and
+  * table files are listed by one rule on Hadoop FileSystem.
   * Also pins that every profile key is a conf Spark knows and where the
   * builder-only keys live. */
 class SessionGuardSpec extends AnyFunSuite {
@@ -96,6 +97,26 @@ class SessionGuardSpec extends AnyFunSuite {
     val outside = hits("createOrReplaceTempFunction").filterNot(_._1.startsWith("graft/functions/"))
     assert(outside.isEmpty,
       "add engine functions to GraftFunctions.table:\n" + report(outside))
+  }
+
+  test("DeltaConnection touches table files only through Hadoop FileSystem") {
+    // java.nio resolves a URI locator as a relative local path
+    val f = root.resolve("graft/connections/DeltaConnection.scala")
+    val nio = "(java\\.nio\\.file|\\bFiles\\.|\\bPaths\\.)".r
+    val found = Files.readAllLines(f).asScala.zipWithIndex.collect {
+      case (line, i) if nio.findFirstIn(line).nonEmpty =>
+        ("graft/connections/DeltaConnection.scala", i + 1, line.trim)
+    }.toSeq
+    assert(found.isEmpty,
+      "use the table path's Hadoop FileSystem (fs) instead:\n" + report(found))
+  }
+
+  test("the hidden-segment rule for table files lives only in connections/FileFormats.scala") {
+    val found = Seq("startsWith(\"_\")", "startsWith(\".\")").flatMap(hits)
+    assert(found.nonEmpty, "the lister itself should match")
+    val outside = found.filterNot(_._1 == "graft/connections/FileFormats.scala")
+    assert(outside.isEmpty,
+      "list table files with FileFormats.parquetFiles:\n" + report(outside))
   }
 
   test("MessageDigest.getInstance appears only in functions/Md5.scala") {

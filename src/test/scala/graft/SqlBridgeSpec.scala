@@ -105,10 +105,13 @@ class SqlBridgeSpec extends AnyFunSuite {
     assert(r.get(1) == "")
   }
 
-  test("limitWrap") {
-    assert(SqlBridge.limitWrap("SELECT * FROM t", Some(5))
-      == "SELECT * FROM (SELECT * FROM t) __limited LIMIT 5")
-    assert(SqlBridge.limitWrap("q", None) == "q")
+  test("table macros inside string literals stay text") {
+    val names = new NameRegistry
+    val sql = SqlBridge.translate(
+      "SELECT 'Fn.calendar()' AS s, count(*) AS n FROM Fn.calendar()", names)
+    val r = spark.sql(sql).collect()(0)
+    assert(r.getString(0) == "Fn.calendar()")
+    assert(r.getLong(1) > 1800) // the call outside the literal still expands
   }
 
   test("USING SAMPLE translates to TABLESAMPLE and runs") {

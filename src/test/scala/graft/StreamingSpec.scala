@@ -435,7 +435,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = graft.queries.Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "event_type", "value")
     batch.limit(100).write.parquet(s"$dir/in")
-    val stream = Streams.fromParquetDir(spark, s"$dir/in", batch.schema)
+    val stream = spark.readStream.schema(batch.schema).parquet(s"$dir/in")
     assert(stream.isStreaming)
     val q = Streams.windowedCounts(stream, "1 day", "1 day")
       .writeStream.format("memory").queryName("file_stream")
@@ -464,7 +464,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(expect == Seq(2L, 3L, 4L), "batch reference must drop doc 1")
     val dir = java.nio.file.Files.createTempDirectory("graft_decontam").toString
     batchIn.write.parquet(s"$dir/in")
-    val stream = Streams.fromParquetDir(spark, s"$dir/in", batchIn.schema)
+    val stream = spark.readStream.schema(batchIn.schema).parquet(s"$dir/in")
     val q = Streams.streamingDecontaminate(stream, "text", eval_, "text")
       .writeStream.format("memory").queryName("decontam_stream")
       .outputMode(OutputMode.Append).start()
