@@ -137,6 +137,10 @@ object Pipelines {
     import org.apache.spark.sql.functions._
     val bounds = ev.agg(min("ts"), max("ts")).head()
     val (minTs, maxTs) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
+    // no ts at all (an empty fixture, or every ts null): the replay's
+    // non-empty-chunk precondition cannot hold
+    require(maxTs != null, "the events fixture has no row with a ts — the " +
+      "fixture is too small to split into this many replay batches")
     val spanMs = math.max(1L, maxTs.getTime - minTs.getTime)
     (ev.withColumn("__c", least(lit(2),
       (floor((unix_millis(col("ts")) - lit(minTs.getTime))
@@ -1504,6 +1508,9 @@ object Pipelines {
         import org.apache.spark.sql.functions._
         val ev = Tables.t(spark, dir, "events")
           .select("event_id", "ts", "user_id", "event_type", "value")
+        // chunked before thresholds persists, so a fixture that cannot
+        // replay leaves nothing cached
+        val (chunked, maxTs) = timeChunks(ev)
         // thresholds exactly as the batch job publishes them: per-type
         // (mean, std) over hourly counts — t68's moment arithmetic
         // (exact long sums, then double division)
@@ -1524,7 +1531,6 @@ object Pipelines {
           // EVERY micro-batch plan; persist the |types|-row result for
           // the stream's lifetime (production publishes it as a table)
           .persist()
-        val (chunked, maxTs) = timeChunks(ev)
         val sentinel = spark.range(1)
           .select(lit(-1L).as("event_id"),
             lit(new java.sql.Timestamp(maxTs.getTime + 86400000L)).as("ts"),

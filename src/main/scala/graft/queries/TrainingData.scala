@@ -1974,7 +1974,9 @@ object TrainingData {
             sort_array(collect_list(struct(col("dim"), col("s")))).as("sl"))
           .select(col("label"), col("n"),
             expr("transform(sl, x -> (CAST(x.s AS DOUBLE)/1e6)/n)").as("m"))
-        cents.as("a").join(cents.as("b"), col("a.label") < col("b.label"))
+        // the theta join has no equi-key, so an unhinted side plans a
+        // CartesianProduct; the ≤ |labels|-row frame broadcasts
+        cents.as("a").join(broadcast(cents.as("b")), col("a.label") < col("b.label"))
           .select(col("a.label").as("label_a"), col("b.label").as("label_b"),
             col("a.n").as("n_a"), col("b.n").as("n_b"),
             // zip_with diff twice is deterministic; float_dot then runs

@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.GraftSession
 
 /** `lower`, `upper` and `initcap` on non-ASCII text under the shipped
-  * profile (JVM case mapping, `spark.sql.icu.caseMappings.enabled=false`)
-  * and under Spark's default ICU case mapping. The expected values are
+  * profile, which the shared session runs (JVM case mapping,
+  * `spark.sql.icu.caseMappings.enabled=false`), and under Spark's default
+  * ICU case mapping. The expected values are
   * literals; `lower` and `upper` equal DuckDB 1.0.0's output unless a
   * comment gives DuckDB's value (DuckDB maps one code point to one, with
   * no final-sigma or expanding rules, and has no `initcap`). Every
@@ -73,9 +73,8 @@ class CaseMappingSpec extends AnyFunSuite {
   }
 
   test("the shipped profile maps case with the JVM") {
-    val shipped = GraftSession.applyTo(spark.newSession())
-    assert(shipped.conf.get("spark.sql.icu.caseMappings.enabled") == "false")
-    check(shipped, _.initcapJvm)
+    assert(spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false")
+    check(spark, _.initcapJvm)
   }
 
   test("ICU case mapping differs only in initcap") {

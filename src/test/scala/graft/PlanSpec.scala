@@ -1,11 +1,19 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions: these are the properties that survive a 100×
   * scale-up — filters reaching the parquet scan, broadcast for small
   * dims, map-side partial aggregation, pruned read schemas. A passing
-  * value test with a wrong plan is not done (builder prompt). */
+  * value test with a wrong plan is not done.
+  *
+  * The plans are those of the shipped profile, which has two readers:
+  * [[plan]], the static plan, for what the planner decides before a
+  * byte is read; and [[finalPlan]], the plan AQE ran, for the join
+  * strategies the profile leaves to AQE's measured sizes (its static
+  * broadcast threshold is off, so an unhinted small side is shuffled in
+  * the static plan and broadcast at runtime). */
 class PlanSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
   private val sf = "/root/testdata/sf0.001"
@@ -14,6 +22,22 @@ class PlanSpec extends AnyFunSuite {
     val df = SparkEntry.queries(name)(spark, sf)
     df.queryExecution.executedPlan.toString
   }
+
+  /** The final plan of `name` after it ran: AQE's re-planned tree, with
+    * the query stages it executed, and without the initial plan. */
+  private def finalPlan(name: String): String = {
+    val df = SparkEntry.queries(name)(spark, sf)
+    df.collect()
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec if a.isFinalPlan => a.executedPlan.toString
+      case p => fail(s"$name did not run an adaptive plan:\n$p")
+    }
+  }
+
+  /** Whether a join node of plan text `p` names `column` in its keys or
+    * condition. */
+  private def joinsOn(p: String, column: String): Boolean =
+    s"Join [^\\n]*\\b$column#".r.findFirstIn(p).isDefined
 
   /** Plan text with every InMemoryRelation's cached-plan printout
     * removed (all lines indented deeper than the InMemoryRelation node
@@ -45,7 +69,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q03: customer dimension joins via broadcast") {
-    val p = plan("q03_join_topk")
+    val p = finalPlan("q03_join_topk")
     assert(p.contains("BroadcastHashJoin"), "small dim must broadcast")
   }
 
@@ -92,7 +116,9 @@ class PlanSpec extends AnyFunSuite {
     // pair unfolding) must not regress to a self-join that re-exchanges
     // the exploded shingles per side
     val p = plan("t03_ngram_jaccard")
-    assert(!p.contains("SortMergeJoin"),
+    assert(!joinsOn(p, "shingle"), "no join may key on the exploded shingles")
+    val f = finalPlan("t03_ngram_jaccard")
+    assert(!f.contains("SortMergeJoin"),
       "pair candidates must unfold from grouped doc lists, not a self-join")
     // the map-side unfold: explode over the per-shingle doc list
     assert(p.contains("Generate explode(flatten(transform(ids"),
@@ -107,7 +133,8 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("q18_count_distinct")
     assert(!p.contains("Expand"),
       "separate pruned aggregations replace the 4-way Expand")
-    assert(p.contains("BroadcastHashJoin"))
+    val f = finalPlan("q18_count_distinct")
+    assert(f.contains("BroadcastHashJoin"))
   }
 
   test("t12: hyperplanes are literals (no per-row plane construction)") {
@@ -395,7 +422,8 @@ class PlanSpec extends AnyFunSuite {
       "chunk text must never enter a shuffle — only the 16-byte md5")
     assert(!p.contains("collect_list"),
       "no hash group may materialize an in-memory doc-id list")
-    assert(!p.contains("SortMergeJoin"),
+    val f = finalPlan("t51_chunk_dedup")
+    assert(!f.contains("SortMergeJoin"),
       "doc→source and the per-source distinct frame must broadcast")
   }
 
@@ -828,19 +856,16 @@ class PlanSpec extends AnyFunSuite {
       .select("l_orderkey", "l_quantity")
       .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
       .mode("overwrite").saveAsTable("b_lineitem")
-    // at test SF the sides are broadcast-sized; disable broadcast so the
-    // plan shows the big-big shape this feature exists for
-    val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = s.table("b_lineitem")
-        .join(s.table("b_orders"), col("l_orderkey") === col("o_orderkey"))
-      val p = joined.queryExecution.executedPlan.toString
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"))
-      assert(!p.contains("Exchange hashpartitioning"),
-        "bucketed join must not shuffle either side")
-      assert(p.contains("Bucketed: true"), "scan must use the bucket layout")
-    } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // the sides are broadcast-sized at test SF, but the profile's static
+    // broadcast threshold is off, so the static plan shows the big-big
+    // shape this feature exists for
+    val joined = s.table("b_lineitem")
+      .join(s.table("b_orders"), col("l_orderkey") === col("o_orderkey"))
+    val p = joined.queryExecution.executedPlan.toString
+    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"))
+    assert(!p.contains("Exchange hashpartitioning"),
+      "bucketed join must not shuffle either side")
+    assert(p.contains("Bucketed: true"), "scan must use the bucket layout")
   }
 
   test("t65: single scan, no vocabulary broadcast, top-5 pruned pre-shuffle") {
@@ -928,7 +953,9 @@ class PlanSpec extends AnyFunSuite {
       "the native one-pass expression must emit fingerprints in-row")
     assert(p.contains("Generate explode(flatten(transform(ids"),
       "pairs must unfold from grouped fingerprint posting lists")
-    assert(!p.contains("SortMergeJoin"),
+    assert(!joinsOn(p, "fp"), "no join may key on the exploded fingerprints")
+    val f = finalPlan("t76_winnow_overlap")
+    assert(!f.contains("SortMergeJoin"),
       "no exploded-corpus self-join anywhere in the pair stage")
     assert(!p.contains("Window"),
       "the sliding min runs in-row, never as an exploded-corpus window")

@@ -2,27 +2,30 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.GraftSession
 
 /** Structural guard over the engine sources: every session comes from
-  * the one factory, functions are registered only by the one table, every
+  * the one factory (in the specs too, whose shared session is the shipped
+  * profile), functions are registered only by the one table, every
   * md5 is computed by the one helper, no session artifact is added, and
   * table files are listed by one rule on Hadoop FileSystem.
-  * Also pins that every profile key is a conf Spark knows and where the
-  * builder-only keys live. */
+  * Also pins that every profile key is a conf Spark knows, reads back on
+  * the specs' shared session, and where the builder-only keys live. */
 class SessionGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
+  private val testRoot = Paths.get("src/test/scala")
+  // spelt in two parts, so that this file does not match its own guard
+  private val builderCall = "SparkSession" + ".builder("
 
-  /** (path under `root`, line number, line) of each match. */
-  private def hits(needle: String): Seq[(String, Int, String)] = {
-    assert(Files.isDirectory(root), s"$root not found from ${Paths.get("").toAbsolutePath}")
-    val files = Files.walk(root).iterator().asScala
+  /** (path under `under`, line number, line) of each match. */
+  private def hits(needle: String, under: Path = root): Seq[(String, Int, String)] = {
+    assert(Files.isDirectory(under), s"$under not found from ${Paths.get("").toAbsolutePath}")
+    val files = Files.walk(under).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     files.flatMap { f: Path =>
-      val rel = root.relativize(f).toString.replace('\\', '/')
+      val rel = under.relativize(f).toString.replace('\\', '/')
       Files.readAllLines(f).asScala.zipWithIndex.collect {
         case (line, i) if line.contains(needle) => (rel, i + 1, line.trim)
       }
@@ -32,17 +35,6 @@ class SessionGuardSpec extends AnyFunSuite {
   private def report(found: Seq[(String, Int, String)]): String =
     found.map { case (f, n, l) => s"$f:$n: $l" }.mkString("\n")
 
-  /** A session from [[GraftSession.local]] on the running context; the
-    * suite's shared session stays the default and active one. */
-  private def localSession(): SparkSession = {
-    val shared = SparkSuite.spark
-    try GraftSession.local("graft-guard").create()
-    finally {
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
-    }
-  }
-
   test("the codegen cache size is a static conf of the builder, live on local sessions") {
     val key = "spark.sql.codegen.cache.maxEntries"
     val want = GraftSession.staticConfs.toMap.get(key)
@@ -51,18 +43,18 @@ class SessionGuardSpec extends AnyFunSuite {
     assert(!GraftSession.confs.exists(_._1 == key),
       s"$key is static: applyTo would throw setting it on a live session")
     assert(SparkSuite.spark.conf.get(key) == want.get, "the test session runs the shipped size")
-    assert(localSession().conf.get(key) == want.get)
   }
 
   test("every profile key is a conf Spark registers and reads back on a local session") {
-    // a misspelt key would be set without error and change nothing
+    // a misspelt key would be set without error and change nothing; the
+    // session read is the specs' own, so they run what ships
     val profile = GraftSession.confs ++ GraftSession.staticConfs
-    val local = localSession()
-    val known = (k: String) => local.conf.isModifiable(k) || SQLConf.isStaticConfigKey(k)
+    val shared = SparkSuite.spark
+    val known = (k: String) => shared.conf.isModifiable(k) || SQLConf.isStaticConfigKey(k)
     val unknown = profile.map(_._1).filterNot(known)
     assert(unknown.isEmpty, s"not a registered Spark SQL conf: ${unknown.mkString(", ")}")
     val drift = profile
-      .map { case (k, v) => (k, local.conf.get(k), GraftSession.localSizing.getOrElse(k, v)) }
+      .map { case (k, v) => (k, shared.conf.get(k), GraftSession.localSizing.getOrElse(k, v)) }
       .filter { case (_, got, want) => got != want }
     assert(drift.isEmpty, drift.map { case (k, got, want) => s"$k = $got, profile wants $want" }
       .mkString("\n"))
@@ -79,18 +71,30 @@ class SessionGuardSpec extends AnyFunSuite {
   test("no session artifact is added in src/main/scala") {
     // with artifact isolation off, every session of a context shares the
     // executor's default loader, so an artifact would reach them all
-    val found = Seq("addArtifact", "addJar", "addFile", "addArchive").flatMap(hits)
+    val found = Seq("addArtifact", "addJar", "addFile", "addArchive").flatMap(hits(_))
       .filterNot { case (_, _, l) => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//") }
     assert(found.isEmpty,
       "put jars on the classpath instead of adding session artifacts:\n" + report(found))
   }
 
-  test("SparkSession.builder( appears only in core/GraftSession.scala") {
-    val found = hits("SparkSession.builder(")
+  test(s"$builderCall appears only in core/GraftSession.scala") {
+    val found = hits(builderCall)
     assert(found.nonEmpty, "the factory itself should match")
     val outside = found.filterNot(_._1 == "graft/core/GraftSession.scala")
     assert(outside.isEmpty,
       "build sessions with GraftSession.builder / GraftSession.local:\n" + report(outside))
+  }
+
+  test(s"$builderCall appears in src/test/scala only for the plain session of FunctionRegistrationSpec") {
+    // that session exists to test GraftFunctions.ensure on a session built
+    // outside the factory; every other spec runs SparkSuite.spark
+    val found = hits(builderCall, testRoot)
+    val outside = found.filterNot { case (f, _, l) =>
+      f == "graft/FunctionRegistrationSpec.scala" && l.contains("\"graft-fn-plain\"")
+    }
+    assert(outside.isEmpty,
+      "run specs on SparkSuite.spark, the shipped GraftSession.local profile:\n" +
+        report(outside))
   }
 
   test("createOrReplaceTempFunction appears only under functions/") {
@@ -112,7 +116,7 @@ class SessionGuardSpec extends AnyFunSuite {
   }
 
   test("the hidden-segment rule for table files lives only in connections/FileFormats.scala") {
-    val found = Seq("startsWith(\"_\")", "startsWith(\".\")").flatMap(hits)
+    val found = Seq("startsWith(\"_\")", "startsWith(\".\")").flatMap(hits(_))
     assert(found.nonEmpty, "the lister itself should match")
     val outside = found.filterNot(_._1 == "graft/connections/FileFormats.scala")
     assert(outside.isEmpty,

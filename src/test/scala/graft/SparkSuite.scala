@@ -5,23 +5,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MapType
 import graft.core.GraftSession
 
-/** Shared session for all suites (one JVM-wide session, cheap getOrCreate).
-  * Test-sized confs, not the shipped profile, but the same function table
-  * as [[graft.core.GraftSession]]: installed at creation, so no suite
-  * registers functions itself. It also takes the profile's static confs:
-  * the codegen cache is sized by the first session that compiles, and
-  * that is this one, so the specs run with the shipped size. */
+/** Shared session for all suites (one JVM-wide session, cheap getOrCreate):
+  * the shipped profile, [[graft.core.GraftSession.local]], so every spec
+  * runs the confs that Verify, Bench, Main and perfbench run. Its one
+  * extra setting is `spark.sql.maxMetadataStringLength`, which only
+  * widens plan text: PlanSpec's q02 reads `PushedFilters` from it. The
+  * worker-thread count is `SPARK_GRAFT_CPUS`, which build.sbt pins to 4
+  * for the test JVM (the digest pins and job ceilings were recorded on
+  * `local[4]`). */
 object SparkSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(graft.functions.GraftFunctions.install)
-      .config(GraftSession.staticConfs.toMap)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = GraftSession.local("graft-test")
       .config("spark.sql.maxMetadataStringLength", "2000")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

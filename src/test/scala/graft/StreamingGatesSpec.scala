@@ -62,4 +62,21 @@ class StreamingGatesSpec extends AnyFunSuite {
       assert(spark.conf.get(key) == callerValue)
     }
   }
+
+  test("p20 and p24 on an events fixture with no rows fail with the replay's too-small message") {
+    // a time-range split needs a min and a max ts; the gates must not
+    // pass (or answer) on input they cannot replay
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_events")
+    try {
+      graft.queries.Tables.events(spark, sf).limit(0)
+        .write.parquet(s"$dir/events.parquet")
+      Seq("p20_pipeline_streaming_sessionize", "p24_pipeline_streaming_rate_anomaly")
+        .foreach { name =>
+          val e = intercept[IllegalArgumentException](
+            SparkEntry.queries(name)(spark, dir.toString))
+          assert(e.getMessage.contains("the events fixture has no row with a ts — the " +
+            "fixture is too small to split into this many replay batches"), s"$name: $e")
+        }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
 }
