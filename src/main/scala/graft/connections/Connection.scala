@@ -1,6 +1,6 @@
 package graft.connections
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types._
 import graft.model.{ColumnDef, ConnectionDef}
 import graft.sqlbridge.SqlBridge
@@ -119,6 +119,17 @@ abstract class Connection(protected val ctx: ConnContext) {
 
   /** Write the given DataFrame out. */
   def sink(from: DataFrame): Unit
+
+  /** The sink's `data_mode`, `append` when unset. */
+  protected def dataMode: String = conn.str("data_mode").getOrElse("append")
+
+  /** [[dataMode]] as a Spark save mode. */
+  protected def saveMode: SaveMode = dataMode match {
+    case "append" => SaveMode.Append
+    case "overwrite" => SaveMode.Overwrite
+    case "error" => SaveMode.ErrorIfExists
+    case other => sys.error(s"unknown data_mode: $other")
+  }
 
   /** Execute a raw statement against the connection's system. */
   def sqlStmt(stmt: String): Option[DataFrame] =

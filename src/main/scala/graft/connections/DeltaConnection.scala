@@ -2,6 +2,7 @@ package graft.connections
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import graft.sqlbridge.SqlText._
 
 /** Deltatable semantics emulated over a parquet directory table.
   *
@@ -285,18 +286,44 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
     FileFormats.parquet.reader(spark, passthrough = passthrough).load(paths: _*)
 
   /** Split `VERSION AS OF n` out of the tap's pseudo-SQL (the one
-    * time-travel clause the emulation supports). */
+    * time-travel clause the emulation supports): the query with every
+    * such clause replaced by a blank, and the first clause's version.
+    * Read on tokens, so the words inside a literal or a comment are text. */
   private def extractVersion(query: Option[String]): (Option[String], Option[Long]) =
     query match {
       case Some(q) =>
-        val re = "(?i)\\bVERSION\\s+AS\\s+OF\\s+(\\d+)\\b".r
-        re.findFirstMatchIn(q) match {
-          case Some(mm) =>
-            (Some(re.replaceAllIn(q, " ").trim), Some(mm.group(1).toLong))
-          case None => (query, None)
+        val toks = tokenize(q)
+        var version = Option.empty[Long]
+        val out = substitute(toks) { i =>
+          versionAsOf(toks, i).map { case (end, v) =>
+            version = version.orElse(Some(v))
+            (Seq(Sym(" ")), end)
+          }
         }
+        if (version.isEmpty) (query, None) else (Some(render(out).trim), version)
       case None => (None, None)
     }
+
+  /** The clause `VERSION AS OF n` at token `i`, blanks between its words:
+    * the index just past it and `n`. */
+  private def versionAsOf(toks: Vector[Tok], i: Int): Option[(Int, Long)] = {
+    // the next non-blank index, when at least one blank comes first
+    def spaced(j: Int): Option[Int] =
+      Some(nextNonBlank(toks, j + 1)).filter(k => k > j + 1 && k < toks.length)
+    def word(j: Int, w: String): Option[Int] = spaced(j).filter(k => isWord(toks(k), w))
+    val isDigit: Tok => Boolean = {
+      case Sym(d) => d.length == 1 && d(0) >= '0' && d(0) <= '9'
+      case _ => false
+    }
+    for {
+      as <- if (isWord(toks(i), "version")) word(i, "as") else None
+      of <- word(as, "of")
+      num <- spaced(of)
+      digits = toks.drop(num).takeWhile(isDigit)
+      end = num + digits.length
+      if digits.nonEmpty && !toks.lift(end).exists(_.isInstanceOf[Word])
+    } yield (end, render(digits).toLong)
+  }
 
   private def emptyWithSchema: DataFrame = {
     val fields = conn.fields
@@ -320,13 +347,7 @@ final class DeltaConnection(ctx: ConnContext) extends Connection(ctx) {
   override def sink(from: DataFrame): Unit = {
     recoverStash(); recoverCommit()
     val declared = conn.fields
-    val dataMode = conn.str("data_mode").getOrElse("append")
-    val mode = dataMode match {
-      case "append" => SaveMode.Append
-      case "overwrite" => SaveMode.Overwrite
-      case "error" => SaveMode.ErrorIfExists
-      case other => sys.error(s"unknown data_mode: $other")
-    }
+    val mode = saveMode
     val partitions = conn.strList("partition")
     // data_mode=error against an existing table can only SKIP (empty
     // frame — strategy is decided by row count before mode applies,

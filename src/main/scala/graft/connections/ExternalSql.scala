@@ -2,7 +2,7 @@ package graft.connections
 
 import java.sql.DriverManager
 import java.util.Properties
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import graft.sqlbridge.SqlBridge
 
 /** ClickHouse locator rules (reference: Clickhouse.locate,
@@ -63,33 +63,20 @@ object RemoteRank {
 
   def apply(query: String, selectable: String, version: Option[String],
       keys: Seq[String], quote: String => String = IdQuote.doubleQuote): String = {
-    val swapped = SqlBridge.swapFromTable(query, selectable)
+    val toks = SqlBridge.swapFromTable(tokenize(query), selectable)
     (version, keys) match {
       case (Some(v), ks) if ks.nonEmpty =>
-        // token-based split at the TOP-LEVEL FROM (a regex would hit the
-        // `from` inside e.g. extract(month from dt) or a string literal)
-        val toks = tokenize(swapped)
-        var depth = 0
-        var selIdx = -1
-        var fromIdx = -1
-        toks.zipWithIndex.foreach { case (t, i) =>
-          t match {
-            case Sym("(") => depth += 1
-            case Sym(")") => depth -= 1
-            case w: Word if depth == 0 && selIdx < 0 &&
-              w.text.equalsIgnoreCase("select") => selIdx = i
-            case w: Word if depth == 0 && fromIdx < 0 &&
-              w.text.equalsIgnoreCase("from") => fromIdx = i
-            case _ =>
-          }
-        }
-        if (selIdx < 0 || fromIdx <= selIdx)
+        // split at the TOP-LEVEL FROM (not the `from` inside e.g.
+        // extract(month from dt) or a string literal)
+        val sel = topLevel(toks)(i => isWord(toks(i), "select"))
+        val from = topLevel(toks)(i => isWord(toks(i), "from"))
+        if (sel < 0 || from <= sel)
           sys.error(s"cannot rank query without top-level SELECT ... FROM: $query")
-        val selectList = render(toks.slice(selIdx + 1, fromIdx)).trim
-        val rest = render(toks.slice(fromIdx, toks.length))
+        val selectList = render(toks.slice(sel + 1, from)).trim
+        val rest = render(toks.slice(from, toks.length))
         val partition = ks.map(quote).mkString(", ")
         s"""SELECT * FROM (SELECT $selectList, ROW_NUMBER() OVER (PARTITION BY $partition ORDER BY ${quote(v)} DESC) AS __rank__ $rest) AS ranked WHERE ${quote("__rank__")} = 1"""
-      case _ => swapped
+      case _ => render(toks)
     }
   }
 }
@@ -157,7 +144,6 @@ abstract class ExternalSqlConnection(ctx: ConnContext) extends Connection(ctx) {
     * ANSI `FETCH FIRST n ROWS ONLY` for engines that lack LIMIT (Derby),
     * `LIMIT n` elsewhere (ClickHouse has no FETCH FIRST). */
   def remoteQuery(query: String, limit: Option[Int]): String = {
-    SqlBridge.validateSimpleQuery(query)
     val ranked = RemoteRank(query, locatedTable, conn.version, conn.keys, idQuote)
     limit.map { n =>
       val clause =
@@ -187,13 +173,7 @@ abstract class ExternalSqlConnection(ctx: ConnContext) extends Connection(ctx) {
 
   override def sink(from: DataFrame): Unit = {
     IdQuote.ensureHiveDialect()
-    val mode = conn.str("data_mode").getOrElse("append") match {
-      case "append" => SaveMode.Append
-      case "overwrite" => SaveMode.Overwrite
-      case "error" => SaveMode.ErrorIfExists
-      case other => sys.error(s"unknown data_mode: $other")
-    }
-    from.write.mode(mode)
+    from.write.mode(saveMode)
       .option("batchsize", blocksize.toString)
       .jdbc(jdbcUrl, locatedTable, jdbcProps)
   }
@@ -242,7 +222,7 @@ final class BigQueryConnection(ctx: ConnContext)
     * (the part worth testing) live. */
   override protected def jdbcUrl: String = cfgStr("jdbc_url").getOrElse(
     sys.error("BigQuery transfer requires config.jdbc_url " +
-      s"(write_disposition=${BigQueryDispositions.writeDisposition(conn.str("data_mode").getOrElse("append"))}, " +
+      s"(write_disposition=${BigQueryDispositions.writeDisposition(dataMode)}, " +
       s"schema_update=${BigQueryDispositions.schemaUpdateOptions(conn.str("schema_mode").getOrElse("")).mkString(",")})"))
 
   override protected def locatedTable: String = {

@@ -12,6 +12,27 @@ import scala.jdk.CollectionConverters._
   */
 final case class ColumnDef(name: String, dtype: String)
 
+/** The one reading of a YAML scalar as a flag or a number. */
+object YamlScalar {
+  /** A YAML boolean, or a string: `true` in any case is true, any other
+    * string false. Other values are no flag. */
+  def bool(v: Any): Option[Boolean] = v match {
+    case b: Boolean => Some(b)
+    case s: String => Some(s.toLowerCase == "true")
+    case _ => None
+  }
+
+  /** A YAML int, long or float, or a string that parses as a double
+    * (else `NumberFormatException`). Other values are no number. */
+  def double(v: Any): Option[Double] = v match {
+    case i: Int => Some(i.toDouble)
+    case l: Long => Some(l.toDouble)
+    case d: Double => Some(d)
+    case s: String => Some(s.toDouble)
+    case _ => None
+  }
+}
+
 /** A connection definition on a tap/sink/sql stage.
   *
   * `kind` selects the implementation (parquet/csv/json/file/variable/
@@ -33,10 +54,7 @@ final case class ConnectionDef(
   }
 
   def bool(key: String, default: Boolean = false): Boolean =
-    params.get(key).collect {
-      case b: Boolean => b
-      case s: String => s.toLowerCase == "true"
-    }.getOrElse(default)
+    params.get(key).flatMap(YamlScalar.bool).getOrElse(default)
 
   def strList(key: String): List[String] = params.get(key) match {
     case Some(l: List[_]) => l.map(_.toString)
@@ -136,6 +154,7 @@ object Stages {
     val m = asMap(raw)
     def strOpt(k: String): Option[String] =
       m.get(k).collect { case v if v != null => v.toString }
+    def flag(k: String): Boolean = m.get(k).flatMap(YamlScalar.bool).getOrElse(false)
     val kind = strOpt("kind").getOrElse(sys.error(s"stage missing kind: $m"))
     val name = strOpt("name").getOrElse(sys.error(s"stage missing name: $m"))
     val conn = m.get("connection").map { c =>
@@ -151,38 +170,16 @@ object Stages {
       connection = conn,
       query = strOpt("query"),
       skipIf = strOpt("skip_if"),
-      show = m.get("show").collect {
-        case i: Int => i.toDouble
-        case l: Long => l.toDouble
-        case d: Double => d
-        case s: String => s.toDouble
-      },
-      showSchema = m.get("show_schema").exists {
-        case b: Boolean => b
-        case s: String => s.toLowerCase == "true"
-        case _ => false
-      },
-      explain = m.get("explain").exists {
-        case b: Boolean => b
-        case s: String => s.toLowerCase == "true"
-        case _ => false
-      },
+      show = m.get("show").flatMap(YamlScalar.double),
+      showSchema = flag("show_schema"),
+      explain = flag("explain"),
       stages = m.get("stages") match {
         case Some(l: List[_]) => l.map(parseStage)
         case _ => Nil
       },
-      parallel = m.get("parallel").exists {
-        case b: Boolean => b
-        case s: String => s.toLowerCase == "true"
-        case _ => false
-      },
+      parallel = flag("parallel"),
       onError = strOpt("on_error").getOrElse("fail"),
-      throttle = m.get("throttle").collect {
-        case d: Double => d
-        case i: Int => i.toDouble
-        case l: Long => l.toDouble
-        case s: String => s.toDouble
-      },
+      throttle = m.get("throttle").flatMap(YamlScalar.double),
       logLevel = strOpt("log_level"),
       locator = strOpt("locator"))
   }

@@ -424,36 +424,28 @@ object DataSelection {
     * per distinct guarded plan, not one per call (the r19 ADVICE
     * pile-up). Failures are never memoized: a thrown mapper leaves no
     * entry, so an oversized frame diagnoses on every attempt
-    * (DecontaminateSpec's contract). Stopped sessions are evicted on
-    * the next lookup, Tables.cache's discipline. */
-  private val evalGuardMemo = new java.util.HashMap[SparkSession,
-    java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int), DataFrame]]()
+    * (DecontaminateSpec's contract). */
+  private val evalGuardMemo = new graft.core.SessionMemo[
+    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int), DataFrame]
 
   private[graft] def boundedEvalBroadcast(df: DataFrame, site: String,
       maxRows: Int = evalBroadcastMaxRows): DataFrame = {
-    val perSession = evalGuardMemo.synchronized {
-      evalGuardMemo.keySet.removeIf(s => s.sparkContext.isStopped)
-      evalGuardMemo.computeIfAbsent(df.sparkSession,
-        _ => new java.util.concurrent.ConcurrentHashMap[
-          (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int), DataFrame]())
+    val verified = evalGuardMemo(df.sparkSession,
+      (df.queryExecution.analyzed.canonicalized, maxRows)) {
+      val pinned = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val n = pinned.limit(maxRows + 1).count()
+      if (n > maxRows) {
+        pinned.unpersist()
+        throw new IllegalStateException(
+          s"$site: eval-side frame exceeds the benchmark-bounded-eval " +
+            s"premise behind its broadcast hint (> $maxRows rows). A " +
+            "corpus-proportional eval set must not broadcast — route it " +
+            "through t43_bloom_decontaminate's Bloom-filter probe (eval " +
+            "side becomes a ~MB sketch) or t100_semantic_decontaminate_ivf's " +
+            "IVF join (no broadcast on either side) instead.")
+      }
+      pinned
     }
-    val verified = perSession.computeIfAbsent(
-      (df.queryExecution.analyzed.canonicalized, maxRows), { _ =>
-        val pinned = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = pinned.limit(maxRows + 1).count()
-        if (n > maxRows) {
-          pinned.unpersist()
-          throw new IllegalStateException(
-            s"$site: eval-side frame exceeds the benchmark-bounded-eval " +
-              s"premise behind its broadcast hint (> $maxRows rows). A " +
-              "corpus-proportional eval set must not broadcast — route it " +
-              "through t43_bloom_decontaminate's Bloom-filter probe (eval " +
-              "side becomes a ~MB sketch) or t100_semantic_decontaminate_ivf's " +
-              "IVF join (no broadcast on either side) instead.")
-        }
-        pinned
-      })
     broadcast(verified)
   }
 
@@ -1573,7 +1565,8 @@ object DataSelection {
               .as("n_boiler_docs"))
         val dist = ch.groupBy("source")
           .agg(countDistinct("h").as("n_distinct_chunks"))
-        bySrc.join(dist, "source")
+        // one row per source on each side: hinted, a dimension bound
+        bySrc.join(broadcast(dist), "source")
           .select(col("source"), col("n_docs"), col("n_chunks"),
             col("n_distinct_chunks"), col("n_boiler_docs"))
           .orderBy("source")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.SessionMemo
 
 /** A named query exposed through [[graft.SparkEntry]].
   *
@@ -77,23 +78,14 @@ object Tables {
   /** Memoized per (session, dir, table): `spark.read.parquet` re-lists the
     * directory and re-reads footers on every call, which across 40+ bench
     * queries is pure fixed overhead. DataFrames are immutable plans, so
-    * reuse is safe. Stopped sessions are evicted explicitly on the next
-    * lookup — weak keys alone would never collect here, because the
-    * cached DataFrames strongly reference their session. */
-  private val cache = new java.util.HashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]()
+    * reuse is safe. */
+  private val cache = new SessionMemo[(String, String), DataFrame]
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val perSession = cache.synchronized {
-      cache.keySet.removeIf(s => s.sparkContext.isStopped)
-      cache.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-    }
-    perSession.computeIfAbsent((dir, name), { _ =>
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    cache(spark, (dir, name)) {
       if (name == "events") events(spark, dir)
       else spark.read.parquet(s"$dir/$name.parquet")
-    })
-  }
+    }
 
   /** Schema-adaptive events reader. The fixture generator has emitted
     * `ts` as parquet TIMESTAMP(NANOS) in some rounds and timestamp[us]

@@ -186,65 +186,61 @@ object FnMacros {
     }
   }
 
-  /** Expand every `Fn.x(...)` call in `sql` (recursively, innermost-last:
+  /** The `Fn.name(` call starting at token `i`: its name and the index
+    * of its "(". `Fn` matches in any case, as DuckDB names do. */
+  private[sqlbridge] def call(toks: Vector[Tok], i: Int): Option[(String, Int)] =
+    if (isWord(toks(i), "Fn") && toks.lift(i + 1).contains(Sym(".")))
+      toks.lift(i + 2) match {
+        case Some(Word(name)) =>
+          val open = nextNonBlank(toks, i + 3)
+          if (toks.lift(open).contains(Sym("("))) Some((name, open)) else None
+        case _ => None
+      }
+    else None
+
+  /** Expand every `Fn.x(...)` call in `toks` (recursively, innermost-last:
     * we expand outermost and re-scan until fixpoint). */
-  def expand(sql: String): String = {
-    var cur = sql
-    var iterations = 0
-    while (cur.contains("Fn.") && iterations < 50) {
-      val next = expandOnce(cur)
-      if (next == cur) return cur // Fn. inside string literal etc.
-      cur = next
-      iterations += 1
-    }
-    if (iterations >= 50) sys.error("Fn macro expansion did not converge")
-    cur
+  def expand(toks: Vector[Tok]): Vector[Tok] = {
+    @annotation.tailrec
+    def loop(cur: Vector[Tok], rounds: Int): Vector[Tok] =
+      if (rounds == 50) sys.error("Fn macro expansion did not converge")
+      else expandOnce(cur) match {
+        case Some(next) => loop(next, rounds + 1)
+        case None => cur
+      }
+    loop(toks, 0)
   }
 
-  private def expandOnce(sql: String): String = {
-    val toks = tokenize(sql)
-    val out = new StringBuilder
-    var i = 0
+  /** One round: every call in `toks` expanded, or None if there is none. */
+  private def expandOnce(toks: Vector[Tok]): Option[Vector[Tok]] = {
     var changed = false
-    while (i < toks.length) {
-      val isFn = isWord(toks(i), "Fn") && i + 2 < toks.length &&
-        toks(i + 1) == Sym(".") && toks(i + 2).isInstanceOf[Word]
-      if (isFn) {
-        val name = toks(i + 2).text
-        // find the "(" (skipping whitespace syms)
-        var j = i + 3
-        while (j < toks.length && toks(j).isInstanceOf[Sym] &&
-          toks(j).text.trim.isEmpty) j += 1
-        if (j < toks.length && toks(j) == Sym("(")) {
-          lookup(name) match {
-            case Some(mac) =>
-              val close = matchParen(toks, j)
-              val args = splitArgs(toks.slice(j + 1, close))
-                .filter(_.nonEmpty).map(render)
-              out.append(applyMacro(name, mac, args))
-              changed = true
-              i = close + 1
-            case None =>
-              sys.error(s"unknown macro Fn.$name")
-          }
-        } else { out.append(toks(i).text); i += 1 }
-      } else { out.append(toks(i).text); i += 1 }
-    }
-    if (changed) out.toString else sql
-  }
-
-  private def applyMacro(name: String, mac: Macro, rawArgs: List[String]): String = {
-    // split named (x := v) from positional args
-    val named = mutable.Map[String, String]()
-    val positional = mutable.ListBuffer[String]()
-    rawArgs.foreach { a =>
-      val trimmed = a.trim
-      val nm = "^(\\w+)\\s*:=\\s*([\\s\\S]+)$".r.findFirstMatchIn(trimmed)
-      nm match {
-        case Some(g) => named(g.group(1)) = g.group(2)
-        case None => positional += trimmed
+    val out = substitute(toks) { i =>
+      call(toks, i).map { case (name, open) =>
+        val mac = lookup(name).getOrElse(sys.error(s"unknown macro Fn.$name"))
+        val close = matchParen(toks, open)
+        val args = splitArgs(toks.slice(open + 1, close)).filter(_.nonEmpty)
+        changed = true
+        (tokenize(applyMacro(name, mac, args)), close + 1)
       }
     }
+    if (changed) Some(out) else None
+  }
+
+  /** `name := value`: the parameter name and the value's text. */
+  private def namedArg(arg: Vector[Tok]): Option[(String, String)] = arg match {
+    case Word(name) +: rest =>
+      val colon = nextNonBlank(rest, 0)
+      val value = trimTok(rest.drop(colon + 2))
+      if (rest.slice(colon, colon + 2) == Vector(Sym(":"), Sym("=")) && value.nonEmpty)
+        Some((name, render(value)))
+      else None
+    case _ => None
+  }
+
+  private def applyMacro(name: String, mac: Macro, args: List[Vector[Tok]]): String = {
+    // split named (x := v) from positional args
+    val (namedArgs, positional) = args.partitionMap(a => namedArg(a).toLeft(render(a)))
+    val named = namedArgs.toMap
     // special case: Fn.dt(value, pattern) overload (macros.py:146-174)
     if (name == "dt" && positional.size == 2 && named.isEmpty) {
       val value = positional(0)

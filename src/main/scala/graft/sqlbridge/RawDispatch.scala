@@ -1,8 +1,8 @@
 package graft.sqlbridge
 
-import java.util.regex.Matcher
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.connections.{FileFormat, FileFormats, Locator}
+import graft.sqlbridge.SqlText._
 
 /** `raw_dispatch: true` support (reference: _raw_sql_rewriter,
   * ankaflow/connections/connection.py:290-323; model
@@ -12,7 +12,10 @@ import graft.connections.{FileFormat, FileFormats, Locator}
   * The user's SQL is sent as-is except that *short* locators inside the
   * supported table functions are rewritten to the fully resolved path.
   * Absolute paths pass through untouched; a short locator that does not
-  * match the connection's declared locator is an error.
+  * match the connection's declared locator is an error. Calls are found
+  * on [[SqlText]]'s token stream, as `fn(` followed by a path literal, so
+  * a call inside a string literal or a comment is text: it is neither
+  * checked against the locator nor read.
   *
   * Execution on Spark: the reference hands the rewritten SQL to DuckDB,
   * whose `read_parquet`/`delta_scan` table functions do the reading. Spark
@@ -32,46 +35,53 @@ object RawDispatch {
     "read_csv" -> FileFormats.csv, "read_json_auto" -> FileFormats.json,
     "read_json" -> FileFormats.json)
 
-  private val funcs = formats.keys
+  /** The reader call at token `i`, `fn(` with `fn` in [[formats]]: its
+    * format and the index of its "(". */
+  private def readerCall(toks: Vector[Tok], i: Int): Option[(FileFormat, Int)] =
+    toks(i) match {
+      case Word(fn) if toks.lift(i + 1).contains(Sym("(")) =>
+        formats.get(fn.toLowerCase).map(f => (f, i + 1))
+      case _ => None
+    }
 
-  private val locatorPattern =
-    ("(?i)\\b(" + funcs.mkString("|") + ")\\(\\s*'([^']+)'").r
+  /** The non-empty path literal that opens the arguments of the call whose
+    * "(" is at `open`: its index and value. */
+  private def pathArg(toks: Vector[Tok], open: Int): Option[(Int, String)] = {
+    val j = nextNonBlank(toks, open + 1)
+    toks.lift(j).flatMap(literalValue).filter(_.nonEmpty).map(path => (j, path))
+  }
 
   /** Rewrite short locators to `resolved`; validate they match
-    * `connLocator`. Pure text transformation (all occurrences). */
-  def rewrite(sql: String, connLocator: String, resolved: String): String =
-    locatorPattern.replaceAllIn(sql, m => {
-      val short = m.group(2)
-      if (Locator.isAbsolute(short)) Matcher.quoteReplacement(m.group(0))
-      else if (short != connLocator)
-        throw new IllegalArgumentException(
-          s"Locator '$short' does not match connection: '$connLocator'")
-      else Matcher.quoteReplacement(m.group(0).replace(short, resolved))
-    })
-
-  private val callPattern =
-    ("(?i)\\b(" + funcs.mkString("|") + ")\\(([^()]*)\\)").r
+    * `connLocator`. Every reader call is rewritten; a call inside a
+    * literal or a comment is text. */
+  def rewrite(sql: String, connLocator: String, resolved: String): String = {
+    val toks = tokenize(sql)
+    val swaps = toks.indices.flatMap(readerCall(toks, _))
+      .flatMap { case (_, open) => pathArg(toks, open) }
+      .collect { case (j, short) if !Locator.isAbsolute(short) =>
+        if (short != connLocator)
+          throw new IllegalArgumentException(
+            s"Locator '$short' does not match connection: '$connLocator'")
+        j -> literal(resolved)
+      }.toMap
+    render(toks.indices.map(i => swaps.getOrElse(i, toks(i))))
+  }
 
   /** Replace every reader-function call with a scratch view over the
     * equivalent [[FileFormats]] read, then run the statement. */
   def execute(spark: SparkSession, sql: String,
       names: SqlBridge.NameRegistry): DataFrame =
     SqlBridge.withScratchViews(spark) { view =>
-      var out = sql
-      var found = true
-      while (found) {
-        callPattern.findFirstMatchIn(out) match {
-          case Some(m) =>
-            val func = m.group(1).toLowerCase
-            val args = m.group(2)
-            val path = "'([^']+)'".r.findFirstMatchIn(args)
-              .map(_.group(1))
-              .getOrElse(sys.error(s"$func: missing path argument in ($args)"))
-            val name = view("__raw_dispatch", formats(func).read(spark, path))
-            out = out.substring(0, m.start) + name + out.substring(m.end)
-          case None => found = false
+      val toks = tokenize(sql)
+      val out = substitute(toks) { i =>
+        readerCall(toks, i).map { case (format, open) =>
+          val close = matchParen(toks, open)
+          val path = pathArg(toks, open).map(_._2).getOrElse(sys.error(
+            s"${toks(i).text.toLowerCase}: missing path argument in " +
+              s"(${render(toks.slice(open + 1, close))})"))
+          (Seq(Word(view("__raw_dispatch", format.read(spark, path)))), close + 1)
         }
       }
-      spark.sql(SqlBridge.translate(out, names, Some(spark)))
+      spark.sql(SqlBridge.translateTokens(out, names, Some(spark)))
     }
 }

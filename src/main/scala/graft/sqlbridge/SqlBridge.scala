@@ -7,7 +7,9 @@ import graft.sqlbridge.SqlText._
 /** DuckDB-flavored SQL → Spark SQL translation (SURVEY.md §2.9, §7.1-3).
   *
   * The reference executes user SQL directly on DuckDB; our passthrough
-  * executor is `spark.sql`, so this pass closes the dialect gap:
+  * executor is `spark.sql`, so [[translate]] closes the dialect gap with
+  * passes over one [[SqlText]] token stream (text inside literals and
+  * comments is never rewritten):
   *  - `Fn.*` macro expansion ([[FnMacros]]);
   *  - stage names as quoted identifiers (`FROM "Extract Data"`) → mangled
   *    temp-view names (Spark rejects spaces in view names);
@@ -66,238 +68,159 @@ object SqlBridge {
     "epoch_us" -> "unix_micros",
     "to_days" -> "make_dt_interval")
 
-  /** Full translation of a transform/internal query. */
+  /** Full translation of a transform/internal query: one tokenize, the
+    * passes below in order over the one token stream, one render. */
   def translate(sql: String, names: NameRegistry,
-      spark: Option[SparkSession] = None): String = {
-    var out = FnTableMacros.expand(sql, spark)
-    out = FnMacros.expand(out)
-    out = rewriteStrftime(out)
-    out = rewriteExclude(out)
-    out = rewriteUsingSample(out)
-    out = swapIdentifiersAndFunctions(out, names)
-    out = rewriteQualify(out)
-    out
+      spark: Option[SparkSession] = None): String =
+    translateTokens(tokenize(sql), names, spark)
+
+  /** [[translate]] of a statement already tokenized. */
+  private[sqlbridge] def translateTokens(toks: Vector[Tok], names: NameRegistry,
+      spark: Option[SparkSession]): String = {
+    val passes = Seq[Vector[Tok] => Vector[Tok]](
+      FnTableMacros.expand(_, spark), FnMacros.expand, rewriteStrftime,
+      rewriteExclude, rewriteUsingSample, swapIdentifiersAndFunctions(names),
+      rewriteQualify)
+    render(passes.foldLeft(toks)((t, pass) => pass(t)))
   }
 
   /** DuckDB `* EXCLUDE (a, b)` / `* EXCLUDE a` star modifier → Spark
-    * `* EXCEPT (...)` (SURVEY §2.9). Token-based: only an EXCLUDE word
-    * following a `*` is a star modifier — string literals and columns
-    * that happen to be named exclude pass through untouched. */
-  def rewriteExclude(sql: String): String = {
-    val toks = tokenize(sql)
-    def prevNonBlankIdx(i: Int): Int = {
-      var j = i - 1
-      while (j >= 0 && toks(j).isInstanceOf[Sym] &&
-        toks(j).text.trim.isEmpty) j -= 1
-      j
-    }
+    * `* EXCEPT (...)` (SURVEY §2.9). Only an EXCLUDE word following a
+    * `*` is a star modifier — columns that happen to be named exclude
+    * pass through untouched. */
+  def rewriteExclude(toks: Vector[Tok]): Vector[Tok] = {
     // the `*` before EXCLUDE must be a star projection, not multiplication:
     // a star follows SELECT / a comma / a dot (table.*), never an operand
-    def isStarProjection(starIdx: Int): Boolean = {
-      val before = prevNonBlankIdx(starIdx)
+    def isStarProjection(star: Int): Boolean = {
+      val before = prevNonBlank(toks, star - 1)
       before < 0 || (toks(before) match {
         case w: Word => w.text.equalsIgnoreCase("select")
         case Sym(",") | Sym(".") | Sym("(") => true
         case _ => false
       })
     }
-    val out = new StringBuilder
-    var i = 0
-    while (i < toks.length) {
-      val prevIdx = prevNonBlankIdx(i)
-      if (isWord(toks(i), "exclude") && prevIdx >= 0 &&
-        toks(prevIdx) == Sym("*") && isStarProjection(prevIdx)) {
-        out.append("EXCEPT")
+    substitute(toks) { i =>
+      val star = if (isWord(toks(i), "exclude")) prevNonBlank(toks, i - 1) else -1
+      if (star >= 0 && toks(star) == Sym("*") && isStarProjection(star)) {
         val j = nextNonBlank(toks, i + 1)
-        toks.lift(j) match {
-          case Some(w: Word) =>
-            out.append(render(toks.slice(i + 1, j)))
-            out.append("(").append(w.text).append(")")
-            i = j + 1
-          case Some(q: QuotedId) => // bare quoted form also needs parens
-            out.append(render(toks.slice(i + 1, j)))
-            out.append("(").append(q.text).append(")")
-            i = j + 1
-          case _ => i += 1 // parenthesized form: keep the rest as-is
-        }
-      } else { out.append(toks(i).text); i += 1 }
+        Some(toks.lift(j) match {
+          case Some(id @ (_: Word | _: QuotedId)) => // the bare form needs parens
+            ((Word("EXCEPT") +: toks.slice(i + 1, j)) ++ Seq(Sym("("), id, Sym(")")), j + 1)
+          case _ => (Seq(Word("EXCEPT")), i + 1) // parenthesized form: keep the rest as-is
+        })
+      } else None
     }
-    out.toString
   }
 
   /** DuckDB `USING SAMPLE n ROWS` / `USING SAMPLE p%` → Spark
     * `TABLESAMPLE (n ROWS)` / `(p PERCENT)` (SURVEY §2.9; the reference
-    * generates these for previews, flow.py:68-73). Token-based pass. */
-  def rewriteUsingSample(sql: String): String = {
-    val toks = tokenize(sql)
-    val out = new StringBuilder
-    var i = 0
-    while (i < toks.length) {
-      val j = nextNonBlank(toks, i + 1)
-      if (isWord(toks(i), "using") && j < toks.length && isWord(toks(j), "sample")) {
-        // digits tokenize as single-char Syms — collect the full number
-        var k = nextNonBlank(toks, j + 1)
-        val amt = new StringBuilder
-        while (k < toks.length && toks(k).isInstanceOf[Sym] &&
-          toks(k).text.length == 1 &&
-          (toks(k).text(0).isDigit || toks(k).text == ".")) {
-          amt.append(toks(k).text); k += 1
-        }
-        if (amt.nonEmpty) {
-          val afterIdx = nextNonBlank(toks, k)
-          if (afterIdx < toks.length && isWord(toks(afterIdx), "rows")) {
-            out.append(s"TABLESAMPLE ($amt ROWS)")
-            i = afterIdx + 1
-          } else if (afterIdx < toks.length && (toks(afterIdx) == Sym("%") ||
-            isWord(toks(afterIdx), "percent"))) { // 10% or 10 PERCENT
-            out.append(s"TABLESAMPLE ($amt PERCENT)")
-            i = afterIdx + 1
-          } else {
-            // bare number = rows in DuckDB
-            out.append(s"TABLESAMPLE ($amt ROWS)")
-            i = k
-          }
-        } else { out.append(toks(i).text); i += 1 }
-      } else { out.append(toks(i).text); i += 1 }
+    * generates these for previews, flow.py:68-73). */
+  def rewriteUsingSample(toks: Vector[Tok]): Vector[Tok] = {
+    // digits tokenize as single-char Syms — a number is a run of them
+    def isNumberChar(t: Tok) = t match {
+      case Sym(s) => s.length == 1 && (s(0).isDigit || s == ".")
+      case _ => false
     }
-    out.toString
+    substitute(toks) { i =>
+      val j = if (isWord(toks(i), "using")) nextNonBlank(toks, i + 1) else toks.length
+      if (toks.lift(j).exists(isWord(_, "sample"))) {
+        val num = nextNonBlank(toks, j + 1)
+        var end = num
+        while (end < toks.length && isNumberChar(toks(end))) end += 1
+        if (end > num) {
+          val amount = render(toks.slice(num, end))
+          val unit = nextNonBlank(toks, end)
+          val (clause, next) = toks.lift(unit) match {
+            case Some(t) if isWord(t, "rows") => (s"$amount ROWS", unit + 1)
+            case Some(t) if t == Sym("%") || isWord(t, "percent") => // 10% or 10 PERCENT
+              (s"$amount PERCENT", unit + 1)
+            case _ => (s"$amount ROWS", end) // bare number = rows in DuckDB
+          }
+          Some((tokenize(s"TABLESAMPLE ($clause)"), next))
+        } else None
+      } else None
+    }
   }
 
   /** DuckDB strftime/strptime with a literal `%`-pattern (either argument
     * order — DuckDB accepts both) → Spark date_format/to_timestamp with
-    * the Java pattern. Token-based so string literals containing the
-    * words are untouched. Unsupported tokens (e.g. ISO %V/%u, which have
-    * no Java equivalent) are left untranslated for Spark to reject
-    * loudly. */
-  def rewriteStrftime(sql: String): String = {
-    val toks = tokenize(sql)
-    val out = new StringBuilder
-    var i = 0
-    while (i < toks.length) {
-      val isFn = isWord(toks(i), "strftime") || isWord(toks(i), "strptime")
-      var consumed = false
-      if (isFn) {
-        val j = nextNonBlank(toks, i + 1)
-        if (j < toks.length && toks(j) == Sym("(")) {
-          val close = matchParen(toks, j)
-          val args = splitArgs(toks.slice(j + 1, close)).map(render)
-          if (args.length == 2) {
-            val fn = toks(i).text.toLowerCase
-            val original = render(toks.slice(i, close + 1))
-            def lit(s: String): Option[String] =
-              if (s.length >= 2 && s.head == '\'' && s.last == '\'')
-                Some(s.substring(1, s.length - 1))
-              else None
-            // recurse into nested calls inside the value argument
-            val result = (lit(args(0)), lit(args(1))) match {
-              case (Some(p), _) if p.contains("%") =>
-                convertOrKeep(fn, rewriteStrftime(args(1)), p, original)
-              case (_, Some(p)) if p.contains("%") =>
-                convertOrKeep(fn, rewriteStrftime(args(0)), p, original)
-              case _ => original
-            }
-            out.append(result)
-            i = close + 1
-            consumed = true
-          }
-        }
-      }
-      if (!consumed) { out.append(toks(i).text); i += 1 }
+    * the Java pattern. Unsupported tokens (e.g. ISO %V/%u, which have no
+    * Java equivalent) are left untranslated for Spark to reject loudly. */
+  def rewriteStrftime(toks: Vector[Tok]): Vector[Tok] = substitute(toks) { i =>
+    val open = if (isWord(toks(i), "strftime") || isWord(toks(i), "strptime"))
+      nextNonBlank(toks, i + 1) else toks.length
+    if (toks.lift(open).contains(Sym("("))) {
+      val close = matchParen(toks, open)
+      val args = splitArgs(toks.slice(open + 1, close))
+      if (args.length == 2)
+        Some((strftimeCall(toks(i).text.toLowerCase, args, toks.slice(i, close + 1)), close + 1))
+      else None
+    } else None
+  }
+
+  /** One two-argument strftime/strptime `call` with arguments `args`. */
+  private def strftimeCall(fn: String, args: List[Vector[Tok]],
+      call: Vector[Tok]): Vector[Tok] = {
+    def pattern(arg: Vector[Tok]): Option[String] = {
+      val s = render(arg)
+      if (s.length >= 2 && s.head == '\'' && s.last == '\'')
+        Some(s.substring(1, s.length - 1)).filter(_.contains("%"))
+      else None
     }
-    out.toString
+    val valueAndJava = (pattern(args(0)), pattern(args(1))) match {
+      case (Some(p), _) => Some((args(1), FnMacros.toJavaPattern(p)))
+      case (_, Some(p)) => Some((args(0), FnMacros.toJavaPattern(p)))
+      case _ => None
+    }
+    valueAndJava match {
+      case Some((value, java)) if !java.contains("%") =>
+        val spark = if (fn == "strftime") "date_format" else "to_timestamp"
+        // recurse into nested calls inside the value argument
+        tokenize(s"$spark(") ++ rewriteStrftime(value) ++ tokenize(s", '$java')")
+      case _ => call // no literal pattern, or an untranslatable token
+    }
   }
 
-  private def convertOrKeep(fn: String, value: String, pattern: String,
-      original: String): String = {
-    val java = FnMacros.toJavaPattern(pattern)
-    if (java.contains("%")) original // untranslatable token — pass through
-    else if (fn == "strftime") s"date_format($value, '$java')"
-    else s"to_timestamp($value, '$java')"
-  }
-
-  private def swapIdentifiersAndFunctions(sql: String, names: NameRegistry): String = {
-    val toks = tokenize(sql)
-    val out = new StringBuilder
-    toks.zipWithIndex.foreach { case (t, i) =>
-      t match {
+  /** Stage names → view names, `"ident"` → backticks, and the DuckDB
+    * function spellings in [[fnSwaps]] → Spark's. */
+  private def swapIdentifiersAndFunctions(names: NameRegistry)(
+      toks: Vector[Tok]): Vector[Tok] =
+    toks.indices.map { i =>
+      toks(i) match {
         case QuotedId(text) if text.startsWith("\"") =>
           val inner = unquote(text)
-          val mapped = names.get(inner).getOrElse(inner)
-          out.append('`').append(mapped).append('`')
-        case Word(w) =>
-          // bare stage-name reference (exact match) → mangled view name
-          names.get(w) match {
-            case Some(v) => out.append(v)
-            case None =>
-              val lower = w.toLowerCase
-              // only swap function names when followed by "("
-              val isCall = {
-                var j = i + 1
-                while (j < toks.length && toks(j).isInstanceOf[Sym] &&
-                  toks(j).text.trim.isEmpty) j += 1
-                j < toks.length && toks(j) == Sym("(")
-              }
-              if (isCall && fnSwaps.contains(lower)) out.append(fnSwaps(lower))
-              else out.append(w)
-          }
-        case other => out.append(other.text)
+          QuotedId("`" + names.get(inner).getOrElse(inner) + "`")
+        case w @ Word(text) =>
+          // bare stage-name reference (exact match) → mangled view name;
+          // function names swap only when followed by "("
+          names.get(text).map(Word).getOrElse(fnSwaps.get(text.toLowerCase) match {
+            case Some(spark) if toks.lift(nextNonBlank(toks, i + 1)).contains(Sym("(")) =>
+              Word(spark)
+            case _ => w
+          })
+        case t => t
       }
-    }
-    out.toString
-  }
+    }.toVector
 
   /** `SELECT ... FROM ... QUALIFY cond [tail]` →
     * `SELECT * EXCEPT (__qualify__) FROM (SELECT ..., (cond) AS __qualify__
     *  FROM ...) q WHERE __qualify__ [tail]`. */
-  def rewriteQualify(sql: String): String = {
-    val toks = tokenize(sql)
-    var depth = 0
-    var qualifyIdx = -1
-    toks.zipWithIndex.foreach { case (t, i) =>
-      t match {
-        case Sym("(") => depth += 1
-        case Sym(")") => depth -= 1
-        case w: Word if depth == 0 && w.text.equalsIgnoreCase("qualify") &&
-          qualifyIdx < 0 => qualifyIdx = i
-        case _ =>
-      }
-    }
-    if (qualifyIdx < 0) return sql
+  def rewriteQualify(toks: Vector[Tok]): Vector[Tok] = {
+    val qualify = topLevel(toks)(i => isWord(toks(i), "qualify"))
+    if (qualify < 0) return toks
     // cond runs until top-level ORDER / LIMIT / end
-    depth = 0
-    var tailIdx = toks.length
-    var i = qualifyIdx + 1
-    while (i < toks.length && tailIdx == toks.length) {
-      toks(i) match {
-        case Sym("(") => depth += 1
-        case Sym(")") => depth -= 1
-        case w: Word if depth == 0 &&
-          (w.text.equalsIgnoreCase("order") || w.text.equalsIgnoreCase("limit")) =>
-          tailIdx = i
-        case _ =>
-      }
-      i += 1
+    val tail = topLevel(toks, qualify + 1)(i =>
+      isWord(toks(i), "order") || isWord(toks(i), "limit")) match {
+      case -1 => toks.length
+      case t => t
     }
-    val head = render(toks.slice(0, qualifyIdx))
-    val cond = render(toks.slice(qualifyIdx + 1, tailIdx)).trim
-    val tail = render(toks.slice(tailIdx, toks.length))
     // insert the qualify expression into the select list (before top FROM)
-    val headToks = tokenize(head)
-    depth = 0
-    var fromIdx = -1
-    headToks.zipWithIndex.foreach { case (t, j) =>
-      t match {
-        case Sym("(") => depth += 1
-        case Sym(")") => depth -= 1
-        case w: Word if depth == 0 && w.text.equalsIgnoreCase("from") &&
-          fromIdx < 0 => fromIdx = j
-        case _ =>
-      }
-    }
-    if (fromIdx < 0) sys.error("QUALIFY without FROM")
-    val sel = render(headToks.slice(0, fromIdx))
-    val rest = render(headToks.slice(fromIdx, headToks.length))
-    s"SELECT * EXCEPT (__qualify__) FROM ($sel, ($cond) AS __qualify__ $rest) __qualify_sub WHERE __qualify__ $tail"
+    val from = topLevel(toks)(i => isWord(toks(i), "from"))
+    if (from < 0 || from > qualify) sys.error("QUALIFY without FROM")
+    tokenize("SELECT * EXCEPT (__qualify__) FROM (") ++ toks.slice(0, from) ++
+      tokenize(", (") ++ trimTok(toks.slice(qualify + 1, tail)) ++
+      tokenize(") AS __qualify__ ") ++ toks.slice(from, qualify) ++
+      tokenize(") __qualify_sub WHERE __qualify__ ") ++ toks.drop(tail)
   }
 
   // ------------------------------------------------------------- validation
@@ -305,32 +228,27 @@ object SqlBridge {
   /** Port of validate_simple_query (ankaflow/common/util.py:386-425):
     * tap queries must be single-table SELECTs — no CTEs, joins, subqueries
     * in FROM, or missing FROM. Returns the single table name. */
-  def validateSimpleQuery(sql: String): String = {
-    val toks = tokenize(sql).filter {
-      case Sym(s) => s.trim.nonEmpty
-      case _ => true
-    }
+  def validateSimpleQuery(sql: String): String = tapTable(tokenize(sql))
+
+  private val joinWords = Set("join", "inner", "outer", "cross", "natural")
+
+  private def tapTable(all: Vector[Tok]): String = {
+    val toks = all.filterNot(isBlank)
     if (toks.isEmpty) sys.error("empty query")
     if (isWord(toks.head, "with"))
       sys.error("CTEs are not allowed in tap queries")
-    var depth = 0
-    var fromIdx = -1
-    toks.zipWithIndex.foreach { case (t, i) =>
-      t match {
-        case Sym("(") => depth += 1
-        case Sym(")") => depth -= 1
-        case w: Word if depth == 0 =>
-          val lw = w.text.toLowerCase
-          if (Set("join", "inner", "outer", "cross", "natural").contains(lw) ||
-            (lw == "left" || lw == "right") && i + 1 < toks.length &&
-              (isWord(toks(i + 1), "join") || isWord(toks(i + 1), "outer")))
-            sys.error("JOINs are not allowed in tap queries")
-          if (lw == "from" && fromIdx < 0) fromIdx = i
-        case _ =>
-      }
+    def isJoin(i: Int): Boolean = toks(i) match {
+      case Word(w) =>
+        val lw = w.toLowerCase
+        joinWords.contains(lw) || (lw == "left" || lw == "right") &&
+          toks.lift(i + 1).exists(t => isWord(t, "join") || isWord(t, "outer"))
+      case _ => false
     }
-    if (fromIdx < 0) sys.error("tap query must have a FROM clause")
-    val after = toks.drop(fromIdx + 1)
+    if (topLevel(toks)(isJoin) >= 0)
+      sys.error("JOINs are not allowed in tap queries")
+    val from = topLevel(toks)(i => isWord(toks(i), "from"))
+    if (from < 0) sys.error("tap query must have a FROM clause")
+    val after = toks.drop(from + 1)
     after.headOption match {
       case Some(Sym("(")) => sys.error("subqueries are not allowed in tap queries")
       case Some(Word(t)) =>
@@ -343,25 +261,23 @@ object SqlBridge {
     }
   }
 
+  private val aggregates = Set("sum", "count", "avg", "min", "max")
+
   /** True if the query contains aggregation at the top level —
     * disallowed under dedup ranking (util.py:419-424). */
   def hasAggregation(sql: String): Boolean = {
-    val toks = tokenize(sql).toIndexedSeq
-    var depth = 0
-    toks.indices.exists { i =>
+    val toks = tokenize(sql)
+    topLevel(toks) { i =>
       toks(i) match {
-        case Sym("(") => depth += 1; false
-        case Sym(")") => depth -= 1; false
-        case w: Word if depth == 0 =>
-          val lower = w.text.toLowerCase
+        case Word(w) =>
+          val lower = w.toLowerCase
           // agg NAMES only count as calls — a column named `count` is
           // fine (it's only a function when followed by "(")
-          Set("group", "having").contains(lower) ||
-            (Set("sum", "count", "avg", "min", "max").contains(lower) &&
-              (i + 1 < toks.length) && toks(i + 1) == Sym("("))
+          lower == "group" || lower == "having" ||
+            aggregates.contains(lower) && toks.lift(i + 1).contains(Sym("("))
         case _ => false
       }
-    }
+    } >= 0
   }
 
   /** Dedup ranking keeps one row per key of the query's OWN rows, so a
@@ -384,27 +300,19 @@ object SqlBridge {
   /** Swap the single FROM-table of a validated tap query with a
     * replacement relation (reference "placeholder table" swap,
     * connection.py:259-288). */
-  def swapFromTable(sql: String, replacement: String): String = {
-    val table = validateSimpleQuery(sql)
-    val toks = tokenize(sql)
-    val out = new StringBuilder
-    var swapped = false
-    var afterFrom = false
-    toks.foreach {
-      case w: Word if w.text.equalsIgnoreCase("from") && !swapped =>
-        afterFrom = true
-        out.append(w.text)
-      case w: Word if afterFrom && !swapped && w.text == table =>
-        out.append(replacement)
-        swapped = true
-        afterFrom = false
-      case q: QuotedId if afterFrom && !swapped && unquote(q.text) == table =>
-        out.append(replacement)
-        swapped = true
-        afterFrom = false
-      case t => out.append(t.text)
-    }
-    out.toString
+  def swapFromTable(sql: String, replacement: String): String =
+    render(swapFromTable(tokenize(sql), replacement))
+
+  /** [[swapFromTable]] on the query's tokens. */
+  def swapFromTable(toks: Vector[Tok], replacement: String): Vector[Tok] = {
+    val table = tapTable(toks)
+    val from = toks.indexWhere(isWord(_, "from"))
+    val at = toks.indexWhere({
+      case Word(w) => w == table
+      case QuotedId(q) => unquote(q) == table
+      case _ => false
+    }, from + 1)
+    toks.patch(at, tokenize(replacement), 1)
   }
 
   private val scratchIds = new java.util.concurrent.atomic.AtomicLong
@@ -458,37 +366,26 @@ object FnTableMacros {
        |                              interval '1' day)) AS d))""".stripMargin
   }
 
-  /** Expand on the token stream, as [[FnMacros]] does: a macro name
-    * inside a string literal is text, not a call. */
-  def expand(sql: String, spark: Option[SparkSession]): String = {
-    if (!sql.contains("Fn.calendar") && !sql.contains("Fn.columns")) return sql
-    val toks = tokenize(sql)
-    val out = new StringBuilder
-    var i = 0
-    while (i < toks.length) {
-      val open = if (isWord(toks(i), "Fn")) nextNonBlank(toks, i + 3) else toks.length
-      val name =
-        if (open < toks.length && toks(i + 1) == Sym(".") && toks(open) == Sym("("))
-          toks(i + 2).text.toLowerCase
-        else ""
-      val expanded = name match {
-        case "calendar" | "columns" =>
-          val close = matchParen(toks, open)
-          (name, trimTok(toks.slice(open + 1, close))) match {
-            case ("calendar", Vector()) => Some((calendarSql, close))
-            case ("columns", Vector(Str(lit))) if lit.length > 2 =>
-              Some((columnsSql(lit.substring(1, lit.length - 1), spark), close))
-            case _ => None
-          }
-        case _ => None
-      }
-      expanded match {
-        case Some((text, close)) => out.append(text); i = close + 1
-        case None => out.append(toks(i).text); i += 1
+  private lazy val calendarToks = tokenize(calendarSql)
+
+  /** Expand each `Fn.calendar()` / `Fn.columns('t')` call. */
+  def expand(toks: Vector[Tok], spark: Option[SparkSession]): Vector[Tok] =
+    substitute(toks) { i =>
+      FnMacros.call(toks, i).flatMap { case (name, open) =>
+        name.toLowerCase match {
+          case table @ ("calendar" | "columns") =>
+            val close = matchParen(toks, open)
+            (table, trimTok(toks.slice(open + 1, close))) match {
+              case ("calendar", Vector()) => Some((calendarToks, close + 1))
+              case ("columns", Vector(Str(lit))) if lit.length > 2 =>
+                val sql = columnsSql(lit.substring(1, lit.length - 1), spark)
+                Some((tokenize(sql), close + 1))
+              case _ => None
+            }
+          case _ => None
+        }
       }
     }
-    out.toString
-  }
 
   private def columnsSql(table: String, spark: Option[SparkSession]): String = {
     val session = spark.getOrElse(

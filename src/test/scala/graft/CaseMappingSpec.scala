@@ -1,7 +1,13 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Base64
+import java.util.concurrent.TimeUnit
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.GraftSession
 
 /** `lower`, `upper` and `initcap` on non-ASCII text under the shipped
   * profile, which the shared session runs (JVM case mapping,
@@ -17,7 +23,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * time and ICU applies full title-case mappings. Both use the JVM's
   * default locale for non-ASCII strings, so these values hold for a
   * default locale without Turkic or Lithuanian casing rules, such as
-  * `en_US`. */
+  * `en_US`; a child JVM under `tr_TR` pins how a Turkic locale changes
+  * them (README §2.9). */
 class CaseMappingSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
 
@@ -77,9 +84,53 @@ class CaseMappingSpec extends AnyFunSuite {
     check(spark, _.initcapJvm)
   }
 
+  test("under a Turkish default locale lower follows the locale") {
+    val got = CaseMappingChild.lowerUnder("tr", "TR", Seq("\u0130stanbul", "\u0131Ii\u0130"))
+    assert(got == Seq("istanbul", "\u0131\u0131ii"))
+  }
+
   test("ICU case mapping differs only in initcap") {
     val icu = spark.newSession()
     icu.conf.set("spark.sql.icu.caseMappings.enabled", "true")
     check(icu, _.initcapIcu)
+  }
+}
+
+/** The shipped profile's `lower` in a child JVM whose default locale is
+  * `language_country`: [[lowerUnder]] starts it on the test classpath,
+  * and [[main]] prints each argument's lower case as Base64 of its
+  * UTF-8, one per line. */
+object CaseMappingChild {
+  def lowerUnder(language: String, country: String, in: Seq[String]): Seq[String] = {
+    val inherited = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(a => a.startsWith("-Xmx") || a.startsWith("-Duser."))
+    val javaBin = s"${System.getProperty("java.home")}/bin/java"
+    val cmd = Seq(javaBin) ++ inherited ++ Seq("-Xmx512m", s"-Duser.language=$language",
+      s"-Duser.country=$country", "-cp", System.getProperty("java.class.path"),
+      "graft.CaseMappingChild") ++ in.map(s => Base64.getEncoder.encodeToString(s.getBytes(UTF_8)))
+    val (out, log) = (java.io.File.createTempFile("case_mapping_child", ".out"),
+      java.io.File.createTempFile("case_mapping_child", ".log"))
+    val pb = new ProcessBuilder(cmd.asJava).redirectOutput(out).redirectError(log)
+    pb.environment.put("SPARK_GRAFT_CPUS", "1")
+    val child = pb.start()
+    val exited = child.waitFor(180, TimeUnit.SECONDS)
+    if (!exited) child.destroyForcibly().waitFor()
+    def lines(f: java.io.File) =
+      try Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(_.getLines().toList)
+      finally f.delete()
+    val (printed, stderr) = (lines(out), lines(log).takeRight(20))
+    assert(exited && child.exitValue == 0, stderr.mkString("\n"))
+    printed.map(l => new String(Base64.getDecoder.decode(l), UTF_8))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val spark = GraftSession.local("case-mapping-child").getOrCreate()
+    try {
+      import spark.implicits._
+      args.toSeq.map(a => new String(Base64.getDecoder.decode(a), UTF_8)).toDF("s")
+        .selectExpr("lower(s)").collect().foreach { r =>
+          println(Base64.getEncoder.encodeToString(r.getString(0).getBytes(UTF_8)))
+        }
+    } finally spark.stop()
   }
 }

@@ -4,6 +4,7 @@ import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 import graft.connections.{FlowConfig, Locator}
 import graft.sqlbridge.{FnMacros, SqlBridge}
+import graft.sqlbridge.SqlText.{render, tokenize}
 import graft.template.Renderer
 
 /** Property-based invariants (ScalaCheck — a strict upgrade over the
@@ -79,12 +80,12 @@ object EnginePropsSpec extends Properties("engine") {
   property("expand: SQL without Fn. calls is returned verbatim") =
     forAll(Gen.alphaNumStr) { s =>
       val sql = s"SELECT $s FROM t"
-      FnMacros.expand(sql) == sql
+      render(FnMacros.expand(tokenize(sql))) == sql
     }
 
   property("expand: arithmetic macros compose for any int pair") =
     forAll(Gen.chooseNum(-1000, 1000), Gen.chooseNum(-1000, 1000)) { (a, b) =>
-      val out = FnMacros.expand(s"SELECT Fn.add($a, $b) AS x")
+      val out = render(FnMacros.expand(tokenize(s"SELECT Fn.add($a, $b) AS x")))
       out.contains(s"(($a) + ($b))")
     }
 

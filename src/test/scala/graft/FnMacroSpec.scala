@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sqlbridge.FnMacros
+import graft.sqlbridge.SqlText.{render, tokenize}
 
 /** Mirrors ankaflow/tests/test_fn_macros.py:35-175 — every Fn macro's value
   * semantics, executed on Spark after expansion. */
@@ -9,7 +10,7 @@ class FnMacroSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
 
   private def one(sql: String): Any = {
-    val expanded = FnMacros.expand(sql)
+    val expanded = render(FnMacros.expand(tokenize(sql)))
     spark.sql(expanded).collect()(0).get(0)
   }
 
@@ -158,8 +159,8 @@ class FnMacroSpec extends AnyFunSuite {
 
   test("calendar table macro has 15 fields and plausible rows") {
     val df = spark.sql(
-      graft.sqlbridge.FnTableMacros.expand(
-        "SELECT * FROM Fn.calendar() LIMIT 5", None))
+      render(graft.sqlbridge.FnTableMacros.expand(
+        tokenize("SELECT * FROM Fn.calendar() LIMIT 5"), None)))
     assert(df.schema.fields.length == 15)
     assert(df.count() == 5)
   }

@@ -133,6 +133,8 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("q18_count_distinct")
     assert(!p.contains("Expand"),
       "separate pruned aggregations replace the 4-way Expand")
+    assert(p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"),
+      "the per-flag joins carry a broadcast() hint")
     val f = finalPlan("q18_count_distinct")
     assert(f.contains("BroadcastHashJoin"))
   }
@@ -422,6 +424,11 @@ class PlanSpec extends AnyFunSuite {
       "chunk text must never enter a shuffle — only the 16-byte md5")
     assert(!p.contains("collect_list"),
       "no hash group may materialize an in-memory doc-id list")
+    // the per-source join is hinted (one row per source a side); the
+    // doc→source join's sides grow with the corpus, so AQE sizes it
+    assert("BroadcastHashJoin \\[source#".r.findFirstIn(p).isDefined &&
+      !"SortMergeJoin \\[source#".r.findFirstIn(p).isDefined,
+      "the per-source distinct frame carries a broadcast() hint")
     val f = finalPlan("t51_chunk_dedup")
     assert(!f.contains("SortMergeJoin"),
       "doc→source and the per-source distinct frame must broadcast")

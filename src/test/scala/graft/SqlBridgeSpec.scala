@@ -3,11 +3,16 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sqlbridge.SqlBridge
 import graft.sqlbridge.SqlBridge.NameRegistry
+import graft.sqlbridge.SqlText.{Tok, render, tokenize}
 
 /** Mirrors ankaflow/tests/test_sql_helpers.py — validation matrix, ranked
   * query shape, placeholder swap — plus the dialect translation layer. */
 class SqlBridgeSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
+
+  /** One translator pass over `sql`'s token stream, rendered. */
+  private def pass(p: Vector[Tok] => Vector[Tok], sql: String): String =
+    render(p(tokenize(sql)))
 
   test("validateSimpleQuery accepts single-table SELECT") {
     assert(SqlBridge.validateSimpleQuery("SELECT * FROM tbl WHERE x > 1") == "tbl")
@@ -115,11 +120,11 @@ class SqlBridgeSpec extends AnyFunSuite {
   }
 
   test("USING SAMPLE translates to TABLESAMPLE and runs") {
-    assert(SqlBridge.rewriteUsingSample("SELECT * FROM t USING SAMPLE 5 ROWS")
+    assert(pass(SqlBridge.rewriteUsingSample, "SELECT * FROM t USING SAMPLE 5 ROWS")
       == "SELECT * FROM t TABLESAMPLE (5 ROWS)")
-    assert(SqlBridge.rewriteUsingSample("SELECT * FROM t USING SAMPLE 10%")
+    assert(pass(SqlBridge.rewriteUsingSample, "SELECT * FROM t USING SAMPLE 10%")
       == "SELECT * FROM t TABLESAMPLE (10 PERCENT)")
-    assert(SqlBridge.rewriteUsingSample("SELECT * FROM t USING SAMPLE 7")
+    assert(pass(SqlBridge.rewriteUsingSample, "SELECT * FROM t USING SAMPLE 7")
       == "SELECT * FROM t TABLESAMPLE (7 ROWS)")
     spark.sql("SELECT explode(sequence(1, 100)) AS v").createOrReplaceTempView("samp_t")
     val n = spark.sql(SqlBridge.translate(
@@ -138,16 +143,16 @@ class SqlBridgeSpec extends AnyFunSuite {
   }
 
   test("USING SAMPLE spelled-out PERCENT form") {
-    assert(SqlBridge.rewriteUsingSample("SELECT * FROM t USING SAMPLE 10 PERCENT")
+    assert(pass(SqlBridge.rewriteUsingSample, "SELECT * FROM t USING SAMPLE 10 PERCENT")
       == "SELECT * FROM t TABLESAMPLE (10 PERCENT)")
   }
 
   test("EXCLUDE: quoted identifier gets parens; multiplication untouched") {
-    assert(SqlBridge.rewriteExclude("SELECT * EXCLUDE \"my col\" FROM t")
+    assert(pass(SqlBridge.rewriteExclude, "SELECT * EXCLUDE \"my col\" FROM t")
       == "SELECT * EXCEPT (\"my col\") FROM t")
     val mult = "SELECT price * exclude FROM t"
-    assert(SqlBridge.rewriteExclude(mult) == mult)
-    assert(SqlBridge.rewriteExclude("SELECT t.* EXCLUDE (a) FROM t")
+    assert(pass(SqlBridge.rewriteExclude, mult) == mult)
+    assert(pass(SqlBridge.rewriteExclude, "SELECT t.* EXCLUDE (a) FROM t")
       == "SELECT t.* EXCEPT (a) FROM t")
   }
 
@@ -159,12 +164,12 @@ class SqlBridgeSpec extends AnyFunSuite {
 
   test("rewrites leave string literals untouched") {
     val lit1 = "SELECT 'codes to EXCLUDE here' AS note FROM t"
-    assert(SqlBridge.rewriteExclude(lit1) == lit1)
+    assert(pass(SqlBridge.rewriteExclude, lit1) == lit1)
     val lit2 = "SELECT 'call strftime(x, ''%Y'') later' AS doc FROM t"
-    assert(SqlBridge.rewriteStrftime(lit2) == lit2)
+    assert(pass(SqlBridge.rewriteStrftime, lit2) == lit2)
     // a column merely named exclude is not a star modifier
     val colUse = "SELECT exclude FROM t"
-    assert(SqlBridge.rewriteExclude(colUse) == colUse)
+    assert(pass(SqlBridge.rewriteExclude, colUse) == colUse)
   }
 
   test("RemoteRank survives inner FROM keywords and mixed-case SELECT") {
@@ -176,9 +181,9 @@ class SqlBridgeSpec extends AnyFunSuite {
   }
 
   test("EXCLUDE star modifier → EXCEPT (parenthesized and bare)") {
-    assert(SqlBridge.rewriteExclude("SELECT * EXCLUDE (a, b) FROM t")
+    assert(pass(SqlBridge.rewriteExclude, "SELECT * EXCLUDE (a, b) FROM t")
       == "SELECT * EXCEPT (a, b) FROM t")
-    assert(SqlBridge.rewriteExclude("SELECT * EXCLUDE secret FROM t")
+    assert(pass(SqlBridge.rewriteExclude, "SELECT * EXCLUDE secret FROM t")
       == "SELECT * EXCEPT (secret) FROM t")
     // runs through Spark end-to-end
     val names = new NameRegistry
@@ -189,15 +194,15 @@ class SqlBridgeSpec extends AnyFunSuite {
   }
 
   test("strftime/strptime literal patterns translate (both arg orders)") {
-    assert(SqlBridge.rewriteStrftime("SELECT strftime(ts, '%Y-%m') FROM t")
+    assert(pass(SqlBridge.rewriteStrftime, "SELECT strftime(ts, '%Y-%m') FROM t")
       == "SELECT date_format(ts, 'yyyy-MM') FROM t")
-    assert(SqlBridge.rewriteStrftime("SELECT strftime('%Y', o_orderdate) FROM t")
+    assert(pass(SqlBridge.rewriteStrftime, "SELECT strftime('%Y', o_orderdate) FROM t")
       == "SELECT date_format(o_orderdate, 'yyyy') FROM t")
-    assert(SqlBridge.rewriteStrftime("SELECT strptime(s, '%Y-%m-%d') FROM t")
+    assert(pass(SqlBridge.rewriteStrftime, "SELECT strptime(s, '%Y-%m-%d') FROM t")
       == "SELECT to_timestamp(s, 'yyyy-MM-dd') FROM t")
     // untranslatable ISO token passes through untouched
     val iso = "SELECT strftime('%V', d) FROM t"
-    assert(SqlBridge.rewriteStrftime(iso) == iso)
+    assert(pass(SqlBridge.rewriteStrftime, iso) == iso)
     // end-to-end value check
     val r = spark.sql(SqlBridge.translate(
       "SELECT strftime(TIMESTAMP '2026-03-07 10:00:00', '%Y/%m/%d') AS s",
