@@ -17,12 +17,14 @@ import graft.template.{Api, Json}
   * buffered as strings and parallelized; a 100 TB pipeline would ingest
   * via object storage, not HTTP — this mirrors the reference's scope).
   *
-  * Supported: auth basic/bearer/header; Pagination / StatePolling /
-  * URLPolling handlers; JMESPath-subset `locator` record extraction;
-  * 429 wait-and-retry with doubling, ≥500 retries, ≥400 raise
-  * (rest/server.py:343-467); transport retries with exponential backoff.
+  * Supported: auth basic/bearer/header/digest/oauth2; Pagination /
+  * StatePolling / URLPolling handlers; JMESPath-subset `locator` record
+  * extraction. Every request — data page, poll, file download, OAuth2
+  * token call — goes through one exchange loop with the reference's
+  * error policy (rest/server.py:343-467, see [[exchange]]).
   */
 final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
+  import RestConnection._
 
   private val client = conn.map("client")
   private val request = conn.map("request")
@@ -36,107 +38,156 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
       case _ => Map.empty
     }
 
-  private lazy val http: HttpClient = {
-    val timeout = str(client, "timeout").map(_.toDouble).getOrElse(5.0)
-    HttpClient.newBuilder()
-      .connectTimeout(Duration.ofMillis((timeout * 1000).toLong))
-      .build()
-  }
+  // client.timeout bounds the TCP connect and, for data and download
+  // requests, the wait for the response headers: a server that accepts
+  // the connection and never answers is a transport error, retried like
+  // one (the reference's httpx timeout, rest/server.py:343-467)
+  private lazy val timeout = Duration.ofMillis(
+    (str(client, "timeout").map(_.toDouble).getOrElse(5.0) * 1000).toLong)
 
-  /** One HTTP round with the reference's error policy. Returns body.
-    * `payload = true` marks a DATA-file fetch: the custom errorhandler
-    * condition applies to API response envelopes, not to the payload
-    * bytes themselves (a JSONL record that happens to contain the
-    * condition's field must not abort the download). */
-  private def doRequest(method: String, url: String, headers: Map[String, String],
-      body: Option[String], maxRetries: Int, initialBackoff: Double,
-      payload: Boolean = false): String = {
+  private lazy val http: HttpClient =
+    HttpClient.newBuilder().connectTimeout(timeout).build()
+
+  // the request's settings, read here for every call fetchAll and sink make
+  private def endpoint: String =
+    str(request, "endpoint").getOrElse(sys.error("Rest: no endpoint"))
+  private def requestMethod(default: String): String =
+    str(request, "method").getOrElse(default)
+  private lazy val apiHeaders: Map[String, String] = authHeaders ++
+    str(request, "content_type").map("Content-Type" -> _).toMap
+
+  // UNBOUNDED 429 by reference design: the reference's 429 handler
+  // re-fetches with doubling wait and never decrements its retry budget
+  // (rest/server.py:349-374 — only 5xx consumes self.retry), so a
+  // persistently rate-limiting endpoint waits forever there too.
+  private lazy val dataPolicy = {
+    val backoff = str(request, "initial_backoff").map(_.toDouble).getOrElse(0.5)
+    Policy(str(request, "max_retries").map(_.toInt).getOrElse(0),
+      n => backoff * math.pow(2, n), n => n + 1.0,
+      boundedRateLimit = false, timeout, api = true)
+  }
+  // a file download has no reference counterpart to stay faithful to, so
+  // its 429s count against max_retries: it fails instead of hanging
+  private lazy val downloadPolicy = dataPolicy.copy(boundedRateLimit = true)
+  // the token endpoint: transient failures retry ≤2 with 2^(n+1) s
+  // backoff (rest/server.py:152-189), no auth challenge is answered, and
+  // every other status goes to the caller's on_refresh_fail path
+  private val tokenPolicy = Policy(2, n => math.pow(2, n + 1),
+    n => math.pow(2, n + 1), boundedRateLimit = true, Duration.ofSeconds(10), api = false)
+
+  /** The one HTTP exchange every request goes through, with the
+    * reference's error policy (rest/server.py:343-467). Per attempt it
+    * sends `method url` with `headers` (plus, for an API call, the OAuth2
+    * header, re-resolved per attempt, and any digest answer), then:
+    *  - a transport error, a timeout included, retries after
+    *    `transportWait` while the budget lasts, then throws;
+    *  - an API call's listed `error_status_codes` return at once, before
+    *    any retry policy;
+    *  - 429 retries; an RFC 9110 `Retry-After: <delay-seconds>` takes
+    *    precedence over the schedule (a rate-limiting server says when to
+    *    come back, and waiting less just burns its quota again), else the
+    *    wait doubles from 1 s (rest/server.py:369-374) — or, under
+    *    `boundedRateLimit`, is `statusWait` and spends the budget;
+    *  - 5xx retries after `statusWait` while the budget lasts;
+    *  - an API call's 401 gets one OAuth2 refresh (reference
+    *    OAuth2Auth.auth_flow, rest/server.py:100-117) or one Digest
+    *    answer.
+    * Any other response is returned: a success, or a status the caller
+    * turns into its error. */
+  private def exchange[T](method: String, url: String, headers: Map[String, String],
+      body: Option[String], handler: HttpResponse.BodyHandler[T],
+      policy: Policy): HttpResponse[T] = {
+    var spent = 0 // retries charged to policy.retries
     var rateWait = 1.0
-    var attempt = 0
-    var authRetried = false
-    var digestHeader: Option[String] = None
+    var refreshed = false
+    var digest: Option[String] = None
     while (true) {
-      val builder = HttpRequest.newBuilder().uri(URI.create(url))
-      // oauth2/digest headers are re-resolved per attempt
-      (headers ++ oauthHeaders ++ digestHeader.map("Authorization" -> _))
-        .foreach { case (k, v) => builder.header(k, v) }
+      val builder = HttpRequest.newBuilder().uri(URI.create(url)).timeout(policy.timeout)
+      val auth = if (!policy.api) Map.empty[String, String]
+        else oauthHeaders ++ digest.map("Authorization" -> _)
+      (headers ++ auth).foreach { case (k, v) => builder.header(k, v) }
+      val content = HttpRequest.BodyPublishers.ofString(body.getOrElse(""))
       val req = method.toUpperCase match {
         case "GET" => builder.GET().build()
-        case "POST" => builder
-          .POST(HttpRequest.BodyPublishers.ofString(body.getOrElse("")))
-          .build()
-        case "PUT" => builder
-          .PUT(HttpRequest.BodyPublishers.ofString(body.getOrElse("")))
-          .build()
+        case "POST" => builder.POST(content).build()
+        case "PUT" => builder.PUT(content).build()
         case "DELETE" => builder.DELETE().build()
         case other => sys.error(s"unsupported HTTP method: $other")
       }
-      val resp: HttpResponse[String] =
-        try http.send(req, HttpResponse.BodyHandlers.ofString())
-        catch {
-          case _: java.io.IOException if attempt < maxRetries =>
-            Thread.sleep((initialBackoff * math.pow(2, attempt) * 1000).toLong)
-            attempt += 1
-            null
-        }
-      if (resp != null) {
-        val code = resp.statusCode()
-        if (errorStatusCodes.contains(code)) {
-          // listed codes fail fast, before any retry policy
-          sys.error(s"HTTP $code from $url: ${resp.body().take(500)}")
-        } else if (code == 429) {
-          // UNBOUNDED by reference design: the reference's 429 handler
-          // re-fetches with doubling wait and never decrements its retry
-          // budget (rest/server.py:349-374 — only 5xx consumes
-          // self.retry), so a persistently rate-limiting endpoint waits
-          // forever there too. downloadFile (no reference counterpart)
-          // caps instead. Extension over the reference: an RFC 9110
-          // `Retry-After: <delay-seconds>` takes precedence over the
-          // doubling schedule — a rate-limiting server says when to come
-          // back, and waiting less just burns its quota again.
-          val retryAfter = {
-            val h = resp.headers().firstValue("Retry-After")
-            if (h.isPresent) scala.util.Try(h.get.toDouble).toOption else None
-          }
-          retryAfter match {
-            case Some(sec) =>
-              // clamp untrusted header input: a negative value would make
-              // Thread.sleep throw, a huge one would park the thread for
-              // hours — [0, 300 s] covers every sane rate limiter
-              val ms = math.min(math.max(0.0, sec), 300.0) * 1000
-              Thread.sleep(ms.toLong)
-            case None =>
-              Thread.sleep((rateWait * 1000).toLong)
-              rateWait *= 2 // doubles per retry (rest/server.py:369-374)
-          }
-        } else if (code >= 500) {
-          if (attempt >= maxRetries)
-            sys.error(s"HTTP $code from $url after $attempt retries")
-          Thread.sleep(((attempt + 1) * 1000).toLong)
-          attempt += 1
-        } else if (code == 401 && isOAuth && !authRetried) {
-          // token expired mid-flow: refresh once and retry
-          // (reference OAuth2Auth.auth_flow, rest/server.py:100-117)
-          refreshTokens()
-          authRetried = true
-        } else if (code == 401 && isDigest && digestHeader.isEmpty) {
-          val challenge = resp.headers().firstValue("WWW-Authenticate").orElse("")
+      val resp = try Some(http.send(req, handler)) catch {
+        case _: java.io.IOException if spent < policy.retries => None
+      }
+      val code = resp.fold(0)(_.statusCode())
+      // clamp untrusted header input: a negative value would make
+      // Thread.sleep throw, a huge one would park the thread for hours —
+      // [0, 300 s] covers every sane rate limiter
+      val retryAfter = resp.filter(_ => code == 429).flatMap(r =>
+        scala.util.Try(r.headers().firstValue("Retry-After").get.toDouble).toOption)
+        .map(sec => math.min(math.max(0.0, sec), 300.0))
+      val wait: Double =
+        if (resp.isEmpty) { spent += 1; policy.transportWait(spent - 1) }
+        else if (policy.api && errorStatusCodes.contains(code)) return resp.get
+        else if (code == 429 && !policy.boundedRateLimit)
+          retryAfter.getOrElse { rateWait *= 2; rateWait / 2 }
+        else if ((code == 429 || code >= 500) && spent < policy.retries) {
+          spent += 1
+          retryAfter.getOrElse(policy.statusWait(spent - 1))
+        } else if (code == 401 && policy.api && isOAuth && !refreshed) {
+          refreshTokens() // token expired mid-flow: refresh once and retry
+          refreshed = true
+          0.0
+        } else if (code == 401 && policy.api && isDigest && digest.isEmpty) {
+          val challenge = resp.get.headers().firstValue("WWW-Authenticate").orElse("")
           if (!challenge.toLowerCase.startsWith("digest"))
             sys.error(s"HTTP 401 from $url without a Digest challenge")
           val u = URI.create(url)
-          val reqUri = u.getRawPath +
-            Option(u.getRawQuery).map("?" + _).getOrElse("")
-          digestHeader = Some(digestAnswer(challenge, method, reqUri))
-        } else if (code >= 400) { // listed errorStatusCodes already raised above
-          sys.error(s"HTTP $code from $url: ${resp.body().take(500)}")
-        } else {
-          val b = resp.body()
-          if (!payload) checkCustomError(b, url)
-          return b
-        }
-      }
+          digest = Some(digestAnswer(challenge, method,
+            u.getRawPath + Option(u.getRawQuery).map("?" + _).getOrElse("")))
+          0.0
+        } else return resp.get
+      Thread.sleep((wait * 1000).toLong)
     }
     sys.error("unreachable")
+  }
+
+  /** One API request: its body, or the error its final status stands
+    * for (listed `error_status_codes` included). */
+  private def send[T](method: String, url: String, body: Option[String],
+      handler: HttpResponse.BodyHandler[T], policy: Policy): T = {
+    val resp = exchange(method, url, apiHeaders, body, handler, policy)
+    val code = resp.statusCode()
+    if (code >= 400 || errorStatusCodes.contains(code)) {
+      val excerpt = resp.body() match { case s: String => ": " + s.take(500); case _ => "" }
+      sys.error(s"HTTP $code from $url$excerpt")
+    }
+    resp.body()
+  }
+
+  /** One API call whose body is JSON text; the custom errorhandler
+    * condition applies to it (to API response envelopes, not to file
+    * payload bytes, which [[download]] fetches). */
+  private def call(method: String, url: String, body: Option[String]): String = {
+    val text = send(method, url, body, HttpResponse.BodyHandlers.ofString(), dataPolicy)
+    checkCustomError(text, url)
+    text
+  }
+
+  /** Stream the file at `url` to a temp file, the way the reference
+    * streams a URLPolling payload (rest/rest.py:233-250): bytes land as
+    * sent, whatever the payload kind. Each attempt truncates the file.
+    * It is removed on failure and at JVM exit (the success path must
+    * outlive this call — Spark reads it lazily). */
+  private def download(url: String): String = {
+    val tmp = java.nio.file.Files.createTempFile("graft_rest", ".dat")
+    tmp.toFile.deleteOnExit()
+    try send("GET", url, None, HttpResponse.BodyHandlers.ofFile(tmp,
+      java.nio.file.StandardOpenOption.WRITE,
+      java.nio.file.StandardOpenOption.TRUNCATE_EXISTING), downloadPolicy).toString
+    catch {
+      case e: Throwable =>
+        java.nio.file.Files.deleteIfExists(tmp)
+        throw e
+    }
   }
 
   // Custom error detection (reference: RestErrorHandler,
@@ -181,7 +232,7 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
         Map("Authorization" -> s"Bearer ${str(a, "token").getOrElse("")}")
       case "header" =>
         submap(a, "values").map { case (k, v) => k -> String.valueOf(v) }
-      case "digest" => Map.empty // challenge-driven; resolved in doRequest
+      case "digest" => Map.empty // challenge-driven; resolved in exchange
       case "oauth2" => Map.empty // resolved per-attempt via oauthHeaders
       case other => sys.error(s"unsupported auth kind: $other")
     }
@@ -227,9 +278,9 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
 
   // ------------------------------------------------------------ OAuth2
   // Reference: OAuth2Auth + token exchange (RFC 8693) / refresh flows,
-  // ankaflow/connections/rest/server.py:58-211. Transient statuses on the
-  // token endpoint retry ≤3 with 2^(n+1) backoff; a 401 on the data call
-  // triggers one refresh+retry (wired in doRequest). Token state lives on
+  // ankaflow/connections/rest/server.py:58-211. The token call runs
+  // through exchange under tokenPolicy; a 401 on an API call triggers
+  // one refresh+retry (wired in exchange). Token state lives on
   // the resolved [[OAuth2Provider]]: `provider: <name>` looks it up in
   // the flow's oauthKeyring (rotations persist there and fire its
   // callbacks), `provider: {…}` defines one inline, and bare auth-level
@@ -262,8 +313,6 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
       }.getOrElse(Map.empty)
     }
 
-  private val transientStatuses = Set(429, 500, 502, 503, 504)
-
   /** Fetch new tokens: refresh flow when a refresh_token is held, else
     * RFC 8693 token exchange (rest/server.py:152-189). */
   private def refreshTokens(): Unit = {
@@ -293,68 +342,45 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
         java.net.URLEncoder.encode(v, "UTF-8")
     }.mkString("&")
 
-    var attempt = 0
-    val maxRetries = 3
-    var done = false
-    while (!done) {
-      val req = HttpRequest.newBuilder().uri(URI.create(tokenUrl))
-        .header("Accept", "application/json")
-        .header("Content-Type", "application/x-www-form-urlencoded")
-        .timeout(Duration.ofSeconds(10))
-        .POST(HttpRequest.BodyPublishers.ofString(form))
-        .build()
-      val resp: HttpResponse[String] =
-        try http.send(req, HttpResponse.BodyHandlers.ofString())
-        catch {
-          case e: java.io.IOException =>
-            if (attempt < maxRetries - 1) {
-              Thread.sleep((math.pow(2, attempt + 1) * 1000).toLong)
-              attempt += 1; null
-            } else throw e
-        }
-      if (resp != null) {
-        val code = resp.statusCode()
-        if (transientStatuses.contains(code) && attempt < maxRetries - 1) {
-          Thread.sleep((math.pow(2, attempt + 1) * 1000).toLong)
-          attempt += 1
-        } else if (code >= 400) {
-          accessToken = None // kill switch (rest/server.py:126)
-          // failure callback with the RFC 6749 error key when the
-          // provider answered JSON, raw body excerpt otherwise
-          // (rest/server.py:127-147), then fail the pipeline
-          val (errMsg, body): (String, Any) =
-            try {
-              Json.parse(resp.body()) match {
-                case m: Map[_, _] =>
-                  val mm = m.map { case (k, v) => k.toString -> v }
-                  (mm.get("error").map(String.valueOf(_))
-                    .getOrElse("unknown_error"), mm)
-                case other => ("non_json_response", String.valueOf(other))
-              }
-            } catch {
-              case _: Exception => ("non_json_response", resp.body().take(200))
-            }
-          provider.onRefreshFail(provider.name, Map(
-            "error" -> errMsg, "status_code" -> code, "body" -> body))
-          sys.error(s"OAuth2 token refresh failed: HTTP $code " +
-            resp.body().take(200))
-        } else {
-          val data = Json.parse(resp.body()) match {
-            case m: Map[_, _] => m.map { case (k, v) => k.toString -> v }
-            case other => sys.error(s"token endpoint returned non-object: $other")
+    val resp = exchange("POST", tokenUrl, Map(
+      "Accept" -> "application/json",
+      "Content-Type" -> "application/x-www-form-urlencoded"),
+      Some(form), HttpResponse.BodyHandlers.ofString(), tokenPolicy)
+    val code = resp.statusCode()
+    if (code >= 400) {
+      accessToken = None // kill switch (rest/server.py:126)
+      // failure callback with the RFC 6749 error key when the
+      // provider answered JSON, raw body excerpt otherwise
+      // (rest/server.py:127-147), then fail the pipeline
+      val (errMsg, body): (String, Any) =
+        try {
+          Json.parse(resp.body()) match {
+            case m: Map[_, _] =>
+              val mm = m.map { case (k, v) => k.toString -> v }
+              (mm.get("error").map(String.valueOf(_))
+                .getOrElse("unknown_error"), mm)
+            case other => ("non_json_response", String.valueOf(other))
           }
-          accessToken = data.get("access_token").map(String.valueOf(_))
-          data.get("refresh_token").foreach(rt =>
-            refreshToken = Some(String.valueOf(rt)))
-          if (accessToken.isEmpty)
-            sys.error("token endpoint response has no access_token")
-          // success callback so the host can persist rotated tokens
-          // (rest/server.py:121-123)
-          provider.onTokenRefresh(provider.name, data)
-          done = true
+        } catch {
+          case _: Exception => ("non_json_response", resp.body().take(200))
         }
-      }
+      provider.onRefreshFail(provider.name, Map(
+        "error" -> errMsg, "status_code" -> code, "body" -> body))
+      sys.error(s"OAuth2 token refresh failed: HTTP $code " +
+        resp.body().take(200))
     }
+    val data = Json.parse(resp.body()) match {
+      case m: Map[_, _] => m.map { case (k, v) => k.toString -> v }
+      case other => sys.error(s"token endpoint returned non-object: $other")
+    }
+    accessToken = data.get("access_token").map(String.valueOf(_))
+    data.get("refresh_token").foreach(rt =>
+      refreshToken = Some(String.valueOf(rt)))
+    if (accessToken.isEmpty)
+      sys.error("token endpoint response has no access_token")
+    // success callback so the host can persist rotated tokens
+    // (rest/server.py:121-123)
+    provider.onTokenRefresh(provider.name, data)
   }
 
   private def buildUrl(endpoint: String, query: Map[String, Any]): String = {
@@ -368,9 +394,9 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
     s"$base/${endpoint.stripPrefix("/")}$qs"
   }
 
-  /** Extract the record list at `locator` (JMESPath subset) from a page. */
-  private def extractRecords(body: String, locator: String): List[Any] = {
-    val parsed = Json.parse(body)
+  /** Extract the record list at `locator` (JMESPath subset) from a
+    * parsed page. */
+  private def extractRecords(parsed: Any, locator: String): List[Any] = {
     val at = if (locator == null || locator.isEmpty) parsed
       else Api.look(List(locator, parsed, null))
     at match {
@@ -379,14 +405,6 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
       case m => List(m)
     }
   }
-
-  /** Fetch outcome: in-memory JSON records, or a downloaded data file
-    * with its kind (the reference's Materializer accepts both,
-    * rest/common.py:99-121 — files carry csv/parquet/jsonl payloads the
-    * in-memory JSON path can't). */
-  private sealed trait Fetched
-  private final case class Records(rows: List[Any]) extends Fetched
-  private final case class DataFile(path: String, kind: String) extends Fetched
 
   /** "text/csv" / "application/vnd.apache.parquet" / "jsonl" / … → kind. */
   private def contentKind(ct: String): String = {
@@ -397,88 +415,37 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
     else "json"
   }
 
-  /** Binary-safe download to a temp file (parquet bodies can't ride a
-    * String). Like doRequest, transient 429/5xx and IO errors retry
-    * with backoff and a 401 under OAuth refreshes once — but unlike
-    * doRequest (which mirrors the reference's unbounded 429 loop), 429
-    * here counts against maxRetries: downloads have no reference
-    * counterpart to stay faithful to, so they fail fast instead of
-    * hanging. The temp file is removed on failure and at JVM exit (the
-    * success path must outlive this call — Spark reads it lazily). */
-  private def downloadFile(url: String, headers: Map[String, String],
-      maxRetries: Int, initialBackoff: Double): String = {
-    val tmp = java.nio.file.Files.createTempFile("graft_rest", ".dat")
-    tmp.toFile.deleteOnExit()
-    var attempt = 0
-    var rateWait = 1.0
-    var authRetried = false
-    try {
-      while (true) {
-        val b = HttpRequest.newBuilder().uri(URI.create(url))
-        (headers ++ oauthHeaders).foreach { case (k, v) => b.header(k, v) }
-        val resp =
-          try http.send(b.GET().build(),
-            HttpResponse.BodyHandlers.ofFile(tmp,
-              java.nio.file.StandardOpenOption.WRITE,
-              java.nio.file.StandardOpenOption.TRUNCATE_EXISTING))
-          catch {
-            case _: java.io.IOException if attempt < maxRetries =>
-              Thread.sleep((initialBackoff * math.pow(2, attempt) * 1000).toLong)
-              attempt += 1
-              null
-          }
-        if (resp != null) {
-          val code = resp.statusCode()
-          if (errorStatusCodes.contains(code)) {
-            // configured fail-fast codes bypass every retry, as in
-            // doRequest
-            sys.error(s"HTTP $code from $url")
-          } else if (code == 429 && attempt < maxRetries) {
-            // rate-limit retries count against maxRetries like 5xx —
-            // otherwise a persistently 429ing endpoint hangs forever
-            Thread.sleep((rateWait * 1000).toLong)
-            rateWait *= 2
-            attempt += 1
-          } else if (code >= 500 && attempt < maxRetries) {
-            Thread.sleep(((attempt + 1) * 1000).toLong)
-            attempt += 1
-          } else if (code == 401 && isOAuth && !authRetried) {
-            refreshTokens()
-            authRetried = true
-          } else if (code >= 400) {
-            sys.error(s"REST file download failed: HTTP $code $url")
-          } else return tmp.toString
-        }
-      }
-      tmp.toString // unreachable
-    } catch {
-      case e: Throwable =>
-        java.nio.file.Files.deleteIfExists(tmp)
-        throw e
-    }
-  }
-
   /** Run the request + handler state machine; returns all record pages. */
   private def fetchAll(): Fetched = {
-    val endpoint = str(request, "endpoint").getOrElse(sys.error("Rest: no endpoint"))
-    val method = str(request, "method").getOrElse("get")
-    val headers = authHeaders ++
-      str(request, "content_type").map("Content-Type" -> _).toMap
+    val method = requestMethod("get")
     val response = submap(request, "response")
     val recLocator = str(response, "locator").getOrElse("")
     val handler = submap(response, "handler")
-    val maxRetries = str(request, "max_retries").map(_.toInt).getOrElse(0)
-    val backoff = str(request, "initial_backoff").map(_.toDouble).getOrElse(0.5)
     val bodyTpl = request.get("body").map(Json.write)
     val baseQuery = submap(request, "query")
+
+    /** Poll the request until `ready_status` is truthy, waiting ×1.5
+      * from 1 s between polls (rest/rest.py:124-175); the ready
+      * response, parsed. */
+    def pollReady(): Any = {
+      val readyLocator = str(handler, "ready_status").getOrElse("status")
+      @annotation.tailrec
+      def poll(wait: Double): Any = {
+        val parsed = Json.parse(call(method, buildUrl(endpoint, baseQuery), bodyTpl))
+        if (graft.template.Renderer.stringToBool(Api.look(List(readyLocator, parsed, null))))
+          parsed
+        else { Thread.sleep((wait * 1000).toLong); poll(wait * 1.5) }
+      }
+      poll(1.0)
+    }
 
     str(handler, "kind").getOrElse("") match {
       // "Basic" is the reference's explicit single-request no-op handler
       // (models/rest.py ResponseHandlerTypes.BASIC); absent/empty means
       // the same thing.
       case k if k.isEmpty || k.equalsIgnoreCase("basic") =>
-        Records(extractRecords(doRequest(method, buildUrl(endpoint, baseQuery),
-          headers, bodyTpl, maxRetries, backoff), recLocator))
+        Records(extractRecords(Json.parse(call(method,
+          buildUrl(endpoint, baseQuery), bodyTpl)), recLocator))
 
       case "Pagination" =>
         // increment page_param per page; stop when page < page_size or
@@ -514,12 +481,11 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
           // when no body template was configured
           val b = if (inBody) Some(Json.write(bodyMap0 + (pageParam -> page)))
           else bodyTpl
-          val body = doRequest(method, buildUrl(endpoint, q), headers, b,
-            maxRetries, backoff)
-          val recs = extractRecords(body, recLocator)
+          val parsed = Json.parse(call(method, buildUrl(endpoint, q), b))
+          val recs = extractRecords(parsed, recLocator)
           all ++= recs
           val total = if (totalLocator.nonEmpty)
-            Option(Api.look(List(totalLocator, Json.parse(body), null)))
+            Option(Api.look(List(totalLocator, parsed, null)))
               .collect { case n: Number => n.longValue }
           else None
           continue = recs.size >= pageSize &&
@@ -530,56 +496,22 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
         Records(all.toList)
 
       case "StatePolling" =>
-        // poll same endpoint until ready_status truthy (rest/rest.py:150-175)
-        val readyLocator = str(handler, "ready_status").getOrElse("status")
-        var wait = 1.0
-        var result: List[Any] = null
-        while (result == null) {
-          val body = doRequest(method, buildUrl(endpoint, baseQuery), headers,
-            bodyTpl, maxRetries, backoff)
-          val parsed = Json.parse(body)
-          val ready = Api.look(List(readyLocator, parsed, null))
-          if (graft.template.Renderer.stringToBool(ready))
-            result = extractRecords(body, recLocator)
-          else { Thread.sleep((wait * 1000).toLong); wait *= 1.5 }
-        }
-        Records(result)
+        // poll the same endpoint, then extract its records
+        // (rest/rest.py:150-175)
+        Records(extractRecords(pollReady(), recLocator))
 
       case "URLPolling" =>
-        // poll until ready, then fetch the file at the locator URL
-        val readyLocator = str(handler, "ready_status").getOrElse("status")
+        // poll until ready, then fetch the file at the locator URL. Its
+        // payload kind comes from the response's content_type (DataType
+        // enum; Materializer dispatches read_json/read_csv/read_parquet on
+        // it, rest/common.py:124-140): JSON records are read in memory,
+        // every other kind is streamed to a temp file.
         val urlLocator = str(handler, "locator")
           .orElse(Some(recLocator)).getOrElse("url")
-        var wait = 1.0
-        var fileUrl: String = null
-        while (fileUrl == null) {
-          val body = doRequest(method, buildUrl(endpoint, baseQuery), headers,
-            bodyTpl, maxRetries, backoff)
-          val parsed = Json.parse(body)
-          val ready = Api.look(List(readyLocator, parsed, null))
-          if (graft.template.Renderer.stringToBool(ready))
-            fileUrl = String.valueOf(Api.look(List(urlLocator, parsed, null)))
-          else { Thread.sleep((wait * 1000).toLong); wait *= 1.5 }
-        }
-        // the fetched file's payload kind comes from the response's
-        // content_type (DataType enum; Materializer dispatches read_json/
-        // read_csv/read_parquet on it, rest/common.py:124-140). Text
-        // payloads ride doRequest (full retry + oauth + digest
-        // machinery); only binary parquet needs the raw downloader,
-        // which covers oauth but not digest challenges.
+        val fileUrl = String.valueOf(Api.look(List(urlLocator, pollReady(), null)))
         contentKind(str(response, "content_type").getOrElse("json")) match {
-          case "json" =>
-            Records(extractRecords(doRequest("GET", fileUrl, headers, None,
-              maxRetries, backoff), ""))
-          case "parquet" => DataFile(
-            downloadFile(fileUrl, headers, maxRetries, backoff), "parquet")
-          case kind =>
-            val body = doRequest("GET", fileUrl, headers, None,
-              maxRetries, backoff, payload = true)
-            val tmp = java.nio.file.Files.createTempFile("graft_rest", ".dat")
-            tmp.toFile.deleteOnExit()
-            java.nio.file.Files.write(tmp, body.getBytes("UTF-8"))
-            DataFile(tmp.toString, kind)
+          case "json" => Records(extractRecords(Json.parse(call("GET", fileUrl, None)), ""))
+          case kind => DataFile(download(fileUrl), kind)
         }
 
       case other => sys.error(s"unknown REST handler kind: $other")
@@ -602,18 +534,31 @@ final class RestConnection(ctx: ConnContext) extends Connection(ctx) {
   /** Sink = fire the request; body may carry the previous stage's data
     * (rest/rest.py:329-330). */
   override def sink(from: DataFrame): Unit = {
-    val endpoint = str(request, "endpoint").getOrElse(sys.error("Rest: no endpoint"))
-    val method = str(request, "method").getOrElse("post")
-    val headers = authHeaders ++
-      str(request, "content_type").map("Content-Type" -> _).toMap
     val body = request.get("body") match {
       case Some(b) => Json.write(b)
       case None => "[" + graft.core.Flow.guardedCollect(from,
         "Rest sink body", ctx.cfg.maxDriverRows).mkString(",") + "]"
     }
-    doRequest(method, buildUrl(endpoint, submap(request, "query")), headers,
-      Some(body),
-      str(request, "max_retries").map(_.toInt).getOrElse(0),
-      str(request, "initial_backoff").map(_.toDouble).getOrElse(0.5))
+    call(requestMethod("post"), buildUrl(endpoint, submap(request, "query")), Some(body))
   }
+}
+
+object RestConnection {
+  /** What sets one kind of request apart in the exchange loop; the loop
+    * itself is the same for every request. */
+  private final case class Policy(
+      retries: Int,                 // budget for transport errors and 5xx
+      transportWait: Int => Double, // seconds before transport retry n (0-based)
+      statusWait: Int => Double,    // seconds before status retry n
+      boundedRateLimit: Boolean,    // a 429 spends the budget like a 5xx
+      timeout: Duration,            // per attempt, until the response headers
+      api: Boolean)                 // the configured API: its auth and error_status_codes apply
+
+  /** Fetch outcome: in-memory JSON records, or a downloaded data file
+    * with its kind (the reference's Materializer accepts both,
+    * rest/common.py:99-121 — files carry csv/parquet/jsonl payloads the
+    * in-memory JSON path can't). */
+  private sealed trait Fetched
+  private final case class Records(rows: List[Any]) extends Fetched
+  private final case class DataFile(path: String, kind: String) extends Fetched
 }

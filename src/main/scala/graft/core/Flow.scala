@@ -180,6 +180,17 @@ final class Flow(
     ConnContext(spark, rendered, config, variables, names, context)
   }
 
+  /** The SQL-view step of a transform, an internal stage and a sink with
+    * a query: render and translate `query`, run it, and register the
+    * result as the stage's view and the flow's last name. */
+  private def sqlView(stage: Stage, query: String): DataFrame = {
+    val view = names.register(stage.name)
+    val df = spark.sql(SqlBridge.translate(renderStr(query), names, Some(spark)))
+    df.createOrReplaceTempView(view)
+    lastNameVar = Some(stage.name)
+    df
+  }
+
   /** Run one stage; true when it ran a Spark action: a sink, a sql
     * statement, a checkpointed tap, a loop, a `show`, or a sub-pipeline
     * one of whose stages did. */
@@ -212,22 +223,13 @@ final class Flow(
       postActions(stage, Some(materialized)) || checkpointed
 
     case "transform" =>
-      val q = renderStr(stage.query.getOrElse(
-        sys.error(s"transform '${stage.name}' requires a query")))
-      val view = names.register(stage.name)
-      val df = spark.sql(SqlBridge.translate(q, names, Some(spark)))
-      df.createOrReplaceTempView(view)
-      lastNameVar = Some(stage.name)
-      postActions(stage, Some(df))
+      postActions(stage, Some(sqlView(stage, stage.query.getOrElse(
+        sys.error(s"transform '${stage.name}' requires a query")))))
 
     case "sink" =>
       val conn = Connection.resolve(connCtx(stage))
       val df = stage.query match {
-        case Some(q) =>
-          val view = names.register(stage.name)
-          val d = spark.sql(SqlBridge.translate(renderStr(q), names, Some(spark)))
-          d.createOrReplaceTempView(view)
-          d
+        case Some(q) => sqlView(stage, q)
         case None =>
           val prev = lastNameVar.getOrElse(
             sys.error(s"sink '${stage.name}' has no preceding stage"))
@@ -250,13 +252,8 @@ final class Flow(
       true
 
     case "internal" | "self" =>
-      val q = renderStr(stage.query.getOrElse(
-        sys.error(s"internal '${stage.name}' requires a query")))
-      val df = spark.sql(SqlBridge.translate(q, names, Some(spark)))
-      val view = names.register(stage.name)
-      df.createOrReplaceTempView(view)
-      lastNameVar = Some(stage.name)
-      postActions(stage, Some(df))
+      postActions(stage, Some(sqlView(stage, stage.query.getOrElse(
+        sys.error(s"internal '${stage.name}' requires a query")))))
 
     // documentation-only stage, skipped by the runner (flow.py:591-592,
     // enums.py:48)

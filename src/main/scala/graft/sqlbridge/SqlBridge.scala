@@ -391,7 +391,7 @@ object FnTableMacros {
     val session = spark.getOrElse(
       sys.error("Fn.columns requires an active SparkSession"))
     val values = session.table(table).schema.fields.map(f =>
-      s"('${f.name}', '${f.dataType.sql}')").mkString(", ")
+      s"(${literal(f.name).text}, ${literal(f.dataType.sql).text})").mkString(", ")
     s"(SELECT column_name, data_type FROM (VALUES $values) AS __cols(column_name, data_type))"
   }
 }

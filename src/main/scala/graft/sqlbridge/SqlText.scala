@@ -151,8 +151,16 @@ object SqlText {
         trimTok(toks.take(comma)) :: (if (rest.isEmpty) List(Vector()) else splitArgs(rest))
     }
 
-  def trimTok(a: Vector[Tok]): Vector[Tok] =
-    a.slice(nextNonBlank(a, 0), prevNonBlank(a, a.length - 1) + 1)
+  /** `a` without its leading and trailing blanks. A slice that ends in a
+    * `--` comment keeps a newline after it: the slice is spliced into
+    * other text, which the comment would otherwise run on into. */
+  def trimTok(a: Vector[Tok]): Vector[Tok] = {
+    val t = a.slice(nextNonBlank(a, 0), prevNonBlank(a, a.length - 1) + 1)
+    t.lastOption match {
+      case Some(Sym(c)) if c.startsWith("--") => t :+ Sym("\n")
+      case _ => t
+    }
+  }
 
   /** The value of a closed string literal token (`''` unescaped). */
   def literalValue(t: Tok): Option[String] = t match {

@@ -569,7 +569,7 @@ object Streams {
   private def ensureRunMarker(spark: SparkSession, statePath: String,
       checkpoint: String): Unit = {
     val marker = new org.apache.hadoop.fs.Path(s"$statePath/_run_marker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
     val canonical = fs.makeQualified(
       new org.apache.hadoop.fs.Path(checkpoint)).toString
     if (fs.exists(marker)) {
@@ -637,8 +637,9 @@ object Streams {
     * [[compactIndex]]'s safety contract). No-op for marker-less indexes. */
   private def validateCompactionFrontier(spark: SparkSession,
       statePath: String, uptoBatch: Long): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
     val marker = new org.apache.hadoop.fs.Path(s"$statePath/_run_marker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = marker.getFileSystem(conf)
     if (!fs.exists(marker)) return
     val in = fs.open(marker)
     val checkpoint =
@@ -647,7 +648,7 @@ object Streams {
     // the checkpoint may live on a DIFFERENT filesystem/scheme than the
     // index (a qualified hdfs:// marker vs a file:// index would make
     // the index fs throw "Wrong FS") — resolve with the checkpoint's own
-    val cfs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cfs = commits.getFileSystem(conf)
     // commit files are plain batch ids ("0", "1", …); in-flight temp
     // files and metadata (".tmp", "metadata") parse as None and drop out
     val lastCommitted =
@@ -667,7 +668,7 @@ object Streams {
       sub: String, uptoBatch: Long): Unit = {
     val root = s"$statePath/$sub"
     val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(p)) {
       // clear stale scratch FIRST, unconditionally: a crash between the
       // absorbed-dir deletes and the scratch delete leaves below.length
@@ -706,7 +707,7 @@ object Streams {
     * "no index yet" instead. */
   private def readIndex(spark: SparkSession, path: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val committed = graft.connections.FileFormats.parquetFiles(fs, p, 1).nonEmpty
     if (committed) Some(spark.read.parquet(path)) else None
   }

@@ -177,4 +177,8 @@ class FnMacroSpec extends AnyFunSuite {
   test("nested macro calls expand recursively") {
     assert(one("SELECT Fn.add(Fn.mult(2, 3), Fn.div(10, 5))") == 8.0)
   }
+
+  test("an argument that ends in a -- comment keeps the macro body after it") {
+    assert(one("SELECT Fn.add(k -- the key\n, b) AS s FROM VALUES (2, 3) AS t(k, b)") == 5)
+  }
 }

@@ -14,12 +14,24 @@ import graft.sqlbridge.SqlBridge
 class RestSpec extends AnyFunSuite {
 
   private def withServer(routes: Map[String, HttpExchange => (Int, String)])(
+      body: Int => Unit): Unit =
+    withBytesServer(routes.map { case (path, handler) =>
+      path -> ((ex: HttpExchange) => {
+        val (code, resp) = handler(ex)
+        (code, resp.getBytes("UTF-8"))
+      })
+    })(body)
+
+  /** A local server whose routes answer raw bytes. Each request runs on
+    * its own thread, so a route that holds its answer blocks no other. */
+  private def withBytesServer(routes: Map[String, HttpExchange => (Int, Array[Byte])])(
       body: Int => Unit): Unit = {
     val server = HttpServer.create(new InetSocketAddress(0), 0)
+    val pool = java.util.concurrent.Executors.newCachedThreadPool()
+    server.setExecutor(pool)
     routes.foreach { case (path, handler) =>
       server.createContext(path, (ex: HttpExchange) => {
-        val (code, resp) = handler(ex)
-        val bytes = resp.getBytes("UTF-8")
+        val (code, bytes) = handler(ex)
         ex.getResponseHeaders.set("Content-Type", "application/json")
         ex.sendResponseHeaders(code, bytes.length)
         ex.getResponseBody.write(bytes)
@@ -28,8 +40,56 @@ class RestSpec extends AnyFunSuite {
     }
     server.start()
     try body(server.getAddress.getPort)
-    finally server.stop(0)
+    finally { server.stop(0); pool.shutdownNow() }
   }
+
+  /** The bytes of a real one-file parquet table (sf0.001 region, 5 rows). */
+  private lazy val regionParquet: Array[Byte] = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_restpq").toString
+    SparkSuite.spark.read.parquet("perfbench/data/sf0.001/region.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq")
+    val pqFile = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/pq"))
+      .filter(_.toString.endsWith(".parquet")).findFirst().get()
+    java.nio.file.Files.readAllBytes(pqFile)
+  }
+
+  /** Server side of RFC 7616 digest auth for user alice / secret: true
+    * when `ex` carries a valid answer for `GET path`; otherwise sets the
+    * challenge header (answer 401 then). */
+  private def digestOk(ex: HttpExchange, path: String): Boolean = {
+    def md5hex(s: String): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val realm = "graft@test"
+    val nonce = "abc123nonce"
+    Option(ex.getRequestHeaders.getFirst("Authorization")) match {
+      case Some(authz) if authz.startsWith("Digest ") =>
+        // verify the client's response hash server-side
+        def p(k: String) = (k + "=\"([^\"]*)\"").r.findFirstMatchIn(authz)
+          .map(_.group(1))
+          .orElse((k + "=([^,\\s]+)").r.findFirstMatchIn(authz).map(_.group(1)))
+        val ha1 = md5hex(s"alice:$realm:secret")
+        val ha2 = md5hex(s"GET:$path")
+        val expected = md5hex(
+          s"$ha1:$nonce:${p("nc").get}:${p("cnonce").get}:auth:$ha2")
+        p("response").contains(expected)
+      case _ =>
+        ex.getResponseHeaders.set("WWW-Authenticate",
+          s"""Digest realm="$realm", nonce="$nonce", qop="auth"""")
+        false
+    }
+  }
+
+  private val digestAuth = Map("auth" -> Map("kind" -> "digest",
+    "username" -> "alice", "password" -> "secret"))
+
+  /** A URLPolling request whose ready response names the file URL. */
+  private def urlPolling(contentType: String, extra: (String, Any)*): Map[String, Any] =
+    Map("endpoint" -> "/job", "method" -> "get",
+      "response" -> Map(
+        "content_type" -> contentType,
+        "handler" -> Map("kind" -> "URLPolling",
+          "ready_status" -> "done", "locator" -> "file"))) ++ extra
 
   private def restConn(port: Int, client: Map[String, Any],
       request: Map[String, Any],
@@ -294,6 +354,29 @@ class RestSpec extends AnyFunSuite {
     }
   }
 
+  test("oauth2: a token endpoint 503 is retried, then the refresh succeeds") {
+    val tokenCalls = new AtomicInteger(0)
+    withServer(Map(
+      "/token" -> (_ =>
+        if (tokenCalls.incrementAndGet() == 1) (503, """{"error":"busy"}""")
+        else (200, """{"access_token":"AT1"}""")),
+      "/data" -> (ex => {
+        val authz = Option(ex.getRequestHeaders.getFirst("Authorization")).getOrElse("")
+        if (authz == "Bearer AT1") (200, """[{"id":1}]""") else (401, "{}")
+      }))) { port =>
+      val df = restConn(port,
+        Map("auth" -> Map("kind" -> "oauth2",
+          "config" -> Map(
+            "access_token_url" -> s"http://localhost:$port/token",
+            "client_id" -> "cid", "client_secret" -> "sec",
+            "subject_token" -> "subj"))),
+        Map("endpoint" -> "/data", "method" -> "get",
+          "response" -> Map.empty[String, Any])).tap(None, None)
+      assert(df.count() == 1)
+      assert(tokenCalls.get() == 2) // the 503, then the retried exchange
+    }
+  }
+
   test("oauth2: unknown keyring provider name is a clear error") {
     val ex = intercept[Exception] {
       restConn(0,
@@ -386,33 +469,14 @@ class RestSpec extends AnyFunSuite {
   }
 
   test("URLPolling materializes a binary parquet payload") {
-    // build a real parquet file, serve its bytes verbatim
-    val dir = java.nio.file.Files.createTempDirectory("graft_restpq").toString
-    val spark0 = SparkSuite.spark
-    spark0.read.parquet("/root/testdata/sf0.001/region.parquet")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq")
-    val pqFile = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/pq"))
-      .filter(_.toString.endsWith(".parquet")).findFirst().get()
-    val bytes = java.nio.file.Files.readAllBytes(pqFile)
-
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress(0), 0)
-    server.createContext("/data.parquet", (ex: HttpExchange) => {
-      ex.sendResponseHeaders(200, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    })
-    server.createContext("/job", (ex: HttpExchange) => {
-      val resp =
-        s"""{"done":true,"file":"http://localhost:${server.getAddress.getPort}/data.parquet"}"""
-          .getBytes("UTF-8")
-      ex.sendResponseHeaders(200, resp.length)
-      ex.getResponseBody.write(resp)
-      ex.close()
-    })
-    server.start()
-    try {
-      val port = server.getAddress.getPort
+    // serve a real parquet file's bytes verbatim
+    var boundPort = 0
+    withBytesServer(Map(
+      "/data.parquet" -> (_ => (200, regionParquet)),
+      "/job" -> (_ => (200,
+        s"""{"done":true,"file":"http://localhost:$boundPort/data.parquet"}"""
+          .getBytes("UTF-8"))))) { port =>
+      boundPort = port
       val df = restConn(port, Map.empty, Map(
         "endpoint" -> "/job", "method" -> "get",
         "response" -> Map(
@@ -421,7 +485,97 @@ class RestSpec extends AnyFunSuite {
             "ready_status" -> "done", "locator" -> "file")))).tap(None, None)
       assert(df.count() == 5)
       assert(df.columns.contains("r_name"))
-    } finally server.stop(0)
+    }
+  }
+
+  test("URLPolling: a parquet payload behind digest auth materializes") {
+    var boundPort = 0
+    withBytesServer(Map(
+      "/job" -> (ex =>
+        if (!digestOk(ex, "/job")) (401, "{}".getBytes("UTF-8"))
+        else (200, s"""{"done":true,"file":"http://localhost:$boundPort/data.parquet"}"""
+          .getBytes("UTF-8"))),
+      "/data.parquet" -> (ex =>
+        if (digestOk(ex, "/data.parquet")) (200, regionParquet)
+        else (401, "{}".getBytes("UTF-8"))))) { port =>
+      boundPort = port
+      val df = restConn(port, digestAuth,
+        urlPolling("application/vnd.apache.parquet")).tap(None, None)
+      assert(df.count() == 5)
+      assert(df.columns.contains("r_name"))
+    }
+  }
+
+  test("a file download answered 429 with Retry-After: 0 is retried at once") {
+    val fileCalls = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    var boundPort = 0
+    withBytesServer(Map(
+      "/job" -> (_ => (200,
+        s"""{"done":true,"file":"http://localhost:$boundPort/f.parquet"}"""
+          .getBytes("UTF-8"))),
+      "/f.parquet" -> (ex => {
+        fileCalls.add(System.nanoTime())
+        if (fileCalls.size == 1) {
+          ex.getResponseHeaders.set("Retry-After", "0")
+          (429, "{}".getBytes("UTF-8"))
+        } else (200, regionParquet)
+      }))) { port =>
+      boundPort = port
+      val df = restConn(port, Map.empty,
+        urlPolling("application/vnd.apache.parquet", "max_retries" -> 1)).tap(None, None)
+      assert(df.count() == 5)
+      val times = fileCalls.toArray.map(_.asInstanceOf[Long])
+      assert(times.length == 2)
+      val gapMs = (times(1) - times(0)) / 1000000
+      // the doubling schedule would wait 1 s
+      assert(gapMs < 500, s"Retry-After ignored? the retry came after ${gapMs}ms")
+    }
+  }
+
+  test("URLPolling reads a UTF-8 non-ASCII CSV payload back byte-exact") {
+    val csv = "id,name\n1,Zürich\n2,東京\n3,naïve — “quoted”\n"
+    var boundPort = 0
+    withServer(Map(
+      "/job" -> (_ => (200,
+        s"""{"done":true,"file":"http://localhost:$boundPort/export.csv"}""")),
+      "/export.csv" -> (_ => (200, csv)))) { port =>
+      boundPort = port
+      val df = restConn(port, Map.empty, urlPolling("text/csv")).tap(None, None)
+      val names = df.orderBy("id").collect().map(_.getString(1)).toList
+      assert(names == List("Zürich", "東京", "naïve — “quoted”"))
+    }
+  }
+
+  test("a data call that gets no answer within client.timeout fails with a timeout") {
+    withServer(Map("/slow" -> (_ => {
+      try Thread.sleep(3000) catch { case _: InterruptedException => }
+      (200, """[{"id":1}]""")
+    }))) { port =>
+      val t0 = System.nanoTime()
+      intercept[java.net.http.HttpTimeoutException] {
+        restConn(port, Map("timeout" -> 0.5), Map(
+          "endpoint" -> "/slow", "method" -> "get", "max_retries" -> 0,
+          "response" -> Map.empty[String, Any])).tap(None, None)
+      }
+      val elapsedMs = (System.nanoTime() - t0) / 1000000
+      assert(elapsedMs < 2500, s"the timeout did not fire: took ${elapsedMs}ms")
+    }
+  }
+
+  test("a timeout is a transport error: it is retried under max_retries") {
+    val calls = new AtomicInteger(0)
+    withServer(Map("/once-slow" -> (_ => {
+      if (calls.incrementAndGet() == 1)
+        try Thread.sleep(3000) catch { case _: InterruptedException => }
+      (200, """[{"id":1},{"id":2}]""")
+    }))) { port =>
+      val df = restConn(port, Map("timeout" -> 0.5), Map(
+        "endpoint" -> "/once-slow", "method" -> "get",
+        "max_retries" -> 1, "initial_backoff" -> 0,
+        "response" -> Map.empty[String, Any])).tap(None, None)
+      assert(df.count() == 2)
+      assert(calls.get() == 2)
+    }
   }
 
   test("custom error condition raises with the extracted message") {
@@ -452,33 +606,11 @@ class RestSpec extends AnyFunSuite {
   }
 
   test("digest auth: 401 challenge answered with valid RFC 7616 response") {
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val realm = "graft@test"
-    val nonce = "abc123nonce"
-    withServer(Map("/secure" -> (ex => {
-      Option(ex.getRequestHeaders.getFirst("Authorization")) match {
-        case Some(authz) if authz.startsWith("Digest ") =>
-          // verify the client's response hash server-side
-          def p(k: String) = (k + "=\"([^\"]*)\"").r.findFirstMatchIn(authz)
-            .map(_.group(1))
-            .orElse((k + "=([^,\\s]+)").r.findFirstMatchIn(authz).map(_.group(1)))
-          val ha1 = md5hex(s"alice:$realm:secret")
-          val ha2 = md5hex("GET:/secure")
-          val expected = md5hex(
-            s"$ha1:$nonce:${p("nc").get}:${p("cnonce").get}:auth:$ha2")
-          if (p("response").contains(expected)) (200, """[{"ok":1}]""")
-          else (403, "{}")
-        case _ =>
-          ex.getResponseHeaders.set("WWW-Authenticate",
-            s"""Digest realm="$realm", nonce="$nonce", qop="auth"""")
-          (401, "{}")
-      }
-    }))) { port =>
-      val df = restConn(port,
-        Map("auth" -> Map("kind" -> "digest",
-          "username" -> "alice", "password" -> "secret")),
+    withServer(Map("/secure" -> (ex =>
+      if (digestOk(ex, "/secure")) (200, """[{"ok":1}]""")
+      else if (ex.getRequestHeaders.containsKey("Authorization")) (403, "{}")
+      else (401, "{}")))) { port =>
+      val df = restConn(port, digestAuth,
         Map("endpoint" -> "/secure", "method" -> "get",
           "response" -> Map.empty[String, Any])).tap(None, None)
       assert(df.count() == 1)

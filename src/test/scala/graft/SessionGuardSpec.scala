@@ -131,4 +131,15 @@ class SessionGuardSpec extends AnyFunSuite {
       "hash with graft.functions.Md5 (one digest per thread, one hex and " +
         "word reading):\n" + report(outside))
   }
+
+  test("sparkContext.hadoopConfiguration appears only in its two writers") {
+    // reads build their FileSystem from spark.sessionState.newHadoopConf(),
+    // so a session-scoped fs.* conf reaches them as it reaches Spark's reads
+    val writers = Set("graft/connections/CloudSecrets.scala", "graft/core/Flow.scala")
+    val found = hits("sparkContext" + ".hadoopConfiguration")
+    assert(writers.forall(w => found.exists(_._1 == w)), "the writers themselves should match")
+    val outside = found.filterNot(f => writers(f._1))
+    assert(outside.isEmpty,
+      "build a FileSystem from spark.sessionState.newHadoopConf():\n" + report(outside))
+  }
 }

@@ -209,4 +209,22 @@ class SqlBridgeSpec extends AnyFunSuite {
       new NameRegistry)).collect()(0)
     assert(r.getString(0) == "2026/03/07")
   }
+
+  test("a QUALIFY condition that ends in a -- comment keeps the text after it") {
+    spark.sql("SELECT * FROM VALUES (1, 1), (1, 2), (2, 2) AS t(k, rn)")
+      .createOrReplaceTempView("qualify_cmt")
+    val sql = SqlBridge.translate(
+      "SELECT k, rn FROM qualify_cmt\nQUALIFY rn = 2 -- newest\nORDER BY k", new NameRegistry)
+    val rows = spark.sql(sql).collect().map(r => (r.getInt(0), r.getInt(1))).toList
+    assert(rows == List((1, 2), (2, 2)))
+  }
+
+  test("Fn.columns quotes column names that hold a quote") {
+    spark.sql("SELECT 1 AS `it's`, 'x' AS plain").createOrReplaceTempView("cols_quote")
+    val sql = SqlBridge.translate(
+      "SELECT column_name, data_type FROM Fn.columns('cols_quote') ORDER BY column_name",
+      new NameRegistry, Some(spark))
+    val rows = spark.sql(sql).collect().map(r => (r.getString(0), r.getString(1))).toList
+    assert(rows == List(("it's", "INT"), ("plain", "STRING")))
+  }
 }
